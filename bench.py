@@ -2,13 +2,12 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], printing ONE
 JSON line for the driver's BENCH record.
 
-Execution is forced with a noop-format write (full pipeline runs on
-executors; no driver-side collect serialization skewing the numbers).
+Warm-up, layout builds and the timed noop-sink run live in
+``scripts/harness.py``, shared with ``scripts/profile_queries.py``.
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import re
@@ -24,16 +23,15 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from nosql_triple_store_spark.registry import all_specs
     from nosql_triple_store_spark.session import get_spark
+    from scripts.harness import build_layouts, timed_run, warm_session
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = all_specs()
     # SPARK_GRAFT_BENCH_ONLY: regex over query names for family-subset
-    # sweeps (VERDICT r7 #6 — the sf3 curve extension needs only the
-    # steep families; a full 374-query run at sf3 is not affordable in
-    # 128 GiB). Layout builds whose consumers are filtered out are
-    # skipped too (see _wants below).
+    # sweeps (a full run at sf3 is not affordable); layouts no selected
+    # query consumes are skipped too.
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:
         pat = re.compile(only)
@@ -41,45 +39,13 @@ def main() -> None:
         if not specs:
             raise SystemExit(f"no queries match SPARK_GRAFT_BENCH_ONLY={only}")
 
-    def _wants(consumer_regex: str) -> bool:
-        """Build a layout only if some selected query consumes it."""
-        if not only:
-            return True
-        cre = re.compile(consumer_regex)
-        return any(cre.search(k) for k in specs)
-    # Warm the JVM/codegen once on a trivial job so q1 isn't charged startup,
-    # then touch every table so alphabetically-early queries aren't charged
-    # first-read parquet footer/IO warmup either.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from nosql_triple_store_spark.catalog import TABLES, load_table
+    warm_session(spark, sf_dir)
 
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-
-    # Warm the streaming engine the same way: the first streaming query in
-    # a session pays StreamingQueryManager + state-store init (~1 s) that
-    # alphabetical order would otherwise charge to q_stream_compact.
-    import tempfile
-
-    (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .load()
-        .writeStream.format("noop")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bench_warm_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    # Fixed-work CALIBRATION probe (VERDICT r8 #3): a constant CPU-bound
-    # aggregate (2e8-row codegen'd sum over 32 even slices, no I/O, no
-    # data dependence) timed after warmup, median of 3. Cross-session
-    # artifacts divide by this to normalize out machine contention — the
-    # r8 driver session ran the SAME code ~45% slower than the committed
-    # medians and had to be adjudicated by a judge rerun; calib_sec makes
-    # that comparison self-serve (query_sec / calib_sec is
-    # contention-invariant for CPU-bound queries).
+    # Fixed-work calibration probe: a constant CPU-bound aggregate
+    # (2e8-row codegen'd sum over 32 even slices, no I/O, no data
+    # dependence) timed after warmup, median of 3. query_sec / calib_sec
+    # is contention-invariant for CPU-bound queries, so artifacts from
+    # differently loaded machines can be compared.
     def _calib_once() -> float:
         t0 = time.perf_counter()
         spark.range(0, 200_000_000, 1, 32).selectExpr(
@@ -89,226 +55,65 @@ def main() -> None:
 
     calib = round(sorted(_calib_once() for _ in range(3))[1], 4)
 
-    # One-time LAYOUT ETL, timed separately from queries: the bucketed
-    # join tables and the co-purchase edge parquet are amortized layout
-    # builds (like CREATE TABLE ... CLUSTERED BY); counting them inside
-    # the first consuming query polluted cross-round comparability.
-    from nosql_triple_store_spark.operators.bucketed import bucketed_tables
-    from nosql_triple_store_spark.operators.graph_ext3 import (
-        _copurchase_edges,
-        triangle_list,
-    )
+    # Build-once layouts (bucketed tables, scratch edge/shingle/index
+    # parquet, fitted codebooks) are CREATE TABLE-class ETL: timed here,
+    # never inside the first consuming query.
+    layout = build_layouts(spark, sf_dir, specs)
 
-    layout: dict[str, float] = {}
-    if _wants(r"q_join|q_tpch"):
-        t0 = time.perf_counter()
-        bucketed_tables(spark, sf_dir)
-        layout["bucketed_orders_lineitem"] = round(time.perf_counter() - t0, 4)
-    if _wants(r"q_graph"):
-        t0 = time.perf_counter()
-        _copurchase_edges(spark, sf_dir).count()
-        layout["copurchase_edges"] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        triangle_list(spark, sf_dir).count()
-        layout["triangle_list"] = round(time.perf_counter() - t0, 4)
-    from nosql_triple_store_spark.operators.dedup import _shingle_stream
-
-    if _wants(r"q_dedup|q_text|q_stream_dedup"):
-        t0 = time.perf_counter()
-        _shingle_stream(spark, sf_dir).count()
-        layout["shingle_stream"] = round(time.perf_counter() - t0, 4)
-        # round 9: the quadratic exact pair stream (_shingle_pairs) left
-        # the scale path (VERDICT r8 #1) — consumers now read the linear
-        # rarest-first prefix index and the banded verified-edge scratch
-        from nosql_triple_store_spark.operators.dedup_prefix import (
-            ranked_shingles,
-        )
-
-        t0 = time.perf_counter()
-        ranked_shingles(spark, sf_dir).count()
-        layout["ranked_shingles"] = round(time.perf_counter() - t0, 4)
-    if _wants(r"q_dedup|q_stream_dedup"):
-        from nosql_triple_store_spark.operators.dedup_pipeline import (
-            band_index,
-            verified_edges_scratch,
-        )
-
-        t0 = time.perf_counter()
-        band_index(spark, sf_dir).count()
-        layout["band_index"] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        verified_edges_scratch(spark, sf_dir).count()
-        layout["nearband_edges"] = round(time.perf_counter() - t0, 4)
-    from nosql_triple_store_spark.operators.relational_ext3 import (
-        encoded_store,
-    )
-
-    if _wants(r"q_bgp|q_sparql|q_stream_bgp"):
-        t0 = time.perf_counter()
-        encoded_store(spark, sf_dir)
-        layout["bgp_encoded_store"] = round(time.perf_counter() - t0, 4)
-    # IVF-PQ index build (q_vector_ivfpq) is index ETL like the layouts
-    # above: k-means cells + residual codebook (fingerprint-cached
-    # cross-process) and the cell-partitioned code-table parquet —
-    # queries scan codes, never re-encode
-    from nosql_triple_store_spark.operators.vector_ext9 import (
-        _ivfpq_model,
-        pq_index,
-    )
-
-    if _wants(r"q_vector"):
-        t0 = time.perf_counter()
-        _ivfpq_model(spark, sf_dir)
-        layout["ivf_coarse_codebook"] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        pq_index(spark, sf_dir).count()
-        layout["pq_code_table"] = round(time.perf_counter() - t0, 4)
-    # Remaining build-once physical layouts (hive-partitioned bucket
-    # census, bloom-filtered rewrite, versioned vacuum register): at
-    # sf0.1 median-of-3 the cached runs 2-3 hid these builds inside the
-    # median while the single-run upward sweeps charged them to the
-    # query — making the scaling ratio compare different things. All
-    # are CREATE TABLE-class ETL; timed here on both sides instead.
-    from nosql_triple_store_spark.operators.relational_ext29 import (
-        vacuum_register,
-    )
-    from nosql_triple_store_spark.operators.relational_ext55 import (
-        bloom_layout,
-        bucket_layout,
-    )
-
-    if _wants(r"q_meta_partition_layout"):
-        t0 = time.perf_counter()
-        bucket_layout(spark, sf_dir)
-        layout["bucket_layout"] = round(time.perf_counter() - t0, 4)
-    if _wants(r"q_source_parquet_bloom"):
-        t0 = time.perf_counter()
-        bloom_layout(spark, sf_dir)
-        layout["bloom_layout"] = round(time.perf_counter() - t0, 4)
-    if _wants(r"q_maintenance_vacuum"):
-        t0 = time.perf_counter()
-        vacuum_register(spark, sf_dir)
-        layout["vacuum_register"] = round(time.perf_counter() - t0, 4)
-
-    # Heap-sensitive heavy queries get a JVM full-GC immediately before
-    # they run (outside their timed region): the wedge joins are
-    # old-gen-pressure-sensitive — q_graph_triangles measured 4.4 s
-    # isolated vs 13.4 s after 150 queries of heap churn. A System.gc()
-    # before EVERY query was measured a net loss (+55 ms median/query
-    # from soft-ref cache invalidation vs −10 s on the few big wins),
-    # and a 6-query gate still taxed neighbors (q_dedup_clusters +2 s
-    # right after its own pre-GC), so the gate holds only the two
-    # queries that measurably benefit: triangles 13.4→6.8, sssp 5.4→4.3.
+    # Heap-sensitive heavy queries get a JVM full GC right before they
+    # run (outside the timed region): the wedge joins are
+    # old-gen-pressure-sensitive (q_graph_triangles 4.4 s isolated vs
+    # 13.4 s after 150 queries of heap churn). A GC before every query
+    # costs +55 ms median per query from soft-ref cache invalidation,
+    # so only the two queries that measurably benefit get one.
     heap_sensitive = {
         "q_graph_triangles",
         "q_graph_sssp",
     }
-
-    from nosql_triple_store_spark.scratch import drain_build_seconds
+    cleanup_failures = 0
 
     def _run_once(name: str) -> float:
+        nonlocal cleanup_failures
         if name in heap_sensitive:
             spark._jvm.System.gc()
-        drain_build_seconds()  # discard builds recorded outside queries
-        # ADVICE r11: snapshot the persistent-RDD ids BEFORE the run so
-        # the post-run cleanup frees only blocks this query created — a
-        # cross-query cache (should one ever exist again) must not be
-        # reaped out from under its lineage-truncated readers
-        try:
-            pre_ids = set(
-                spark.sparkContext._jsc.getPersistentRDDs().keys()
-            )
-        except Exception:
-            pre_ids = set()
-        # time plan construction + full execution: some operators run
-        # eagerly inside the query fn (streaming drains, iterative graph
-        # algorithms), so t0 must precede the fn call
-        t0 = time.perf_counter()
-        df = specs[name].fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # first-touch scratch builds (a consumer the layout phase's
-        # _wants regex missed, or a cold path) are LAYOUT cost: move
-        # them out of the query figure so cold single-run sessions and
-        # warm medians report the same number (VERDICT r9 #4) — the
-        # build time stays visible in layout_build_sec
-        built = drain_build_seconds()
-        if built:
-            for kind, sec in built.items():
-                layout[kind] = round(layout.get(kind, 0.0) + sec, 4)
-            elapsed = max(0.0, elapsed - sum(built.values()))
-        # drop python refs to checkpointed/iterative plans so the JVM
-        # ContextCleaner can free their blocks before the next query —
-        # otherwise graph-query checkpoint blocks linger and skew later
-        # timings (measured: q_grouping_sets 0.2s -> 6.6s when starved)
-        del df
-        gc.collect()
-        # Round 11: ContextCleaner only reaps blocks after a driver GC,
-        # which an 8g mostly-idle heap rarely runs — localCheckpoint
-        # blocks from 400+ queries accumulated in the storage-protected
-        # half of unified memory and stalled late-position queries
-        # (measured: full bench 350.7 s vs 317.8 s; q_text_containment
-        # 6.5 s with 6.3 s spread vs 2.0 s). Round 12: unpersist only
-        # the ids created during THIS run (snapshot above) — still
-        # deterministic, OUTSIDE the timed region, but safe against a
-        # future cross-query cache.
-        try:
-            for rid, jrdd in (
-                spark.sparkContext._jsc.getPersistentRDDs().items()
-            ):
-                if rid not in pre_ids:
-                    jrdd.unpersist(False)
-        except Exception:
-            pass  # cleanup is best-effort; never fail the bench
-        return elapsed
+        run = timed_run(spark, specs[name].fn, sf_dir)
+        # first-touch builds stay visible as layout cost
+        for kind, sec in run.built.items():
+            layout[kind] = round(layout.get(kind, 0.0) + sec, 4)
+        cleanup_failures += run.cleanup_failures
+        return run.elapsed
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     # SPARK_GRAFT_BENCH_RUNS=1 bounds wall-clock for the upward scaling
-    # sweeps (sf0.3/sf1 derived data, VERDICT r6 #1) where per-query
-    # work dwarfs the noise the median was guarding against; the
-    # committed sf0.1 artifact stays median-of-3.
+    # sweeps, where per-query work dwarfs the noise the median guards
+    # against; the committed sf0.1 artifact stays median-of-3.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # crash-safe progress: one JSONL line per completed query next to
-    # the full artifact, so an OOM'd sweep names its culprit and keeps
-    # the timings it already paid for (the artifact itself is written
-    # once at the end)
-    # Round 12 (VERDICT r11 #6): the side file defaults to an
-    # UNTRACKED path (.gitignore'd) so a driver rerun can never clobber
-    # the committed BENCH_FULL.json artifact in the working tree — the
-    # committed record is refreshed deliberately (copy + commit), not
-    # as a side effect of running the bench.
-    progress_path = os.environ.get(
+    # Full per-query timings go to a side file (SPARK_GRAFT_BENCH_FULL,
+    # "skip" disables). It defaults to an untracked path so a rerun
+    # never clobbers the committed BENCH_FULL.json record. A JSONL
+    # progress file next to it gets one line per completed query, so an
+    # OOM'd sweep names its culprit and keeps the timings it paid for.
+    full_path = os.environ.get(
         "SPARK_GRAFT_BENCH_FULL",
         os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
             "BENCH_FULL.local.json",
         ),
     )
-    progress = (
-        open(progress_path + ".partial", "w") if progress_path != "skip" else None
-    )
-    # Round 12 (VERDICT r11 #2): dead BROADCAST blocks are reaped by
-    # ContextCleaner only after a driver GC; the round-11 answer was a
-    # 5-minute periodic GC timer, whose soft-ref-clearing pause lands
-    # inside RANDOM timed queries over a ~30-minute run (this round's
-    # baseline: scattered multi-second spreads, q_stream_sliding spread
-    # 11.6 s). Replaced by a DETERMINISTIC System.gc() between queries
-    # every _GC_EVERY queries — same reaping, never inside a timed
-    # region. 32 amortizes the soft-ref invalidation tax (measured
-    # +55 ms/query when GC'ing before every query) across a family.
+    progress = open(full_path + ".partial", "w") if full_path != "skip" else None
+    # Dead broadcast blocks are reaped by ContextCleaner only after a
+    # driver GC. A deterministic System.gc() every _GC_EVERY queries
+    # does that reaping between queries, never inside a timed region;
+    # 32 amortizes the soft-ref invalidation tax across a family.
     _GC_EVERY = 32
     for qi, name in enumerate(sorted(specs)):
         if qi and qi % _GC_EVERY == 0:
             spark._jvm.System.gc()
-        # Median of 3 runs for EVERY query (VERDICT r5 #3: the 1-2 s
-        # mid-band was the last single-run band and drifted +56% on
-        # q_join_value_band in the driver rerun; sub-second queries are
-        # GC/JIT-noise-dominated and the >=2 s iterative tail is
-        # storage-pressure-sensitive — r3/r4 cross-round "regressions"
-        # in both bands were noise with no plan change). The per-query
-        # max-min spread is recorded in the full artifact so
-        # cross-round claims carry error bars.
+        # Median of n_runs for every query: sub-second queries are
+        # GC/JIT-noise-dominated and the iterative tail is
+        # storage-pressure-sensitive. The max-min spread goes into the
+        # side file so comparisons carry error bars.
         runs = sorted(_run_once(name) for _ in range(n_runs))
         timings[name] = round(runs[len(runs) // 2], 4)
         spreads[name] = round(runs[-1] - runs[0], 4)
@@ -319,29 +124,13 @@ def main() -> None:
             progress.flush()
 
     total = round(sum(timings.values()), 4)
-    # Full per-query timings go to a side file; the stdout JSON line keeps
-    # only the 12 headline queries (PLANS.md) so the line stays well under
-    # the driver's stdout-tail capture window (a 213-entry dict is ~8 KB and
-    # got truncated mid-line in round 1 -> "parsed": null in BENCH_r01.json).
-    # SPARK_GRAFT_BENCH_FULL overrides the side-file path ("skip" disables)
-    # so ad-hoc runs at other SFs don't clobber the committed sf0.1 record.
-    full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_FULL.local.json",
-        ),
-    )
     if progress is not None:
         progress.close()
-        os.remove(progress_path + ".partial")
-    # ground-truth twins (deliberate exact-complexity baselines the
+        os.remove(full_path + ".partial")
+    # Ground-truth twins (deliberate exact-complexity baselines the
     # recall tests certify against) distort family scaling curves when
-    # summed with production paths — tag them and report both totals
-    # (VERDICT r10 #4)
-    twins = sorted(
-        k for k in timings if all_specs()[k].ground_truth_twin
-    )
+    # summed with production paths: tag them and report both totals.
+    twins = sorted(k for k in timings if specs[k].ground_truth_twin)
     total_prod = round(
         sum(v for k, v in timings.items() if k not in set(twins)), 4
     )
@@ -358,6 +147,7 @@ def main() -> None:
                     "bench_runs": n_runs,
                     "layout_build_sec": layout,
                     "calib_sec": calib,
+                    "cleanup_failures": cleanup_failures,
                     "ground_truth_twins": twins,
                     "value_excl_ground_truth_twins": total_prod,
                     "sf": sf,
@@ -367,6 +157,8 @@ def main() -> None:
                 sort_keys=True,
             )
 
+    # stdout carries only the headline queries: a full per-query dict is
+    # ~8 KB and gets truncated by a stdout-tail capture
     headline = [
         "q_point_lookup",
         "q_agg_pricing",
@@ -381,11 +173,8 @@ def main() -> None:
         "q_skyline",
         "q_zorder_prune",
         "q_join_dpp",
-        # Round 12 (VERDICT r11 #8): ADDED headline entries (existing
-        # ones unchanged) so the driver's ground-truth geomean can see
-        # the operators the optimization rounds actually touched — the
-        # original 12 are sub-second scan/join shapes that cannot
-        # resolve plan improvements in the iterative/heavy families.
+        # heavy iterative/update queries: the scan/join shapes above are
+        # sub-second and cannot resolve plan changes in these families
         "q_sparql_update",
         "q_graph_pagerank",
         "q_profile_table",

@@ -20,12 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..registry import register
+from ..registry import register, register_layout
 
 _N_BUCKETS = 8
 _TABLES: dict[str, tuple[str, str]] = {}  # sf_dir -> (orders_tbl, lineitem_tbl)
 
 
+@register_layout("bucketed_orders_lineitem", r"q_join|q_tpch")
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize orders+lineitem bucketed by orderkey as external
     tables (path under tmp; in-memory catalog). Cached per sf_dir —

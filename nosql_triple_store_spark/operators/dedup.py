@@ -34,7 +34,7 @@ from pyspark.sql.types import LongType
 
 from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
-from ..registry import register
+from ..registry import register, register_layout
 from ..widths import cluster_cores, fanout_width
 from ..materialize import lazy_cut, materialize
 
@@ -70,6 +70,7 @@ SHINGLE_DF_CAP = 5000
 _SHINGLE_DIRS: dict[str, str] = {}
 
 
+@register_layout("shingle_stream", r"q_dedup|q_text|q_stream_dedup")
 def _shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) exploded stream, materialized once per process
     as scratch parquet (written 32-wide so the explode parallelizes)."""

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
-from ..registry import register
+from ..registry import register, register_layout
 from ..widths import cluster_cores
 from .dedup import _shingle_stream
 from .graph_ext2 import star_fixpoint
@@ -83,6 +83,7 @@ def _band_keys(sh: DataFrame) -> DataFrame:
 _BAND_DIRS: dict[str, str] = {}
 
 
+@register_layout("band_index", r"q_dedup|q_stream_dedup")
 def band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus band index (doc_id, band, bkey) as scratch parquet,
     built once per process from the shared shingle stream — the stored
@@ -151,6 +152,7 @@ def _verified_edges(sh: DataFrame, cand: DataFrame) -> DataFrame:
 _EDGE_DIRS: dict[str, str] = {}
 
 
+@register_layout("nearband_edges", r"q_dedup|q_stream_dedup")
 def verified_edges_scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The threshold-{THRESHOLD} verified near-dup edge set (LSH band
     candidates → exact-Jaccard verify), materialized ONCE per process as

@@ -81,7 +81,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..registry import register, register_layout
 from ..widths import cluster_cores
 from ..materialize import materialize
 
@@ -115,6 +115,7 @@ _LADDER: tuple[tuple[int, int], ...] = (
 _K_EXT = 4
 
 
+@register_layout("ranked_shingles", r"q_dedup|q_text|q_stream_dedup")
 def ranked_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle, pos, n_sh): each doc's distinct shingles ranked
     by the GLOBAL rarest-first order (df asc, shingle asc), materialized

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..registry import register
+from ..registry import register, register_layout
 from ..scratch import scratch_dir
 from ..widths import wedge_width
 from ..materialize import materialize
@@ -18,6 +18,7 @@ K_CORE = 4
 _COPURCHASE_DIRS: dict[str, str] = {}
 
 
+@register_layout("copurchase_edges", r"q_graph")
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected distinct part-pair edges (parts sharing an order),
     materialized ONCE per process as parquet and re-read by every
@@ -57,6 +58,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRIANGLE_DIRS: dict[str, str] = {}
 
 
+@register_layout("triangle_list", r"q_graph")
 def triangle_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All id-oriented triangles (x < y < z) of the co-purchase graph,
     materialized ONCE per process and shared by q_graph_triangles and

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.triple import E_CTE
-from ..registry import register
+from ..registry import register, register_layout
 
 # --- q_agg_moments --------------------------------------------------------
 
@@ -150,6 +150,7 @@ _VACUUM_BATCHES = 4
 _VACUUM_RESULTS: dict[str, list[tuple]] = {}
 
 
+@register_layout("vacuum_register", r"q_maintenance_vacuum")
 def vacuum_register(spark: SparkSession, sf_dir: str) -> str:
     """Build-once versioned LWW register the vacuum operates on
     (4 event-time compact batches), cached per (process, sf_dir) via

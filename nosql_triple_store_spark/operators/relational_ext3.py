@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..plans.bgp import Var, compile_bgp, triples_view
-from ..registry import register
+from ..registry import register, register_layout
 from ..sources.dictionary import build_dictionary
 from .bgp_queries import STAR_ORACLE
 
@@ -256,6 +256,7 @@ _ENC_STORE_DIRS: dict[str, tuple[str, str]] = {}
 _ENC_STORE_LOCK = threading.Lock()
 
 
+@register_layout("bgp_encoded_store", r"q_bgp|q_sparql|q_stream_bgp")
 def encoded_store(spark: SparkSession, sf_dir: str):
     """The dictionary-encoded triple store as scratch parquet, built
     ONCE per process — the on-disk layout every serious RDF engine

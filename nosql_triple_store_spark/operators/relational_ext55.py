@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..registry import register
+from ..registry import register, register_layout
 from ..scratch import scratch_dir
 
 _PEPPER = "pepper-v1:"
@@ -91,6 +91,7 @@ _CACHE_LOCK = threading.Lock()
 _N_BUCKETS = 8
 
 
+@register_layout("bucket_layout", r"q_meta_partition_layout")
 def bucket_layout(spark: SparkSession, sf_dir: str) -> str:
     """Build-once hive-partitioned lineitem layout
     (``bucket = l_orderkey % {_N_BUCKETS}``), cached per (process,
@@ -285,6 +286,7 @@ _N_BLOOM_FILES = 4
 _BLOOM_KEY = 17
 
 
+@register_layout("bloom_layout", r"q_source_parquet_bloom")
 def bloom_layout(spark: SparkSession, sf_dir: str) -> str:
     """Build-once bloom-filtered lineitem rewrite, cached per
     (process, sf_dir). Exposed for bench.py's layout phase — the

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.vectors import as_double_array, cosine_col
-from ..registry import register
+from ..registry import register, register_layout
 from .vector_ext4 import _assign, kmeans_fit
 
 _NCELLS = 10  # learned coarse cells (k-means k)
@@ -115,6 +115,7 @@ def _fit_codebook(
     return book
 
 
+@register_layout("ivf_coarse_codebook", r"q_vector")
 def _ivfpq_model(spark: SparkSession, sf_dir: str) -> dict:
     """{"centroids": ncells×dim, "codebook": M×K×subdim} — loaded from
     the cross-process artifact when the fingerprint matches, else fit
@@ -233,6 +234,7 @@ def _darray_expr(nested) -> "F.Column":
     return F.expr(render(nested))
 
 
+@register_layout("pq_code_table", r"q_vector")
 def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted IVF-PQ code table: (vec_id, codes array<int>)
     written as parquet HIVE-PARTITIONED BY coarse cell (`cid=`), built

@@ -20,10 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
+from nosql_triple_store_spark.catalog import TABLES  # noqa: E402
 
 
 def _norm(v):
@@ -37,6 +34,37 @@ def _norm(v):
     return v
 
 
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per fixture table."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def spark_rows(df, cols: list[str]) -> list[tuple]:
+    """``df``'s rows over ``cols``, normalized and repr-sorted."""
+    return sorted(
+        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
+    )
+
+
+def duck_rows(rel, cols: list[str]) -> list[tuple]:
+    """A DuckDB relation's rows over ``cols``, normalized and repr-sorted.
+    fetchall(), not fetchdf(): pandas coerces NULL bigints to NaN."""
+    names = list(rel.columns)
+    idx = [names.index(c) for c in cols]
+    return sorted(
+        [tuple(_norm(row[i]) for i in idx) for row in rel.fetchall()],
+        key=repr,
+    )
+
+
 def main() -> int:
     args = sys.argv[1:]
     json_out = None
@@ -46,7 +74,6 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -66,12 +93,7 @@ def main() -> int:
     qs, osql = mod.queries(), mod.oracle_sql()
     assert set(osql) <= set(qs)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_views(sf_dir)
 
     failed = []
     results: dict[str, dict] = {}
@@ -99,22 +121,15 @@ def main() -> int:
                 failed.append(name)
             continue
         cols = sorted(df.columns)
-        s = sorted(
-            [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-        )
+        s = spark_rows(df, cols)
         rel = con.sql(osql[name])
-        names = list(rel.columns)
-        if sorted(names) != cols:
-            print(f"{name:28s} SCHEMA MISMATCH {cols} vs {sorted(names)}")
+        if sorted(rel.columns) != cols:
+            print(f"{name:28s} SCHEMA MISMATCH {cols} vs {sorted(rel.columns)}")
             results[name] = {"mode": "oracle", "match": False,
                              "why": "schema"}
             failed.append(name)
             continue
-        idx = [names.index(c) for c in cols]
-        d = sorted(
-            [tuple(_norm(row[i]) for i in idx) for row in rel.fetchall()],
-            key=repr,
-        )
+        d = duck_rows(rel, cols)
         ok = s == d
         print(
             f"{name:28s} rows={len(s):6d} match={ok} {time.time() - t0:5.1f}s",

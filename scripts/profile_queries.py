@@ -9,17 +9,17 @@ to <plans-dir>/<name>_<suffix>.txt (when --plans-dir is given), then times
 N noop-sink runs (default 4; first run reported separately as cold).
 Prints one line per query: name, cold, warm runs, warm median.
 
-Methodology matches bench.py (guide §1.4): noop sink, jobs labelled via
-setJobDescription, layout builds drained out of the timed region.
+Warm-up and timed runs come from ``scripts/harness.py``, as in bench.py:
+noop sink, layout builds drained out of the timed region, only blocks a
+run persisted freed after it; jobs are labelled via setJobDescription.
+The last line reports ``cleanup_failures`` (persisted-RDD cleanup errors).
 """
 
 from __future__ import annotations
 
 import argparse
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,32 +34,15 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from nosql_triple_store_spark.registry import all_specs
-    from nosql_triple_store_spark.scratch import drain_build_seconds
     from nosql_triple_store_spark.session import get_spark
+    from scripts.harness import timed_run, warm_session
 
     spark = get_spark(app_name="profile")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
+    warm_session(spark, sf_dir)
 
-    # same warmup as bench.py so run 0 isn't charged JVM/codegen startup
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from nosql_triple_store_spark.catalog import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    import tempfile
-
-    (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .load()
-        .writeStream.format("noop")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="prof_warm_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
+    cleanup_failures = 0
     for name in args.names:
         if name not in specs:
             print(f"{name}: NOT REGISTERED")
@@ -85,35 +68,12 @@ def main() -> None:
         times = []
         builds = []
         for i in range(args.runs):
-            drain_build_seconds()
-            # ADVICE r11: unpersist only blocks created during the run
-            try:
-                pre_ids = set(
-                    spark.sparkContext._jsc.getPersistentRDDs().keys()
-                )
-            except Exception:
-                pre_ids = set()
             spark.sparkContext.setJobDescription(f"{name} run{i}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            built = drain_build_seconds()
-            if built:
-                builds.append(sum(built.values()))
-                el = max(0.0, el - sum(built.values()))
-            times.append(el)
-            del df
-            gc.collect()
-            # same deterministic checkpoint-block cleanup as bench.py
-            try:
-                for rid, jrdd in (
-                    spark.sparkContext._jsc.getPersistentRDDs().items()
-                ):
-                    if rid not in pre_ids:
-                        jrdd.unpersist(False)
-            except Exception:
-                pass
+            run = timed_run(spark, fn, sf_dir)
+            if run.built:
+                builds.append(sum(run.built.values()))
+            times.append(run.elapsed)
+            cleanup_failures += run.cleanup_failures
         spark.sparkContext.setJobDescription(None)
         warm = sorted(times[1:])
         med = warm[len(warm) // 2] if warm else times[0]
@@ -122,6 +82,7 @@ def main() -> None:
             f"median={med:.3f}"
             + (f" (layout drained {sum(builds):.2f}s)" if builds else "")
         )
+    print(f"cleanup_failures={cleanup_failures}")
 
 
 if __name__ == "__main__":

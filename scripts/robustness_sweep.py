@@ -8,42 +8,25 @@ run each axis as its own process):
               catch partition-dependent results: unkeyed tie-breaks,
               order-sensitive float folds, per-partition id leakage)
   tz          TZ=America/New_York + session timeZone set to match
-              (catches session-TZ-typed timestamp columns; found 3
-              such queries in round 4, since fixed + schema-asserted)
+              (catches session-TZ-typed timestamp columns)
 
 Usage: python scripts/robustness_sweep.py [--mode partitions|tz] [sf_dir]
 Exit 0 iff every oracle-backed query still matches DuckDB exactly.
 
-NOTE: compares with fetchall() + repr-key sort exactly like
-scripts/driver_check.py — a pandas fetchdf() compare is WRONG here
+The compare (normalize, fetchall(), repr-key sort) is
+scripts/driver_check.py's own; a pandas fetchdf() compare is wrong here
 (NULL bigints coerce to NaN floats and 16 queries false-positive).
 """
 
 from __future__ import annotations
 
-import decimal
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
-
-
-def _norm(v):
-    if isinstance(v, decimal.Decimal):
-        f = float(v)
-        return int(f) if f.is_integer() else f
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    if isinstance(v, float) and v == 0.0:
-        return 0.0
-    return v
+from scripts.driver_check import duck_rows, duckdb_views, spark_rows  # noqa: E402
 
 
 def main() -> int:
@@ -54,7 +37,6 @@ def main() -> int:
         args = args[2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     b = SparkSession.builder.appName(f"robust-{mode}").config(
@@ -76,30 +58,14 @@ def main() -> int:
     import __spark_entry__ as mod
 
     qs, osql = mod.queries(), mod.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_views(sf_dir)
     failed = []
     for name in sorted(osql):
         t0 = time.time()
         try:
             df = qs[name](spark, sf_dir)
             cols = sorted(df.columns)
-            s = sorted(
-                [tuple(_norm(r[c]) for c in cols) for r in df.collect()],
-                key=repr,
-            )
-            rel = con.sql(osql[name])
-            names = list(rel.columns)
-            idx = [names.index(c) for c in cols]
-            d = sorted(
-                [tuple(_norm(row[i]) for i in idx) for row in rel.fetchall()],
-                key=repr,
-            )
-            ok = s == d
+            ok = spark_rows(df, cols) == duck_rows(con.sql(osql[name]), cols)
         except Exception as e:  # noqa: BLE001 - report, keep sweeping
             print(f"{name:28s} ERROR {str(e)[:90]}")
             failed.append(name)
