@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
 from ..registry import register, register_layout
 from ..widths import cluster_cores, fanout_width
@@ -90,7 +90,7 @@ def _shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(out)
             )
             _SHINGLE_DIRS[sf_dir] = out
-    return spark.read.parquet(_SHINGLE_DIRS[sf_dir])
+    return read_parquet(spark, _SHINGLE_DIRS[sf_dir])
 
 
 _PAIR_DIRS: dict[tuple[str, int], str] = {}
@@ -112,17 +112,16 @@ def _shingle_pairs(
     and tests/test_dedup_pipeline.py pin the scale-safe paths against
     it at fixture scale."""
     key = (sf_dir, df_cap)
-    if key in _PAIR_DIRS:
-        return spark.read.parquet(_PAIR_DIRS[key])
-    from ..scratch import scratch_dir, timed_build
+    if key not in _PAIR_DIRS:
+        from ..scratch import scratch_dir, timed_build
 
-    _shingle_stream(spark, sf_dir)  # its own timed_build (no nesting)
-    with timed_build(f"shingle_pairs_{df_cap}"):
-        pairs = _shingle_pairs_plan(spark, sf_dir, df_cap)
-        out = scratch_dir(f"shingle_pairs_{df_cap}", sf_dir)
-        pairs.write.mode("overwrite").parquet(out)
-        _PAIR_DIRS[key] = out
-    return spark.read.parquet(out)
+        _shingle_stream(spark, sf_dir)  # its own timed_build (no nesting)
+        with timed_build(f"shingle_pairs_{df_cap}"):
+            pairs = _shingle_pairs_plan(spark, sf_dir, df_cap)
+            out = scratch_dir(f"shingle_pairs_{df_cap}", sf_dir)
+            pairs.write.mode("overwrite").parquet(out)
+            _PAIR_DIRS[key] = out
+    return read_parquet(spark, _PAIR_DIRS[key])
 
 
 def _shingle_pairs_plan(

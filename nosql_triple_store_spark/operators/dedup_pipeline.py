@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
 from ..registry import register, register_layout
 from ..widths import cluster_cores
@@ -103,7 +103,7 @@ def band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(out)
             )
             _BAND_DIRS[sf_dir] = out
-    return spark.read.parquet(_BAND_DIRS[sf_dir])
+    return read_parquet(spark, _BAND_DIRS[sf_dir])
 
 
 def _minhash_candidates(sh: DataFrame, bands: DataFrame | None = None) -> DataFrame:
@@ -172,7 +172,7 @@ def verified_edges_scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = scratch_dir("nearband_edges", sf_dir)
             edges.write.mode("overwrite").parquet(out)
             _EDGE_DIRS[sf_dir] = out
-    return spark.read.parquet(_EDGE_DIRS[sf_dir])
+    return read_parquet(spark, _EDGE_DIRS[sf_dir])
 
 
 def _cluster_labels(docs: DataFrame, edges: DataFrame) -> DataFrame:

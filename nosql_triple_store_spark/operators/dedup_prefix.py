@@ -81,6 +81,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
 from ..registry import register, register_layout
 from ..widths import cluster_cores
 from ..materialize import materialize
@@ -145,7 +146,7 @@ def ranked_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(out)
             _RANKED_DIRS[sf_dir] = out
-    return spark.read.parquet(_RANKED_DIRS[sf_dir])
+    return read_parquet(spark, _RANKED_DIRS[sf_dir])
 
 
 def _cmin(p: int, q: int) -> F.Column:
@@ -306,12 +307,12 @@ def _set_layout(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _set_groups(spark: SparkSession, sf_dir: str, min_sh: int) -> DataFrame:
-    g = spark.read.parquet(f"{_set_layout(spark, sf_dir)}/members")
+    g = read_parquet(spark, f"{_set_layout(spark, sf_dir)}/members")
     return g.filter(F.col("n_sh") >= min_sh) if min_sh > 0 else g
 
 
 def _rep_shingles(spark: SparkSession, sf_dir: str, min_sh: int) -> DataFrame:
-    rs = spark.read.parquet(f"{_set_layout(spark, sf_dir)}/repsh")
+    rs = read_parquet(spark, f"{_set_layout(spark, sf_dir)}/repsh")
     return rs.filter(F.col("n_sh") >= min_sh) if min_sh > 0 else rs
 
 
@@ -472,7 +473,7 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, sf_dir, _minhash_candidates(None, bands)
             ).write.mode("overwrite").parquet(out)
             _LSHVER_DIRS[sf_dir] = out
-    return spark.read.parquet(_LSHVER_DIRS[sf_dir])
+    return read_parquet(spark, _LSHVER_DIRS[sf_dir])
 
 
 def _lsh_jaccard_pairs(
@@ -538,7 +539,7 @@ def _lsh_containment_pairs(
                 spark, sf_dir, rs, p, q, stretch_only=True
             ).write.mode("overwrite").parquet(out)
             _STRETCH_DIRS[key] = out
-    stretched = spark.read.parquet(_STRETCH_DIRS[key])
+    stretched = read_parquet(spark, _STRETCH_DIRS[key])
     return balanced.unionByName(stretched.select(*balanced.columns))
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..registry import register, register_layout
 from ..scratch import scratch_dir
 from ..widths import wedge_width
@@ -52,7 +52,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
         _COPURCHASE_DIRS[sf_dir] = out
-    return spark.read.parquet(_COPURCHASE_DIRS[sf_dir])
+    return read_parquet(spark, _COPURCHASE_DIRS[sf_dir])
 
 
 _TRIANGLE_DIRS: dict[str, str] = {}
@@ -82,7 +82,7 @@ def triangle_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tri.select("x", "y", "z").write.mode("overwrite").parquet(out)
         _TRIANGLE_DIRS[sf_dir] = out
-    return spark.read.parquet(_TRIANGLE_DIRS[sf_dir])
+    return read_parquet(spark, _TRIANGLE_DIRS[sf_dir])
 
 
 @register("q_graph_kcore", oracle=None)  # rows-only: iterative fixpoint

@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..registry import register
 from ..sources.zorder import rectangle_buckets, write_zordered
 
@@ -59,7 +59,7 @@ def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     so no matching row can be dropped) + exact residual predicate."""
     path = build_layout(spark, sf_dir)
     buckets = rectangle_buckets(X_LO, X_HI, Y_LO, Y_HI, BITS, BUCKET_BITS)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.filter(F.col("z_bucket").isin(buckets))
         .filter(

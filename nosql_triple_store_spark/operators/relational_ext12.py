@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..registry import register
 from .triple import E_CTE
 
@@ -321,8 +321,8 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     days, not years. A unit test asserts `dynamicpruning` appears in the
     fact scan's PartitionFilters."""
     fact_path, dim_path = _partitioned_orders(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    dim = spark.read.parquet(dim_path).filter(F.col("urgency") == "high")
+    fact = read_parquet(spark, fact_path)
+    dim = read_parquet(spark, dim_path).filter(F.col("urgency") == "high")
     joined = fact.join(
         F.broadcast(dim), fact["o_orderpriority"] == dim["pr"], "inner"
     )

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..plans.bgp import TRIPLES_SQL, triples_view
 from ..registry import register
 from .triple import E_CTE
@@ -205,7 +205,7 @@ def q_source_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             spark.conf.set(mode_key, old)
         _DYNPART_DIRS[sf_dir] = base
-    final = spark.read.parquet(_DYNPART_DIRS[sf_dir])
+    final = read_parquet(spark, _DYNPART_DIRS[sf_dir])
     return final.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").alias("n_users"),

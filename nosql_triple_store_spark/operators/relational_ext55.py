@@ -22,7 +22,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..registry import register, register_layout
 from ..scratch import scratch_dir
 
@@ -154,7 +154,7 @@ def q_meta_partition_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovery is a projection over the scan's constant metadata column —
     no shuffle beyond the final {_N_BUCKETS}-group aggregate.
     """
-    back = spark.read.parquet(bucket_layout(spark, sf_dir)).select(
+    back = read_parquet(spark, bucket_layout(spark, sf_dir)).select(
         "l_orderkey", F.col("_metadata.file_path").alias("fp")
     )
     path_bucket = F.regexp_extract("fp", r"bucket=(\d+)", 1).cast("long")
@@ -340,7 +340,7 @@ def q_source_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     side still shows PushedFilters and skips row groups whose bloom
     rejects the key.
     """
-    li = spark.read.parquet(bloom_layout(spark, sf_dir)).filter(
+    li = read_parquet(spark, bloom_layout(spark, sf_dir)).filter(
         F.col("l_suppkey") == _BLOOM_KEY
     )
     return li.groupBy("l_returnflag").agg(

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..registry import register
 
@@ -450,7 +450,7 @@ def _dsir_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(out)
             )
             _DSIR_BIGRAM_DIRS[sf_dir] = out
-    return spark.read.parquet(_DSIR_BIGRAM_DIRS[sf_dir])
+    return read_parquet(spark, _DSIR_BIGRAM_DIRS[sf_dir])
 
 
 @register("q_mixture_dsir", oracle=_DSIR_ORACLE)

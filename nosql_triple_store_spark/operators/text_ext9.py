@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..registry import register
 
@@ -56,7 +56,7 @@ def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents")
         ).write.mode("overwrite").parquet(out)
         _SPAN_DIRS[sf_dir] = out
-    return spark.read.parquet(_SPAN_DIRS[sf_dir])
+    return read_parquet(spark, _SPAN_DIRS[sf_dir])
 
 
 def dup_spans_over(docs: DataFrame) -> DataFrame:

@@ -40,7 +40,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.vectors import as_double_array, cosine_col
 from ..registry import register, register_layout
 from .vector_ext4 import _assign, kmeans_fit
@@ -256,7 +256,7 @@ def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache_key = _model_path(sf_dir)
     with _CODE_LOCK:
         if cache_key in _CODE_DIRS:
-            return spark.read.parquet(_CODE_DIRS[cache_key])
+            return read_parquet(spark, _CODE_DIRS[cache_key])
     model = _ivfpq_model(spark, sf_dir)
     centroids = model["centroids"]
     cent_lit = _darray_expr(centroids)
@@ -300,7 +300,7 @@ def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         if cache_key not in _CODE_DIRS:
             _CODE_DIRS[cache_key] = out
         out = _CODE_DIRS[cache_key]
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 _PROBE_PLANS: dict[str, tuple] = {}

@@ -62,14 +62,17 @@ triples AS (
 """
 
 
+# The fixture tables the triples relation is derived from.
+TRIPLE_SOURCES = ("customer", "supplier", "nation", "region")
+
+
 def triples_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive an RDF-ish (s, p, o) triples DataFrame from the fixture
     tables (FIXTURES.md maps the fixtures onto the reference's YAGO triple
     schema: 4 string columns, SURVEY §1.2)."""
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
+    cust, supp, nation, region = (
+        load_table(spark, sf_dir, t) for t in TRIPLE_SOURCES
+    )
 
     parts = [
         cust.select(

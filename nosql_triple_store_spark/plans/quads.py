@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
 from .bgp import triples_view
 
 GRAPHS = ("g:customer", "g:nation", "g:region", "g:supplier")
@@ -89,4 +90,4 @@ def quad_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             "g"
         ).parquet(out)
         _QUAD_DIRS[sf_dir] = out
-    return spark.read.parquet(_QUAD_DIRS[sf_dir])
+    return read_parquet(spark, _QUAD_DIRS[sf_dir])

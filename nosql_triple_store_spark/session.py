@@ -18,8 +18,8 @@ import tempfile
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs every query needs for deterministic results,
-# applied defensively in catalog.load_table too (the verification driver
-# owns its own SparkSession).
+# applied defensively before every catalog.read_parquet too (the
+# verification driver owns its own SparkSession).
 RUNTIME_CONFS: dict[str, str] = {
     # ns-precision parquet timestamps surface as long (ns since epoch);
     # catalog.load_table converts to timestamp_ntz at µs precision.

@@ -21,8 +21,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
 from ..functions.lww import latest_by_key, lww_merge
-from ..session import ensure_runtime_confs
 
 _VERSION_RE = re.compile(r"^v(\d{6})$")
 _DELTA_RE = re.compile(r"^d(\d{6})$")
@@ -38,11 +38,10 @@ def latest_version_path(base_dir: str) -> str | None:
 
 
 def read_register(spark: SparkSession, base_dir: str) -> DataFrame:
-    ensure_runtime_confs(spark)
     path = latest_version_path(base_dir)
     if path is None:
         raise FileNotFoundError(f"no register versions under {base_dir}")
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def init_register(
@@ -79,13 +78,12 @@ def read_register_asof(
     Delta/Iceberg `VERSION AS OF`/`TIMESTAMP AS OF` reads, SURVEY §1.5;
     reference analog: report.pdf §2.0.1 state-based objects —
     reconstructing any historical state from retained updates)."""
-    ensure_runtime_confs(spark)
     deltas = sorted(
         d for d in os.listdir(base_dir) if _DELTA_RE.match(d)
     )
     if not deltas:
         raise FileNotFoundError(f"no retained deltas under {base_dir}")
-    log = spark.read.parquet(*[os.path.join(base_dir, d) for d in deltas])
+    log = read_parquet(spark, *[os.path.join(base_dir, d) for d in deltas])
     col = asof_col or order[0]
     payload = [c for c in log.columns if c not in keys]
     return latest_by_key(
@@ -106,7 +104,7 @@ def compact(
     current_path = latest_version_path(base_dir)
     if current_path is None:
         return init_register(delta, base_dir, keys, order)
-    current = spark.read.parquet(current_path)
+    current = read_parquet(spark, current_path)
     payload = [c for c in current.columns if c not in keys]
     merged = lww_merge(
         current, [delta.select(*current.columns)], keys, order, payload

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..catalog import read_parquet
 from ..registry import register
 from ..scratch import ckpt_tmp, scratch_tmp
 from ..session import ensure_runtime_confs
@@ -49,15 +50,10 @@ _EVENTS_DDL_TS = (
     "value double, props string"
 )
 
-_TS_IS_LONG: dict[str, bool] = {}
-
 
 def _events_ts_is_long(spark: SparkSession, sf_dir: str) -> bool:
-    if sf_dir not in _TS_IS_LONG:
-        ensure_runtime_confs(spark)
-        dt = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)
-        _TS_IS_LONG[sf_dir] = dt.get("ts") == "bigint"
-    return _TS_IS_LONG[sf_dir]
+    dt = dict(read_parquet(spark, f"{sf_dir}/events.parquet").dtypes)
+    return dt.get("ts") == "bigint"
 
 
 def _events_ddl(spark: SparkSession, sf_dir: str) -> str:

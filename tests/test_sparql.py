@@ -5,12 +5,20 @@ the documented subset."""
 from __future__ import annotations
 
 import re
+import shutil
 from collections import Counter
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from nosql_triple_store_spark.plans.bgp import Var
-from nosql_triple_store_spark.plans.sparql import parse_sparql, tokenize
+from nosql_triple_store_spark.plans.sparql import (
+    compile_sparql_encoded,
+    parse_sparql,
+    tokenize,
+)
 from nosql_triple_store_spark.registry import all_specs
 
 from .conftest import SF_DIR
@@ -1016,3 +1024,29 @@ def test_minus_and_groupby_noagg_over_union(spark):
     ).collect()
     assert groups
     assert len(groups) == len({(r["n"], r["s"]) for r in groups})
+
+
+def test_encoded_store_follows_rewritten_source(spark, tmp_path):
+    """The encoded store is keyed by its source tables' fingerprints: after
+    customer.parquet is rewritten, SPARQL answers from the new rows."""
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    text = "SELECT ?p ?o WHERE { customer:1 ?p ?o }"
+
+    def segment():
+        rows = compile_sparql_encoded(spark, str(sf), text).collect()
+        return {r["o"] for r in rows if r["p"] == "inSegment"}
+
+    path = sf / "customer.parquet"
+    t = pq.read_table(path)
+    (old,) = segment()
+    assert old != "REWRITTEN"
+    seg = t.column("c_mktsegment")
+    new_seg = pc.if_else(
+        pc.equal(t.column("c_custkey"), 1),
+        pa.scalar("REWRITTEN", seg.type),
+        seg,
+    )
+    idx = t.schema.get_field_index("c_mktsegment")
+    pq.write_table(t.set_column(idx, t.schema.field(idx), new_seg), path)
+    assert segment() == {"REWRITTEN"}
