@@ -13,7 +13,6 @@ disabled."""
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register, register_layout
+from ..scratch import scratch_tmp
 
 _N_BUCKETS = 8
 _TABLES: dict[str, tuple[str, str]] = {}  # sf_dir -> (orders_tbl, lineitem_tbl)
@@ -38,7 +38,7 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         if spark.catalog.tableExists(a) and spark.catalog.tableExists(b):
             return _TABLES[sf_dir]
     tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix="spark_graft_buckets_")
+    root = scratch_tmp("spark_graft_buckets_")
     names = (f"orders_b_{tag}", f"lineitem_b_{tag}")
     for name, (tbl, key) in zip(
         names, (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))

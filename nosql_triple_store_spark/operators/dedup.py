@@ -35,6 +35,7 @@ from pyspark.sql.types import LongType
 from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
 from ..registry import register, register_layout
+from ..scratch import build_once
 from ..widths import cluster_cores, fanout_width
 from ..materialize import lazy_cut, materialize
 
@@ -67,33 +68,25 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHINGLE_DF_CAP = 5000
 
 
-_SHINGLE_DIRS: dict[str, str] = {}
-
-
 @register_layout("shingle_stream", r"q_dedup|q_text|q_stream_dedup")
 def _shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) exploded stream, materialized once per process
     as scratch parquet (written 32-wide so the explode parallelizes)."""
-    if sf_dir not in _SHINGLE_DIRS:
-        from ..scratch import scratch_dir, timed_build
 
-        with timed_build("shingle_stream"):
-            out = scratch_dir("shingles", sf_dir)
-            docs = load_table(spark, sf_dir, "documents")
-            (
-                docs.select(
-                    "doc_id",
-                    F.explode(shingles_col(tokens_col())).alias("shingle"),
-                )
-                .repartition(cluster_cores(spark))
-                .write.mode("overwrite")
-                .parquet(out)
+    def write(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        (
+            docs.select(
+                "doc_id",
+                F.explode(shingles_col(tokens_col())).alias("shingle"),
             )
-            _SHINGLE_DIRS[sf_dir] = out
-    return read_parquet(spark, _SHINGLE_DIRS[sf_dir])
+            .repartition(cluster_cores(spark))
+            .write.parquet(out)
+        )
 
-
-_PAIR_DIRS: dict[tuple[str, int], str] = {}
+    return read_parquet(
+        spark, build_once("shingle_stream", sf_dir, write, sources=("documents",))
+    )
 
 
 def _shingle_pairs(
@@ -102,26 +95,25 @@ def _shingle_pairs(
     """(doc_a, doc_b, common, na, nb) via inverted-index self-join,
     materialized ONCE per process as scratch parquet.
 
-    Round 9: this exact all-common-shingle stream is Σdf² — quadratic
-    on a saturating shingle space (455.6 s at sf3, SCALE.md Round-8) —
-    so NO registered query consumes it anymore: q_dedup_near and
-    q_text_containment route through the exact prefix-filter ladder
-    (dedup_prefix.py) and q_dedup_clusters through the LSH-candidate →
-    exact-verify scratch (dedup_pipeline.verified_edges_scratch). It
-    stays as the small-SF GROUND-TRUTH TWIN: tests/test_dedup_prefix.py
-    and tests/test_dedup_pipeline.py pin the scale-safe paths against
-    it at fixture scale."""
-    key = (sf_dir, df_cap)
-    if key not in _PAIR_DIRS:
-        from ..scratch import scratch_dir, timed_build
+    This exact all-common-shingle stream is Σdf² — quadratic on a
+    saturating shingle space (455.6 s at sf3, SCALE.md) — so NO
+    registered query consumes it: q_dedup_near and q_text_containment
+    route through the exact prefix-filter ladder (dedup_prefix.py) and
+    q_dedup_clusters through the LSH-candidate → exact-verify scratch
+    (dedup_pipeline.verified_edges_scratch). It stays as the small-SF
+    GROUND-TRUTH TWIN: tests/test_dedup_prefix.py and
+    tests/test_dedup_pipeline.py pin the scale-safe paths against it at
+    fixture scale."""
 
-        _shingle_stream(spark, sf_dir)  # its own timed_build (no nesting)
-        with timed_build(f"shingle_pairs_{df_cap}"):
-            pairs = _shingle_pairs_plan(spark, sf_dir, df_cap)
-            out = scratch_dir(f"shingle_pairs_{df_cap}", sf_dir)
-            pairs.write.mode("overwrite").parquet(out)
-            _PAIR_DIRS[key] = out
-    return read_parquet(spark, _PAIR_DIRS[key])
+    def write(out: str) -> None:
+        _shingle_pairs_plan(spark, sf_dir, df_cap).write.parquet(out)
+
+    return read_parquet(
+        spark,
+        build_once(
+            f"shingle_pairs_{df_cap}", sf_dir, write, sources=("documents",)
+        ),
+    )
 
 
 def _shingle_pairs_plan(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
 from ..registry import register, register_layout
+from ..scratch import build_once
 from ..widths import cluster_cores
 from .dedup import _shingle_stream
 from .graph_ext2 import star_fixpoint
@@ -80,9 +81,6 @@ def _band_keys(sh: DataFrame) -> DataFrame:
     )
 
 
-_BAND_DIRS: dict[str, str] = {}
-
-
 @register_layout("band_index", r"q_dedup|q_stream_dedup")
 def band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus band index (doc_id, band, bkey) as scratch parquet,
@@ -90,20 +88,17 @@ def band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     table a production deployment keys by (band, bkey). Consumers:
     q_dedup_pipeline (self-join), q_dedup_incremental (directional
     probe), q_stream_dedup_admission (per-batch probe + append)."""
-    if sf_dir not in _BAND_DIRS:
-        from ..scratch import scratch_dir, timed_build
 
-        sh = _shingle_stream(spark, sf_dir)  # its own timed_build
-        with timed_build("band_index"):
-            out = scratch_dir("bandindex", sf_dir)
-            (
-                _band_keys(sh)
-                .repartition(max(8, cluster_cores(spark) // 4))
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-            _BAND_DIRS[sf_dir] = out
-    return read_parquet(spark, _BAND_DIRS[sf_dir])
+    def write(out: str) -> None:
+        (
+            _band_keys(_shingle_stream(spark, sf_dir))
+            .repartition(max(8, cluster_cores(spark) // 4))
+            .write.parquet(out)
+        )
+
+    return read_parquet(
+        spark, build_once("band_index", sf_dir, write, sources=("documents",))
+    )
 
 
 def _minhash_candidates(sh: DataFrame, bands: DataFrame | None = None) -> DataFrame:
@@ -149,30 +144,25 @@ def _verified_edges(sh: DataFrame, cand: DataFrame) -> DataFrame:
     )
 
 
-_EDGE_DIRS: dict[str, str] = {}
-
-
 @register_layout("nearband_edges", r"q_dedup|q_stream_dedup")
 def verified_edges_scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The threshold-{THRESHOLD} verified near-dup edge set (LSH band
     candidates → exact-Jaccard verify), materialized ONCE per process as
     scratch parquet. Three oracle-checked queries consume these edges
-    (q_dedup_pipeline, q_dedup_clusters, q_dedup_source_matrix) — the
-    round-9 routing that takes the quadratic `_shingle_pairs` layout off
-    every scale path (VERDICT r8 #1): the candidate join is banded
-    (sub-quadratic, measured ×3.1 for ×3 data at sf3) and the verify is
-    |candidates| × doc length."""
-    if sf_dir not in _EDGE_DIRS:
-        from ..scratch import scratch_dir, timed_build
+    (q_dedup_pipeline, q_dedup_clusters, q_dedup_source_matrix); it
+    keeps the quadratic `_shingle_pairs` layout off every scale path:
+    the candidate join is banded (sub-quadratic, measured ×3.1 for ×3
+    data at sf3) and the verify is |candidates| × doc length."""
 
-        sh = _shingle_stream(spark, sf_dir)  # its own timed_build
-        bands = band_index(spark, sf_dir)  # its own timed_build
-        with timed_build("nearband_edges"):
-            edges = _verified_edges(sh, _minhash_candidates(sh, bands))
-            out = scratch_dir("nearband_edges", sf_dir)
-            edges.write.mode("overwrite").parquet(out)
-            _EDGE_DIRS[sf_dir] = out
-    return read_parquet(spark, _EDGE_DIRS[sf_dir])
+    def write(out: str) -> None:
+        sh = _shingle_stream(spark, sf_dir)
+        bands = band_index(spark, sf_dir)
+        _verified_edges(sh, _minhash_candidates(sh, bands)).write.parquet(out)
+
+    return read_parquet(
+        spark,
+        build_once("nearband_edges", sf_dir, write, sources=("documents",)),
+    )
 
 
 def _cluster_labels(docs: DataFrame, edges: DataFrame) -> DataFrame:

@@ -83,10 +83,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import read_parquet
 from ..registry import register, register_layout
+from ..scratch import build_once
 from ..widths import cluster_cores
 from ..materialize import materialize
-
-_RANKED_DIRS: dict[str, str] = {}
 
 # Descending threshold ladder as exact fractions (p, q). The 49/50 top
 # rung exists for duplication-rich corpora (every derived K-fold
@@ -122,31 +121,25 @@ def ranked_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the GLOBAL rarest-first order (df asc, shingle asc), materialized
     once per process as scratch parquet — the prefix-filter index layout.
     Build cost is linear: one df aggregate, one join, one per-doc sort."""
-    if sf_dir not in _RANKED_DIRS:
-        from ..scratch import scratch_dir, timed_build
+
+    def write(out: str) -> None:
         from .dedup import _shingle_stream
 
-        sh = _shingle_stream(spark, sf_dir)  # its own timed_build
-        with timed_build("ranked_shingles"):
-            df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-            w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-            ranked = (
-                sh.join(df, "shingle")
-                .select(
-                    "doc_id",
-                    "shingle",
-                    F.row_number().over(w).alias("pos"),
-                    F.count(F.lit(1))
-                    .over(Window.partitionBy("doc_id"))
-                    .alias("n_sh"),
-                )
-            )
-            out = scratch_dir("ranked_shingles", sf_dir)
-            ranked.repartition(cluster_cores(spark)).write.mode(
-                "overwrite"
-            ).parquet(out)
-            _RANKED_DIRS[sf_dir] = out
-    return read_parquet(spark, _RANKED_DIRS[sf_dir])
+        sh = _shingle_stream(spark, sf_dir)
+        df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        w = Window.partitionBy("doc_id").orderBy("df", "shingle")
+        ranked = sh.join(df, "shingle").select(
+            "doc_id",
+            "shingle",
+            F.row_number().over(w).alias("pos"),
+            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_sh"),
+        )
+        ranked.repartition(cluster_cores(spark)).write.parquet(out)
+
+    return read_parquet(
+        spark,
+        build_once("ranked_shingles", sf_dir, write, sources=("documents",)),
+    )
 
 
 def _cmin(p: int, q: int) -> F.Column:
@@ -219,9 +212,6 @@ def verify_pairs(
 # exactly the regime prefix filtering is built for; mirror-heavy real
 # corpora are where this collapse pays.
 
-_GROUP_DIRS: dict[str, str] = {}
-
-
 def _skey_col(shingle: str = "shingle") -> F.Column:
     """Canonical INJECTIVE set key: sorted shingles, each
     length-prefixed as ``len:data``, joined by "\\x1f" (ADVICE r10:
@@ -280,30 +270,23 @@ def _set_layout(spark: SparkSession, sf_dir: str) -> str:
     one group share n_sh (identical sets), so a size floor keeps or
     drops whole groups and the rep stays the rep — one build serves
     every floor."""
-    if sf_dir not in _GROUP_DIRS:
-        from ..scratch import scratch_dir, timed_build
 
+    def write(out: str) -> None:
         rs = ranked_shingles(spark, sf_dir)
-        with timed_build("shingle_set_groups"):
-            out = scratch_dir("setgroups", sf_dir)
-            sets = rs.groupBy("doc_id", "n_sh").agg(
-                _skey_col().alias("skey")
-            )
-            members = sets.select(
-                "doc_id",
-                "n_sh",
-                F.min("doc_id")
-                .over(Window.partitionBy("skey"))
-                .alias("rep"),
-            )
-            members.write.mode("overwrite").parquet(f"{out}/members")
-            mem = spark.read.parquet(f"{out}/members")
-            reps = mem.filter(F.col("doc_id") == F.col("rep")).select("rep")
-            rs.join(reps, rs["doc_id"] == reps["rep"], "left_semi").write.mode(
-                "overwrite"
-            ).parquet(f"{out}/repsh")
-            _GROUP_DIRS[sf_dir] = out
-    return _GROUP_DIRS[sf_dir]
+        sets = rs.groupBy("doc_id", "n_sh").agg(_skey_col().alias("skey"))
+        members = sets.select(
+            "doc_id",
+            "n_sh",
+            F.min("doc_id").over(Window.partitionBy("skey")).alias("rep"),
+        )
+        members.write.parquet(f"{out}/members")
+        mem = spark.read.parquet(f"{out}/members")
+        reps = mem.filter(F.col("doc_id") == F.col("rep")).select("rep")
+        rs.join(reps, rs["doc_id"] == reps["rep"], "left_semi").write.parquet(
+            f"{out}/repsh"
+        )
+
+    return build_once("shingle_set_groups", sf_dir, write, sources=("documents",))
 
 
 def _set_groups(spark: SparkSession, sf_dir: str, min_sh: int) -> DataFrame:
@@ -445,10 +428,6 @@ def _exact_is_proportional(
     return _SAT_DECISION[key]
 
 
-_LSHVER_DIRS: dict[str, str] = {}
-_STRETCH_DIRS: dict[tuple[str, int, int, int], str] = {}
-
-
 def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EVERY banded-LSH candidate pair with its exact stats
     (doc_a, doc_b, common, na, nb), THRESHOLD-FREE, materialized once
@@ -462,18 +441,17 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_index/nearband_edges (one artifact, many consumers — the
     production shape: verify candidates once, query thresholds many
     times)."""
-    if sf_dir not in _LSHVER_DIRS:
-        from ..scratch import scratch_dir, timed_build
+
+    def write(out: str) -> None:
         from .dedup_pipeline import _minhash_candidates, band_index
 
-        bands = band_index(spark, sf_dir)  # its own timed_build
-        with timed_build("lsh_verified_pairs"):
-            out = scratch_dir("lshver", sf_dir)
-            verify_pairs(
-                spark, sf_dir, _minhash_candidates(None, bands)
-            ).write.mode("overwrite").parquet(out)
-            _LSHVER_DIRS[sf_dir] = out
-    return read_parquet(spark, _LSHVER_DIRS[sf_dir])
+        cand = _minhash_candidates(None, band_index(spark, sf_dir))
+        verify_pairs(spark, sf_dir, cand).write.parquet(out)
+
+    return read_parquet(
+        spark,
+        build_once("lsh_verified_pairs", sf_dir, write, sources=("documents",)),
+    )
 
 
 def _lsh_jaccard_pairs(
@@ -526,20 +504,22 @@ def _lsh_containment_pairs(
     # saturated vocabulary — materialize it once per (corpus, rung) as
     # scratch parquet so reruns and the ladder's re-reads pay a file
     # scan, with the build attributed to the layout bucket
-    key = (sf_dir, p, q, min_sh)
-    if key not in _STRETCH_DIRS:
-        from ..scratch import scratch_dir, timed_build
+    def write(out: str) -> None:
+        rs = ranked_shingles(spark, sf_dir).filter(F.col("n_sh") >= min_sh)
+        _containment_rep_pairs(
+            spark, sf_dir, rs, p, q, stretch_only=True
+        ).write.parquet(out)
 
-        rs = ranked_shingles(spark, sf_dir).filter(
-            F.col("n_sh") >= min_sh
-        )
-        with timed_build("stretched_verified_pairs"):
-            out = scratch_dir(f"stretchver_{p}_{q}_{min_sh}", sf_dir)
-            _containment_rep_pairs(
-                spark, sf_dir, rs, p, q, stretch_only=True
-            ).write.mode("overwrite").parquet(out)
-            _STRETCH_DIRS[key] = out
-    stretched = read_parquet(spark, _STRETCH_DIRS[key])
+    stretched = read_parquet(
+        spark,
+        build_once(
+            "stretched_verified_pairs",
+            sf_dir,
+            write,
+            sources=("documents",),
+            key=(p, q, min_sh),
+        ),
+    )
     return balanced.unionByName(stretched.select(*balanced.columns))
 
 

@@ -9,14 +9,11 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..registry import register, register_layout
-from ..scratch import scratch_dir
+from ..scratch import build_once
 from ..widths import wedge_width
 from ..materialize import materialize
 
 K_CORE = 4
-
-_COPURCHASE_DIRS: dict[str, str] = {}
-
 
 @register_layout("copurchase_edges", r"q_graph")
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,8 +31,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics gets written once, exactly like a production feature/edge
     table (at 100 TB, bucketed by pa so the wedge joins also skip their
     shuffle)."""
-    if sf_dir not in _COPURCHASE_DIRS:
-        out = scratch_dir("copurchase", sf_dir)
+
+    def write(out: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
@@ -48,14 +45,13 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("pa") < F.col("pb"))
             .select("pa", "pb")
             .distinct()
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-        _COPURCHASE_DIRS[sf_dir] = out
-    return read_parquet(spark, _COPURCHASE_DIRS[sf_dir])
 
-
-_TRIANGLE_DIRS: dict[str, str] = {}
+    return read_parquet(
+        spark,
+        build_once("copurchase_edges", sf_dir, write, sources=("lineitem",)),
+    )
 
 
 @register_layout("triangle_list", r"q_graph")
@@ -67,8 +63,8 @@ def triangle_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (~1.9M triangle rows / ~50M wedge intermediates at sf0.1),
     so enumerating it once halves the cost of every triangle consumer.
     Same plan-local width-96 note as q_graph_triangles (SCALE.md)."""
-    if sf_dir not in _TRIANGLE_DIRS:
-        out = scratch_dir("triangles", sf_dir)
+
+    def write(out: str) -> None:
         pairs = _copurchase_edges(spark, sf_dir)
         wide = wedge_width(spark)
         e1 = pairs.select(F.col("pa").alias("x"), F.col("pb").alias("y"))
@@ -80,9 +76,12 @@ def triangle_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         tri = wedges.repartition(wide, "x", "z").join(
             e3.repartition(wide, "x", "z"), ["x", "z"]
         )
-        tri.select("x", "y", "z").write.mode("overwrite").parquet(out)
-        _TRIANGLE_DIRS[sf_dir] = out
-    return read_parquet(spark, _TRIANGLE_DIRS[sf_dir])
+        tri.select("x", "y", "z").write.parquet(out)
+
+    return read_parquet(
+        spark,
+        build_once("triangle_list", sf_dir, write, sources=("lineitem",)),
+    )
 
 
 @register("q_graph_kcore", oracle=None)  # rows-only: iterative fixpoint

@@ -9,14 +9,12 @@ the scan touches only the morton buckets intersecting the rectangle
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..registry import register
+from ..scratch import build_once
 from ..sources.zorder import rectangle_buckets, write_zordered
 
 BITS = 7  # p_size <= 50 (6 bits), price offset <= 99 (7 bits)
@@ -25,23 +23,20 @@ X_LO, X_HI = 10, 25  # p_size
 Y_LO, Y_HI = 20, 60  # floor(p_retailprice) - 900
 
 
-def _layout_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), "spark_graft_zorder", tag)
-
-
 def build_layout(spark: SparkSession, sf_dir: str) -> str:
-    part = load_table(spark, sf_dir, "part")
-    path = _layout_path(sf_dir)
-    write_zordered(
-        part,
-        F.col("p_size"),
-        F.floor(F.col("p_retailprice")).cast("long") - 900,
-        path,
-        bits=BITS,
-        bucket_bits=BUCKET_BITS,
-    )
-    return path
+    """The Z-ordered copy of ``part``, written once (``build_once``)."""
+
+    def write(path: str) -> None:
+        write_zordered(
+            load_table(spark, sf_dir, "part"),
+            F.col("p_size"),
+            F.floor(F.col("p_retailprice")).cast("long") - 900,
+            path,
+            bits=BITS,
+            bucket_bits=BUCKET_BITS,
+        )
+
+    return build_once("zorder_layout", sf_dir, write, sources=("part",))
 
 
 @register(

@@ -13,13 +13,13 @@ plan time (static filters) or run time (dynamic pruning from a join).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..registry import register
+from ..scratch import build_once
 from .triple import E_CTE
 
 # --------------------------------------------------------------------------
@@ -196,7 +196,6 @@ def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSV_DIRS: dict[str, str] = {}
 _ORDERS_DDL = (
     "o_orderkey long, o_custkey long, o_orderstatus string, "
     "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
@@ -210,25 +209,20 @@ def csv_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders as a CSV-backed DataFrame: exported once per sf_dir to
     headered CSV, read back with an explicit schema + NTZ timestamp
     format (shared by q_source_csv and the federated join in ext17)."""
-    if sf_dir not in _CSV_DIRS:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_csv",
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
+
+    def write(out: str) -> None:
         (
             load_table(spark, sf_dir, "orders")
-            .write.mode("overwrite")
-            .option("header", True)
+            .write.option("header", True)
             .option("timestampNTZFormat", _TS_FMT)
             .csv(out)
         )
-        _CSV_DIRS[sf_dir] = out
+
     return (
         spark.read.schema(_ORDERS_DDL)
         .option("header", True)
         .option("timestampNTZFormat", _TS_FMT)
-        .csv(_CSV_DIRS[sf_dir])
+        .csv(build_once("orders_csv", sf_dir, write, sources=("orders",)))
     )
 
 
@@ -260,27 +254,17 @@ def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PART_DIRS: dict[str, str] = {}
-
-
 def _partitioned_orders(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders hive-partitioned by o_orderpriority plus a tiny
     priority dimension table, once per sf_dir."""
-    if sf_dir not in _PART_DIRS:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_part",
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
-        (
-            load_table(spark, sf_dir, "orders")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(os.path.join(base, "orders"))
+
+    def write(base: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        orders.write.partitionBy("o_orderpriority").parquet(
+            os.path.join(base, "orders")
         )
         dim = (
-            load_table(spark, sf_dir, "orders")
-            .select(F.col("o_orderpriority").alias("pr"))
+            orders.select(F.col("o_orderpriority").alias("pr"))
             .distinct()
             .withColumn(
                 "urgency",
@@ -290,11 +274,9 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 ).otherwise(F.lit("normal")),
             )
         )
-        dim.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, "priorities")
-        )
-        _PART_DIRS[sf_dir] = base
-    base = _PART_DIRS[sf_dir]
+        dim.coalesce(1).write.parquet(os.path.join(base, "priorities"))
+
+    base = build_once("partitioned_orders", sf_dir, write, sources=("orders",))
     return os.path.join(base, "orders"), os.path.join(base, "priorities")
 
 

@@ -12,8 +12,6 @@ SURVEY §1.3)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
@@ -23,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, read_parquet
 from ..plans.bgp import TRIPLES_SQL, triples_view
 from ..registry import register
+from ..scratch import build_once
 from .triple import E_CTE
 
 
@@ -79,7 +78,6 @@ def q_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sparql_minus(a, asia)
 
 
-_EVO_DIRS: dict[str, str] = {}
 _EVO_SPLIT = 250  # doc_id threshold between schema v1 and v2 writers
 
 
@@ -106,12 +104,8 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain scan (mergeSchema costs one footer pass over the file set —
     pin the merged schema in a metastore to avoid paying it per
     query)."""
-    if sf_dir not in _EVO_DIRS:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_evo",
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
+
+    def write(base: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         v1 = docs.filter(F.col("doc_id") < _EVO_SPLIT).select(
             "doc_id", "lang", "n_chars"
@@ -122,19 +116,17 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_chars",
             (F.col("n_chars") % 5).alias("quality"),
         )
-        v1.write.mode("overwrite").parquet(base)
+        v1.write.parquet(base)
         v2.write.mode("append").parquet(base)
-        _EVO_DIRS[sf_dir] = base
-    merged = spark.read.option("mergeSchema", "true").parquet(_EVO_DIRS[sf_dir])
+
+    base = build_once("schema_evolution", sf_dir, write, sources=("documents",))
+    merged = spark.read.option("mergeSchema", "true").parquet(base)
     return merged.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
         F.count("quality").alias("n_with_quality"),
         F.sum("quality").alias("quality_sum"),
     )
-
-
-_DYNPART_DIRS: dict[str, str] = {}
 
 
 @register(
@@ -169,14 +161,10 @@ def q_source_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB. The final read-back aggregate proves both halves: the
     purchase partition holds one latest row per user; every other
     partition still holds its raw rows."""
-    if sf_dir not in _DYNPART_DIRS:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_dynpart",
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
+
+    def write(base: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(base)
+        ev.write.partitionBy("event_type").parquet(base)
         latest = (
             ev.filter(F.col("event_type") == "purchase")
             .groupBy("user_id")
@@ -204,8 +192,10 @@ def q_source_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         finally:
             spark.conf.set(mode_key, old)
-        _DYNPART_DIRS[sf_dir] = base
-    final = read_parquet(spark, _DYNPART_DIRS[sf_dir])
+
+    final = read_parquet(
+        spark, build_once("partition_overwrite", sf_dir, write, sources=("events",))
+    )
     return final.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").alias("n_users"),

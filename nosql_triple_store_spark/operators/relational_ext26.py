@@ -17,7 +17,7 @@ from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
 from ..operators.triple import E_CTE
 from ..registry import register
-from ..scratch import scratch_dir
+from ..scratch import build_once
 from ..widths import fanout_width
 from ..materialize import materialize
 
@@ -251,34 +251,24 @@ _SMALL_FILES = 48
 _COMPACT_TARGET = 4
 
 
-_COMPACT_DIRS: dict[str, tuple[str, str]] = {}
-
-
 def compact_dir(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize the small-file layout and its compacted rewrite;
-    returns (small_dir, compacted_dir). Exposed for tests.
+    """Materialize the small-file layout and its compacted rewrite
+    once (``scratch.build_once``); returns (small_dir, compacted_dir).
+    Exposed for tests."""
 
-    Memoized per sf_dir like the sibling _COPURCHASE/_XML/_BINFILE
-    caches, so repeated q_maintenance_compact runs don't pay two full
-    event-table rewrites each, and a concurrent run can never overwrite
-    a directory another plan is lazily reading (path is also
-    per-process via scratch_dir)."""
-    if sf_dir in _COMPACT_DIRS:
-        return _COMPACT_DIRS[sf_dir]
-    base = scratch_dir("compact", sf_dir)
-    small, compacted = f"{base}/small", f"{base}/compacted"
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    ev.repartition(_SMALL_FILES).write.mode("overwrite").parquet(small)
-    (
-        spark.read.parquet(small)
-        .coalesce(_COMPACT_TARGET)
-        .write.mode("overwrite")
-        .parquet(compacted)
-    )
-    _COMPACT_DIRS[sf_dir] = (small, compacted)
-    return small, compacted
+    def write(base: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "event_type", "value"
+        )
+        ev.repartition(_SMALL_FILES).write.parquet(f"{base}/small")
+        (
+            spark.read.parquet(f"{base}/small")
+            .coalesce(_COMPACT_TARGET)
+            .write.parquet(f"{base}/compacted")
+        )
+
+    base = build_once("compact", sf_dir, write, sources=("events",))
+    return f"{base}/small", f"{base}/compacted"
 
 
 @register("q_maintenance_compact", oracle=_COMPACT_ORACLE)

@@ -15,11 +15,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..scratch import scratch_dir
+from ..scratch import build_once
 
 # --- q_source_xml ---------------------------------------------------------
-
-_XML_DIRS: dict[str, str] = {}
 
 _XML_ORACLE = """
 SELECT c_mktsegment,
@@ -41,25 +39,25 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB lake typically federates (the reference's PostgreSQL/Mongo
     tier speaks it via every ESB); parsing happens JVM-side per
     partition, no Python in the row path."""
-    if sf_dir not in _XML_DIRS:
-        out = scratch_dir("xml", sf_dir)
+
+    def write(out: str) -> None:
         (
             load_table(spark, sf_dir, "customer")
             .select("c_custkey", "c_mktsegment", "c_acctbal")
-            .write.mode("overwrite")
-            .option("rowTag", "customer")
+            .write.option("rowTag", "customer")
             .option("rootTag", "customers")
             .format("xml")
             .save(out)
         )
-        _XML_DIRS[sf_dir] = out
+
+    out = build_once("customer_xml", sf_dir, write, sources=("customer",))
     back = (
         spark.read.schema(
             "c_custkey long, c_mktsegment string, c_acctbal double"
         )
         .option("rowTag", "customer")
         .format("xml")
-        .load(_XML_DIRS[sf_dir])
+        .load(out)
     )
     return back.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -70,8 +68,6 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- q_source_binaryfile ----------------------------------------------------
-
-_BINFILE_DIRS: dict[str, str] = {}
 
 _BINFILE_ORACLE = """
 SELECT source,
@@ -93,21 +89,21 @@ def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning applies to binaryFile like any source). The oracle recomputes
     the same bytes as Σ(octet_length(text)+1 newline) per source —
     file-count-independent, so the check is layout-stable."""
-    if sf_dir not in _BINFILE_DIRS:
-        out = scratch_dir("binfiles", sf_dir)
+
+    def write(out: str) -> None:
         (
             load_table(spark, sf_dir, "documents")
             .select("source", "text")
             .repartition("source")
-            .write.mode("overwrite")
-            .partitionBy("source")
+            .write.partitionBy("source")
             .text(out)
         )
-        _BINFILE_DIRS[sf_dir] = out
+
+    out = build_once("documents_binfiles", sf_dir, write, sources=("documents",))
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
-        .load(_BINFILE_DIRS[sf_dir])
+        .load(out)
     )
     return (
         files.select(

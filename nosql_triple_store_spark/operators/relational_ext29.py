@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.triple import E_CTE
 from ..registry import register, register_layout
+from ..scratch import build_once
 
 # --- q_agg_moments --------------------------------------------------------
 
@@ -153,16 +154,14 @@ _VACUUM_RESULTS: dict[str, list[tuple]] = {}
 @register_layout("vacuum_register", r"q_maintenance_vacuum")
 def vacuum_register(spark: SparkSession, sf_dir: str) -> str:
     """Build-once versioned LWW register the vacuum operates on
-    (4 event-time compact batches), cached per (process, sf_dir) via
-    the scratch path. Exposed for bench.py's layout phase: the
+    (4 event-time compact batches), built once by
+    ``scratch.build_once``. Exposed for bench.py's layout phase: the
     register BUILD is table-history setup (the state any production
     table already has); the vacuum + reclamation report is the
     operation q_maintenance_vacuum measures."""
-    from ..scratch import scratch_dir
     from ..sources.compaction import compact
 
-    base = os.path.join(scratch_dir("vacuum", sf_dir), "register")
-    if not os.path.isdir(base):
+    def write(base: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "user_id", "event_type", "event_id", "ts", "value"
         )
@@ -173,7 +172,8 @@ def vacuum_register(spark: SparkSession, sf_dir: str) -> str:
                 F.pmod(F.col("event_id"), F.lit(_VACUUM_BATCHES)) == q
             )
             compact(spark, base, delta, keys, order)
-    return base
+
+    return build_once("vacuum_register", sf_dir, write, sources=("events",))
 
 
 @register("q_maintenance_vacuum", oracle=None)  # rows-only: fs maintenance

@@ -3,17 +3,13 @@ windows, string edit distance, dictionary-encoded BGP execution."""
 
 from __future__ import annotations
 
-import hashlib
-import os
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..plans.bgp import TRIPLE_SOURCES, Var, compile_bgp, triples_view
 from ..registry import register, register_layout
-from ..scratch import scratch_dir, source_fingerprint
+from ..scratch import build_once
 from ..sources.dictionary import build_dictionary
 from .bgp_queries import STAR_ORACLE
 
@@ -253,13 +249,6 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
-# sf_dir -> (source fingerprints, dictionary dir, encoded-triples dir)
-_ENC_STORE_DIRS: dict[str, tuple[tuple[str, ...], str, str]] = {}
-# check-then-build guard (ADVICE r5): same two-thread overwrite-while-
-# reading race relational_ext55 fixes with its _CACHE_LOCK
-_ENC_STORE_LOCK = threading.Lock()
-
-
 @register_layout("bgp_encoded_store", r"q_bgp|q_sparql|q_stream_bgp")
 def encoded_store(spark: SparkSession, sf_dir: str):
     """The dictionary-encoded triple store as scratch parquet, built
@@ -274,26 +263,26 @@ def encoded_store(spark: SparkSession, sf_dir: str):
     derive from (``TRIPLE_SOURCES``): a rewritten source builds a fresh
     store in a new scratch path, so SPARQL never answers from stale
     triples and a DataFrame still reading the old store keeps its files."""
-    fps = tuple(source_fingerprint(sf_dir, t) for t in TRIPLE_SOURCES)
-    with _ENC_STORE_LOCK:
-        built = _ENC_STORE_DIRS.get(sf_dir)
-        if built is None or built[0] != fps:
-            built = (fps, *_encoded_store_build(spark, sf_dir, fps))
-            _ENC_STORE_DIRS[sf_dir] = built
-    _, out_d, out_e = built
-    return read_parquet(spark, out_d), read_parquet(spark, out_e)
+
+    def write_dict(out: str) -> None:
+        build_dictionary(triples_view(spark, sf_dir), ids="hash").write.parquet(out)
+
+    d = read_parquet(
+        spark, build_once("bgp_dict", sf_dir, write_dict, sources=TRIPLE_SOURCES)
+    )
+    enc = build_once(
+        "bgp_enc",
+        sf_dir,
+        lambda out: _encode_triples(spark, sf_dir, d).write.parquet(out),
+        sources=TRIPLE_SOURCES,
+    )
+    return d, read_parquet(spark, enc)
 
 
-def _encoded_store_build(
-    spark: SparkSession, sf_dir: str, fps: tuple[str, ...]
-) -> tuple[str, str]:
-    tag = hashlib.sha1("-".join(fps).encode("utf-8")).hexdigest()[:12]
-    out_d = os.path.join(scratch_dir("bgp_dict", sf_dir), tag)
-    out_e = os.path.join(scratch_dir("bgp_enc", sf_dir), tag)
+def _encode_triples(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
+    """The triples view with s/p/o replaced by their dictionary ids."""
     t = triples_view(spark, sf_dir)
-    build_dictionary(t, ids="hash").write.mode("overwrite").parquet(out_d)
-    d = read_parquet(spark, out_d)
-    enc = (
+    return (
         t.join(
             F.broadcast(
                 d.select(
@@ -327,8 +316,6 @@ def _encoded_store_build(
             F.col("o_id").alias("o"),
         )
     )
-    enc.write.mode("overwrite").parquet(out_e)
-    return out_d, out_e
 
 
 @register("q_bgp_star_encoded", oracle=STAR_ORACLE)

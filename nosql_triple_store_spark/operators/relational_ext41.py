@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.topk import grouped_topk
 from ..registry import register
-from ..scratch import scratch_dir
+from ..scratch import build_once
 from .triple import E_CTE
 
 _QUOTA_K = 5
@@ -87,7 +87,6 @@ def q_sample_group_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 # live files after replay: f0 (v0), f2 (v1 add), f3 (v2 add); f1 removed
 _TXN_SLICES = 4
 _TXN_LIVE = (0, 2, 3)
-_TXN_DIRS: dict[str, str] = {}
 
 
 def _txnlog_table(spark: SparkSession, sf_dir: str) -> str:
@@ -95,26 +94,25 @@ def _txnlog_table(spark: SparkSession, sf_dir: str) -> str:
     4 parquet data files sliced from documents by doc_id mod 4, plus a
     JSON commit log: v0 adds f0+f1, v1 removes f1 and adds f2, v2 adds
     f3."""
-    if sf_dir in _TXN_DIRS:
-        return _TXN_DIRS[sf_dir]
-    root = scratch_dir("txnlog", sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    for i in range(_TXN_SLICES):
-        docs.filter(F.col("doc_id") % _TXN_SLICES == i).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, f"f{i}"))
-    logdir = os.path.join(root, "_log")
-    os.makedirs(logdir, exist_ok=True)
-    commits = [
-        {"version": 0, "add": ["f0", "f1"], "remove": []},
-        {"version": 1, "add": ["f2"], "remove": ["f1"]},
-        {"version": 2, "add": ["f3"], "remove": []},
-    ]
-    for c in commits:
-        with open(os.path.join(logdir, f"{c['version']:05d}.json"), "w") as f:
-            json.dump(c, f)
-    _TXN_DIRS[sf_dir] = root
-    return root
+
+    def write(root: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        for i in range(_TXN_SLICES):
+            docs.filter(F.col("doc_id") % _TXN_SLICES == i).write.parquet(
+                os.path.join(root, f"f{i}")
+            )
+        logdir = os.path.join(root, "_log")
+        os.makedirs(logdir)
+        commits = [
+            {"version": 0, "add": ["f0", "f1"], "remove": []},
+            {"version": 1, "add": ["f2"], "remove": ["f1"]},
+            {"version": 2, "add": ["f3"], "remove": []},
+        ]
+        for c in commits:
+            with open(os.path.join(logdir, f"{c['version']:05d}.json"), "w") as f:
+                json.dump(c, f)
+
+    return build_once("txnlog", sf_dir, write, sources=("documents",))
 
 
 @register(

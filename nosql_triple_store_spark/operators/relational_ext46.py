@@ -11,46 +11,42 @@ first chart: new users per day and the cumulative distinct-user count.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..scratch import scratch_dir
+from ..scratch import build_once
 from .triple import E_CTE
 
 _BAD_MOD = 7  # every 7th event id becomes a malformed line
-_CSV_DIRS: dict[str, str] = {}
 
 
 def _bad_csv_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per process) a CSV export of events where every
     {_BAD_MOD}th row's value field is the unparseable token 'xx'."""
-    if sf_dir in _CSV_DIRS:
-        return _CSV_DIRS[sf_dir]
-    path = os.path.join(scratch_dir("badcsv", sf_dir), "events_csv")
-    ev = load_table(spark, sf_dir, "events")
-    # the money field is derived from INTEGER cents (never float
-    # formatting, whose tie-rounding is engine/locale-sensitive)
-    cents = F.round(F.col("value") * 100).cast("long")
-    money = F.concat(
-        F.floor(cents / 100).cast("long").cast("string"),
-        F.lit("."),
-        F.lpad((cents % 100).cast("string"), 2, "0"),
-    )
-    line = F.concat_ws(
-        ",",
-        F.col("event_id").cast("string"),
-        F.col("event_type"),
-        F.when(F.col("event_id") % _BAD_MOD == 0, F.lit("xx")).otherwise(
-            money
-        ),
-    )
-    ev.select(line.alias("value")).write.mode("overwrite").text(path)
-    _CSV_DIRS[sf_dir] = path
-    return path
+
+    def write(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        # the money field is derived from INTEGER cents (never float
+        # formatting, whose tie-rounding is engine/locale-sensitive)
+        cents = F.round(F.col("value") * 100).cast("long")
+        money = F.concat(
+            F.floor(cents / 100).cast("long").cast("string"),
+            F.lit("."),
+            F.lpad((cents % 100).cast("string"), 2, "0"),
+        )
+        line = F.concat_ws(
+            ",",
+            F.col("event_id").cast("string"),
+            F.col("event_type"),
+            F.when(F.col("event_id") % _BAD_MOD == 0, F.lit("xx")).otherwise(
+                money
+            ),
+        )
+        ev.select(line.alias("value")).write.text(path)
+
+    return build_once("bad_csv", sf_dir, write, sources=("events",))
 
 
 @register(

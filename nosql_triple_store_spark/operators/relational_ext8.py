@@ -3,19 +3,14 @@ scoring, count-min sketch frequency estimation."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..registry import register
+from ..scratch import build_once
 from ..materialize import lazy_cut
-
-_JSONL_DIRS: dict[str, str] = {}
-
 
 @register(
     "q_source_jsonl",
@@ -32,17 +27,15 @@ def q_source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     and can silently widen types; pinning the schema keeps the read
     single-pass and stable. Aggregate proves the roundtrip is lossless
     (oracle runs on the original parquet)."""
-    if sf_dir not in _JSONL_DIRS:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_jsonl",
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
-        load_table(spark, sf_dir, "documents").write.mode("overwrite").json(out)
-        _JSONL_DIRS[sf_dir] = out
+    out = build_once(
+        "documents_jsonl",
+        sf_dir,
+        lambda out: load_table(spark, sf_dir, "documents").write.json(out),
+        sources=("documents",),
+    )
     docs = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
-    ).json(_JSONL_DIRS[sf_dir])
+    ).json(out)
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),

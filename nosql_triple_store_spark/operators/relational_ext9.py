@@ -3,16 +3,16 @@ growth, ORC source roundtrip."""
 
 from __future__ import annotations
 
-import threading
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..scratch import build_once
+from ..widths import cluster_cores
 from .triple import E_CTE
 
 
@@ -90,9 +90,6 @@ def q_orders_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORC_DIRS: dict[str, str] = {}
-
-
 @register(
     "q_source_orc",
     oracle="""
@@ -107,15 +104,13 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     format Spark reads natively — predicate pushdown and column pruning
     work the same as parquet), read back and aggregated; oracle runs on
     the original parquet, proving losslessness."""
-    if sf_dir not in _ORC_DIRS:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_orc",
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(out)
-        _ORC_DIRS[sf_dir] = out
-    orders = spark.read.orc(_ORC_DIRS[sf_dir])
+    out = build_once(
+        "orders_orc",
+        sf_dir,
+        lambda out: load_table(spark, sf_dir, "orders").write.orc(out),
+        sources=("orders",),
+    )
+    orders = spark.read.orc(out)
     return orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
@@ -130,12 +125,6 @@ def _spark_avro_available() -> bool:
 
     home = os.environ.get("SPARK_HOME", "/opt/spark")
     return bool(glob.glob(os.path.join(home, "jars", "spark-avro*.jar")))
-
-
-_AVRO_DIRS: dict[str, str] = {}
-# check-then-build guards (ADVICE r5): same race relational_ext55
-# fixes with its _CACHE_LOCK
-_AVRO_LOCK = threading.Lock()
 
 
 @register(
@@ -157,42 +146,34 @@ def q_source_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/avro_py.py — distributed both ways (mapInPandas writer per
     partition, binaryFile + mapInPandas reader), so the query is
     oracle-VERIFIED on jar-less runtimes instead of skipped."""
-    with _AVRO_LOCK:
-        if sf_dir not in _AVRO_DIRS:
-            from ..scratch import scratch_dir
 
-            out = scratch_dir("avro", sf_dir)
-            from ..widths import cluster_cores
+    def write(out: str) -> None:
+        # width the encode: the source arrives in a handful of scan
+        # partitions, which would serialize the bytes-proportional
+        # Python encode AND cap the binaryFile reader at that file
+        # count (sf1 sweep: 17x for 10x data; ~linear after)
+        orders_src = load_table(spark, sf_dir, "orders").repartition(
+            cluster_cores(spark)
+        )
+        if _spark_avro_available():  # pragma: no cover - jar absent
+            orders_src.write.format("avro").save(out)
+        else:
+            from ..sources.avro_py import write_avro_dir
 
-            # width the encode: the source arrives in a handful of scan
-            # partitions, which would serialize the bytes-proportional
-            # Python encode AND cap the binaryFile reader at that file
-            # count (r7 sf1 sweep: 17x for 10x data; ~linear after)
-            orders_src = load_table(spark, sf_dir, "orders").repartition(
-                cluster_cores(spark)
-            )
-            if _spark_avro_available():  # pragma: no cover - jar absent
-                orders_src.write.mode("overwrite").format("avro").save(out)
-            else:
-                from ..sources.avro_py import write_avro_dir
+            write_avro_dir(orders_src, out)
 
-                write_avro_dir(orders_src, out)
-            _AVRO_DIRS[sf_dir] = (out, orders_src.schema)
-    out, schema = _AVRO_DIRS[sf_dir]
+    out = build_once("orders_avro", sf_dir, write, sources=("orders",))
     if _spark_avro_available():  # pragma: no cover - jar absent here
         orders = spark.read.format("avro").load(out)
     else:
         from ..sources.avro_py import read_avro_dir
 
+        schema = load_table(spark, sf_dir, "orders").schema
         orders = read_avro_dir(spark, out, schema)
     return orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
     )
-
-
-_BSON_DIRS: dict[str, tuple] = {}
-_BSON_LOCK = threading.Lock()
 
 
 @register(
@@ -226,23 +207,15 @@ def q_source_bson(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "o_orderpriority",
     ]
-    with _BSON_LOCK:
-        if sf_dir not in _BSON_DIRS:
-            from ..scratch import scratch_dir
-
-            out = scratch_dir("bson", sf_dir)
-            from ..widths import cluster_cores
-
-            # width the encode (see the Avro twin above)
-            src = (
-                load_table(spark, sf_dir, "orders")
-                .select(*cols)
-                .repartition(cluster_cores(spark))
-            )
-            write_bson_dir(src, out)
-            _BSON_DIRS[sf_dir] = (out, src.schema)
-    out, schema = _BSON_DIRS[sf_dir]
-    orders = read_bson_dir(spark, out, schema)
+    src = load_table(spark, sf_dir, "orders").select(*cols)
+    out = build_once(
+        "orders_bson",
+        sf_dir,
+        # width the encode (see the Avro twin above)
+        lambda out: write_bson_dir(src.repartition(cluster_cores(spark)), out),
+        sources=("orders",),
+    )
+    orders = read_bson_dir(spark, out, src.schema)
     return orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("o_orderkey").alias("min_key"),

@@ -25,13 +25,13 @@ key exactly like the compaction MERGE (sources/compaction.py).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.quads import QUADS_SQL
 from ..plans.sparql import compile_sparql_update
 from ..registry import register
+from ..scratch import build_once
 
 _CLEAR_Q = """
 CLEAR GRAPH <g:region> ;
@@ -74,26 +74,19 @@ _LOAD_ROWS = [
     ("region:0", "inZone", "zone_a"),  # in-document duplicate
 ]
 
-_LOAD_DOC_DIRS: dict[str, str] = {}
-_LOAD_DOC_LOCK = threading.Lock()
-
-
 def _load_doc_path(sf_dir: str) -> str:
     """Write the deterministic TSV LOAD document once per process —
     the bulk-ingest fixture file, shaped exactly like the reference's
     TSV upload payloads (s \\t p \\t o)."""
-    with _LOAD_DOC_LOCK:
-        if sf_dir not in _LOAD_DOC_DIRS:
-            from ..scratch import scratch_dir
 
-            d = scratch_dir("sparql_load_doc", sf_dir)
-            os.makedirs(d, exist_ok=True)
-            path = os.path.join(d, "doc.tsv")
-            with open(path, "w") as f:
-                for s, p, o in _LOAD_ROWS:
-                    f.write(f"{s}\t{p}\t{o}\n")
-            _LOAD_DOC_DIRS[sf_dir] = path
-        return _LOAD_DOC_DIRS[sf_dir]
+    def write(d: str) -> None:
+        os.makedirs(d)
+        with open(os.path.join(d, "doc.tsv"), "w") as f:
+            for s, p, o in _LOAD_ROWS:
+                f.write(f"{s}\t{p}\t{o}\n")
+
+    d = build_once("sparql_load_doc", sf_dir, write, sources=())
+    return os.path.join(d, "doc.tsv")
 
 
 _LOAD_VALUES = ", ".join(f"('{s}', '{p}', '{o}')" for s, p, o in _LOAD_ROWS)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..registry import register
+from ..scratch import build_once
 
 _BIGRAMS_SQL = f"""
 toks AS (SELECT doc_id, lang, {TOKS_SQL} AS t FROM documents),
@@ -367,9 +368,6 @@ ORDER BY dsir_weight DESC, d.doc_id LIMIT 20
 """
 
 
-_DSIR_BIGRAM_DIRS: dict[str, str] = {}
-
-
 def _source_width(sf_dir: str, table: str = "documents") -> int:
     """Scratch-write width proportional to the source table's on-disk
     bytes (1 writer per ~32 MB, min 1): derived-relation file counts
@@ -393,7 +391,7 @@ def _source_width(sf_dir: str, table: str = "documents") -> int:
 
 def _dsir_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, b) hashed-bigram feature stream, materialized
-    once per (process, sf_dir) as scratch parquet. The tokenize + md5
+    once per process as scratch parquet. The tokenize + md5
     explode is the expensive part of DSIR and the SAME stream feeds
     all three of its aggregates (raw distribution, target
     distribution, per-doc feature counts) — recomputing it per
@@ -403,54 +401,52 @@ def _dsir_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature extraction runs once, the extracted features are columnar
     on disk, and every downstream estimate scans the narrow (8-byte
     id, 4-char bucket) relation instead of re-hashing text."""
-    if sf_dir not in _DSIR_BIGRAM_DIRS:
-        from ..scratch import scratch_dir, timed_build
 
-        with timed_build("dsir_bigrams"):
-            out = scratch_dir("dsir_bigrams", sf_dir)
-            docs = load_table(spark, sf_dir, "documents")
-            toks = docs.select("doc_id", "lang", tokens_col().alias("t"))
-            (
-                toks.select(
-                    "doc_id",
-                    "lang",
-                    F.explode(
-                        F.when(
-                            F.size("t") < 2, F.array().cast("array<string>")
-                        ).otherwise(
-                            F.transform(
-                                F.sequence(F.lit(1), F.size("t") - 1),
-                                lambda i: F.substring(
-                                    F.md5(
-                                        F.concat(
-                                            F.element_at("t", i),
-                                            F.lit(" "),
-                                            F.element_at("t", i + 1),
-                                        )
-                                    ),
-                                    1,
-                                    4,
+    def write(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        toks = docs.select("doc_id", "lang", tokens_col().alias("t"))
+        (
+            toks.select(
+                "doc_id",
+                "lang",
+                F.explode(
+                    F.when(
+                        F.size("t") < 2, F.array().cast("array<string>")
+                    ).otherwise(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size("t") - 1),
+                            lambda i: F.substring(
+                                F.md5(
+                                    F.concat(
+                                        F.element_at("t", i),
+                                        F.lit(" "),
+                                        F.element_at("t", i + 1),
+                                    )
                                 ),
-                            )
+                                1,
+                                4,
+                            ),
                         )
-                    ).alias("b"),
-                )
-                # narrow the WRITE, not the explode: a post-explode
-                # repartition keeps the tokenize/md5 stage at full
-                # scan parallelism while the scratch lands in
-                # size-proportional files — width tracks the SOURCE
-                # table's bytes (~32 MB of source text per output
-                # file), not the core count, so a 600 KB fixture
-                # writes 1 file (a 32-file scratch cost the three
-                # downstream scans 0.6-1.1 s of scheduler slots per
-                # scan+agg at sf0.1) and a 100 TB corpus still fans
-                # out to thousands of writers
-                .repartition(_source_width(sf_dir))
-                .write.mode("overwrite")
-                .parquet(out)
+                    )
+                ).alias("b"),
             )
-            _DSIR_BIGRAM_DIRS[sf_dir] = out
-    return read_parquet(spark, _DSIR_BIGRAM_DIRS[sf_dir])
+            # narrow the WRITE, not the explode: a post-explode
+            # repartition keeps the tokenize/md5 stage at full
+            # scan parallelism while the scratch lands in
+            # size-proportional files — width tracks the SOURCE
+            # table's bytes (~32 MB of source text per output
+            # file), not the core count, so a 600 KB fixture
+            # writes 1 file (a 32-file scratch cost the three
+            # downstream scans 0.6-1.1 s of scheduler slots per
+            # scan+agg at sf0.1) and a 100 TB corpus still fans
+            # out to thousands of writers
+            .repartition(_source_width(sf_dir))
+            .write.parquet(out)
+        )
+
+    return read_parquet(
+        spark, build_once("dsir_bigrams", sf_dir, write, sources=("documents",))
+    )
 
 
 @register("q_mixture_dsir", oracle=_DSIR_ORACLE)

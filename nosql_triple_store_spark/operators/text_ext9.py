@@ -35,11 +35,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..registry import register
+from ..scratch import build_once
 
 K_SPAN = 6  # k-gram window width (tokens)
-
-
-_SPAN_DIRS: dict[str, str] = {}
 
 
 def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,15 +46,13 @@ def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     zeros), materialized once per process as scratch parquet — the
     window/shared-gram machinery feeds both registered consumers
     (per-doc stats + the excision manifest)."""
-    if sf_dir not in _SPAN_DIRS:
-        from ..scratch import scratch_dir
 
-        out = scratch_dir("dup_spans", sf_dir)
-        dup_spans_over(
-            load_table(spark, sf_dir, "documents")
-        ).write.mode("overwrite").parquet(out)
-        _SPAN_DIRS[sf_dir] = out
-    return read_parquet(spark, _SPAN_DIRS[sf_dir])
+    def write(out: str) -> None:
+        dup_spans_over(load_table(spark, sf_dir, "documents")).write.parquet(out)
+
+    return read_parquet(
+        spark, build_once("dup_spans", sf_dir, write, sources=("documents",))
+    )
 
 
 def dup_spans_over(docs: DataFrame) -> DataFrame:

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, read_parquet
 from ..functions.vectors import as_double_array, cosine_col
 from ..registry import register, register_layout
+from ..scratch import build_once
 from .vector_ext4 import _assign, kmeans_fit
 
 _NCELLS = 10  # learned coarse cells (k-means k)
@@ -62,17 +63,12 @@ _TOPK = 10
 # refit. This is the 100 TB shape: the model (k×dim centroids + M×K
 # codebook) lives NEXT TO the data and is loaded by jobs, not refit
 # per session.
-# All three in-process caches below are keyed by the MODEL PATH (which
-# embeds the source fingerprint, _model_path) rather than bare sf_dir
-# (ADVICE r8): an in-process data refresh changes the fingerprint and
-# therefore misses every cache coherently — model, code table, and
-# probe/LUT plan can never serve mixed generations.
+# The in-process model, the code table (``build_once`` key) and the
+# probe/LUT plan are all keyed by the MODEL PATH, which embeds the
+# source fingerprint (_model_path): an in-process data refresh misses
+# every cache coherently, so they never serve mixed generations.
 _MODELS: dict[str, dict] = {}
 _MODELS_LOCK = threading.Lock()
-# Per-process directory of the persisted code-table parquet (the
-# band_index pattern: built once, scanned by every query after).
-_CODE_DIRS: dict[str, str] = {}
-_CODE_LOCK = threading.Lock()
 
 
 def _model_path(sf_dir: str) -> str:
@@ -253,54 +249,48 @@ def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector ({_M} bytes/vector in a production byte-packed layout vs
     256 for float32×64). Rebuild cost is one scan + one narrow
     aggregate, amortized across every search the index serves."""
-    cache_key = _model_path(sf_dir)
-    with _CODE_LOCK:
-        if cache_key in _CODE_DIRS:
-            return read_parquet(spark, _CODE_DIRS[cache_key])
-    model = _ivfpq_model(spark, sf_dir)
-    centroids = model["centroids"]
-    cent_lit = _darray_expr(centroids)
-    codebook_lit = _darray_expr(model["codebook"])
-    assigned = _with_residual(
-        _assign(load_table(spark, sf_dir, "embeddings"), centroids),
-        cent_lit,
-    )
-    # per-subspace argmin against the broadcast codebook literal:
-    # array_position(min) gives lowest-index tie-break, same rule as
-    # the coarse _assign
-    def _subspace_code(m: int):
-        # NB: the transform lambda must stay single-argument — a
-        # two-arg lambda is treated by Spark as (element, index) and
-        # the second arg would silently bind to the codeword index
-        sub = F.slice(F.col("res"), m * _SUBDIM + 1, _SUBDIM)
-        dists = F.transform(
-            F.element_at(codebook_lit, m + 1),
-            lambda cw: _SQDIST(sub, cw),
+
+    def write(out: str) -> None:
+        model = _ivfpq_model(spark, sf_dir)
+        centroids = model["centroids"]
+        cent_lit = _darray_expr(centroids)
+        codebook_lit = _darray_expr(model["codebook"])
+        assigned = _with_residual(
+            _assign(load_table(spark, sf_dir, "embeddings"), centroids),
+            cent_lit,
         )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+        # per-subspace argmin against the broadcast codebook literal:
+        # array_position(min) gives lowest-index tie-break, same rule as
+        # the coarse _assign
+        def _subspace_code(m: int):
+            # NB: the transform lambda must stay single-argument — a
+            # two-arg lambda is treated by Spark as (element, index) and
+            # the second arg would silently bind to the codeword index
+            sub = F.slice(F.col("res"), m * _SUBDIM + 1, _SUBDIM)
+            dists = F.transform(
+                F.element_at(codebook_lit, m + 1),
+                lambda cw: _SQDIST(sub, cw),
+            )
+            return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
-    code_cols = [_subspace_code(m) for m in range(_M)]
-    codes = assigned.select(
-        "vec_id",
-        "cid",
-        F.array(*code_cols).alias("codes"),
+        code_cols = [_subspace_code(m) for m in range(_M)]
+        codes = assigned.select(
+            "vec_id",
+            "cid",
+            F.array(*code_cols).alias("codes"),
+        )
+        codes.write.partitionBy("cid").parquet(out)
+
+    return read_parquet(
+        spark,
+        build_once(
+            "pq_code_table",
+            sf_dir,
+            write,
+            sources=("embeddings",),
+            key=_model_path(sf_dir),
+        ),
     )
-    import uuid
-
-    from ..scratch import scratch_dir
-
-    # unique dir per build attempt + first-writer-wins publication
-    # (ADVICE r8): two threads that both miss the cache each write
-    # their OWN directory — never a concurrent mode('overwrite') race
-    # on one path — and the loser's dir is simply never read again
-    # (scratch cleanup reaps it at exit).
-    out = scratch_dir(f"pqindex_{uuid.uuid4().hex[:8]}", sf_dir)
-    codes.write.mode("overwrite").partitionBy("cid").parquet(out)
-    with _CODE_LOCK:
-        if cache_key not in _CODE_DIRS:
-            _CODE_DIRS[cache_key] = out
-        out = _CODE_DIRS[cache_key]
-    return read_parquet(spark, out)
 
 
 _PROBE_PLANS: dict[str, tuple] = {}
@@ -317,7 +307,7 @@ def _probe_plan(
     lookup ever runs). Pure-python IEEE doubles — O(ncells·dim +
     nprobe·M·K) work, the per-query analog of FAISS computing the
     distance table on the searcher. Cached per MODEL PATH (fingerprint
-    — invalidates together with the model and code table, ADVICE r8)
+    — invalidates together with the model and code table)
     under the models lock: the probe is a fixed deterministic
     parameter, so refetching it per run would bill a Spark job launch
     to what is plan-construction work."""

@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import read_parquet
-from .bgp import triples_view
+from ..scratch import build_once
+from .bgp import TRIPLE_SOURCES, triples_view
 
 GRAPHS = ("g:customer", "g:nation", "g:region", "g:supplier")
 
@@ -75,19 +76,14 @@ def quads_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUAD_DIRS: dict[str, str] = {}
-
-
 def quad_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quad view materialized as graph-partitioned scratch parquet
     (once per process). GRAPH-constant queries prune ``g=`` partition
     directories; the partition column is virtual (no storage cost)."""
-    if sf_dir not in _QUAD_DIRS:
-        from ..scratch import scratch_dir
 
-        out = scratch_dir("quads", sf_dir)
-        quads_view(spark, sf_dir).write.mode("overwrite").partitionBy(
-            "g"
-        ).parquet(out)
-        _QUAD_DIRS[sf_dir] = out
-    return read_parquet(spark, _QUAD_DIRS[sf_dir])
+    def write(out: str) -> None:
+        quads_view(spark, sf_dir).write.partitionBy("g").parquet(out)
+
+    return read_parquet(
+        spark, build_once("quads", sf_dir, write, sources=TRIPLE_SOURCES)
+    )

@@ -1,17 +1,30 @@
-"""Collision-safe scratch directories for materialized derived relations.
+"""Scratch directories for derived relations, and the one build-once
+policy every derived scratch artifact follows.
 
-Several operators write a derived table once per ``sf_dir`` (co-purchase
-edges, XML/binary-file fixtures, compaction layouts) and reread it across
-queries. The path must be unique per *absolute* source dir — keying by
-``basename(sf_dir)`` lets two dirs that share a basename (``/a/sf0.01``
-and ``/b/sf0.01``) silently overwrite each other's parquet — and unique
-per process, so concurrent drivers (pytest + bench + driver_check) never
-overwrite a directory another plan is lazily reading.
+A derived layout (co-purchase edges, the encoded triple store, the
+CSV/ORC/XML fixtures, compaction layouts) is written once and reread by
+every consumer. :func:`build_once` owns the four decisions involved:
+
+- **Key**: ``(kind, abspath(sf_dir), key, source fingerprints)``, the
+  fingerprints being :func:`source_fingerprint` of each table in
+  ``sources``. Rewriting a listed table builds afresh instead of serving
+  stale rows. A layout derived from another layout lists the underlying
+  fixture tables.
+- **Path**: ``scratch_dir(kind, sf_dir)/<digest of key>``: unique per
+  absolute source dir (a shared basename such as ``/a/sf0.01`` and
+  ``/b/sf0.01`` never collides), per process (concurrent drivers never
+  overwrite each other) and per key (a rebuild never overwrites files a
+  live DataFrame is reading). Removed at process exit.
+- **Lock**: a hit is one dict lookup and takes no lock. A miss takes a
+  per-key lock, checks again, then builds. A build only asks for the
+  layouts it is derived from, so nested builds lock in dependency order
+  and cannot deadlock.
+- **Timing**: ``write(path)`` runs inside :func:`timed_build(kind)
+  <timed_build>`, which records self time, so an outer build that
+  triggers an inner one is not billed twice.
 
 At 100 TB the analog is a per-job staging prefix under the warehouse
-(e.g. ``s3://warehouse/_staging/<job-id>/``) — same rule: derived-layout
-paths are keyed by source identity + writer identity, never by a
-human-readable shard name alone.
+(e.g. ``s3://warehouse/_staging/<job-id>/``) keyed by source identity.
 """
 
 from __future__ import annotations
@@ -22,7 +35,9 @@ import hashlib
 import os
 import shutil
 import tempfile
+import threading
 import time
+from collections.abc import Callable
 
 # Every scratch path this process hands out is removed at interpreter
 # exit (retention policy: scratch lives exactly as long as the process
@@ -124,28 +139,68 @@ def source_fingerprint(sf_dir: str, table: str) -> str:
     return hashlib.sha1(repr(fp).encode("utf-8")).hexdigest()[:16]
 
 
-# --- build-time attribution (VERDICT r9 finding #3) -----------------
-# A cold session bills a lazily-triggered scratch build (e.g. the
-# rarest-first prefix index) to whichever query touches it first,
-# making cold single-run numbers incomparable to warm medians. Builders
-# wrap their build body in timed_build(kind); a timing harness drains
-# the recorder around each query and re-attributes the build seconds to
-# its layout bucket, so cold and warm sessions report the same
-# per-query figure.
+_BUILT: dict[tuple, str] = {}
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+
+
+def build_once(
+    kind: str,
+    sf_dir: str,
+    write: Callable[[str], object],
+    *,
+    sources: tuple[str, ...],
+    key: object = (),
+) -> str:
+    """Run ``write(path)`` once per (kind, source dir, key, fingerprints
+    of the ``sources`` tables) and return ``path`` (module docstring).
+    Callers read the directory back themselves."""
+    k = (
+        kind,
+        os.path.abspath(os.path.normpath(sf_dir)),
+        key,
+        tuple(source_fingerprint(sf_dir, t) for t in sources),
+    )
+    path = _BUILT.get(k)
+    if path is not None:
+        return path
+    # dict.setdefault is atomic, so racing misses share one lock per key
+    with _KEY_LOCKS.setdefault(k, threading.Lock()):
+        if k not in _BUILT:
+            digest = hashlib.sha1(repr(k).encode("utf-8")).hexdigest()[:16]
+            path = os.path.join(scratch_dir(kind, sf_dir), digest)
+            # a failed earlier attempt may have left a partial dir
+            shutil.rmtree(path, ignore_errors=True)
+            with timed_build(kind):
+                write(path)
+            _BUILT[k] = path
+    return _BUILT[k]
+
+
+# A cold session bills a lazily-triggered scratch build to whichever
+# query touches it first. Builds run inside timed_build(kind); a timing
+# harness drains the recorder around each query and re-attributes the
+# build seconds to its layout bucket, so cold and warm sessions report
+# the same per-query figure.
 _BUILD_SECONDS: dict[str, float] = {}
+_NESTED = threading.local()  # per-thread stack of child build seconds
 
 
 @contextlib.contextmanager
 def timed_build(kind: str):
-    """Record the wall-clock of one first-touch scratch/layout build
-    under ``kind`` (accumulates across builds of the same kind)."""
+    """Record the self time of one first-touch scratch/layout build under
+    ``kind`` (accumulates across builds of the same kind). Time spent in
+    a nested ``timed_build`` is billed to the inner kind only."""
+    stack = _NESTED.__dict__.setdefault("stack", [])
+    stack.append(0.0)
     t0 = time.perf_counter()
     try:
         yield
     finally:
-        _BUILD_SECONDS[kind] = _BUILD_SECONDS.get(kind, 0.0) + (
-            time.perf_counter() - t0
-        )
+        wall = time.perf_counter() - t0
+        child = stack.pop()
+        if stack:
+            stack[-1] += wall
+        _BUILD_SECONDS[kind] = _BUILD_SECONDS.get(kind, 0.0) + wall - child
 
 
 def drain_build_seconds() -> dict[str, float]:

@@ -33,11 +33,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.bgp_queries import STAR_ORACLE
 from ..registry import register
-from ..scratch import ckpt_tmp, scratch_dir, scratch_tmp
+from ..scratch import build_once, ckpt_tmp, scratch_tmp
 
 _N_WAVES = 4
-
-_TRIPLE_WAVE_DIRS: dict[str, str] = {}
 
 # test hook: last scratch base used by q_stream_bgp_delta_join
 _LAST_BASE: dict[str, str] = {}
@@ -48,11 +46,11 @@ def _triple_wave_dir(spark: SparkSession, sf_dir: str) -> str:
     wave: inSegment triples of customer k go to wave k % 4, inNation
     triples to wave (k * 3 + 1) % 4 — predicate-dependent scrambling
     so join partners split across waves."""
-    if sf_dir not in _TRIPLE_WAVE_DIRS:
+
+    def write(out: str) -> None:
         import glob as _glob
         import shutil
 
-        out = scratch_dir("bgpwaves", sf_dir)
         cust = load_table(spark, sf_dir, "customer")
         seg = cust.select(
             F.concat(F.lit("customer:"), F.col("c_custkey")).alias("s"),
@@ -67,21 +65,20 @@ def _triple_wave_dir(spark: SparkSession, sf_dir: str) -> str:
             ((F.col("c_custkey") * 3 + 1) % _N_WAVES).alias("wave"),
         )
         triples = seg.unionByName(nat)
-        os.makedirs(out, exist_ok=True)
+        os.makedirs(out)
         for w in range(_N_WAVES):
             stage = f"{out}/_stage_w{w}"
             (
                 triples.filter(F.col("wave") == w)
                 .drop("wave")
                 .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
+                .write.parquet(stage)
             )
             part = _glob.glob(f"{stage}/part-*.parquet")[0]
             shutil.move(part, f"{out}/wave{w}.parquet")
             shutil.rmtree(stage)
-        _TRIPLE_WAVE_DIRS[sf_dir] = out
-    return _TRIPLE_WAVE_DIRS[sf_dir]
+
+    return build_once("bgpwaves", sf_dir, write, sources=("customer",))
 
 
 @register("q_stream_bgp_delta_join", oracle=STAR_ORACLE)

@@ -22,7 +22,6 @@ re-ingesting what the corpus already has.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +31,7 @@ from ..operators.dedup import _shingle_stream
 from ..operators.dedup_pipeline import THRESHOLD, band_index
 from ..functions.textfns import TOKS_SQL, shingles_sql
 from ..registry import register
-from ..scratch import ckpt_tmp, scratch_dir, scratch_tmp
+from ..scratch import build_once, ckpt_tmp, scratch_tmp
 from ..materialize import materialize
 
 _N_WAVES = 4
@@ -50,8 +49,6 @@ _N_WAVES = 4
 # foreachBatch index at scale. Raise the constant in production; 2
 # exercises the compaction path on the 4-wave fixture.
 _COMPACT_EVERY = 2
-
-_WAVE_DIRS: dict[str, str] = {}
 
 # test hook: last scratch base used by q_stream_dedup_admission
 _LAST_BASE: dict[str, str] = {}
@@ -92,53 +89,36 @@ def compact_band_index(spark: SparkSession, index_dir: str, batch_id: int) -> No
         shutil.rmtree(s, ignore_errors=True)
 
 
-_WAVE_LOCK = threading.Lock()
-
-
 def _wave_source_dir(spark: SparkSession, sf_dir: str) -> str:
     """Documents written as one parquet file per ingestion wave,
     sequentially (ascending mtime), so the streaming file source with
-    maxFilesPerTrigger=1 replays the waves in doc_id order. Lock held
-    across the build (ADVICE r8 class: concurrent cache misses must
-    not race stage writes into one scratch path)."""
-    with _WAVE_LOCK:
-        return _wave_build(spark, sf_dir)
-
-
-def _wave_build(spark: SparkSession, sf_dir: str) -> str:
-    return wave_build(spark, sf_dir, ["doc_id"], "docwaves", _WAVE_DIRS)
+    maxFilesPerTrigger=1 replays the waves in doc_id order."""
+    return wave_build(spark, sf_dir, ["doc_id"], "docwaves")
 
 
 def wave_build(
-    spark: SparkSession,
-    sf_dir: str,
-    columns: list[str],
-    scratch_key: str,
-    cache: dict[str, str],
+    spark: SparkSession, sf_dir: str, columns: list[str], kind: str
 ) -> str:
-    """Shared wave-source builder (ADVICE r9: quality_stream duplicated
-    this wholesale — one copy so the wave math / mtime-ordering can't
-    drift between the two streaming sources). Documents split into
+    """Shared wave-source layout (also quality_stream's), built once
+    per ``kind`` by ``scratch.build_once``. Documents split into
     _N_WAVES doc_id quartiles, each written sequentially as one plain
     parquet file (ascending mtimes, no _SUCCESS markers) so a streaming
-    file source with maxFilesPerTrigger=1 replays them in doc_id order.
-    Callers must hold their own lock across the call."""
-    if sf_dir not in cache:
+    file source with maxFilesPerTrigger=1 replays them in doc_id order."""
+
+    def write(out: str) -> None:
         import glob as _glob
         import shutil
 
-        out = scratch_dir(scratch_key, sf_dir)
         docs = load_table(spark, sf_dir, "documents").select(*columns)
         max_id = docs.agg(F.max("doc_id")).collect()[0][0]
         bs = (max_id + _N_WAVES) // _N_WAVES  # ceil((max+1)/4)
-        os.makedirs(out, exist_ok=True)
+        os.makedirs(out)
         for w in range(_N_WAVES):
             stage = f"{out}/_stage_w{w}"
             (
                 docs.filter(F.expr(f"doc_id div {bs}") == w)
                 .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
+                .write.parquet(stage)
             )
             # flatten to one plain file per wave (no _SUCCESS markers in
             # the streaming source dir), written sequentially so mtimes
@@ -146,8 +126,8 @@ def wave_build(
             part = _glob.glob(f"{stage}/part-*.parquet")[0]
             shutil.move(part, f"{out}/wave{w}.parquet")
             shutil.rmtree(stage)
-        cache[sf_dir] = out
-    return cache[sf_dir]
+
+    return build_once(kind, sf_dir, write, sources=("documents",))
 
 
 _ADMIT_ORACLE = f"""

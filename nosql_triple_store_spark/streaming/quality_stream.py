@@ -24,7 +24,6 @@ operators).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,47 +32,27 @@ from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL
 from ..operators.text_ext10 import nb_components, nb_score
 from ..registry import register
-from ..scratch import ckpt_tmp, scratch_tmp
+from ..scratch import build_once, ckpt_tmp, scratch_tmp
 from .dedup_stream import _N_WAVES, wave_build
 
-_FULL_WAVE_DIRS: dict[str, str] = {}
-_FULL_WAVE_LOCK = threading.Lock()
-
-# The deployed (frozen) model is trained ONCE per (process, sf_dir) and
-# reused across gate runs — redeploying re-trains nothing, exactly like
-# a fastText .bin shipped to an ingest fleet. Training cost is recorded
-# as a layout build (timed_build) so timing harnesses attribute it to
-# model ETL, not to whichever gate run touches it first; the re-train
-# was also the dominant bench-spread source on this query (VERDICT r10
-# watch item: spread up to 5.4 s at sf3 — the vocab-sized aggregate
-# re-ran per measurement run). Round 11: the frozen tables moved from
-# cross-query localCheckpoints to a parquet scratch layout — shipping
-# the model as FILES, like every other layout — because bench/profiler
-# harnesses now deterministically unpersist leftover checkpoint blocks
-# between queries (a cross-query in-memory checkpoint is exactly the
-# fragile state that policy exists to reap).
-_FROZEN_NB: dict[str, str] = {}
-_FROZEN_NB_LOCK = threading.Lock()
-
+# The deployed (frozen) model is trained ONCE per process and source
+# state and reused across gate runs — redeploying re-trains nothing,
+# exactly like a fastText .bin shipped to an ingest fleet. The frozen
+# tables are a parquet scratch layout (``build_once``, so training is
+# timed as model ETL, not charged to whichever gate run touches it
+# first), not cross-query checkpoints: the timing harnesses unpersist
+# leftover blocks between queries.
 _NB_PARTS = ("model", "totals", "prior")
 
 
 def _frozen_nb_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    with _FROZEN_NB_LOCK:
-        if sf_dir not in _FROZEN_NB:
-            from ..scratch import scratch_dir, timed_build
+    def write(base: str) -> None:
+        for name, df in zip(_NB_PARTS, nb_components(spark, sf_dir)):
+            df.coalesce(1).write.parquet(f"{base}/{name}")
 
-            with timed_build("nb_frozen_model"):
-                base = scratch_dir("nb_frozen", sf_dir)
-                parts = nb_components(spark, sf_dir)
-                for name, df in zip(_NB_PARTS, parts):
-                    df.coalesce(1).write.mode("overwrite").parquet(
-                        f"{base}/{name}"
-                    )
-                _FROZEN_NB[sf_dir] = base
-        base = _FROZEN_NB[sf_dir]
+    base = build_once("nb_frozen_model", sf_dir, write, sources=("documents",))
     model, totals, prior = (
         spark.read.parquet(f"{base}/{n}") for n in _NB_PARTS
     )
@@ -85,18 +64,10 @@ def _full_wave_source_dir(spark: SparkSession, sf_dir: str) -> str:
     as one parquet file per ingestion wave (dedup_stream's doc_id
     quartiles, ascending mtimes) — the gate scores arriving TEXT, so
     unlike dedup admission's id-only waves the payload rides the
-    stream. Delegates to dedup_stream.wave_build (ADVICE r9: one copy
-    of the wave math) under its own lock (ADVICE r8 class: two threads
-    that both miss the cache must not race mode('overwrite') stage
-    writes into one scratch path)."""
-    with _FULL_WAVE_LOCK:
-        return wave_build(
-            spark,
-            sf_dir,
-            ["doc_id", "lang", "text"],
-            "docwaves_full",
-            _FULL_WAVE_DIRS,
-        )
+    stream. Delegates to dedup_stream.wave_build (one copy of the wave
+    math)."""
+    return wave_build(spark, sf_dir, ["doc_id", "lang", "text"], "docwaves_full")
+
 
 _GATE_TAU = 0.0  # admit iff log-odds >= 0 (classifier says "curated")
 

@@ -30,7 +30,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import read_parquet
 from ..registry import register
-from ..scratch import ckpt_tmp, scratch_tmp
+from ..scratch import build_once, ckpt_tmp, scratch_tmp
 from ..session import ensure_runtime_confs
 from ..operators.eventtime import _SLIDING_ORACLE as _BATCH_SLIDING_ORACLE
 from ..operators.triple import E_CTE
@@ -72,19 +72,17 @@ def _event_time_col(spark: SparkSession, sf_dir: str):
     return F.col("ts").cast("timestamp")
 
 
-_STREAM_DIRS: dict[str, str] = {}
-
-
 def _events_stream_dir(sf_dir: str) -> str:
     """File-stream sources require a *directory*; the fixture is a single
     read-only file, so expose it via a symlink in a temp dir (this is also
     how new micro-batch files would arrive in production: atomic moves
     into a watched directory)."""
-    if sf_dir not in _STREAM_DIRS:
-        d = scratch_tmp("events_stream_")
+
+    def write(d: str) -> None:
+        os.makedirs(d)
         os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-        _STREAM_DIRS[sf_dir] = d
-    return _STREAM_DIRS[sf_dir]
+
+    return build_once("events_stream", sf_dir, write, sources=("events",))
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -535,7 +533,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LATE_SPLIT = "2024-01-10"
-_LATE_DIRS: dict[str, str] = {}
 
 
 def _late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -550,7 +547,8 @@ def _late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     two leading batches, the late batch filters under ~max_ts - delay.
     File order is pinned by mtime (FileStreamSource processes oldest
     first)."""
-    if sf_dir not in _LATE_DIRS:
+
+    def write(out: str) -> None:
         ensure_runtime_confs(spark)
         d = scratch_tmp("events_late_")
         raw = spark.read.schema(_events_ddl(spark, sf_dir)).parquet(
@@ -564,14 +562,14 @@ def _late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
         raw.filter(ts < split).coalesce(1).write.parquet(f"{d}/b")
         import glob as _glob
 
-        out = scratch_tmp("events_late_stream_")
+        os.makedirs(out)
         for sub, mtime in (("a1", 1_000_000), ("a2", 2_000_000), ("b", 3_000_000)):
             (src,) = _glob.glob(f"{d}/{sub}/part-*.parquet")
             dst = f"{out}/{sub}.parquet"
             os.rename(src, dst)
             os.utime(dst, (mtime, mtime))
-        _LATE_DIRS[sf_dir] = out
-    return _LATE_DIRS[sf_dir]
+
+    return build_once("events_late_stream", sf_dir, write, sources=("events",))
 
 
 @register(
@@ -620,26 +618,22 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q_stream_incr_view ---------------------------------------------------
 
 _INCR_FILES = 8
-_INCR_DIRS: dict[str, str] = {}
 
 
 def _events_multifile_dir(spark: SparkSession, sf_dir: str) -> str:
     """Events rewritten as 8 parquet files so maxFilesPerTrigger yields
     genuinely multiple micro-batches (the fixture is one file)."""
-    if sf_dir not in _INCR_DIRS:
-        from ..catalog import load_table
-        from ..scratch import scratch_dir
+    from ..catalog import load_table
 
-        out = scratch_dir("incrsrc", sf_dir)
+    def write(out: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select("event_id", "event_type", "value")
             .repartition(_INCR_FILES)
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-        _INCR_DIRS[sf_dir] = out
-    return _INCR_DIRS[sf_dir]
+
+    return build_once("incrsrc", sf_dir, write, sources=("events",))
 
 
 @register(
@@ -753,11 +747,9 @@ def q_stream_source_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from ..catalog import load_table
-    from ..scratch import scratch_dir
     from ..sources.avro_py import write_avro_dir
 
     ensure_runtime_confs(spark)
-    out = scratch_dir("avro_stream", sf_dir)
     from ..widths import cluster_cores
 
     # width the encode so write and binaryFile read parallelize past
@@ -765,8 +757,12 @@ def q_stream_source_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "orders").repartition(
         cluster_cores(spark)
     )
-    if not _os.path.isdir(out) or not _os.listdir(out):
-        write_avro_dir(src, out)
+    out = build_once(
+        "avro_stream",
+        sf_dir,
+        lambda out: write_avro_dir(src, out),
+        sources=("orders",),
+    )
     # the streaming twin of read_avro_dir: binaryFile as a stream,
     # decoded by the SAME kernel the batch reader uses
     from pyspark.sql import types as T
@@ -819,11 +815,9 @@ def q_stream_source_bson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from ..catalog import load_table
-    from ..scratch import scratch_dir
     from ..sources.bson_py import decode_documents, write_bson_dir
 
     ensure_runtime_confs(spark)
-    out = scratch_dir("bson_stream", sf_dir)
     cols = ["o_orderkey", "o_orderstatus"]
     from ..widths import cluster_cores
 
@@ -832,8 +826,12 @@ def q_stream_source_bson(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(*cols)
         .repartition(cluster_cores(spark))
     )
-    if not _os.path.isdir(out) or not _os.listdir(out):
-        write_bson_dir(src, out)
+    out = build_once(
+        "bson_stream",
+        sf_dir,
+        lambda out: write_bson_dir(src, out),
+        sources=("orders",),
+    )
     files = (
         spark.readStream.format("binaryFile")
         .schema(

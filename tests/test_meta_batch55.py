@@ -111,10 +111,10 @@ def test_partition_layout_scan_prunes_directories(spark):
     # filter, not a post-scan row filter
     SPECS["q_meta_partition_layout"].fn(spark, SF_DIR).count()  # build
     from nosql_triple_store_spark.operators.relational_ext55 import (
-        _LAYOUT_DIRS,
+        bucket_layout,
     )
 
-    out = _LAYOUT_DIRS[SF_DIR]
+    out = bucket_layout(spark, SF_DIR)  # the build_once path, no rebuild
     one = spark.read.parquet(out).filter("bucket = 3")
     p = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in p

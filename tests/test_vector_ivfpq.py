@@ -95,8 +95,10 @@ def test_pq_index_partitioned_by_cell(spark):
 
     from nosql_triple_store_spark.operators import vector_ext9 as v9
 
-    v9.pq_index(spark, SF_DIR).count()
-    # caches are keyed by the fingerprinted model path (ADVICE r8)
-    out = v9._CODE_DIRS[v9._model_path(SF_DIR)]
+    from urllib.parse import urlparse
+
+    # the directory pq_index resolved through scratch.build_once
+    files = v9.pq_index(spark, SF_DIR).inputFiles()
+    out = os.path.dirname(os.path.dirname(urlparse(files[0]).path))
     parts = [d for d in os.listdir(out) if d.startswith("cid=")]
     assert len(parts) > 1, f"expected cid= partition dirs, got {parts}"
