@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.bgp import TRIPLES_SQL, triples_view
+from ..plans.sparql import transitive_closure
 from ..registry import register
 from ..materialize import materialize
 
@@ -39,11 +40,12 @@ def q_bgp_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECURSIVE over the same triples — a genuinely different fixpoint
     engine computing the same relation.
 
-    Each round: frontier ⋈ base (shuffle keyed on the hop column),
-    dedup against the accumulated closure (left-anti), stop when no new
-    pairs. Round count = longest simple path (2 in the fixture
-    hierarchy; capped at 12 with a non-convergence error, same contract
-    as q_graph_cc)."""
+    The fixpoint is the SPARQL compiler's `p+` lowering
+    (plans.sparql.transitive_closure): each round frontier ⋈ base
+    (shuffle keyed on the hop column), dedup against the accumulated
+    closure (left-anti), stop when no new pairs. Round count = longest
+    simple path (2 in the fixture hierarchy; capped at 12 with a
+    non-convergence error, same contract as q_graph_cc)."""
     t = triples_view(spark, sf_dir)
     base = (
         t.filter(F.col("p").isin("inNation", "inRegion"))
@@ -51,25 +53,7 @@ def q_bgp_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .transform(materialize)
     )
-    closure = base
-    frontier = base
-    converged = False
-    for _ in range(12):
-        step = (
-            frontier.alias("f")
-            .join(base.alias("b"), F.col("f.o") == F.col("b.s"))
-            .select(F.col("f.s").alias("s"), F.col("b.o").alias("o"))
-            .distinct()
-        )
-        new = step.join(closure, ["s", "o"], "left_anti").transform(materialize)
-        if new.isEmpty():
-            converged = True
-            break
-        closure = closure.unionByName(new).transform(materialize)
-        frontier = new
-    if not converged:
-        raise RuntimeError("path closure did not converge in 12 rounds")
-    return closure
+    return transitive_closure(base)
 
 
 @register(

@@ -3,7 +3,7 @@ dynamic partition overwrite, image tiling, tolerance-bounded as-of join.
 
 Lineage: MINUS completes the SPARQL 1.1 filter surface next to FILTER
 NOT EXISTS (bgp_ext.py) — the two differ exactly when the patterns share
-no variables, and the lowering helper here encodes that rule. Schema
+no variables; plans.bgp.natural_join's MINUS kind encodes that rule. Schema
 evolution and dynamic partition overwrite are storage-lifecycle
 operators a long-lived 100 TB table needs (columns get added over
 years; backfills must replace ONE partition without touching the rest —
@@ -19,24 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
-from ..plans.bgp import TRIPLES_SQL, triples_view
+from ..plans.bgp import TRIPLES_SQL, natural_join, triples_view
 from ..registry import register
 from ..scratch import build_once
 from .triple import E_CTE
-
-
-def sparql_minus(left: DataFrame, right: DataFrame) -> DataFrame:
-    """SPARQL MINUS lowering: remove left bindings that agree with some
-    right binding on the SHARED variables; when the patterns share NO
-    variables, MINUS removes nothing (per SPARQL 1.1 §8.3 — the
-    documented difference from FILTER NOT EXISTS, which correlates on
-    the whole row context and would drop everything against any
-    non-empty pattern). Shared-var case = left-anti join on the shared
-    columns."""
-    shared = [c for c in left.columns if c in set(right.columns)]
-    if not shared:
-        return left
-    return left.join(right.select(*shared).distinct(), shared, "left_anti")
 
 
 @register(
@@ -58,8 +44,9 @@ def q_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ?r . ?r hasName 'ASIA' }` — customer segments minus ASIA-region
     customers. The excluded pattern shares ?c, so MINUS lowers to a
     left-anti join on c (one shuffle; the excluded side collapses to
-    distinct keys first). The no-shared-variable edge case (MINUS is a
-    no-op, NOT EXISTS is not) is unit-tested on the sparql_minus helper
+    distinct keys first) — the SPARQL compiler's MINUS lowering,
+    ``natural_join(..., "left_anti")``. The no-shared-variable edge case
+    (MINUS is a no-op, NOT EXISTS is not) is unit-tested on that helper
     directly."""
     t = triples_view(spark, sf_dir)
     a = t.filter(F.col("p") == "inSegment").select(
@@ -75,7 +62,7 @@ def q_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").alias("r")
     )
     asia = nat.join(reg, "n").join(name, "r").select("c")
-    return sparql_minus(a, asia)
+    return natural_join(a, asia, "left_anti")
 
 
 _EVO_SPLIT = 250  # doc_id threshold between schema v1 and v2 writers

@@ -305,7 +305,7 @@ SELECT n AS s, n AS o FROM nodes
 def q_sparql_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL zero-or-more path `(inNation|inRegion)*` parsed from
     text (VERDICT r6 #3): the `p+` semi-naive closure (shared
-    _closure_rel, the q_bgp_path_closure fixpoint) unioned with the
+    transitive_closure, the q_bgp_path_closure fixpoint) unioned with the
     zero-length (n, n) pairs of every node incident to the path's
     relation, all in encoded long space, decoded once. The oracle runs
     DuckDB's WITH RECURSIVE plus the identity-pairs union — a
@@ -339,8 +339,9 @@ def q_sparql_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     #3): customer segments MINUS the ASIA-region chain. The excluded
     group compiles to its own encoded BGP join and the exclusion
     lowers to ONE left-anti join on the shared ?c column in long
-    space — the sparql_minus lowering of operators/relational_ext15,
-    reached from the standard grammar. Same oracle as q_bgp_minus."""
+    space — the MINUS lowering of plans.bgp.natural_join (shared with
+    q_bgp_minus), reached from the standard grammar. Same oracle as
+    q_bgp_minus."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_MINUS)
 
 

@@ -15,12 +15,14 @@ scans everything for every pattern; partitioning the physical layout by
 predicate (vertical partitioning — one file group per predicate) turns
 each pattern's constant-predicate filter into partition pruning, so a
 5-pattern BGP reads only 5 predicate partitions. `triples_view` keeps the
-logical shape; sources/etl.py writes the predicate-partitioned layout.
+logical shape; `sources.readers.write_predicate_partitioned` writes the
+predicate-partitioned layout.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,20 +127,57 @@ def triples_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _pattern_step(triples: DataFrame, pat: tuple[Term, Term, Term]) -> DataFrame:
-    df = triples
-    proj = []
+def term_conditions(terms) -> tuple[list, list]:
+    """The binding rule shared by every pattern kind (triple pattern,
+    path endpoints, GRAPH quad pattern, DELETE WHERE): ``terms`` pairs a
+    column with a Term. A constant is an equality condition on its
+    column; a variable projects its column under the variable's name; a
+    variable repeated in one pattern is an equality condition between
+    its columns. Returns (conditions, projections)."""
+    conds, proj = [], []
     seen: dict[str, str] = {}
-    for col, term in zip(("s", "p", "o"), pat):
+    for col, term in terms:
         if isinstance(term, Var):
-            if term.name in seen:  # same var twice in one pattern
-                df = df.filter(F.col(col) == F.col(seen[term.name]))
+            if term.name in seen:
+                conds.append(F.col(col) == F.col(seen[term.name]))
             else:
                 proj.append(F.col(col).alias(term.name))
                 seen[term.name] = col
         else:
-            df = df.filter(F.col(col) == F.lit(term))
+            conds.append(F.col(col) == F.lit(term))
+    return conds, proj
+
+
+def bind_terms(df: DataFrame, terms) -> DataFrame:
+    """The rows of ``df`` that match ``terms``, as variable bindings."""
+    conds, proj = term_conditions(terms)
+    for cond in conds:
+        df = df.filter(cond)
     return df.select(*proj)
+
+
+def natural_join(
+    left: DataFrame, right: DataFrame, how: str = "inner"
+) -> DataFrame:
+    """Join two binding relations on their shared variables.
+
+    - ``inner``: equi-join on the shared variables, a cross join when
+      none are shared (a conjunctive group).
+    - ``left``: SPARQL OPTIONAL; the pattern must share a variable.
+    - ``left_anti``: SPARQL MINUS, anti-join against the distinct shared
+      keys; a no-op when none are shared (SPARQL 1.1 §8.3, the
+      difference from FILTER NOT EXISTS).
+    """
+    shared = sorted(set(left.columns) & set(right.columns))
+    if how == "left_anti":
+        if not shared:
+            return left
+        right = right.select(*shared).distinct()
+    elif not shared:
+        if how == "left":
+            raise ValueError("OPTIONAL pattern shares no variable with BGP")
+        return left.crossJoin(right)
+    return left.join(right, on=shared, how=how)
 
 
 def compile_bgp(
@@ -148,32 +187,21 @@ def compile_bgp(
 ) -> DataFrame:
     """Compile a conjunctive BGP to a DataFrame of variable bindings.
 
-    Each (s, p, o) pattern: constants become pushed-down filters, Vars
-    become projected binding columns; patterns sharing a Var are
-    equi-joined on it (natural join over the accumulated bindings).
-    ``optional`` patterns implement SPARQL OPTIONAL: left joins that
-    extend bindings where they match and leave NULLs where they don't.
-    Catalyst reorders/broadcasts the joins; with a predicate-partitioned
-    layout the constant-p filters prune partitions (see module docstring).
+    Each (s, p, o) pattern binds through :func:`bind_terms` (constants
+    become pushed-down filters, Vars projected binding columns);
+    patterns are natural-joined on shared Vars. ``optional`` patterns
+    implement SPARQL OPTIONAL: left joins that extend bindings where
+    they match and leave NULLs where they don't. Catalyst
+    reorders/broadcasts the joins; with a predicate-partitioned layout
+    the constant-p filters prune partitions (see module docstring).
     """
     if not patterns:
         raise ValueError("empty BGP")
-    bound: DataFrame | None = None
-    for pat in patterns:
-        step = _pattern_step(triples, pat)
-        if bound is None:
-            bound = step
-        else:
-            shared = sorted(set(bound.columns) & set(step.columns))
-            bound = (
-                bound.join(step, on=shared, how="inner")
-                if shared
-                else bound.crossJoin(step)
-            )
+    bound = reduce(natural_join, [_triple(triples, p) for p in patterns])
     for pat in optional:
-        step = _pattern_step(triples, pat)
-        shared = sorted(set(bound.columns) & set(step.columns))
-        if not shared:
-            raise ValueError("OPTIONAL pattern shares no variable with BGP")
-        bound = bound.join(step, on=shared, how="left")
+        bound = natural_join(bound, _triple(triples, pat), "left")
     return bound
+
+
+def _triple(triples: DataFrame, pat: tuple[Term, Term, Term]) -> DataFrame:
+    return bind_terms(triples, zip(("s", "p", "o"), pat))

@@ -1,5 +1,5 @@
-"""Named-graph quad layout (round 9, VERDICT r8 #5): the triples view
-extended with a graph column and PHYSICALLY PARTITIONED by it.
+"""Named-graph quad layout: the triples view extended with a graph
+column and PHYSICALLY PARTITIONED by it.
 
 Graph model: the dataset's entity families are its named graphs —
 every triple belongs to the graph of its subject's family
@@ -61,19 +61,22 @@ quads AS (
 """
 
 
+def graph_of(subject):
+    """The named graph of a subject: ``g:`` + its entity family (the
+    text before the first ``:``) — the provenance each UNION branch of
+    triples_view carries. Takes a subject Column or a subject string;
+    every graph-scoped construct (FROM, CLEAR/DROP, LOAD INTO, WITH,
+    USING) derives graphs through this one rule."""
+    if isinstance(subject, str):
+        return "g:" + subject.split(":")[0]
+    return F.concat(F.lit("g:"), F.split(subject, ":").getItem(0))
+
+
 def quads_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(g, s, p, o): the triples view tagged with its subject-family
-    graph. Derivation rule: the graph is the subject's entity prefix —
-    exactly the provenance each UNION branch of triples_view carries."""
+    graph (:func:`graph_of`)."""
     t = triples_view(spark, sf_dir)
-    return t.select(
-        F.concat(
-            F.lit("g:"), F.split(F.col("s"), ":").getItem(0)
-        ).alias("g"),
-        "s",
-        "p",
-        "o",
-    )
+    return t.select(graph_of(F.col("s")).alias("g"), "s", "p", "o")
 
 
 def quad_layout(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,30 +1,34 @@
-"""Thin SPARQL SELECT front-end (VERDICT r5 #6): a textual query
-surface for the reference's RDF domain, compiling to the SAME
-encoded-store plans the hand-built BGP queries use.
+"""Thin SPARQL front-end: a textual query surface for the reference's
+RDF domain, compiling to the SAME encoded-store plans the hand-built BGP
+queries use.
 
 Scope (documented subset, rejected loudly outside it):
 - ``SELECT ?v ... | *``, ``WHERE { ... }``
 - conjunctive triple patterns ``?s p o .`` (constants as bare words,
   ``"literals"``, or ``<iris>``; variables as ``?name``)
 - ``OPTIONAL { ... }`` blocks (left-join semantics, compile_bgp)
-- ``FILTER(expr)`` with comparisons ``=, !=, <, <=, >, >=`` between a
-  variable and a string literal (or two variables), combined with
-  ``&&`` / ``||``, plus ``REGEX(?v, "pat")``, the string predicates
-  ``CONTAINS/STRSTARTS/STRENDS(?v, "lit")``, and list membership
-  ``?v IN ("a", ...)`` / ``?v NOT IN ("a", ...)`` (string-literal
-  lists, lowered to scan-local isin predicates like VALUES)
+- ``FILTER(expr)`` over the expression grammar below: comparisons
+  ``=, !=, <, <=, >, >=``, ``&&`` / ``||`` / ``!`` with parentheses,
+  ``REGEX(?v, "pat")``, the string predicates
+  ``CONTAINS/STRSTARTS/STRENDS(?v, "lit")``, ``BOUND(?v)``, and list
+  membership ``?v IN ("a", ...)`` / ``?v NOT IN ("a", ...)``
+  (string-literal lists, lowered to scan-local isin predicates like
+  VALUES)
 - ``ORDER BY ?v [DESC(?v)]``, ``LIMIT n``, ``OFFSET k`` (requires
   ORDER BY), ``DISTINCT``
 - aggregates ``(COUNT(*)|COUNT(?v)|COUNT(DISTINCT ?v)|MIN(?v)|MAX(?v)
-  |SUM(?v)|AVG(?v) AS ?alias)`` with ``GROUP BY ?v ...`` (DISTINCT
-  under other aggregates rejected) — SUM/AVG try_cast the
-  string terms to double and skip non-numeric ones (SQL NULL-skip
-  semantics; documented deviation from SPARQL 1.1 error propagation)
+  |SUM(?v)|AVG(?v)|GROUP_CONCAT(?v [; SEPARATOR="s"])|SAMPLE(?v) AS
+  ?alias)`` with ``GROUP BY ?v ...`` (DISTINCT under other aggregates
+  rejected) — SUM/AVG try_cast the string terms to double and skip
+  non-numeric ones (SQL NULL-skip semantics; documented deviation from
+  SPARQL 1.1 error propagation); GROUP_CONCAT SORTS its values for
+  determinism (SPARQL leaves the order undefined) and SAMPLE is the
+  deterministic MIN (a conforming choice)
 - ``{ group } UNION { group } [UNION ...]`` at the top of WHERE — bag
   union (UNION ALL) of conjunctive groups binding IDENTICAL variable
   sets (SPARQL's unbound-column semantics are rejected, not guessed);
-  OPTIONAL blocks compose over the union (round 10:
-  leftjoin(union(A, B), C), the spec's group semantics)
+  OPTIONAL and MINUS compose over the union (leftjoin(union(A, B), C),
+  the spec's group semantics)
 - ``ASK { ... }`` (boolean existence, LIMIT-1 plan) and
   ``VALUES ?v { "lit" ... }`` inline bindings (single variable,
   encoded to an IN-list filter pushed into the join pipeline)
@@ -43,97 +47,91 @@ Scope (documented subset, rejected loudly outside it):
   none shared, removes everything iff the group matches at all) —
   conjunctive groups only, not combinable with UNION
 - ``BIND(expr AS ?alias)`` and SELECT expressions ``(expr AS ?alias)``
-  with arithmetic (+ - * /, try_cast-double NULL-skip semantics over
-  the string terms), ``CONCAT/UCASE/LCASE/STRLEN/SUBSTR/STR``,
-  ``REPLACE(expr, "pat", "repl")`` (SPARQL 1.1 fn:replace — regex,
-  every match, literal pattern/replacement) and
-  ``STRBEFORE/STRAFTER(expr, "sep")`` (empty string when the
-  separator is absent, per spec; non-empty literal separators), string
-  and numeric literals — post-decode column extensions, evaluated
-  after the group join (textual order; aggregates not allowed inside)
-- ``HAVING(...)`` constraints over aggregate aliases and anonymous
-  aggregate calls (hidden agg columns, projected away); numeric
-  comparison when either side is a number or aggregate
+  — post-decode column extensions, evaluated after the group join
+  (textual order)
+- ``HAVING(expr)`` constraints over aggregate aliases, grouped
+  variables and anonymous aggregate calls (hidden agg columns,
+  projected away)
 - ``{ SELECT ... }`` sub-queries (one nesting level per group body,
   recursion handles deeper nesting), joined to the outer group on
   shared variables over decoded terms; OPTIONAL/MINUS/NOT EXISTS/
   VALUES still require outer triple patterns. A shared variable that
-  is OPTIONAL-bound on either side is REJECTED loudly (ADVICE r8: an
-  inner join drops NULL-bound rows, whereas SPARQL treats unbound as
-  compatible — rejecting beats silently deviating)
+  is OPTIONAL-bound on either side is REJECTED loudly: an inner join
+  drops NULL-bound rows, whereas SPARQL treats unbound as compatible
+  — rejecting beats silently deviating
 - negated property sets ``!p`` / ``!(p|q|...)`` (forward-only; one
   pushed-down NOT-IN scan predicate over encoded ids)
 - ``CONSTRUCT { template } WHERE { ... } [LIMIT n]`` — graph output
   (s, p, o), set semantics, OPTIONAL-miss instantiations dropped;
   and ``ASK`` bodies compose with property paths
-- ``ORDER BY`` over EXPRESSIONS (round 9, VERDICT r8 #7): sort keys
-  may be ``?var``, ``ASC(expr)/DESC(expr)``, a function call
-  (``STRLEN(?v)`` …) or a parenthesised expression, using the same
-  expression grammar as BIND; every variable in a sort expression
-  must appear in the projected result (loud rejection otherwise)
-- ``GRAPH ?g { ... }`` / ``GRAPH <iri> { ... }`` + ``FROM NAMED``
-  (round 9, VERDICT r8 #5): named-graph groups over the
-  graph-partitioned quad layout (plans/quads.py — the dataset's
-  entity families as named graphs). GRAPH groups take plain
-  conjunctive patterns (no paths/OPTIONAL inside) and join the rest
-  of the query on shared variables over decoded terms; a constant
-  graph prunes ``g=`` partitions at the scan, ``FROM NAMED``
-  restricts which graphs a ``GRAPH ?g`` ranges over. Plain ``FROM``
-  (default-graph override) makes the DEFAULT graph the merge of the
-  listed graphs (round 10): one broadcast semi-join restricts the
-  encoded relation by subject-derived graph, so patterns, paths,
+- ``ORDER BY`` keys may be ``?var``, ``ASC(expr)/DESC(expr)``, a
+  function call (``STRLEN(?v)`` …) or a parenthesised expression; every
+  variable in a sort expression must appear in the projected result
+  (loud rejection otherwise)
+- ``GRAPH ?g { ... }`` / ``GRAPH <iri> { ... }`` + ``FROM NAMED``:
+  named-graph groups over the graph-partitioned quad layout
+  (plans/quads.py — the dataset's entity families as named graphs).
+  GRAPH groups take plain conjunctive patterns (no paths/OPTIONAL
+  inside) and join the rest of the query on shared variables over
+  decoded terms; a constant graph prunes ``g=`` partitions at the
+  scan, ``FROM NAMED`` restricts which graphs a ``GRAPH ?g`` ranges
+  over. Plain ``FROM`` makes the DEFAULT graph the merge of the listed
+  graphs: one broadcast semi-join restricts the encoded relation by
+  subject-derived graph (``quads.graph_of``), so patterns, paths,
   OPTIONAL and MINUS all compose; with no FROM, the default graph is
   the full triples view.
-- SPARQL UPDATE subset (round 9, VERDICT r8 #4), via
-  :func:`parse_sparql_update` / :func:`compile_sparql_update`:
-  ``INSERT DATA { triples }`` (the reference's R2 LWW-register upsert
-  per (s, p) key — the new object REPLACES any existing objects of
-  that key, SQLite3DBConnector.py:48-119), ``DELETE DATA
-  { triples }`` (exact-triple removal), ``DELETE WHERE { pattern }``
-  (single triple pattern; every matching triple removed), sequenced
-  with ``;`` in textual order. The compiler returns the POST-UPDATE
-  STATE as a DataFrame (the engine's storage is immutable parquet —
-  updates are state transformations, exactly q_upsert_result's
-  contract). Template forms ``[DELETE { tmpl }] [INSERT { tmpl }]
-  WHERE { patterns }`` are ALSO supported (see the round-9-additions
-  list below), as are ``WITH``/``USING`` dataset scoping (round 11),
-  ``CLEAR``/``DROP`` (``GRAPH <g>`` or ``ALL``) and ``LOAD <doc>
-  [INTO GRAPH <g>]`` (round 11 — R19's bulk TSV load as a SPARQL
-  graph union). Everything else of SPARQL Update (USING NAMED,
-  GRAPH-qualified data, CLEAR/DROP DEFAULT/NAMED) is rejected loudly.
+- SPARQL UPDATE subset, via :func:`parse_sparql_update` /
+  :func:`compile_sparql_update`: ``INSERT DATA { triples }`` (the
+  reference's R2 LWW-register upsert per (s, p) key — the new object
+  REPLACES any existing objects of that key,
+  SQLite3DBConnector.py:48-119), ``DELETE DATA { triples }``
+  (exact-triple removal), ``DELETE WHERE { pattern }`` (single triple
+  pattern; every matching triple removed), template forms ``[DELETE
+  { tmpl }] [INSERT { tmpl }] WHERE { patterns }`` (the WHERE
+  solutions instantiate the templates against the CURRENT state;
+  insertion follows SPARQL 1.1 §3.1.3 GRAPH SET semantics), ``WITH`` /
+  ``USING`` dataset scoping, ``CLEAR``/``DROP`` (``GRAPH <g>`` or
+  ``ALL``) and ``LOAD <doc> [INTO GRAPH <g>]`` (R19's bulk TSV load as
+  a SPARQL graph union), sequenced with ``;`` in textual order. The
+  compiler returns the POST-UPDATE STATE as a DataFrame (the engine's
+  storage is immutable parquet — updates are state transformations,
+  exactly q_upsert_result's contract). Everything else of SPARQL Update
+  (USING NAMED, GRAPH-qualified data, CLEAR/DROP DEFAULT/NAMED) is
+  rejected loudly.
 
-Round-9 additions beyond the verdict list:
-- aggregates ``GROUP_CONCAT(?v [; SEPARATOR="s"])`` (values SORTED for
-  determinism — SPARQL leaves the order undefined) and ``SAMPLE(?v)``
-  (deterministic MIN — a conforming choice)
-- ``BOUND(?v)`` / ``!BOUND(?v)`` in FILTER; ``IF(cond, then, else)``
-  (cond = BOUND or one comparison) and ``COALESCE(...)`` in
-  BIND/SELECT expressions — both evaluate branches/arguments in string
-  context (the engine's documented string semantics)
-- template updates ``[DELETE { tmpl }] [INSERT { tmpl }] WHERE
-  { patterns }``: the WHERE solutions instantiate the templates
-  against the CURRENT state; deletion removes the instantiated
-  triples, insertion follows SPARQL 1.1 §3.1.3 GRAPH SET semantics
-  (union-distinct) — unlike INSERT DATA, which keeps the reference's
-  R2 LWW-register upsert (both documented on compile_sparql_update)
+One expression grammar serves FILTER, HAVING, BIND, IF, SELECT
+expressions and ORDER BY keys, with SPARQL 1.1 precedence (loosest
+first): ``||``, then ``&&``, then one comparison or ``[NOT] IN``, then
+``+ -``, then ``* /``, then unary ``!``, then primaries (``?var``,
+literals, numbers, function calls, ``( expr )``). So ``a || b && c``
+is ``a || (b && c)``. Aggregate calls are primaries only inside HAVING.
+One compiler (``_expr_col``) lowers every expression over the DECODED
+(string) bindings with one comparison rule: numeric (``try_cast`` to
+double, NULL for non-numeric terms) when either side is a number
+literal, an arithmetic result or an aggregate, string collation
+otherwise. Arithmetic always runs over ``try_cast`` doubles; string
+functions and IF/COALESCE branches evaluate in string context. A FILTER
+that is exactly one ``=``/``!=`` between a pattern variable and a
+string literal runs encoded instead: the literal is looked up in the
+dictionary and compared as a long inside the join pipeline.
 
-String-context numeric lexical forms (ADVICE r8): integer-valued
-numeric LITERALS render in integer form ("1", not "1.0") inside
-CONCAT/STR/…; the RESULT of an arithmetic expression is a double and
-keeps the double lexical form ("2.0") when stringified — documented
-deviation (SPARQL integer arithmetic would stay integer), same family
-as the SUM/AVG NULL-skip note above.
+String-context numeric lexical forms: integer-valued numeric LITERALS
+render in integer form ("1", not "1.0") inside CONCAT/STR/…; the RESULT
+of an arithmetic expression is a double and keeps the double lexical
+form ("2.0") when stringified — documented deviation (SPARQL integer
+arithmetic would stay integer), same family as the SUM/AVG NULL-skip
+note above.
 
 Execution strategy mirrors q_bgp_star_encoded (operators/
 relational_ext3.py): pattern constants are looked up in the
 dictionary ONCE (driver-side, k terms), the conjunctive join runs
 entirely in dictionary-encoded long space, and only the final
-bindings pay string decode. Equality filters against literals are
-encoded too, so they run as long comparisons in the join pipeline;
-ordering/regex/inequality filters run post-decode (they need string
-collation). Scale: identical to the hand-built plans — the parser
-adds zero runtime surface, it only CONSTRUCTS the same DataFrame
-graph, so everything SCALE.md says about BGP joins applies verbatim.
+bindings pay string decode. Every pattern kind (triple, path endpoint,
+GRAPH quad) binds its terms through ``bgp.bind_terms`` and every group
+joins through ``bgp.natural_join``. Scale: identical to the hand-built
+plans — the parser adds zero runtime surface, it only CONSTRUCTS the
+same DataFrame graph, so everything SCALE.md says about BGP joins
+applies verbatim.
 
 Reference parity: the reference's query surface is one HTTP endpoint
 per fixed pattern shape (MasterServer.py:292-330 routes
@@ -143,13 +141,25 @@ query text instead of bespoke endpoints.
 
 from __future__ import annotations
 
+import operator
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bgp import Term, Var, compile_bgp
+from .bgp import (
+    Term,
+    Var,
+    bind_terms,
+    compile_bgp,
+    natural_join,
+    term_conditions,
+    triples_view,
+)
+from .quads import graph_of, quad_layout
+from .quads import graph_of
 from ..materialize import lazy_cut, materialize
 
 _TOKEN = re.compile(
@@ -235,19 +245,10 @@ def _path_preds(path) -> set[str]:
     return _path_preds(path.left) | _path_preds(path.right)
 
 
-@dataclass
-class Filter:
-    """One comparison: lhs/rhs are Var or str literal."""
-
-    op: str
-    lhs: object
-    rhs: object
-    conj: str = "&&"  # connective to the PREVIOUS filter in the chain
-
-
-@dataclass
+@dataclass(frozen=True)
 class Agg:
-    """One aggregate select item: (FN(?var) AS ?alias)."""
+    """One aggregate call: (FN(?var) AS ?alias) in SELECT, or an
+    anonymous call inside HAVING (alias ``__hN``, a hidden column)."""
 
     fn: str  # COUNT | MIN | MAX | SUM | AVG | GROUP_CONCAT | SAMPLE
     var: str | None  # None for COUNT(*)
@@ -256,7 +257,8 @@ class Agg:
     distinct: bool = False  # COUNT(DISTINCT ?v) only
 
 
-# --- expression AST (BIND + SELECT expressions + HAVING operands) ---
+# --- expression AST (FILTER, HAVING, BIND, IF, SELECT expressions,
+# ORDER BY keys) ---
 @dataclass(frozen=True)
 class ExprVar:
     name: str
@@ -274,17 +276,48 @@ class ExprNum:
 
 @dataclass(frozen=True)
 class ExprFunc:
-    fn: str  # CONCAT | UCASE | LCASE | STRLEN | SUBSTR | STR
+    fn: str  # one of _EXPR_FUNCS
     args: tuple
 
 
 @dataclass(frozen=True)
 class ExprBin:
-    op: str  # + - * /
+    op: str  # a key of _BINOPS
     left: object
     right: object
 
 
+@dataclass(frozen=True)
+class ExprNot:
+    arg: object
+
+
+@dataclass(frozen=True)
+class ExprIn:
+    """``arg IN ("lit", ...)``; NOT IN is ExprNot(ExprIn(...))."""
+
+    arg: object
+    values: tuple
+
+
+# The one operator table: logical, comparison and arithmetic.
+_BINOPS = {
+    "||": operator.or_,
+    "&&": operator.and_,
+    "=": operator.eq,
+    "!=": operator.ne,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "+": operator.add,
+    "-": operator.sub,
+    "*": operator.mul,
+    "/": operator.truediv,
+}
+_COMPARISONS = ("=", "!=", "<", "<=", ">", ">=")
+_ARITH = ("+", "-", "*", "/")
+_BOOL_FUNCS = ("REGEX", "CONTAINS", "STRSTARTS", "STRENDS", "BOUND")
 _EXPR_FUNCS = (
     "CONCAT",
     "UCASE",
@@ -296,48 +329,48 @@ _EXPR_FUNCS = (
     "REPLACE",
     "STRBEFORE",
     "STRAFTER",
+    "IF",
+    *_BOOL_FUNCS,
 )
 _AGG_FNS = ("COUNT", "MIN", "MAX", "SUM", "AVG", "GROUP_CONCAT", "SAMPLE")
 
 
-@dataclass(frozen=True)
-class ExprBound:
-    """BOUND(?v) — true iff the variable is bound (non-NULL)."""
+def _is_bool(e) -> bool:
+    """True iff the expression is boolean-valued (the subset has no
+    effective-boolean-value coercion of terms)."""
+    if isinstance(e, ExprBin):
+        return e.op in ("||", "&&", *_COMPARISONS)
+    if isinstance(e, ExprFunc):
+        return e.fn in _BOOL_FUNCS
+    return isinstance(e, (ExprNot, ExprIn))
 
-    var: str
+
+def _is_numeric(e) -> bool:
+    """Operands that make a comparison numeric: a number literal, an
+    arithmetic result or an aggregate."""
+    return isinstance(e, (ExprNum, Agg)) or (
+        isinstance(e, ExprBin) and e.op in _ARITH
+    )
 
 
-@dataclass(frozen=True)
-class ExprIf:
-    """IF(cond, then, else) where cond is ExprBound or one comparison
-    (op, lhs, rhs) over expressions; branches evaluate in string
-    context (module-docstring string-semantics note)."""
-
-    cond: object  # ExprBound | tuple[op, expr, expr]
-    then: object
-    other: object
+def _expr_nodes(e):
+    """Every node of an expression tree, pre-order. An Agg is a leaf:
+    its variable is bound before aggregation, not after."""
+    yield e
+    if isinstance(e, ExprBin):
+        children = (e.left, e.right)
+    elif isinstance(e, (ExprNot, ExprIn)):
+        children = (e.arg,)
+    elif isinstance(e, ExprFunc):
+        children = e.args
+    else:
+        children = ()
+    for c in children:
+        yield from _expr_nodes(c)
 
 
 def _expr_vars(e) -> set[str]:
-    if isinstance(e, ExprVar):
-        return {e.name}
-    if isinstance(e, ExprBound):
-        return {e.var}
-    if isinstance(e, ExprIf):
-        cond_vars = (
-            {e.cond.var}
-            if isinstance(e.cond, ExprBound)
-            else _expr_vars(e.cond[1]) | _expr_vars(e.cond[2])
-        )
-        return cond_vars | _expr_vars(e.then) | _expr_vars(e.other)
-    if isinstance(e, ExprBin):
-        return _expr_vars(e.left) | _expr_vars(e.right)
-    if isinstance(e, ExprFunc):
-        out: set[str] = set()
-        for a in e.args:
-            out |= _expr_vars(a)
-        return out
-    return set()
+    return {n.name for n in _expr_nodes(e) if isinstance(n, ExprVar)}
 
 
 @dataclass
@@ -346,11 +379,10 @@ class SparqlQuery:
     distinct: bool
     patterns: list[tuple[Term, Term, Term]]
     optionals: list[tuple[Term, Term, Term]] = field(default_factory=list)
-    # each FILTER(...) is one GROUP: a chain of comparisons joined by
-    # the Filter.conj connective (&& / ||), evaluated as one predicate
-    filters: list[list[Filter]] = field(default_factory=list)
+    # FILTER(...) expressions, ANDed across FILTERs
+    filters: list[object] = field(default_factory=list)
     # (key, desc) where key is a variable NAME (str) or an expression
-    # AST (ORDER BY over expressions, round 9)
+    # AST
     order_by: list[tuple[object, bool]] = field(default_factory=list)
     limit: int | None = None
     # OFFSET k: skip the first k solutions (pagination); requires
@@ -380,9 +412,8 @@ class SparqlQuery:
     binds: list[tuple[str, object]] = field(default_factory=list)
     # (expr AS ?alias) SELECT items — projected after the plain vars
     select_exprs: list[tuple[str, object]] = field(default_factory=list)
-    # HAVING(...) groups: Filter chains whose operands may additionally
-    # be Agg calls or ExprNum literals; ANDed across groups
-    having: list[list[Filter]] = field(default_factory=list)
+    # HAVING(...) expressions (may contain anonymous Agg calls), ANDed
+    having: list[object] = field(default_factory=list)
     # { SELECT ... } sub-queries, joined to the group on shared vars
     subselects: list["SparqlQuery"] = field(default_factory=list)
     # CONSTRUCT template triples (graph output: s, p, o string columns,
@@ -409,9 +440,13 @@ class _Parser:
     def __init__(self, toks: list[str]):
         self.toks = toks
         self.i = 0
+        # hidden HAVING aggregates named so far in the current query's
+        # HAVING clauses; None where aggregate calls are not expressions
+        self.hidden: int | None = None
 
-    def peek(self) -> str | None:
-        return self.toks[self.i] if self.i < len(self.toks) else None
+    def peek(self, k: int = 0) -> str | None:
+        j = self.i + k
+        return self.toks[j] if j < len(self.toks) else None
 
     def next(self) -> str:
         if self.i >= len(self.toks):
@@ -520,23 +555,19 @@ class _Parser:
                 continue
             if t == "(":  # (AGG(?v) AS ?alias) or (expr AS ?alias)
                 self.next()
-                nxt = (self.peek() or "").upper()
-                follows = (
-                    self.toks[self.i + 1]
-                    if self.i + 1 < len(self.toks)
-                    else ""
-                )
-                if nxt in _AGG_FNS and follows == "(":
-                    aggs.append(self._agg_call())
+                is_agg = (self.peek() or "").upper() in _AGG_FNS
+                if is_agg and self.peek(1) == "(":
+                    item = self._agg_call()
                 else:
-                    expr = self.expr()
-                    self.expect("AS")
-                    alias = self.next()
-                    if not alias.startswith("?"):
-                        raise ValueError(
-                            "SELECT expression alias must be a ?var"
-                        )
-                    select_exprs.append((alias[1:], expr))
+                    item = self.expr()
+                self.expect("AS")
+                alias = self.next()
+                if not alias.startswith("?"):
+                    raise ValueError("SELECT item alias must be a ?var")
+                if isinstance(item, Agg):
+                    aggs.append(replace(item, alias=alias[1:]))
+                else:
+                    select_exprs.append((alias[1:], item))
                 self.expect(")")
                 continue
             break
@@ -555,9 +586,8 @@ class _Parser:
                     )
                 from_named.append(g[1:-1])
             else:
-                # plain FROM <g> (round 10 — default-graph override,
-                # rejected through round 9): the default graph is the
-                # MERGE of the listed graphs
+                # plain FROM <g>: the default graph is the MERGE of the
+                # listed graphs
                 g = self.next()
                 if not g.startswith("<"):
                     raise ValueError(f"FROM needs an <iri>, got {g!r}")
@@ -574,10 +604,9 @@ class _Parser:
         self._validate(q)
         return q
 
-    def _agg_call(self, with_alias: bool = True) -> Agg:
-        """AGG(?v|*) [AS ?alias] — shared by SELECT items (aliased)
-        and HAVING operands (anonymous; compile assigns a hidden
-        column)."""
+    def _agg_call(self) -> Agg:
+        """AGG(?v|*), unaliased — shared by SELECT items (the caller
+        parses ``AS ?alias``) and HAVING expressions."""
         fn = self.next().upper()
         if fn not in _AGG_FNS:
             raise ValueError(
@@ -625,13 +654,7 @@ class _Parser:
                 raise ValueError("SEPARATOR needs a string literal")
             sep = _unquote(lit)
         self.expect(")")
-        if not with_alias:
-            return Agg(fn, var, "", sep, distinct)
-        self.expect("AS")
-        alias = self.next()
-        if not alias.startswith("?"):
-            raise ValueError("aggregate alias must be a ?var")
-        return Agg(fn, var, alias[1:], sep, distinct)
+        return Agg(fn, var, "", sep, distinct)
 
     def _where_body(self, q: SparqlQuery) -> None:
         while True:
@@ -644,9 +667,7 @@ class _Parser:
             up = t.upper()
             if t == ".":
                 self.next()
-            elif t == "{" and (
-                self.toks[self.i + 1 : self.i + 2] or [""]
-            )[0].upper() == "SELECT":
+            elif t == "{" and (self.peek(1) or "").upper() == "SELECT":
                 # { SELECT ... } sub-query: parsed recursively; its
                 # modifiers stop at the closing brace
                 self.next()
@@ -702,9 +723,7 @@ class _Parser:
                     self.expect("EXISTS")
                     q.not_exists.append(self.group("FILTER NOT EXISTS"))
                 else:
-                    self.expect("(")
-                    q.filters.append(self.filter_expr())
-                    self.expect(")")
+                    q.filters.append(self._condition("FILTER"))
             elif up == "BIND":
                 self.next()
                 self.expect("(")
@@ -751,9 +770,13 @@ class _Parser:
                 return  # sub-SELECT: the caller consumes the brace
             if up == "HAVING":
                 self.next()
-                self.expect("(")
-                q.having.append(self._having_expr())
-                self.expect(")")
+                self.hidden = sum(
+                    isinstance(n, Agg)
+                    for e in q.having
+                    for n in _expr_nodes(e)
+                )
+                q.having.append(self._condition("HAVING"))
+                self.hidden = None
             elif up == "GROUP":
                 self.next()
                 self.expect("BY")
@@ -766,29 +789,20 @@ class _Parser:
                 self.expect("BY")
                 while (nt := self.peek()) is not None:
                     ntu = nt.upper()
-                    follows = (
-                        self.toks[self.i + 1]
-                        if self.i + 1 < len(self.toks)
-                        else ""
-                    )
                     if nt.startswith("?"):
                         q.order_by.append((self.next()[1:], False))
                     elif ntu in ("DESC", "ASC"):
-                        # DESC(?v) keeps the historical plain-var shape;
-                        # DESC(expr) parses through the BIND expression
-                        # grammar (round 9)
                         desc = self.next().upper() == "DESC"
                         self.expect("(")
-                        key: object
-                        if (self.peek() or "").startswith("?") and (
-                            self.toks[self.i + 1 : self.i + 2] or [""]
-                        )[0] == ")":
-                            key = self.next()[1:]
-                        else:
-                            key = self.expr()
-                        q.order_by.append((key, desc))
+                        key = self.expr()
                         self.expect(")")
-                    elif (ntu in _EXPR_FUNCS and follows == "(") or nt == "(":
+                        # a plain variable key is kept as its name
+                        if isinstance(key, ExprVar):
+                            key = key.name
+                        q.order_by.append((key, desc))
+                    elif nt == "(" or (
+                        ntu in _EXPR_FUNCS and self.peek(1) == "("
+                    ):
                         # bare expression sort key: FUNC(...) or (expr)
                         q.order_by.append((self.expr(), False))
                     else:
@@ -830,14 +844,10 @@ class _Parser:
                 "UNION groups cannot mix with top-level patterns"
             )
         if q.unions:
-            # OPTIONAL / MINUS / NOT EXISTS over a UNION group are
-            # SUPPORTED (round 10, VERDICT r9 #5 and its MINUS twin):
-            # the union of branches compiles to one bound relation,
-            # then the generic OPTIONAL left-extend and the shared-var
-            # anti-joins apply to it exactly as to a conjunctive
-            # group — leftjoin(union(A, B), C) / minus(union(A, B), C),
-            # SPARQL 1.1's group semantics. The only UNION-shape
-            # restriction left is the identical-binding check below.
+            # OPTIONAL / MINUS / NOT EXISTS apply to the union of the
+            # branches as to a conjunctive group (leftjoin(union(A, B),
+            # C), SPARQL 1.1's group semantics); the only UNION-shape
+            # restriction is identical bindings
             var_sets = [
                 {t.name for pat in g for t in pat if isinstance(t, Var)}
                 for g in q.unions
@@ -862,9 +872,8 @@ class _Parser:
                 )
         elif q.group_by:
             # GROUP BY with no aggregates is legal SPARQL: one result
-            # row per group (round 10 — was rejected through round 9).
-            # Only grouped variables may be projected, same rule as
-            # the aggregate case.
+            # row per group. Only grouped variables may be projected,
+            # same rule as the aggregate case.
             if q.select == ["*"]:
                 raise ValueError(
                     "SELECT * cannot be mixed with GROUP BY"
@@ -922,8 +931,7 @@ class _Parser:
     def path_or_term(self):
         t = self.peek()
         if t is not None and t.startswith("?"):
-            nxt = self.toks[self.i + 1] if self.i + 1 < len(self.toks) else ""
-            if nxt in ("/", "|", "+", "*", "^"):
+            if self.peek(1) in ("/", "|", "+", "*", "^"):
                 raise ValueError("variables cannot appear inside a path")
             return self.term()
         path = self._path_alt()
@@ -1018,96 +1026,72 @@ class _Parser:
             raise ValueError(f"empty {kind} group")
         return pats
 
-    def filter_expr(self) -> list[Filter]:
-        out: list[Filter] = []
-        conj = "&&"
-        while True:
-            t = self.peek()
-            if t is None:
-                raise ValueError("SPARQL parser: unterminated FILTER")
-            if t.upper() == "REGEX":
-                self.next()
-                self.expect("(")
-                v = self.next()
-                if not v.startswith("?"):
-                    raise ValueError("REGEX needs a ?var first argument")
-                self.expect(",")
-                pat = self.next()
-                if not pat.startswith('"'):
-                    raise ValueError("REGEX needs a string pattern")
-                self.expect(")")
-                out.append(Filter("regex", Var(v[1:]), _unquote(pat), conj))
-            elif t.upper() in ("CONTAINS", "STRSTARTS", "STRENDS"):
-                fn = self.next().upper()
-                self.expect("(")
-                v = self.next()
-                if not v.startswith("?"):
-                    raise ValueError(f"{fn} needs a ?var first argument")
-                self.expect(",")
-                lit = self.next()
-                if not lit.startswith('"'):
-                    raise ValueError(f"{fn} needs a string literal")
-                self.expect(")")
-                out.append(
-                    Filter(fn.lower(), Var(v[1:]), _unquote(lit), conj)
-                )
-            elif t.upper() == "BOUND" or (
-                t == "!"
-                and (self.toks[self.i + 1 : self.i + 2] or [""])[0].upper()
-                == "BOUND"
-            ):
-                neg = t == "!"
-                if neg:
-                    self.next()
-                self.next()
-                self.expect("(")
-                v = self.next()
-                if not v.startswith("?"):
-                    raise ValueError("BOUND needs a ?var")
-                self.expect(")")
-                out.append(
-                    Filter("notbound" if neg else "bound", Var(v[1:]), None, conj)
-                )
-            else:
-                lhs = self._operand()
-                op = self.next()
-                if op.upper() == "NOT":
-                    nxt = self.next()
-                    if nxt.upper() != "IN":
-                        raise ValueError(
-                            f"expected IN after NOT, got {nxt!r}"
-                        )
-                    op = "notin"
-                elif op.upper() == "IN":
-                    op = "in"
-                if op in ("in", "notin"):
-                    if not isinstance(lhs, Var):
-                        raise ValueError("IN needs a ?var left-hand side")
-                    out.append(
-                        Filter(op, lhs, tuple(self._in_list()), conj)
-                    )
-                else:
-                    if op not in ("=", "!=", "<", "<=", ">", ">="):
-                        raise ValueError(
-                            f"unsupported FILTER operator {op!r}"
-                        )
-                    rhs = self._operand()
-                    out.append(Filter(op, lhs, rhs, conj))
-            nxt = self.peek()
-            if nxt in ("&&", "||"):
-                conj = self.next()
-                continue
-            return out
+    def _condition(self, clause: str):
+        """``( boolean expression )`` — a FILTER or HAVING body."""
+        self.expect("(")
+        e = self.expr()
+        self.expect(")")
+        if not _is_bool(e):
+            raise ValueError(f"{clause} needs a boolean expression, got {e!r}")
+        return e
 
-    def _operand(self):
-        t = self.next()
-        if t.startswith("?"):
-            return Var(t[1:])
-        if t.startswith('"'):
-            return _unquote(t)
-        raise ValueError(
-            f"FILTER operands must be ?var or \"literal\", got {t!r}"
-        )
+    # --- the expression grammar, SPARQL 1.1 precedence (loosest first):
+    # or := and ('||' and)* ; and := rel ('&&' rel)* ;
+    # rel := add [cmp add | [NOT] IN ("lit", ...)] ;
+    # add := mul (('+'|'-') mul)* ; mul := unary (('*'|'/') unary)* ;
+    # unary := '!' prim | prim ;
+    # prim := ?var | "lit" | number | FUNC(expr, ...) | AGG(...)
+    #         (HAVING only) | '(' expr ')'
+    def expr(self):
+        return self._binary(("||",), self._and)
+
+    def _and(self):
+        return self._binary(("&&",), self._rel)
+
+    def _binary(self, ops: tuple[str, ...], operand):
+        """Left-associative chain of ``ops`` over ``operand``; the
+        operands of && and || must be boolean."""
+        left = operand()
+        while self.peek() in ops:
+            op = self.next()
+            right = operand()
+            if op in ("&&", "||") and not (_is_bool(left) and _is_bool(right)):
+                raise ValueError(f"{op} needs boolean operands")
+            left = ExprBin(op, left, right)
+        return left
+
+    def _rel(self):
+        left = self._add()
+        t = (self.peek() or "").upper()
+        if t in _COMPARISONS:
+            self.next()
+            return ExprBin(t, left, self._add())
+        if t not in ("IN", "NOT"):
+            return left
+        self.next()
+        if t == "NOT":
+            nxt = self.next()
+            if nxt.upper() != "IN":
+                raise ValueError(f"expected IN after NOT, got {nxt!r}")
+        if not isinstance(left, ExprVar):
+            raise ValueError("IN needs a ?var left-hand side")
+        e = ExprIn(left, tuple(self._in_list()))
+        return ExprNot(e) if t == "NOT" else e
+
+    def _add(self):
+        return self._binary(("+", "-"), self._mul)
+
+    def _mul(self):
+        return self._binary(("*", "/"), self._unary)
+
+    def _unary(self):
+        if self.peek() != "!":
+            return self._prim()
+        self.next()
+        arg = self._prim()
+        if not _is_bool(arg):
+            raise ValueError("! needs a boolean operand")
+        return ExprNot(arg)
 
     def _in_list(self) -> list[str]:
         """(\"lit\", \"lit\", ...) after IN / NOT IN — string literals
@@ -1127,84 +1111,17 @@ class _Parser:
             if nxt != ",":
                 raise ValueError(f"expected , or ) in IN list, got {nxt!r}")
 
-    def _having_expr(self) -> list[Filter]:
-        """HAVING constraint chain: comparisons whose operands are
-        ?vars (aggregate aliases or grouped vars), anonymous aggregate
-        calls, numeric literals, or string literals; && / || fold like
-        FILTER groups."""
-        out: list[Filter] = []
-        conj = "&&"
-        while True:
-            lhs = self._having_operand()
-            op = self.next()
-            if op not in ("=", "!=", "<", "<=", ">", ">="):
-                raise ValueError(f"unsupported HAVING operator {op!r}")
-            rhs = self._having_operand()
-            out.append(Filter(op, lhs, rhs, conj))
-            nxt = self.peek()
-            if nxt in ("&&", "||"):
-                conj = self.next()
-                continue
-            return out
-
-    def _having_operand(self):
+    def _prim(self):
         t = self.peek()
-        if t is None:
-            raise ValueError("SPARQL parser: unterminated HAVING")
-        if t.upper() in _AGG_FNS and (
-            self.toks[self.i + 1 : self.i + 2] or [""]
-        )[0] == "(":
-            return self._agg_call(with_alias=False)
-        if t.startswith("?"):
-            return Var(self.next()[1:])
-        if t.startswith('"'):
-            return _unquote(self.next())
-        if re.fullmatch(r"[0-9]+(\.[0-9]+)?", t):
-            return ExprNum(float(self.next()))
-        raise ValueError(
-            f"HAVING operands must be ?var, aggregate, number or "
-            f"\"literal\", got {t!r}"
-        )
-
-    def _if_cond(self):
-        """IF(...) condition: BOUND(?v) or one comparison between
-        expressions (string collation for the comparison, matching the
-        post-decode FILTER semantics)."""
-        if (self.peek() or "").upper() == "BOUND" and (
-            self.toks[self.i + 1 : self.i + 2] or [""]
-        )[0] == "(":
-            self.next()
-            self.next()
-            v = self.next()
-            if not v.startswith("?"):
-                raise ValueError("BOUND needs a ?var")
-            self.expect(")")
-            return ExprBound(v[1:])
-        lhs = self.expr()
-        op = self.next()
-        if op not in ("=", "!=", "<", "<=", ">", ">="):
-            raise ValueError(f"unsupported IF condition operator {op!r}")
-        rhs = self.expr()
-        return (op, lhs, rhs)
-
-    # --- BIND / SELECT expression grammar ---
-    # expr := mul (('+'|'-') mul)* ; mul := prim (('*'|'/') prim)* ;
-    # prim := ?var | "lit" | number | FUNC(expr, ...) | '(' expr ')'
-    def expr(self):
-        left = self._expr_mul()
-        while self.peek() in ("+", "-"):
-            op = self.next()
-            left = ExprBin(op, left, self._expr_mul())
-        return left
-
-    def _expr_mul(self):
-        left = self._expr_prim()
-        while self.peek() in ("*", "/"):
-            op = self.next()
-            left = ExprBin(op, left, self._expr_prim())
-        return left
-
-    def _expr_prim(self):
+        if (t or "").upper() in _AGG_FNS and self.peek(1) == "(":
+            if self.hidden is None:
+                raise ValueError(
+                    f"aggregates are allowed in SELECT items and HAVING "
+                    f"only (got {t.upper()})"
+                )
+            agg = replace(self._agg_call(), alias=f"__h{self.hidden}")
+            self.hidden += 1
+            return agg
         t = self.next()
         if t == "(":
             inner = self.expr()
@@ -1217,68 +1134,60 @@ class _Parser:
         if re.fullmatch(r"[0-9]+(\.[0-9]+)?", t):
             return ExprNum(float(t))
         fn = t.upper()
-        if fn == "BOUND" and self.peek() == "(":
+        if fn not in _EXPR_FUNCS or self.peek() != "(":
+            raise ValueError(f"expected expression, got {t!r}")
+        self.next()
+        args = [self.expr()]
+        while self.peek() == ",":
             self.next()
-            v = self.next()
-            if not v.startswith("?"):
-                raise ValueError("BOUND needs a ?var")
-            self.expect(")")
-            return ExprBound(v[1:])
-        if fn == "IF" and self.peek() == "(":
-            self.next()
-            cond = self._if_cond()
-            self.expect(",")
-            then = self.expr()
-            self.expect(",")
-            other = self.expr()
-            self.expect(")")
-            return ExprIf(cond, then, other)
-        if fn in _EXPR_FUNCS and self.peek() == "(":
-            self.next()
-            args = [self.expr()]
-            while self.peek() == ",":
-                self.next()
-                args.append(self.expr())
-            self.expect(")")
-            if fn in ("UCASE", "LCASE", "STRLEN", "STR") and len(args) != 1:
-                raise ValueError(f"{fn} takes exactly one argument")
-            if fn == "SUBSTR":
-                if len(args) not in (2, 3):
-                    raise ValueError("SUBSTR takes (?v, start[, length])")
-                for a in args[1:]:
-                    if not isinstance(a, ExprNum) or a.value != int(
-                        a.value
-                    ):
-                        raise ValueError(
-                            "SUBSTR start/length must be integer literals"
-                        )
-            if fn == "CONCAT" and len(args) < 2:
-                raise ValueError("CONCAT takes two or more arguments")
-            if fn == "REPLACE":
-                if len(args) != 3 or not all(
-                    isinstance(a, ExprStr) for a in args[1:]
-                ):
-                    raise ValueError(
-                        'REPLACE takes (expr, "pattern", "replacement") '
-                        "with literal pattern/replacement"
-                    )
-            if fn in ("STRBEFORE", "STRAFTER"):
-                if (
-                    len(args) != 2
-                    or not isinstance(args[1], ExprStr)
-                    or args[1].value == ""
-                ):
-                    raise ValueError(
-                        f'{fn} takes (expr, "separator") with a '
-                        "non-empty literal separator"
-                    )
-            return ExprFunc(fn, tuple(args))
-        if fn in _AGG_FNS:
+            args.append(self.expr())
+        self.expect(")")
+        _check_call(fn, args)
+        return ExprFunc(fn, tuple(args))
+
+
+def _check_call(fn: str, args: list) -> None:
+    """Arity and literal-argument rules of the expression functions."""
+    if fn in ("UCASE", "LCASE", "STRLEN", "STR", "BOUND") and len(args) != 1:
+        raise ValueError(f"{fn} takes exactly one argument")
+    if fn == "BOUND" and not isinstance(args[0], ExprVar):
+        raise ValueError("BOUND needs a ?var")
+    if fn in ("REGEX", "CONTAINS", "STRSTARTS", "STRENDS") and (
+        len(args) != 2
+        or not isinstance(args[0], ExprVar)
+        or not isinstance(args[1], ExprStr)
+    ):
+        raise ValueError(f'{fn} takes (?var, "literal")')
+    if fn == "IF" and (len(args) != 3 or not _is_bool(args[0])):
+        raise ValueError("IF takes (boolean condition, then, else)")
+    if fn == "SUBSTR":
+        if len(args) not in (2, 3):
+            raise ValueError("SUBSTR takes (?v, start[, length])")
+        for a in args[1:]:
+            if not isinstance(a, ExprNum) or a.value != int(a.value):
+                raise ValueError(
+                    "SUBSTR start/length must be integer literals"
+                )
+    if fn == "CONCAT" and len(args) < 2:
+        raise ValueError("CONCAT takes two or more arguments")
+    if fn == "REPLACE":
+        if len(args) != 3 or not all(
+            isinstance(a, ExprStr) for a in args[1:]
+        ):
             raise ValueError(
-                f"aggregates are not allowed in BIND/expressions "
-                f"(got {fn})"
+                'REPLACE takes (expr, "pattern", "replacement") '
+                "with literal pattern/replacement"
             )
-        raise ValueError(f"expected expression, got {t!r}")
+    if fn in ("STRBEFORE", "STRAFTER"):
+        if (
+            len(args) != 2
+            or not isinstance(args[1], ExprStr)
+            or args[1].value == ""
+        ):
+            raise ValueError(
+                f'{fn} takes (expr, "separator") with a '
+                "non-empty literal separator"
+            )
 
 
 def _unquote(tok: str) -> str:
@@ -1312,52 +1221,12 @@ def _optional_only_vars(q: SparqlQuery) -> set[str]:
     return opt - required
 
 
-def _filter_col(flt: Filter):
-    def side(x):
-        return F.col(x.name) if isinstance(x, Var) else F.lit(x)
-
-    if flt.op == "regex":
-        return side(flt.lhs).rlike(flt.rhs)
-    if flt.op == "contains":
-        return side(flt.lhs).contains(flt.rhs)
-    if flt.op == "strstarts":
-        return side(flt.lhs).startswith(flt.rhs)
-    if flt.op == "strends":
-        return side(flt.lhs).endswith(flt.rhs)
-    if flt.op == "in":
-        return side(flt.lhs).isin(list(flt.rhs))
-    if flt.op == "notin":
-        return ~side(flt.lhs).isin(list(flt.rhs))
-    if flt.op == "bound":
-        return side(flt.lhs).isNotNull()
-    if flt.op == "notbound":
-        return side(flt.lhs).isNull()
-    lhs, rhs = side(flt.lhs), side(flt.rhs)
-    return {
-        "=": lhs == rhs,
-        "!=": lhs != rhs,
-        "<": lhs < rhs,
-        "<=": lhs <= rhs,
-        ">": lhs > rhs,
-        ">=": lhs >= rhs,
-    }[flt.op]
-
-
-def _group_col(group: list[Filter]):
-    """One FILTER(...) group -> one Column (&&/|| fold, left-assoc)."""
-    col = _filter_col(group[0])
-    for f in group[1:]:
-        col = (col & _filter_col(f)) if f.conj == "&&" else (col | _filter_col(f))
-    return col
-
-
 def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
     """Relational path algebra over the encoded triples: a path
     denotes a binary relation (src, dst). Pred is a pushed-down
     constant-predicate scan; Inv swaps; Alt unions; Seq equi-joins on
     the hop; Plus is semi-naive transitive closure (frontier ⋈ base
-    per round, left-anti dedup, lineage cut per round, cap 12 — the
-    q_bgp_path_closure contract)."""
+    per round, left-anti dedup, lineage cut per round, cap 12)."""
     if isinstance(path, PathPred):
         return enc.filter(
             F.col("p") == F.lit(int(cmap[path.name]))
@@ -1386,7 +1255,7 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
             F.col("a.src").alias("src"), F.col("b.dst").alias("dst")
         )
     if isinstance(path, PathPlus):
-        return _closure_rel(
+        return transitive_closure(
             _path_rel(enc, path.inner, cmap).distinct().transform(materialize)
         )
     if isinstance(path, PathStar):
@@ -1396,7 +1265,7 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
         # spec's all-graph-terms zero-length universe is out of scope;
         # constants with no inner-path edge contribute no (c, c) row).
         base = _path_rel(enc, path.inner, cmap).distinct().transform(materialize)
-        closure = _closure_rel(base)
+        closure = transitive_closure(base)
         nodes = (
             base.select("src")
             .unionByName(base.select(F.col("dst").alias("src")))
@@ -1407,25 +1276,26 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
     raise ValueError(f"unknown path element {path!r}")
 
 
-def _closure_rel(base: DataFrame) -> DataFrame:
-    """Semi-naive transitive closure of a (src, dst) relation:
-    frontier ⋈ base per round, left-anti dedup against the accumulated
-    closure, lineage cut per round, cap 12 — the q_bgp_path_closure
-    contract, shared by `p+` and `p*`."""
+def transitive_closure(base: DataFrame) -> DataFrame:
+    """Semi-naive transitive closure of a two-column (source,
+    destination) relation, in its own column names: frontier ⋈ base per
+    round, left-anti dedup against the accumulated closure, a
+    ``materialize`` cut and an ``isEmpty`` check per round, cap 12 with
+    a non-convergence error. Shared by `p+`, `p*` and the hand-built
+    q_bgp_path_closure."""
+    src, dst = base.columns
     closure = base
     frontier = base
     for _ in range(12):
         step = (
             frontier.alias("f")
-            .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
-            .select(
-                F.col("f.src").alias("src"), F.col("b.dst").alias("dst")
-            )
+            .join(base.alias("b"), F.col(f"f.{dst}") == F.col(f"b.{src}"))
+            .select(F.col(f"f.{src}").alias(src), F.col(f"b.{dst}").alias(dst))
             .distinct()
         )
-        new = step.join(
-            closure, ["src", "dst"], "left_anti"
-        ).transform(materialize)
+        new = step.join(closure, [src, dst], "left_anti").transform(
+            materialize
+        )
         if new.isEmpty():
             return closure
         closure = closure.unionByName(new).transform(materialize)
@@ -1433,102 +1303,60 @@ def _closure_rel(base: DataFrame) -> DataFrame:
     raise RuntimeError("path closure did not converge in 12 rounds")
 
 
-def _bind_path(rel: DataFrame, subj, obj, cmap) -> DataFrame:
-    """(src, dst) relation -> binding columns per the subject/object
-    terms, mirroring bgp._pattern_step's constant/variable handling."""
-    df = rel
-    proj = []
-    if isinstance(subj, Var):
-        proj.append(F.col("src").alias(subj.name))
-    else:
-        df = df.filter(F.col("src") == F.lit(int(cmap[subj])))
-    if isinstance(obj, Var):
-        if isinstance(subj, Var) and obj.name == subj.name:
-            df = df.filter(F.col("src") == F.col("dst"))
-        else:
-            proj.append(F.col("dst").alias(obj.name))
-    else:
-        df = df.filter(F.col("dst") == F.lit(int(cmap[obj])))
-    if not proj:
-        raise ValueError("path pattern binds no variables")
-    return df.select(*proj)
-
-
-def _quad_pattern_step(quads: DataFrame, gterm, pat) -> DataFrame:
-    """One GRAPH-group pattern over the quad layout — bgp._pattern_step
-    extended with the graph position: a constant graph is a pushed-down
-    (partition-pruning) filter, a ?g variable is a projected binding
-    shared across the group's patterns."""
-    df = quads
-    proj = []
-    seen: dict[str, str] = {}
-    if isinstance(gterm, Var):
-        proj.append(F.col("g").alias(gterm.name))
-        seen[gterm.name] = "g"
-    else:
-        df = df.filter(F.col("g") == F.lit(gterm))
-    for col, term in zip(("s", "p", "o"), pat):
-        if isinstance(term, Var):
-            if term.name in seen:
-                df = df.filter(F.col(col) == F.col(seen[term.name]))
-            else:
-                proj.append(F.col(col).alias(term.name))
-                seen[term.name] = col
-        else:
-            df = df.filter(F.col(col) == F.lit(term))
-    return df.select(*proj)
-
-
 def _expr_col(e):
-    """Expression AST -> Column over the DECODED (string) bindings.
-    Numeric contexts try_cast operands to double (terms are strings;
-    non-numeric terms become NULL, the SQL NULL-skip rule documented
-    for SUM/AVG); string contexts cast to string."""
+    """Expression AST -> Column over the DECODED (string) bindings —
+    the one expression compiler (FILTER, HAVING, BIND, IF, SELECT
+    expressions, ORDER BY keys). Arithmetic, and comparisons with a
+    numeric operand (:func:`_is_numeric`), try_cast operands to double
+    (terms are strings; non-numeric terms become NULL, the SQL
+    NULL-skip rule documented for SUM/AVG); other comparisons use
+    string collation; string functions cast to string. An Agg is the
+    hidden HAVING column it was named for."""
 
     def num(x):
         return _expr_col(x).try_cast("double")
 
     def s(x):
         # integer-valued numeric LITERALS keep SPARQL's integer lexical
-        # form in string contexts ("1", not "1.0" — ADVICE r8);
-        # arithmetic RESULTS are doubles and keep the double form
-        # (documented deviation, module docstring)
+        # form in string contexts ("1", not "1.0"); arithmetic RESULTS
+        # are doubles and keep the double form (documented deviation,
+        # module docstring)
         if isinstance(x, ExprNum) and x.value == int(x.value):
             return F.lit(str(int(x.value)))
         return _expr_col(x).cast("string")
 
     if isinstance(e, ExprVar):
         return F.col(e.name)
-    if isinstance(e, ExprStr):
+    if isinstance(e, (ExprStr, ExprNum)):
         return F.lit(e.value)
-    if isinstance(e, ExprNum):
-        return F.lit(e.value)
-    if isinstance(e, ExprBound):
-        return F.col(e.var).isNotNull()
-    if isinstance(e, ExprIf):
-        if isinstance(e.cond, ExprBound):
-            cond = F.col(e.cond.var).isNotNull()
-        else:
-            op, cl, cr = e.cond
-            lhs, rhs = _expr_col(cl), _expr_col(cr)
-            cond = {
-                "=": lhs == rhs,
-                "!=": lhs != rhs,
-                "<": lhs < rhs,
-                "<=": lhs <= rhs,
-                ">": lhs > rhs,
-                ">=": lhs >= rhs,
-            }[op]
-        return F.when(cond, s(e.then)).otherwise(s(e.other))
+    if isinstance(e, Agg):
+        return F.col(e.alias)
+    if isinstance(e, ExprNot):
+        return ~_expr_col(e.arg)
+    if isinstance(e, ExprIn):
+        return _expr_col(e.arg).isin(list(e.values))
     if isinstance(e, ExprBin):
-        lhs, rhs = num(e.left), num(e.right)
-        return {
-            "+": lhs + rhs,
-            "-": lhs - rhs,
-            "*": lhs * rhs,
-            "/": lhs / rhs,
-        }[e.op]
+        numeric = e.op in _ARITH or (
+            e.op in _COMPARISONS
+            and (_is_numeric(e.left) or _is_numeric(e.right))
+        )
+        side = num if numeric else _expr_col
+        return _BINOPS[e.op](side(e.left), side(e.right))
     if isinstance(e, ExprFunc):
+        if e.fn == "BOUND":
+            return _expr_col(e.args[0]).isNotNull()
+        if e.fn == "IF":
+            # branches evaluate in string context
+            cond, then, other = e.args
+            return F.when(_expr_col(cond), s(then)).otherwise(s(other))
+        if e.fn == "REGEX":
+            return _expr_col(e.args[0]).rlike(e.args[1].value)
+        if e.fn == "CONTAINS":
+            return _expr_col(e.args[0]).contains(e.args[1].value)
+        if e.fn == "STRSTARTS":
+            return _expr_col(e.args[0]).startswith(e.args[1].value)
+        if e.fn == "STRENDS":
+            return _expr_col(e.args[0]).endswith(e.args[1].value)
         if e.fn == "COALESCE":
             # first BOUND value, string context (SPARQL's type
             # polymorphism is out of scope — documented string semantics)
@@ -1552,7 +1380,7 @@ def _expr_col(e):
             # spec: empty string when the separator does not occur; a
             # NULL (unbound OPTIONAL) input stays NULL so the BIND
             # alias stays unbound and BOUND() agrees with SPARQL 1.1
-            # error propagation (ADVICE r9)
+            # error propagation
             col, sep = s(e.args[0]), e.args[1].value
             loc = F.locate(sep, col)
             if e.fn == "STRBEFORE":
@@ -1565,19 +1393,9 @@ def _expr_col(e):
                 .otherwise(F.lit(""))
             )
         if e.fn == "SUBSTR":
-            pos = e.args[1]
-            if not isinstance(pos, ExprNum) or pos.value != int(pos.value):
-                raise ValueError("SUBSTR start must be an integer literal")
-            if len(e.args) == 3:
-                ln = e.args[2]
-                if not isinstance(ln, ExprNum) or ln.value != int(ln.value):
-                    raise ValueError(
-                        "SUBSTR length must be an integer literal"
-                    )
-                return F.substring(
-                    s(e.args[0]), int(pos.value), int(ln.value)
-                )
-            return F.substring(s(e.args[0]), int(pos.value), 2**31 - 1)
+            # start/length are integer literals (checked by _check_call)
+            length = int(e.args[2].value) if len(e.args) == 3 else 2**31 - 1
+            return F.substring(s(e.args[0]), int(e.args[1].value), length)
     raise ValueError(f"unknown expression node {e!r}")
 
 
@@ -1635,8 +1453,6 @@ def _compile_query(
         # the variable and joins the distinct bindings in.
         from copy import copy as _shallow
 
-        from .bgp import triples_view
-
         t = triples_view(spark, sf_dir)
         if q.describe_iris:
             s_side = t.filter(F.col("s").isin(q.describe_iris))
@@ -1657,20 +1473,18 @@ def _compile_query(
 
     d, enc = encoded_store(spark, sf_dir)
     if q.from_default:
-        # plain FROM <g> (round 10): the default graph becomes the
-        # MERGE of the listed graphs. The quad layout derives each
-        # triple's graph from its SUBJECT's entity prefix
-        # (quads_view), so the restriction is one broadcast semi-join
-        # of the encoded relation against the allowed subject ids —
-        # every downstream construct (patterns, paths, OPTIONAL,
-        # MINUS, aggregates) then sees only the merged default graph.
+        # plain FROM <g>: the default graph becomes the MERGE of the
+        # listed graphs. A triple's graph is its SUBJECT's family
+        # (quads.graph_of), so the restriction is one broadcast
+        # semi-join of the encoded relation against the allowed
+        # subject ids — every downstream construct (patterns, paths,
+        # OPTIONAL, MINUS, aggregates) then sees only the merged
+        # default graph.
         # GRAPH groups range over the NAMED set implied by the same
         # dataset clause: q.from_named if given, else EMPTY (handled
         # at the quad-layout scan below, per SPARQL 1.1 §13.2).
         allowed_subjects = d.filter(
-            F.concat(
-                F.lit("g:"), F.split(F.col("term"), ":").getItem(0)
-            ).isin(list(q.from_default))
+            graph_of(F.col("term")).isin(list(q.from_default))
         ).select(F.col("term_id").alias("s"))
         enc = enc.join(F.broadcast(allowed_subjects), "s", "left_semi")
     subs = [_compile_query(spark, sf_dir, s) for s in q.subselects]
@@ -1695,12 +1509,12 @@ def _compile_query(
         consts.update(t for t in (subj, obj) if not isinstance(t, Var))
     for _var, lits in q.values:
         consts.update(lits)
-    # single-comparison (in)equality FILTER groups against literals run
-    # encoded (long-space) inside the join pipeline; multi-term groups
-    # and <,>,REGEX need string collation and run post-decode. Vars
-    # produced outside the encoded pipeline (BIND aliases, sub-SELECT
-    # outputs) only exist post-decode, so their filters can't run
-    # encoded.
+    # a FILTER that is exactly one =/!= between a pattern variable and
+    # a string literal runs encoded (long-space) inside the join
+    # pipeline; every other FILTER needs decoded terms and runs
+    # post-decode. Vars produced outside the encoded pipeline (BIND
+    # aliases, sub-SELECT outputs) only exist post-decode, so their
+    # filters can't run encoded.
     patvars = {
         t.name
         for pats in ([p for g in all_groups for p in g], q.optionals, path_pats)
@@ -1708,18 +1522,20 @@ def _compile_query(
         for t in (pat[0], pat[2])
         if isinstance(t, Var)
     }
-    eq_groups = [
-        g
-        for g in q.filters
-        if len(g) == 1
-        and g[0].op in ("=", "!=")
-        and isinstance(g[0].lhs, Var) != isinstance(g[0].rhs, Var)
-        and (g[0].lhs if isinstance(g[0].lhs, Var) else g[0].rhs).name
-        in patvars
-    ]
-    for g in eq_groups:
-        f = g[0]
-        consts.add(f.lhs if not isinstance(f.lhs, Var) else f.rhs)
+    # (filter, var, literal) per encoded FILTER
+    encoded_filters = []
+    for f in q.filters:
+        if isinstance(f, ExprBin) and f.op in ("=", "!="):
+            var, lit = f.left, f.right
+            if isinstance(lit, ExprVar):
+                var, lit = lit, var
+            if (
+                isinstance(var, ExprVar)
+                and isinstance(lit, ExprStr)
+                and var.name in patvars
+            ):
+                encoded_filters.append((f, var.name, lit.value))
+                consts.add(lit.value)
     cmap = {
         r["term"]: r["term_id"]
         for r in d.filter(F.col("term").isin(*consts)).collect()
@@ -1736,30 +1552,20 @@ def _compile_query(
 
     def pat_step(pat):
         """One pattern -> its encoded bindings relation: plain triples
-        via the BGP lowering, paths via the path algebra."""
-        if isinstance(pat[1], _PATH_TYPES):
-            return _bind_path(
-                _path_rel(enc, pat[1], cmap), pat[0], pat[2], cmap
-            )
-        return compile_bgp(enc, [enc_pat(pat)])
+        via the BGP lowering, paths via the path algebra with the
+        endpoints bound like a triple's subject and object."""
+        if not isinstance(pat[1], _PATH_TYPES):
+            return compile_bgp(enc, [enc_pat(pat)])
+        if not any(isinstance(t, Var) for t in (pat[0], pat[2])):
+            raise ValueError("path pattern binds no variables")
+        rel = _path_rel(enc, pat[1], cmap)
+        return bind_terms(rel, zip(("src", "dst"), enc_pat((pat[0], pat[2]))))
 
     def compile_group(g):
         """A conjunctive group (plain triples AND path patterns) ->
         encoded bindings; shared by the top-level patterns, each UNION
         branch, and each MINUS / NOT EXISTS group."""
-        b = None
-        for pat in g:
-            step = pat_step(pat)
-            if b is None:
-                b = step
-            else:
-                shared = sorted(set(b.columns) & set(step.columns))
-                b = (
-                    b.join(step, on=shared, how="inner")
-                    if shared
-                    else b.crossJoin(step)
-                )
-        return b
+        return reduce(natural_join, [pat_step(pat) for pat in g])
 
     if q.unions:
         parts = [compile_group(g) for g in all_groups]
@@ -1781,19 +1587,12 @@ def _compile_query(
         )
     else:
         bound = None
-    for pat in path_pats:
-        step = pat_step(pat)
-        if bound is None:
-            bound = step
-        else:
-            shared = sorted(set(bound.columns) & set(step.columns))
-            bound = (
-                bound.join(step, on=shared, how="inner")
-                if shared
-                else bound.crossJoin(step)
-            )
+    steps = ([bound] if bound is not None else []) + [
+        pat_step(pat) for pat in path_pats
+    ]
+    bound = reduce(natural_join, steps) if steps else None
     if bound is None and (
-        q.optionals or q.minus or q.not_exists or q.values or eq_groups
+        q.optionals or q.minus or q.not_exists or q.values or encoded_filters
     ):
         # sub-SELECT-/GRAPH-only WHERE: these constructs all need
         # encoded pattern bindings to act on
@@ -1811,30 +1610,22 @@ def _compile_query(
     for pat in q.optionals:
         if not isinstance(pat[1], _PATH_TYPES) and plain_opts_done:
             continue
-        step = pat_step(pat)
-        shared = sorted(set(bound.columns) & set(step.columns))
-        if not shared:
-            raise ValueError(
-                "OPTIONAL pattern shares no variable with BGP"
-            )
-        bound = bound.join(step, on=shared, how="left")
+        bound = natural_join(bound, pat_step(pat), "left")
     # MINUS / FILTER NOT EXISTS: the excluded group compiles to its own
     # encoded BGP join; exclusion is a left-anti join on the SHARED
     # variable columns (dictionary encoding preserves equality, so the
-    # anti-join runs in long space — same lowering as the hand-built
-    # q_bgp_minus / q_bgp_notexists). With NO shared variables the two
-    # constructs diverge per SPARQL 1.1 §8.3: MINUS removes nothing;
-    # NOT EXISTS removes every row iff the group matches at all.
-    for g, is_minus in [(g, True) for g in q.minus] + [
-        (g, False) for g in q.not_exists
-    ]:
+    # anti-join runs in long space — the MINUS lowering of
+    # natural_join, shared with the hand-built q_bgp_minus). With NO
+    # shared variables the two constructs diverge per SPARQL 1.1 §8.3:
+    # MINUS removes nothing; NOT EXISTS removes every row iff the group
+    # matches at all.
+    for g in q.minus:
+        bound = natural_join(bound, compile_group(g), "left_anti")
+    for g in q.not_exists:
         right = compile_group(g)
-        shared = sorted(set(bound.columns) & set(right.columns))
-        if shared:
-            bound = bound.join(
-                right.select(*shared).distinct(), shared, "left_anti"
-            )
-        elif not is_minus:
+        if set(bound.columns) & set(right.columns):
+            bound = natural_join(bound, right, "left_anti")
+        else:
             # uncorrelated NOT EXISTS: anti against a 1-row marker —
             # all rows survive iff the group is empty
             marker = right.limit(1).select(F.lit(1).alias("__m"))
@@ -1842,13 +1633,7 @@ def _compile_query(
     # every FILTER variable must be bound by the patterns, a BIND
     # alias, or a sub-SELECT output (rejects loudly as ValueError, not
     # an engine AnalysisException)
-    fvars = {
-        x.name
-        for g in q.filters
-        for f in g
-        for x in (f.lhs, f.rhs)
-        if isinstance(x, Var)
-    }
+    fvars = set().union(*map(_expr_vars, q.filters))
     available = (
         (set(bound.columns) if bound is not None else set())
         | {a for a, _ in q.binds}
@@ -1864,11 +1649,8 @@ def _compile_query(
     unbound_f = sorted(fvars - available)
     if unbound_f:
         raise ValueError(f"FILTER over unbound variables: {unbound_f}")
-    for g in eq_groups:
-        f = g[0]
-        var = f.lhs if isinstance(f.lhs, Var) else f.rhs
-        lit = f.rhs if isinstance(f.lhs, Var) else f.lhs
-        cond = F.col(var.name) == F.lit(int(cmap[lit]))
+    for f, var, lit in encoded_filters:
+        cond = F.col(var) == F.lit(int(cmap[lit]))
         bound = bound.filter(cond if f.op == "=" else ~cond)
     # VALUES: inline bindings lower to an encoded IN-list filter that
     # rides the join pipeline (broadcast-join-free: k literal ids)
@@ -1898,29 +1680,25 @@ def _compile_query(
     # semantics is the cross product of the solution sequences.
     # A shared variable that is OPTIONAL-bound on EITHER side could be
     # NULL, and the inner join would drop it where SPARQL treats
-    # unbound as compatible — rejected loudly (ADVICE r8; the module
-    # docstring documents the boundary).
+    # unbound as compatible — rejected loudly (the module docstring
+    # documents the boundary).
     outer_nullable = _optional_only_vars(q)
     for sub, subq in zip(subs, q.subselects):
-        sub_nullable = _optional_only_vars(subq) & set(sub.columns)
         if decoded is None:
             decoded = sub
-        else:
-            shared = sorted(set(decoded.columns) & set(sub.columns))
-            nullable_shared = sorted(
-                set(shared) & (outer_nullable | sub_nullable)
+            continue
+        nullable_shared = sorted(
+            set(decoded.columns)
+            & set(sub.columns)
+            & (outer_nullable | _optional_only_vars(subq))
+        )
+        if nullable_shared:
+            raise ValueError(
+                "sub-SELECT shares OPTIONAL-bound variables "
+                f"{nullable_shared} with the outer group — unbound-"
+                "compatible join semantics are out of scope"
             )
-            if nullable_shared:
-                raise ValueError(
-                    "sub-SELECT shares OPTIONAL-bound variables "
-                    f"{nullable_shared} with the outer group — unbound-"
-                    "compatible join semantics are out of scope"
-                )
-            decoded = (
-                decoded.join(sub, on=shared, how="inner")
-                if shared
-                else decoded.crossJoin(sub)
-            )
+        decoded = natural_join(decoded, sub)
     # GRAPH groups: plain conjunctive patterns over the graph-
     # partitioned quad layout, joined to the solution on shared
     # variables over decoded terms (like sub-SELECTs). A constant
@@ -1928,8 +1706,6 @@ def _compile_query(
     # projects the graph name and constrains every pattern of the
     # group to the SAME graph (natural join on the var).
     if q.graphs:
-        from .quads import quad_layout
-
         quads = quad_layout(spark, sf_dir)
         if q.from_named:
             quads = quads.filter(F.col("g").isin(list(q.from_named)))
@@ -1941,27 +1717,17 @@ def _compile_query(
             # ranging over all graphs
             quads = quads.filter(F.lit(False))
         for gterm, pats in q.graphs:
-            rel = None
-            for pat in pats:
-                step = _quad_pattern_step(quads, gterm, pat)
-                if rel is None:
-                    rel = step
-                else:
-                    shared = sorted(set(rel.columns) & set(step.columns))
-                    rel = (
-                        rel.join(step, on=shared, how="inner")
-                        if shared
-                        else rel.crossJoin(step)
-                    )
-            if decoded is None:
-                decoded = rel
-            else:
-                shared = sorted(set(decoded.columns) & set(rel.columns))
-                decoded = (
-                    decoded.join(rel, on=shared, how="inner")
-                    if shared
-                    else decoded.crossJoin(rel)
-                )
+            # the graph position binds like s/p/o: a constant graph is a
+            # pushed-down (partition-pruning) filter, a ?g variable a
+            # binding shared across the group's patterns
+            rel = reduce(
+                natural_join,
+                [
+                    bind_terms(quads, zip(("g", "s", "p", "o"), (gterm, *pat)))
+                    for pat in pats
+                ],
+            )
+            decoded = rel if decoded is None else natural_join(decoded, rel)
     # BIND(expr AS ?alias): post-decode column extension, textual
     # order (later binds may reference earlier aliases); rebinding an
     # existing variable is a SPARQL syntax error, rejected loudly
@@ -1972,11 +1738,11 @@ def _compile_query(
         if missing:
             raise ValueError(f"BIND over unbound variables: {missing}")
         decoded = decoded.withColumn(alias, _expr_col(expr))
-    # post-decode filter groups (string collation semantics)
-    for g in q.filters:
-        if g in eq_groups:
-            continue
-        decoded = decoded.filter(_group_col(g))
+    # post-decode filters
+    encoded_ids = {id(f) for f, _var, _lit in encoded_filters}
+    for f in q.filters:
+        if id(f) not in encoded_ids:
+            decoded = decoded.filter(_expr_col(f))
     if q.construct:
         # CONSTRUCT: instantiate each template triple per solution,
         # union, set-dedup (a graph has no duplicate triples). Rows
@@ -2029,70 +1795,31 @@ def _compile_query(
         # non-numeric terms are NULL-skipped — SQL semantics, the
         # documented deviation from SPARQL 1.1 error propagation)
         aggcols = [_agg_col(a).alias(a.alias) for a in q.aggs]
-        # HAVING operands that are anonymous aggregate calls compute
-        # as hidden agg columns, filtered then projected away
-        hidden: dict[int, str] = {}
-        for grp in q.having:
-            for f in grp:
-                for x in (f.lhs, f.rhs):
-                    if isinstance(x, Agg) and id(x) not in hidden:
-                        if x.var is not None and x.var not in decoded.columns:
-                            raise ValueError(
-                                f"HAVING aggregate over unbound "
-                                f"variable ?{x.var}"
-                            )
-                        name = f"__h{len(hidden)}"
-                        hidden[id(x)] = name
-                        aggcols.append(_agg_col(x).alias(name))
+        # anonymous aggregate calls in HAVING compute as hidden agg
+        # columns (named __hN by the parser), filtered then projected
+        # away
+        for e in q.having:
+            for a in _expr_nodes(e):
+                if not isinstance(a, Agg):
+                    continue
+                if a.var is not None and a.var not in decoded.columns:
+                    raise ValueError(
+                        f"HAVING aggregate over unbound variable ?{a.var}"
+                    )
+                aggcols.append(_agg_col(a).alias(a.alias))
         decoded = (
             decoded.groupBy(*q.group_by).agg(*aggcols)
             if q.group_by
             else decoded.agg(*aggcols)
         )
-        if q.having:
-            out_cols = set(decoded.columns)
-
-            def hv_side(x):
-                if isinstance(x, Agg):
-                    return F.col(hidden[id(x)])
-                if isinstance(x, Var):
-                    if x.name not in out_cols:
-                        raise ValueError(
-                            f"HAVING over variable ?{x.name} that is "
-                            "neither grouped nor an aggregate alias"
-                        )
-                    return F.col(x.name)
-                if isinstance(x, ExprNum):
-                    return F.lit(x.value)
-                return F.lit(x)
-
-            for grp in q.having:
-                col = None
-                for f in grp:
-                    lhs, rhs = hv_side(f.lhs), hv_side(f.rhs)
-                    # numeric comparison when either side is a number
-                    # or an aggregate (string aliases try_cast, the
-                    # NULL-skip rule again)
-                    if any(
-                        isinstance(x, (ExprNum, Agg))
-                        for x in (f.lhs, f.rhs)
-                    ):
-                        lhs = lhs.try_cast("double")
-                        rhs = rhs.try_cast("double")
-                    c = {
-                        "=": lhs == rhs,
-                        "!=": lhs != rhs,
-                        "<": lhs < rhs,
-                        "<=": lhs <= rhs,
-                        ">": lhs > rhs,
-                        ">=": lhs >= rhs,
-                    }[f.op]
-                    col = (
-                        c
-                        if col is None
-                        else (col & c) if f.conj == "&&" else (col | c)
-                    )
-                decoded = decoded.filter(col)
+        for e in q.having:
+            bad = sorted(_expr_vars(e) - set(decoded.columns))
+            if bad:
+                raise ValueError(
+                    f"HAVING over variable ?{bad[0]} that is "
+                    "neither grouped nor an aggregate alias"
+                )
+            decoded = decoded.filter(_expr_col(e))
         decoded = decoded.select(*q.select, *[a.alias for a in q.aggs])
     elif q.group_by:
         # aggregate-less GROUP BY: one row per distinct group-key
@@ -2128,7 +1855,7 @@ def _compile_query(
         # ORDER BY runs after the projection: a sort variable missing
         # from the result columns is a contract violation — raise the
         # promised ValueError, not an engine AnalysisException. Sort
-        # keys are either variable names or expression ASTs (round 9);
+        # keys are either variable names or expression ASTs;
         # expression keys evaluate over the projected columns.
         need = set()
         for key, _ in q.order_by:
@@ -2157,15 +1884,15 @@ def _compile_query(
     return decoded
 
 
-# --- SPARQL Update subset (round 9, VERDICT r8 #4) ------------------
+# --- SPARQL Update subset -------------------------------------------
 
 
 @dataclass(frozen=True)
 class UpdateOp:
     """One update operation: kind is insert_data / delete_data (ground
-    triples), delete_where (one triple pattern), or modify (template
+    triples), delete_where (one triple pattern), modify (template
     DELETE/INSERT with a WHERE pattern group, optionally graph-scoped
-    by WITH <g> and/or USING <g> dataset clauses — round 11)."""
+    by WITH <g> and/or USING <g> dataset clauses), clear, or load."""
 
     kind: str
     triples: tuple = ()
@@ -2184,11 +1911,11 @@ def parse_sparql_update(text: str) -> list[UpdateOp]:
     `DELETE DATA {...}`, `DELETE WHERE { pattern }`, and the template
     forms `INSERT { tmpl } WHERE {...}` / `DELETE { tmpl } [INSERT
     { tmpl }] WHERE {...}` with optional `WITH <g>` / `USING <g>`
-    dataset scoping (round 11, VERDICT r10 #7), and the graph-
-    management forms `CLEAR|DROP [SILENT] (GRAPH <g> | ALL)` /
-    `LOAD [SILENT] <doc> [INTO GRAPH <g>]` (round 11), sequenced with
-    `;`. Everything else (USING NAMED, GRAPH-qualified data,
-    CLEAR/DROP DEFAULT/NAMED) is rejected loudly."""
+    dataset scoping, and the graph-management forms `CLEAR|DROP
+    [SILENT] (GRAPH <g> | ALL)` / `LOAD [SILENT] <doc> [INTO GRAPH
+    <g>]`, sequenced with `;`. Everything else (USING NAMED,
+    GRAPH-qualified data, CLEAR/DROP DEFAULT/NAMED) is rejected
+    loudly."""
     p = _Parser(tokenize(text))
     ops: list[UpdateOp] = []
     while True:
@@ -2287,13 +2014,12 @@ def parse_sparql_update(text: str) -> list[UpdateOp]:
                     "(DATA, WHERE, or a {{ template }})"
                 )
         elif t in ("CLEAR", "DROP"):
-            # Round 11 (VERDICT r10 #4 SPARQL note): graph management.
-            # This store records no empty graphs (a triple's graph IS
-            # its subject family), so DROP and CLEAR coincide — the
-            # exact store shape SPARQL 1.1 §3.2.2/§3.2.3 anticipates
-            # ("stores that do not record empty graphs"). SILENT is
-            # accepted and inert for the same reason: a missing graph
-            # already clears to a no-op.
+            # Graph management. This store records no empty graphs (a
+            # triple's graph IS its subject family), so DROP and CLEAR
+            # coincide — the exact store shape SPARQL 1.1
+            # §3.2.2/§3.2.3 anticipates ("stores that do not record
+            # empty graphs"). SILENT is accepted and inert for the same
+            # reason: a missing graph already clears to a no-op.
             if with_graph is not None:
                 raise ValueError(
                     f"WITH <graph> scopes template operations, not {t}"
@@ -2356,12 +2082,12 @@ def parse_sparql_update(text: str) -> list[UpdateOp]:
 
 
 def _parse_using(p: _Parser) -> tuple[str, ...]:
-    """USING <g> dataset clauses (round 11, VERDICT r10 #7): the WHERE
-    group's default graph becomes the MERGE of the listed graphs — the
-    update-side twin of the SELECT pipeline's plain FROM. Because the
-    quad layout derives each triple's graph from its subject family
-    (quads_view provenance rule), the restriction lowers to ONE
-    scan-local string predicate on the state, no join. USING NAMED
+    """USING <g> dataset clauses: the WHERE group's default graph
+    becomes the MERGE of the listed graphs — the update-side twin of
+    the SELECT pipeline's plain FROM. Because the quad layout derives
+    each triple's graph from its subject family (quads.graph_of), the
+    restriction lowers to ONE scan-local string predicate on the state,
+    no join. USING NAMED
     stays a recognized rejection: update WHERE groups have no GRAPH
     patterns in this subset, so a named-graph set would select
     nothing."""
@@ -2418,25 +2144,23 @@ def compile_sparql_update(
       triple per key wins (the reference's delta-dict overwrite rule,
       SURVEY §2.A R8).
     - DELETE DATA: exact-triple removal.
-    - DELETE WHERE: every triple matching the single pattern (constants
-      filter, variables wildcard, a repeated variable forces equality)
-      is removed.
-    - [DELETE { tmpl }] [INSERT { tmpl }] WHERE { patterns } (round-9
-      template form): the WHERE group compiles through the BGP join
+    - DELETE WHERE: every triple matching the single pattern (the
+      pattern binding rule, bgp.term_conditions) is removed.
+    - [DELETE { tmpl }] [INSERT { tmpl }] WHERE { patterns } (template
+      form): the WHERE group compiles through the BGP join
       against the CURRENT state; both templates instantiate from the
       SAME solution set (SPARQL 1.1 §3.1.3), deletions apply first,
       insertions are GRAPH SET union (distinct) — deliberately NOT the
       LWW upsert, which is the DATA form's documented reference-parity
-      semantics. Round 11: `WITH <g>` scopes WHERE evaluation and
+      semantics. `WITH <g>` scopes WHERE evaluation and
       DELETE application to graph g (and statically validates INSERT
       representability); `USING <g>...` re-scopes WHERE's default
       graph to the merge of the listed graphs. Both lower to
-      scan-local subject-family predicates (quads_view provenance).
+      scan-local subject-family predicates (quads.graph_of).
 
     The literal batches come from the update TEXT (driver-side, bounded
     by statement length — the VALUES rule), broadcast into anti-joins:
     one scan of the state per operation, no shuffles."""
-    from .bgp import triples_view
 
     def _anti_literals(
         df: DataFrame, cols: tuple[str, ...], tuples: list[tuple[str, ...]]
@@ -2450,9 +2174,9 @@ def compile_sparql_update(
         update). Past _MAX_LITERAL_FILTER the OR chain would bloat
         codegen, so big batches keep the anti-join."""
         if not tuples:
-            # ADVICE r11: SPARQL's legal empty `INSERT DATA { }` must
-            # be a no-op, not a coalesce(None, ...) crash, should the
-            # parser ever start admitting empty DATA groups
+            # SPARQL's legal empty `INSERT DATA { }` must be a no-op,
+            # not a coalesce(None, ...) crash, should the parser ever
+            # start admitting empty DATA groups
             return df
         _MAX_LITERAL_FILTER = 64
         if len(tuples) > _MAX_LITERAL_FILTER:
@@ -2487,20 +2211,15 @@ def compile_sparql_update(
         elif op.kind == "delete_data":
             state = _anti_literals(state, ("s", "p", "o"), list(op.triples))
         elif op.kind == "clear":
-            # CLEAR/DROP (round 11): graph-management on the derived
-            # layout — one scan-local predicate on the subject family,
-            # no joins. graph=None means ALL (empty state, schema kept).
+            # CLEAR/DROP: graph-management on the derived layout — one
+            # scan-local predicate on the subject family, no joins.
+            # graph=None means ALL (empty state, schema kept).
             if op.graph is None:
                 state = state.filter(F.lit(False))
             else:
-                state = state.filter(
-                    F.concat(
-                        F.lit("g:"), F.split(F.col("s"), ":").getItem(0)
-                    )
-                    != op.graph
-                )
+                state = state.filter(graph_of(F.col("s")) != op.graph)
         elif op.kind == "load":
-            # LOAD <doc> (round 11): the reference's R19 bulk TSV load
+            # LOAD <doc>: the reference's R19 bulk TSV load
             # (TSV_bulk upload route) as a SPARQL 1.1 §3.1.4 graph
             # union — document triples merge set-wise into the state
             # (unlike INSERT DATA's documented R2 LWW upsert).
@@ -2521,10 +2240,7 @@ def compile_sparql_update(
                 # document (bounded scalar: one count per LOAD op),
                 # rejected loudly, never silently re-homed
                 n_bad = loaded.filter(
-                    F.concat(
-                        F.lit("g:"), F.split(F.col("s"), ":").getItem(0)
-                    )
-                    != op.graph
+                    graph_of(F.col("s")) != op.graph
                 ).count()
                 if n_bad:
                     raise ValueError(
@@ -2538,20 +2254,9 @@ def compile_sparql_update(
             )
             state = state.unionByName(new_rows)
         elif op.kind == "delete_where":
-            cond = F.lit(True)
-            seen: dict[str, str] = {}
-            for col, term in zip(("s", "p", "o"), op.pattern):
-                if isinstance(term, Var):
-                    if term.name in seen:
-                        cond = cond & (F.col(col) == F.col(seen[term.name]))
-                    else:
-                        seen[term.name] = col
-                else:
-                    cond = cond & (F.col(col) == F.lit(term))
-            state = state.filter(~cond)
+            conds, _ = term_conditions(zip(("s", "p", "o"), op.pattern))
+            state = state.filter(~reduce(operator.and_, conds, F.lit(True)))
         else:  # modify: [DELETE {tmpl}] [INSERT {tmpl}] WHERE {patterns}
-            from .bgp import compile_bgp
-
             bound_vars = {
                 t.name
                 for pat in op.where
@@ -2573,13 +2278,11 @@ def compile_sparql_update(
                         f"template variables {missing} are not bound by "
                         "the WHERE group"
                     )
-            # a triple's graph IS its subject family (quads_view
-            # provenance rule), so every dataset restriction below is
-            # a scan-local string predicate — no joins
-            graph_of = F.concat(
-                F.lit("g:"), F.split(F.col("s"), ":").getItem(0)
-            )
-            # WITH <g> INSERT representability (round 11): the layout
+            # a triple's graph IS its subject family (quads.graph_of),
+            # so every dataset restriction below is a scan-local string
+            # predicate — no joins
+            s_graph = graph_of(F.col("s"))
+            # WITH <g> INSERT representability: the layout
             # cannot hold a quad whose graph differs from its subject
             # family, so insert-template subjects must be PROVABLY of
             # the WITH graph — a constant of that family, or a
@@ -2605,12 +2308,12 @@ def compile_sparql_update(
                                 "variables (without USING re-scoping) "
                                 "are insertable"
                             )
-                    elif "g:" + s.split(":")[0] != op.with_graph:
+                    elif graph_of(s) != op.with_graph:
                         raise ValueError(
                             f"WITH <{op.with_graph}>: constant subject "
-                            f"{s!r} belongs to graph g:"
-                            f"{s.split(':')[0]} — unrepresentable in "
-                            "the subject-derived graph layout"
+                            f"{s!r} belongs to graph {graph_of(s)} — "
+                            "unrepresentable in the subject-derived graph "
+                            "layout"
                         )
             # WHERE dataset: USING graphs if given, else the WITH
             # graph, else the full default view (SPARQL 1.1 Update
@@ -2619,7 +2322,7 @@ def compile_sparql_update(
                 (op.with_graph,) if op.with_graph else ()
             )
             where_state = (
-                state.filter(graph_of.isin(list(scope)))
+                state.filter(s_graph.isin(list(scope)))
                 if scope
                 else state
             )
@@ -2654,7 +2357,7 @@ def compile_sparql_update(
                     # WITH scopes the DELETE to the named graph: rows
                     # of other graphs are never touched, even when
                     # USING re-scoped the WHERE elsewhere
-                    dels = dels.filter(graph_of == op.with_graph)
+                    dels = dels.filter(s_graph == op.with_graph)
                 state = state.join(dels, ["s", "p", "o"], "left_anti")
             if ins is not None:
                 # SPARQL 1.1 §3.1.3: a graph is a SET — template inserts

@@ -12,8 +12,8 @@ from nosql_triple_store_spark.operators.relational_ext15 import (
     q_multimodal_image_tiles,
     q_schema_evolution,
     q_source_partition_overwrite,
-    sparql_minus,
 )
+from nosql_triple_store_spark.plans.bgp import natural_join
 
 from .conftest import SF_DIR
 
@@ -25,10 +25,10 @@ def test_sparql_minus_disjoint_vars_is_noop(spark):
     drop every row against a non-empty pattern."""
     left = spark.createDataFrame([(1, "a"), (2, "b")], "x long, y string")
     right = spark.createDataFrame([(9,)], "z long")  # disjoint vars
-    assert sparql_minus(left, right).count() == 2
+    assert natural_join(left, right, "left_anti").count() == 2
     # shared-var case actually removes
     right2 = spark.createDataFrame([(1,)], "x long")
-    assert sparql_minus(left, right2).count() == 1
+    assert natural_join(left, right2, "left_anti").count() == 1
 
 
 def test_asof_tolerance_non_vacuous(spark):

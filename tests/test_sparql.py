@@ -13,8 +13,14 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from nosql_triple_store_spark.plans.bgp import Var
+from nosql_triple_store_spark.plans.bgp import TRIPLES_SQL, Var
 from nosql_triple_store_spark.plans.sparql import (
+    ExprBin,
+    ExprFunc,
+    ExprIn,
+    ExprNot,
+    ExprStr,
+    ExprVar,
     compile_sparql_encoded,
     parse_sparql,
     tokenize,
@@ -57,8 +63,11 @@ def test_parse_full_surface():
     assert q.distinct and q.limit == 5
     assert q.order_by == [("b", True)]
     assert len(q.optionals) == 1 and len(q.filters) == 2
-    assert [f.op for f in q.filters[0]] == ["!=", "!="]
-    assert q.filters[1][0].op == "regex"
+    b = ExprVar("b")
+    assert q.filters[0] == ExprBin(
+        "&&", ExprBin("!=", b, ExprStr("x")), ExprBin("!=", b, ExprStr("y"))
+    )
+    assert q.filters[1] == ExprFunc("REGEX", (b, ExprStr("^z")))
 
 
 @pytest.mark.parametrize(
@@ -322,6 +331,113 @@ def test_tokenizer_rejects_loudly_on_arbitrary_text(s):
         parse_sparql(s)
     except ValueError:
         pass
+
+
+# ------------------------------ expression precedence vs DuckDB
+# One grammar for FILTER and HAVING: && binds tighter than || (the
+# SPARQL 1.1 grammar's ConditionalOrExpression over
+# ConditionalAndExpression), and parentheses group.
+
+_NATION_NAMES = f"""WITH {TRIPLES_SQL}
+SELECT h.o FROM triples h
+JOIN triples r ON r.s = h.s AND r.p = 'inRegion'
+WHERE h.p = 'hasName' AND ({{}})"""
+
+
+def _filtered_names(spark, cond: str) -> Counter:
+    text = (
+        "SELECT ?nm WHERE { ?n hasName ?nm . ?n inRegion ?r . "
+        f"FILTER({cond}) }}"
+    )
+    return Counter(
+        r.nm for r in compile_sparql_encoded(spark, SF_DIR, text).collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "cond, sql",
+    [
+        (
+            '?nm = "NATION_1" || ?nm = "NATION_2" && ?nm = "NATION_3"',
+            "h.o = 'NATION_1' OR (h.o = 'NATION_2' AND h.o = 'NATION_3')",
+        ),
+        (
+            '(?nm = "NATION_1" || ?nm = "NATION_2") && ?nm != "NATION_1"',
+            "(h.o = 'NATION_1' OR h.o = 'NATION_2') AND h.o <> 'NATION_1'",
+        ),
+    ],
+    ids=["and_binds_tighter", "parenthesised"],
+)
+def test_filter_precedence_matches_duckdb(spark, ddb, cond, sql):
+    rows = ddb.execute(_NATION_NAMES.format(sql)).fetchall()
+    want = Counter(r[0] for r in rows)
+    assert want
+    assert _filtered_names(spark, cond) == want
+
+
+def test_having_precedence_matches_duckdb(spark, ddb):
+    text = (
+        "SELECT ?seg (COUNT(*) AS ?n) WHERE { ?c inSegment ?seg } "
+        'GROUP BY ?seg HAVING(?seg = "BUILDING" || ?n >= 1 && ?n > 1000000)'
+    )
+    sql = f"""WITH {TRIPLES_SQL}
+SELECT o, COUNT(*) FROM triples WHERE p = 'inSegment' GROUP BY o
+HAVING o = 'BUILDING' OR (COUNT(*) >= 1 AND COUNT(*) > 1000000)"""
+    want = Counter(ddb.execute(sql).fetchall())
+    rows = compile_sparql_encoded(spark, SF_DIR, text).collect()
+    got = Counter((r.seg, r.n) for r in rows)
+    assert want and got == want
+
+
+_NAMES = st.sampled_from(["NATION_1", "NATION_10", "NATION_2", "NATION_5"])
+_LEAF = st.tuples(st.sampled_from(["=", "!=", "<"]), _NAMES)
+
+
+def _filter_tree(children):
+    return st.one_of(
+        st.tuples(st.just("!"), children),
+        st.tuples(st.just("()"), children),
+        st.tuples(st.sampled_from(["&&", "||"]), children, children),
+    )
+
+
+_FILTER_TREES = st.recursive(_LEAF, _filter_tree, max_leaves=6)
+_PREC = {"||": 1, "&&": 2}
+
+
+def _sparql_text(t, parent: int = 0) -> str:
+    """SPARQL text relying on precedence: parentheses only where the
+    tree needs them, plus the explicit "()" nodes."""
+    if t[0] == "!":
+        return f"!({_sparql_text(t[1])})"
+    if t[0] == "()":
+        return f"({_sparql_text(t[1])})"
+    if t[0] in _PREC:
+        p = _PREC[t[0]]
+        # left-associative: a right operand of equal precedence keeps
+        # its parentheses
+        text = f"{_sparql_text(t[1], p)} {t[0]} {_sparql_text(t[2], p + 1)}"
+        return f"({text})" if p < parent else text
+    return f'?nm {t[0]} "{t[1]}"'
+
+
+def _sql_text(t) -> str:
+    if t[0] == "!":
+        return f"NOT ({_sql_text(t[1])})"
+    if t[0] == "()":
+        return _sql_text(t[1])
+    if t[0] in _PREC:
+        op = "AND" if t[0] == "&&" else "OR"
+        return f"({_sql_text(t[1])} {op} {_sql_text(t[2])})"
+    return f"(h.o {'<>' if t[0] == '!=' else t[0]} '{t[1]}')"
+
+
+@settings(max_examples=25, deadline=None)
+@given(tree=_FILTER_TREES)
+def test_filter_trees_match_duckdb(spark, ddb, tree):
+    rows = ddb.execute(_NATION_NAMES.format(_sql_text(tree))).fetchall()
+    want = Counter(r[0] for r in rows)
+    assert _filtered_names(spark, _sparql_text(tree)) == want
 
 
 def test_parse_paths():
@@ -697,10 +813,10 @@ def test_parse_having():
         "SELECT ?s (COUNT(*) AS ?n) WHERE { ?c p ?s } GROUP BY ?s "
         "HAVING(?n >= 10 && SUM(?b) > 0) ORDER BY ?s"
     )
-    grp = q.having[0]
-    assert grp[0].op == ">=" and isinstance(grp[0].rhs, ExprNum)
-    assert isinstance(grp[1].lhs, Agg) and grp[1].lhs.fn == "SUM"
-    assert grp[1].conj == "&&"
+    h = q.having[0]
+    assert h.op == "&&"
+    assert h.left.op == ">=" and isinstance(h.left.right, ExprNum)
+    assert isinstance(h.right.left, Agg) and h.right.left.fn == "SUM"
 
 
 def test_parse_subselect():
@@ -909,9 +1025,18 @@ def test_parse_filter_in_and_string_predicates():
         'FILTER(STRSTARTS(?o, "a") || CONTAINS(?o, "x") '
         '|| STRENDS(?o, "z")) }'
     )
-    assert [g[0].op for g in q.filters] == ["in", "notin", "strstarts"]
-    assert q.filters[0][0].rhs == ("a", "b")
-    assert [f.op for f in q.filters[2]] == ["strstarts", "contains", "strends"]
+    o = ExprVar("o")
+    assert q.filters[0] == ExprIn(o, ("a", "b"))
+    assert q.filters[1] == ExprNot(ExprIn(o, ("c",)))
+    assert q.filters[2] == ExprBin(
+        "||",
+        ExprBin(
+            "||",
+            ExprFunc("STRSTARTS", (o, ExprStr("a"))),
+            ExprFunc("CONTAINS", (o, ExprStr("x"))),
+        ),
+        ExprFunc("STRENDS", (o, ExprStr("z"))),
+    )
 
 
 @pytest.mark.parametrize(

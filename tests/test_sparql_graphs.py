@@ -11,6 +11,9 @@ from pyspark.sql import functions as F
 from nosql_triple_store_spark.plans.bgp import Var, triples_view
 from nosql_triple_store_spark.plans.quads import quad_layout, quads_view
 from nosql_triple_store_spark.plans.sparql import (
+    ExprFunc,
+    ExprNot,
+    ExprVar,
     compile_sparql_encoded,
     compile_sparql_update,
     parse_sparql,
@@ -253,7 +256,7 @@ def test_parse_group_concat_sample_bound_if():
         'BIND(IF(BOUND(?g), ?g, COALESCE(?g, "NONE")) AS ?k) '
         "FILTER(!BOUND(?g)) }"
     )
-    assert q2.filters[0][0].op == "notbound"
+    assert q2.filters[0] == ExprNot(ExprFunc("BOUND", (ExprVar("g"),)))
     assert q2.binds[0][0] == "k"
 
 
