@@ -115,7 +115,7 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loop pins a small shuffle width for its lifetime (a vanilla
     # session's default 200 partitions would cost ~200 empty tasks per
     # round × ~10 rounds) and restores it after — same discipline as
-    # streaming/_run_to_memory.
+    # streaming.queries.drain.
     shuffle_key = "spark.sql.shuffle.partitions"
     old_shuffle = spark.conf.get(shuffle_key)
     spark.conf.set(shuffle_key, "8")

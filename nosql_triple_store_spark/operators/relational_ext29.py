@@ -22,6 +22,7 @@ vacuum.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -189,7 +190,7 @@ def q_maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata/manifest operation (here: local fs walk), never a data
     shuffle. The read-back correctness invariant (latest version
     survives untouched) is pinned in tests/test_ext29.py."""
-    from ..sources.compaction import read_register
+    from ..sources.compaction import read_register, versions
 
     schema = (
         "version string, disposition string, n_files int, "
@@ -200,24 +201,21 @@ def q_maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = vacuum_register(spark, sf_dir)
 
-    versions = sorted(
-        d for d in os.listdir(base) if d.startswith("v")
-    )
-    keep = set(versions[-_VACUUM_KEEP:])
+    vdirs = versions(base, "v")
+    keep = set(vdirs[-_VACUUM_KEEP:])
     rows = []
-    for v in versions:
-        vdir = os.path.join(base, v)
+    for vdir in vdirs:
         files = [
             os.path.join(vdir, f)
             for f in os.listdir(vdir)
             if not f.startswith("_") and not f.startswith(".")
         ]
         nbytes = sum(os.path.getsize(f) for f in files)
-        disposition = "kept" if v in keep else "removed"
-        rows.append((v, disposition, len(files), nbytes > 0))
-        if v not in keep:
-            import shutil
-
+        disposition = "kept" if vdir in keep else "removed"
+        rows.append(
+            (os.path.basename(vdir), disposition, len(files), nbytes > 0)
+        )
+        if vdir not in keep:
             shutil.rmtree(vdir, ignore_errors=True)
     # latest version must still read back after the vacuum
     n_live = read_register(spark, base).count()

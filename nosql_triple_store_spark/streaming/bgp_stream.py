@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.bgp_queries import STAR_ORACLE
 from ..registry import register
-from ..scratch import build_once, ckpt_tmp, scratch_tmp
+from ..scratch import build_once, scratch_tmp
+from ..sources.compaction import publish, publish_file, versions
+from .queries import drain
 
 _N_WAVES = 4
 
@@ -48,9 +50,6 @@ def _triple_wave_dir(spark: SparkSession, sf_dir: str) -> str:
     so join partners split across waves."""
 
     def write(out: str) -> None:
-        import glob as _glob
-        import shutil
-
         cust = load_table(spark, sf_dir, "customer")
         seg = cust.select(
             F.concat(F.lit("customer:"), F.col("c_custkey")).alias("s"),
@@ -67,16 +66,10 @@ def _triple_wave_dir(spark: SparkSession, sf_dir: str) -> str:
         triples = seg.unionByName(nat)
         os.makedirs(out)
         for w in range(_N_WAVES):
-            stage = f"{out}/_stage_w{w}"
-            (
-                triples.filter(F.col("wave") == w)
-                .drop("wave")
-                .coalesce(1)
-                .write.parquet(stage)
+            publish_file(
+                triples.filter(F.col("wave") == w).drop("wave"),
+                f"{out}/wave{w}.parquet",
             )
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            shutil.move(part, f"{out}/wave{w}.parquet")
-            shutil.rmtree(stage)
 
     return build_once("bgpwaves", sf_dir, write, sources=("customer",))
 
@@ -106,11 +99,7 @@ def q_stream_bgp_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.isdir(mpath) and os.path.isdir(spath):
             return  # idempotent retry
         s = batch_df.sparkSession
-        prior_dirs = [
-            f"{store_dir}/{d}"
-            for d in sorted(os.listdir(store_dir))
-            if d.startswith("t")
-        ]
+        prior_dirs = versions(store_dir, "t")
         delta = batch_df
         p1 = lambda df: df.filter(  # noqa: E731
             (F.col("p") == "inSegment") & (F.col("o") == "BUILDING")
@@ -127,28 +116,13 @@ def q_stream_bgp_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             new_matches = p1(delta).join(p2(delta), "c")
-        stage_m = f"{base}/_stage_m{batch_id:06d}"
-        new_matches.coalesce(1).write.mode("overwrite").parquet(stage_m)
-        if not os.path.isdir(mpath):
-            os.rename(stage_m, mpath)
-        stage_s = f"{base}/_stage_s{batch_id:06d}"
-        delta.coalesce(1).write.mode("overwrite").parquet(stage_s)
-        if not os.path.isdir(spath):
-            os.rename(stage_s, spath)
+        publish(new_matches.coalesce(1), mpath)
+        publish(delta.coalesce(1), spath)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema("s string, p string, o string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt_tmp("ckpt_bgpd_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    stream = (
+        spark.readStream.schema("s string, p string, o string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    drain(stream.writeStream.foreachBatch(maintain), 8)
     return spark.read.parquet(f"{match_dir}/m*")

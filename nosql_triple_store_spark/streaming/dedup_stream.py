@@ -22,6 +22,7 @@ re-ingesting what the corpus already has.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,60 +32,47 @@ from ..operators.dedup import _shingle_stream
 from ..operators.dedup_pipeline import THRESHOLD, band_index
 from ..functions.textfns import TOKS_SQL, shingles_sql
 from ..registry import register
-from ..scratch import build_once, ckpt_tmp, scratch_tmp
+from ..scratch import build_once, scratch_tmp
 from ..materialize import materialize
+from ..sources.compaction import publish, publish_file, versions
+from .queries import drain
 
 _N_WAVES = 4
 
-# State-retention policy (VERDICT r5 #4): the standing band index is
-# periodically COMPACTED — whenever more than _COMPACT_EVERY segment
-# dirs exist, they merge into one deduplicated segment — so on-disk
-# state is bounded at _COMPACT_EVERY + 1 segments (and one file each)
-# no matter how many micro-batches arrive. Rows stay O(corpus × bands)
-# by *semantic necessity* (admission must compare against every stored
-# band key to honor the oracle's "duplicate of ANY earlier doc"
-# contract — a TTL would silently re-admit old duplicates), but the
-# retention policy bounds the segment/file count that would otherwise
-# grow per-batch forever — the small-files failure mode of a standing
-# foreachBatch index at scale. Raise the constant in production; 2
-# exercises the compaction path on the 4-wave fixture.
+# State-retention policy: the standing band index is periodically
+# COMPACTED — whenever more than _COMPACT_EVERY segment dirs exist, they
+# merge into one deduplicated segment — so on-disk state is bounded at
+# _COMPACT_EVERY + 1 segments (and one file each) no matter how many
+# micro-batches arrive. Rows stay O(corpus × bands) by *semantic
+# necessity* (admission must compare against every stored band key to
+# honor the oracle's "duplicate of ANY earlier doc" contract — a TTL
+# would silently re-admit old duplicates), but the retention policy
+# bounds the segment/file count that would otherwise grow per-batch
+# forever — the small-files failure mode of a standing foreachBatch
+# index at scale. Raise the constant in production; 2 exercises the
+# compaction path on the 4-wave fixture.
 _COMPACT_EVERY = 2
 
 # test hook: last scratch base used by q_stream_dedup_admission
 _LAST_BASE: dict[str, str] = {}
 
 
-def _index_segments(index_dir: str) -> list[str]:
-    """Current index segment dirs (per-batch b* + compacted c*)."""
-    return [
-        f"{index_dir}/{d}"
-        for d in sorted(os.listdir(index_dir))
-        if d.startswith(("b", "c"))
-    ]
-
-
 def compact_band_index(spark: SparkSession, index_dir: str, batch_id: int) -> None:
-    """Merge every index segment into one deduplicated c-segment when
-    the segment count exceeds _COMPACT_EVERY. Staged-write + rename +
-    delete-merged: a crash between rename and deletes only leaves
-    duplicate rows, which the next compaction's dropDuplicates (and
-    the probe side's dropDuplicates) absorb."""
-    import shutil
-
-    segs = _index_segments(index_dir)
+    """Merge every index segment (per-batch b*, compacted c*) into one
+    deduplicated c-segment when the segment count exceeds
+    _COMPACT_EVERY: publish, then delete the merged segments. A crash
+    between the two only leaves duplicate rows, which the next
+    compaction's dropDuplicates (and the probe side's dropDuplicates)
+    absorb; a retried batch whose c-segment was published publishes
+    nothing."""
+    segs = versions(index_dir, ("b", "c"))
     if len(segs) <= _COMPACT_EVERY:
         return
     merged = (
         spark.read.parquet(*segs)
         .dropDuplicates(["doc_id", "band", "bkey"])
     )
-    stage = f"{index_dir}/_stage_c{batch_id:06d}"
-    merged.coalesce(1).write.mode("overwrite").parquet(stage)
-    target = f"{index_dir}/c{batch_id:06d}"
-    if not os.path.isdir(target):
-        os.rename(stage, target)
-    else:  # retried batch already compacted
-        shutil.rmtree(stage, ignore_errors=True)
+    publish(merged.coalesce(1), f"{index_dir}/c{batch_id:06d}")
     for s in segs:
         shutil.rmtree(s, ignore_errors=True)
 
@@ -106,26 +94,15 @@ def wave_build(
     file source with maxFilesPerTrigger=1 replays them in doc_id order."""
 
     def write(out: str) -> None:
-        import glob as _glob
-        import shutil
-
         docs = load_table(spark, sf_dir, "documents").select(*columns)
         max_id = docs.agg(F.max("doc_id")).collect()[0][0]
         bs = (max_id + _N_WAVES) // _N_WAVES  # ceil((max+1)/4)
         os.makedirs(out)
         for w in range(_N_WAVES):
-            stage = f"{out}/_stage_w{w}"
-            (
-                docs.filter(F.expr(f"doc_id div {bs}") == w)
-                .coalesce(1)
-                .write.parquet(stage)
+            publish_file(
+                docs.filter(F.expr(f"doc_id div {bs}") == w),
+                f"{out}/wave{w}.parquet",
             )
-            # flatten to one plain file per wave (no _SUCCESS markers in
-            # the streaming source dir), written sequentially so mtimes
-            # replay the waves in doc_id order
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            shutil.move(part, f"{out}/wave{w}.parquet")
-            shutil.rmtree(stage)
 
     return build_once(kind, sf_dir, write, sources=("documents",))
 
@@ -207,7 +184,7 @@ def q_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # production "signatures are computed at ingest and stored"
         # table); the per-batch work is a semi-join, not a re-hash
         bands = all_bands.join(ids, "doc_id", "left_semi")
-        prior = _index_segments(index_dir)
+        prior = versions(index_dir, ("b", "c"))
         if prior:
             index = s.read.parquet(*prior)
             cand = (
@@ -274,29 +251,14 @@ def q_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("long").alias("is_dup"),
                 F.lit(None).cast("long").alias("dup_of"),
             )
-        stage_d = f"{base}/_stage_d{batch_id:06d}"
-        decisions.coalesce(1).write.mode("overwrite").parquet(stage_d)
-        if not os.path.isdir(dpath):
-            os.rename(stage_d, dpath)
-        stage_i = f"{base}/_stage_i{batch_id:06d}"
-        bands.coalesce(1).write.mode("overwrite").parquet(stage_i)
-        if not os.path.isdir(ipath):
-            os.rename(stage_i, ipath)
+        publish(decisions.coalesce(1), dpath)
+        publish(bands.coalesce(1), ipath)
         compact_band_index(s, index_dir, batch_id)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt_tmp("ckpt_admit_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    stream = (
+        spark.readStream.schema("doc_id long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    drain(stream.writeStream.foreachBatch(admit), 8)
     return spark.read.parquet(f"{dec_dir}/v*")

@@ -32,8 +32,10 @@ from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL
 from ..operators.text_ext10 import nb_components, nb_score
 from ..registry import register
-from ..scratch import build_once, ckpt_tmp, scratch_tmp
+from ..scratch import build_once, scratch_tmp
+from ..sources.compaction import publish
 from .dedup_stream import _N_WAVES, wave_build
+from .queries import drain
 
 # The deployed (frozen) model is trained ONCE per process and source
 # state and reused across gate runs — redeploying re-trains nothing,
@@ -99,9 +101,9 @@ tokscores AS (
   FROM counts c
   LEFT JOIN model m ON c.token = m.token, totals, prior
   GROUP BY c.doc_id),
--- token-less docs (text tokenizes to nothing) still get a decision:
--- scored at the prior alone (ADVICE r9 — the explode must not make an
--- arriving doc vanish from the gate census)
+-- token-less docs (text tokenizes to nothing) still get a decision,
+-- scored at the prior alone: the explode must not make an arriving doc
+-- vanish from the gate census
 scores AS (
   SELECT d.doc_id, COALESCE(ts.s, ROUND(prior.lp, 4)) AS s
   FROM documents d LEFT JOIN tokscores ts ON d.doc_id = ts.doc_id, prior),
@@ -127,9 +129,9 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from doc_id (the quartile contract of _wave_source_dir),
     so a mis-batched file source changes nothing and the SQL oracle
     can recompute the gate exactly. Decision sinks are idempotent by
-    batch_id AND crash-safe (stage-write + atomic rename — a crash
-    mid-write leaves only a _stage dir the retry overwrites, never a
-    partial published dir it would skip), matching foreachBatch's
+    batch_id AND crash-safe (``compaction.publish`` — a crash mid-write
+    leaves only a stage dir the retry overwrites, never a partial
+    published dir it would skip), matching foreachBatch's
     re-execution contract. Docs whose text tokenizes to zero tokens
     still receive a decision row, scored at the prior alone."""
     from ..materialize import materialize
@@ -138,13 +140,12 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frozen model, trained once per process and shipped as parquet;
     # foreachBatch would otherwise recompute the full training
     # aggregate every micro-batch — the production gate ships frozen
-    # tables, not a training job per batch. Round 12 (VERDICT r11 #1):
-    # pin the three tables in memory for THIS invocation's drain — the
-    # per-batch broadcast builds otherwise re-read the parquet files
-    # once per micro-batch (4 waves × 3 tables). The files stay the
-    # cross-query source of truth; the pinned blocks die with the
-    # query (reaped by the harness's between-queries cleanup), so no
-    # cross-run result or timing state is introduced.
+    # tables, not a training job per batch. The three tables are pinned
+    # in memory for THIS invocation's drain, else each micro-batch's
+    # broadcast build re-reads the parquet files (4 waves × 3 tables).
+    # The files stay the cross-query source of truth; the pinned blocks
+    # die with the query (reaped by the harness's between-queries
+    # cleanup), so no cross-run result or timing state is introduced.
     model, totals, prior = (
         df.transform(materialize)
         for df in _frozen_nb_model(spark, sf_dir)
@@ -157,16 +158,13 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(dec_dir, exist_ok=True)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
         dpath = f"{dec_dir}/v{batch_id:06d}"
         if os.path.isdir(dpath):
-            return  # idempotent retry (publish below is atomic)
+            return  # idempotent retry
         scored = nb_score(batch_df, model, totals, prior)
-        # ADVICE r9: a doc whose text tokenizes to zero tokens gets no
-        # row out of nb_score (the explode drops it) — left-join the
-        # batch's ids back so every arriving doc receives a decision,
-        # token-less ones scored at the prior alone
+        # nb_score's explode drops a doc whose text tokenizes to zero
+        # tokens; left-join the batch's ids back so every arriving doc
+        # gets a decision, token-less ones scored at the prior alone
         decisions = (
             batch_df.select("doc_id")
             .join(scored.select("doc_id", "nb_score"), "doc_id", "left")
@@ -177,30 +175,16 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("admitted", F.col("nb_score") >= F.lit(_GATE_TAU))
         )
-        # ADVICE r9 (medium): mode('overwrite') creates dpath the
-        # moment the job starts, so a crash mid-write would leave a
-        # partial dir the isdir retry-guard permanently skips — write
-        # to a stage path and publish with an atomic rename, mirroring
-        # dedup_stream.admit
-        stage = f"{dec_dir}/_stage_v{batch_id:06d}"
-        decisions.write.mode("overwrite").parquet(stage)
-        if not os.path.isdir(dpath):
-            os.rename(stage, dpath)
-        else:
-            shutil.rmtree(stage, ignore_errors=True)
+        # published, not written in place: a crash mid-write must not
+        # leave a partial dpath that the retry guard above would skip
+        publish(decisions, dpath)
 
     stream = (
         spark.readStream.schema(docs_schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", ckpt_tmp("ckpt_gate_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream.writeStream.foreachBatch(gate), None)
     decisions = spark.read.parquet(f"{dec_dir}/v*")
     bsz = spark.read.parquet(src).agg(
         F.expr(f"(max(doc_id) + {_N_WAVES}) div {_N_WAVES}").alias("bs")

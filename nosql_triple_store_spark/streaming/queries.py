@@ -26,12 +26,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import read_parquet
 from ..registry import register
 from ..scratch import build_once, ckpt_tmp, scratch_tmp
 from ..session import ensure_runtime_confs
+from ..sources.compaction import publish, publish_file, versions
 from ..operators.eventtime import _SLIDING_ORACLE as _BATCH_SLIDING_ORACLE
 from ..operators.triple import E_CTE
 
@@ -99,58 +101,49 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", _event_time_col(spark, sf_dir))
 
 
-def _run_to_memory(
-    stream_df: DataFrame, output_mode: str, state_width: int | None = None
-) -> DataFrame:
-    """Drain a bounded stream into a memory sink, return the final table.
+# State-store partition count is baked from spark.sql.shuffle.partitions
+# at query start, and its init cost is ∝ partitions × state stores ×
+# batches: on these bounded fixtures 4 beats 8 and 16 on every built-in
+# stateful query (sf0.1, 32 cores: tumbling 0.73/1.11/0.82 s, stream-
+# stream join 1.62/2.14/2.77 s, late_drop 1.00/1.25/1.50 s at 4/8/16),
+# and a vanilla session's 200 costs ~25 s. On a real cluster size it to
+# active keys per executor memory budget; Python-kernel stateful
+# operators (applyInPandasWithState) size it to cores instead.
+STATE_WIDTH = 4
 
-    State-store partition count is baked from spark.sql.shuffle.partitions
-    at query START — a vanilla session's default 200 costs ~25 s of
-    per-micro-batch state-partition overhead on these fixtures, so pin a
-    width matched to the QUERY for the stream's lifetime and restore
-    after. Round-8 profiling (PLANS.md): the width trades state-store
-    init (∝ partitions × state stores × batches) against kernel
-    parallelism. Pass ``state_width=cluster_cores(spark)`` for single-batch
-    applyInPandasWithState operators, whose per-key Python kernel is
-    the cost and which halve with the extra parallelism
-    (q_stream_lww_state at sf1: 27.6 → 11.8 s).
-    """
-    spark = stream_df.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:10]}"
+
+def drain(writer: DataStreamWriter, width: int | None) -> None:
+    """Run a bounded stream to completion: pin spark.sql.shuffle.partitions
+    to ``width`` for the query's lifetime (None keeps the session's),
+    give it a fresh checkpoint, trigger availableNow, wait, restore.
+    Every streaming query in the engine is started and awaited here."""
+    spark = writer._spark  # the writer's session; pyspark has no public getter
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    # Default width is env-parameterised (scale-dependent setting, guide
-    # §2): state-store init cost is ∝ partitions × stores × batches, so
-    # small bounded fixtures want few state partitions while a real
-    # cluster sizes this to keys/executors. Round-12 per-query A/B at
-    # sf0.1, 32 cores (isolated medians of 4): width 4 beats 8 and 16
-    # on every built-in stateful member — e.g. tumbling 0.73/1.11/0.82,
-    # stream-stream join 1.62/2.14/2.77, late_drop 1.00/1.25/1.50 at
-    # 4/8/16 — because state-store init dominates on bounded drains.
-    # Deployment guidance: this default sizes STATE PARTITIONS for a
-    # fixture-scale drain; on a real cluster raise the env var toward
-    # (active keys / executor memory budget) — stream-stream joins and
-    # high-cardinality aggregations in particular need width that
-    # spreads join state across executors, and Python-kernel stateful
-    # operators (applyInPandasWithState) pass an explicit
-    # ``state_width`` sized to cores instead (see
-    # q_stream_stateful_counter / q_stream_lww_state).
-    width = state_width or int(
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_WIDTH", "4")
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    if width is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt_tmp("ckpt_"))
+        (
+            writer.option("checkpointLocation", ckpt_tmp("ckpt_"))
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+
+
+def drain_to_memory(
+    stream_df: DataFrame, output_mode: str, width: int = STATE_WIDTH
+) -> DataFrame:
+    """``drain`` into a memory sink and return the final table."""
+    name = f"mem_{uuid.uuid4().hex[:10]}"
+    drain(
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+        width,
+    )
+    return stream_df.sparkSession.table(name)
 
 
 @register(
@@ -182,7 +175,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out = drain_to_memory(agg, "complete")
     return out.withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
 
 
@@ -205,7 +198,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out = drain_to_memory(agg, "complete")
     return out.withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
 
 
@@ -241,7 +234,7 @@ def q_stream_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__r.value").alias("value"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out = drain_to_memory(agg, "complete")
     return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
@@ -295,7 +288,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = _run_to_memory(agg, "append")
+    out = drain_to_memory(agg, "append")
     return out.withColumn(
         "session_start", F.col("session_start").cast("timestamp_ntz")
     )
@@ -350,7 +343,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (clicks.c_ts <= purchases.p_ts),
         "inner",
     ).select("purchase_id", "click_id", "user_id")
-    return _run_to_memory(joined, "append")
+    return drain_to_memory(joined, "append")
 
 
 def _counter_fn(
@@ -396,10 +389,10 @@ def q_stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Python-kernel stateful operator: the per-group pandas dispatch is
     # the cost, so width follows the machine (widths.fanout_width =
-    # cores/2), not the fixture-sized default. Round-12 A/B at sf0.1,
+    # cores/2), not the fixture-sized default. A/B at sf0.1,
     # 32 cores: width 4 → 1.70 s, 8 → 1.42, 16 → 1.05, 32 → 1.54 —
     # cores/2 is the plateau, matching the module-wide fan-out policy.
-    return _run_to_memory(out, "update", state_width=fanout_width(spark))
+    return drain_to_memory(out, "update", fanout_width(spark))
 
 
 @register(
@@ -431,7 +424,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = keyed.dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "hr"]
     ).select("user_id", "event_type", "hr")
-    out = _run_to_memory(deduped, "append")
+    out = drain_to_memory(deduped, "append")
     return out.withColumn("hr", F.col("hr").cast("timestamp_ntz"))
 
 
@@ -455,10 +448,12 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, exactly how the production sink runs (Delta/Iceberg MERGE
     per micro-batch). The returned DataFrame is the register read back
     from disk after the stream drains; the oracle is the batch LWW
-    state over all events. Idempotency note: compact() is
-    commutative/idempotent per delta, so a micro-batch retry after a
-    sink failure converges (the reference replays its changelog the
-    same way, SURVEY §3.2)."""
+    state over all events. Retry: a micro-batch re-run after a failed
+    compact finds no new version (the version dir is the commit point),
+    drops the orphan delta and folds again; a re-run after a committed
+    compact adds one more version with the same state, since the LWW
+    fold is idempotent (the reference replays its changelog the same
+    way, SURVEY §3.2)."""
     from ..sources.compaction import compact, read_register
 
     base = os.path.join(
@@ -472,24 +467,10 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _stream_events(spark, sf_dir).select(
         "user_id", "event_type", "event_id", "ts", "value"
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt_tmp("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    # return the lazy read over the final version: the register dir
-    # outlives the query fn (scratch_tmp removes it only at process
-    # exit, after any driver-side collect), so no localCheckpoint
-    # double-materialization is needed — round 2 paid an extra full pass
-    # (checkpoint compute+store, then reread) just to allow an eager
-    # cleanup of a few MB of /tmp
+    drain(ev.writeStream.foreachBatch(sink), 16)
+    # a lazy read over the final version: the register dir outlives the
+    # query fn (scratch_tmp removes it at process exit, after any
+    # collect), so no checkpoint pass is needed to allow early cleanup
     out = read_register(spark, base).withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
     )
@@ -529,7 +510,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    return _run_to_memory(agg, "complete")
+    return drain_to_memory(agg, "complete")
 
 
 _LATE_SPLIT = "2024-01-10"
@@ -550,23 +531,20 @@ def _late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def write(out: str) -> None:
         ensure_runtime_confs(spark)
-        d = scratch_tmp("events_late_")
         raw = spark.read.schema(_events_ddl(spark, sf_dir)).parquet(
             f"{sf_dir}/events.parquet"
         )
         ts = _event_time_col(spark, sf_dir)
         split = F.lit(_LATE_SPLIT).cast("timestamp")
         mid = F.lit("2024-01-20").cast("timestamp")
-        raw.filter((ts >= split) & (ts < mid)).coalesce(1).write.parquet(f"{d}/a1")
-        raw.filter(ts >= mid).coalesce(1).write.parquet(f"{d}/a2")
-        raw.filter(ts < split).coalesce(1).write.parquet(f"{d}/b")
-        import glob as _glob
-
         os.makedirs(out)
-        for sub, mtime in (("a1", 1_000_000), ("a2", 2_000_000), ("b", 3_000_000)):
-            (src,) = _glob.glob(f"{d}/{sub}/part-*.parquet")
+        for sub, cond, mtime in (
+            ("a1", (ts >= split) & (ts < mid), 1_000_000),
+            ("a2", ts >= mid, 2_000_000),
+            ("b", ts < split, 3_000_000),
+        ):
             dst = f"{out}/{sub}.parquet"
-            os.rename(src, dst)
+            publish_file(raw.filter(cond), dst)
             os.utime(dst, (mtime, mtime))
 
     return build_once("events_late_stream", sf_dir, write, sources=("events",))
@@ -611,7 +589,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("day"), "event_type", "n_events"
         )
     )
-    out = _run_to_memory(agg, "update")
+    out = drain_to_memory(agg, "update")
     return out.withColumn("day", F.col("day").cast("timestamp_ntz"))
 
 
@@ -665,20 +643,10 @@ def q_stream_incr_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _events_multifile_dir(spark, sf_dir)
     base = scratch_tmp("incr_view_")
 
-    def _versions() -> list[str]:
-        return sorted(
-            d
-            for d in os.listdir(base)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch contract: a failed micro-batch is RE-EXECUTED with
-        # the same batch_id, so the sink must be idempotent by batch_id.
-        # The version path derives from batch_id (not a closure counter);
-        # a retry whose version dir already landed is a no-op, and the
-        # write is staged + atomically renamed so a mid-write crash never
-        # leaves a half-version that a retry would mistake for complete.
+        # foreachBatch re-executes a failed micro-batch with the same
+        # batch_id, so the version path derives from batch_id and a
+        # retry whose version was published is a no-op
         vpath = f"{base}/v{batch_id:06d}"
         if os.path.isdir(vpath):
             return
@@ -688,10 +656,9 @@ def q_stream_incr_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("value") * 100).cast("long")
             ).alias("cents"),
         )
-        s = batch_df.sparkSession
-        prior = _versions()
+        prior = versions(base, "v")
         if prior:
-            cur = s.read.parquet(f"{base}/{prior[-1]}")
+            cur = batch_df.sparkSession.read.parquet(prior[-1])
             partial = (
                 cur.unionByName(partial)
                 .groupBy("event_type")
@@ -700,28 +667,17 @@ def q_stream_incr_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("cents").alias("cents"),
                 )
             )
-        stage = f"{base}/_stage_v{batch_id:06d}"
-        partial.coalesce(1).write.mode("overwrite").parquet(stage)
-        os.rename(stage, vpath)
+        publish(partial.coalesce(1), vpath)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema(
-                "event_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt_tmp("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
+    stream = (
+        spark.readStream.schema(
+            "event_id long, event_type string, value double"
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.read.parquet(f"{base}/{_versions()[-1]}")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    drain(stream.writeStream.foreachBatch(fold), 8)
+    return spark.read.parquet(versions(base, "v")[-1])
 
 
 @register(
@@ -790,7 +746,7 @@ def q_stream_source_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
     )
-    return _run_to_memory(agg, "complete")
+    return drain_to_memory(agg, "complete")
 
 
 @register(
@@ -863,4 +819,4 @@ def q_stream_source_bson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.min("o_orderkey").alias("min_key"),
     )
-    return _run_to_memory(agg, "complete")
+    return drain_to_memory(agg, "complete")

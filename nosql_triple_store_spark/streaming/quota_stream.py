@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 
 from ..functions.topk import grouped_topk
 from ..registry import register
-from ..scratch import ckpt_tmp, scratch_tmp
-from .queries import _events_multifile_dir
+from ..scratch import scratch_tmp
+from ..sources.compaction import publish, versions
+from .queries import _events_multifile_dir, drain
 
 _QUOTA_K = 5
 _HASH_SQL = (
@@ -52,9 +53,9 @@ def q_stream_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     state EQUAL to the batch quota sample over all data, which is what
     the oracle checks (same SQL as q_sample_group_quota's, and the
     strongest correctness statement a streaming operator can make).
-    The sink is idempotent by batch_id (version dirs + atomic rename,
-    the q_stream_incr_view contract) so micro-batch re-execution
-    cannot corrupt the sample.
+    The sink is idempotent by batch_id (version dirs published by
+    ``compaction.publish``) so micro-batch re-execution cannot corrupt
+    the sample.
 
     Scale: per batch, the candidate set is |state| + batch-bottom-k —
     both bounded by k x |strata| after grouped_topk's salted
@@ -63,18 +64,10 @@ def q_stream_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _events_multifile_dir(spark, sf_dir)
     base = scratch_tmp("quota_sample_")
 
-    def _versions() -> list[str]:
-        return sorted(
-            d
-            for d in os.listdir(base)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         vpath = f"{base}/v{batch_id:06d}"
         if os.path.isdir(vpath):
             return
-        s = batch_df.sparkSession
         tagged = batch_df.select(
             "event_id", "event_type", F.expr(_HASH_SQL).alias("tag")
         )
@@ -85,9 +78,9 @@ def q_stream_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             _QUOTA_K,
             salt_on="event_id",
         ).drop("rank")
-        prior = _versions()
+        prior = versions(base, "v")
         if prior:
-            cur = s.read.parquet(f"{base}/{prior[-1]}").drop("rank")
+            cur = batch_df.sparkSession.read.parquet(prior[-1]).drop("rank")
             batch_top = cur.unionByName(batch_top)
         merged = grouped_topk(
             batch_top,
@@ -96,26 +89,15 @@ def q_stream_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             _QUOTA_K,
             salt_on="event_id",
         )
-        stage = f"{base}/_stage_v{batch_id:06d}"
-        merged.coalesce(1).write.mode("overwrite").parquet(stage)
-        os.rename(stage, vpath)
+        publish(merged.coalesce(1), vpath)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            spark.readStream.schema("event_id long, event_type string")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt_tmp("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    final = spark.read.parquet(f"{base}/{_versions()[-1]}")
+    stream = (
+        spark.readStream.schema("event_id long, event_type string")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    drain(stream.writeStream.foreachBatch(fold), 8)
+    final = spark.read.parquet(versions(base, "v")[-1])
     return final.select(
         "event_type",
         F.col("rank").cast("long").alias("rank"),

@@ -40,7 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..operators.triple import E_CTE
 from ..registry import register, register_skip
 from ..widths import cluster_cores
-from .queries import _run_to_memory, _stream_events
+from .queries import _stream_events, drain_to_memory
 
 _STATE_SCHEMA = "ts_us long, event_id long, value double"
 _OUT_SCHEMA = (
@@ -106,7 +106,7 @@ def _lww_state_fn(
         # sort machinery per call; profiling (PLANS.md round 8) shows
         # the per-GROUP applyInPandas dispatch dominates either way,
         # so this is a small constant win, not the lever (the lever
-        # was state-partition width, see queries._run_to_memory)
+        # was state-partition width, see queries.STATE_WIDTH)
         ts = pdf["ts_us"].to_numpy()
         eid = pdf["event_id"].to_numpy()
         i = int(np.lexsort((eid, ts))[-1])
@@ -143,9 +143,7 @@ def q_stream_lww_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return _compact_register(
-        _run_to_memory(
-            out, "update", state_width=cluster_cores(spark)
-        )
+        drain_to_memory(out, "update", cluster_cores(spark))
     )
 
 
@@ -224,9 +222,7 @@ def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RocksDBStateStoreProvider",
     )
     try:
-        sink = _run_to_memory(
-            out, "update", state_width=cluster_cores(spark)
-        )
+        sink = drain_to_memory(out, "update", cluster_cores(spark))
     finally:
         spark.conf.set(provider_key, old)
     return _compact_register(sink)
@@ -341,9 +337,7 @@ def q_stream_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = _run_to_memory(
-        out, "update", state_width=cluster_cores(spark)
-    )
+    sink = drain_to_memory(out, "update", cluster_cores(spark))
     ordering = F.struct(F.col("ts_us"), F.col("event_id"))
     payload = F.struct(
         F.col("event_id"), F.col("ts_us"), F.col("value"), F.col("deleted")

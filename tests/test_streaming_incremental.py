@@ -5,10 +5,13 @@ job must converge to the same register state."""
 
 from __future__ import annotations
 
+import datetime
+import glob
 import os
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from nosql_triple_store_spark.catalog import load_table
@@ -16,7 +19,10 @@ from nosql_triple_store_spark.functions.lww import latest_by_key
 from nosql_triple_store_spark.sources.compaction import (
     compact,
     init_register,
+    latest_version_path,
     read_register,
+    read_register_asof,
+    versions,
 )
 
 from .conftest import SF_DIR
@@ -96,6 +102,55 @@ def test_compaction_converges_to_batch_state(spark, tmp_path):
     assert _rows(again) == _rows(want)
 
 
+def test_compact_recovers_from_failed_write(spark, tmp_path):
+    """The version dir is the commit point: a compaction whose write
+    fails publishes nothing, a retry with a good delta succeeds, and a
+    delta without its version (an orphan) is neither read by time
+    travel nor kept by the next compaction."""
+    events = load_table(spark, SF_DIR, "events").select(*COLS)
+    base = os.path.join(str(tmp_path), "register")
+    first = events.filter(F.col("event_id") % 2 == 0)
+    second = events.filter(F.col("event_id") % 2 == 1)
+    init_register(first, base, KEYS, ORDER)
+
+    bad_id = second.agg(F.min("event_id")).first()[0]
+    bad = second.withColumn(
+        "value",
+        F.when(
+            F.col("event_id") == bad_id, F.raise_error(F.lit("boom"))
+        ).otherwise(F.col("value")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        compact(spark, base, bad, KEYS, ORDER)
+    assert latest_version_path(base).endswith("v000001")
+
+    assert compact(spark, base, second, KEYS, ORDER).endswith("v000002")
+    want = latest_by_key(events, KEYS, ORDER, PAYLOAD).select(*COLS)
+    hi = events.agg(F.max("ts")).first()[0] + datetime.timedelta(days=2)
+    assert _rows(read_register(spark, base).select(*COLS)) == _rows(want)
+    asof = read_register_asof(spark, base, KEYS, ORDER, hi)
+    assert _rows(asof.select(*COLS)) == _rows(want)
+    assert not glob.glob(f"{base}/_stage_*")
+
+    # orphan d000003: newer rows that would win if they were folded
+    newer = events.filter(F.col("event_id") % 5 == 0).withColumn(
+        "ts", F.col("ts") + F.expr("INTERVAL 1 DAY")
+    )
+    newer.withColumn("value", F.lit(-1.0)).write.parquet(f"{base}/d000003")
+    asof = read_register_asof(spark, base, KEYS, ORDER, hi)
+    assert _rows(asof.select(*COLS)) == _rows(want)
+
+    assert compact(spark, base, newer, KEYS, ORDER).endswith("v000003")
+    assert _rows(spark.read.parquet(f"{base}/d000003")) == _rows(newer)
+    want = latest_by_key(
+        events.unionByName(newer), KEYS, ORDER, PAYLOAD
+    ).select(*COLS)
+    assert _rows(read_register(spark, base).select(*COLS)) == _rows(want)
+    asof = read_register_asof(spark, base, KEYS, ORDER, hi)
+    assert _rows(asof.select(*COLS)) == _rows(want)
+    assert not glob.glob(f"{base}/_stage_*")
+
+
 def test_asof_read_reconstructs_past_state(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -156,7 +211,7 @@ def test_admission_index_state_is_bounded(spark):
     out = ds.q_stream_dedup_admission(spark, SF_DIR)
     n = out.count()
     base = ds._LAST_BASE[SF_DIR]
-    segs = ds._index_segments(f"{base}/index")
+    segs = versions(f"{base}/index", ("b", "c"))
     assert len(segs) <= ds._COMPACT_EVERY + 1, (
         f"index state grew to {len(segs)} segments: {segs}"
     )
