@@ -6,9 +6,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.bgp import TRIPLES_SQL, triples_view
+from ..plans.bgp import TRIPLES_SQL
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from .dedup import _NEAR_ORACLE
+from .sparql_queries import ASK_ORACLE, SPARQL_ASK
 
 
 @register(
@@ -25,30 +27,16 @@ WHERE c.p = 'inNation' AND n.p = 'inRegion' AND r.p = 'hasName'
 )
 def q_bgp_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL CONSTRUCT: derive NEW triples from a matched pattern —
-    `CONSTRUCT {{ ?c :inRegionName ?name }} WHERE {{ ?c inNation ?n .
-    ?n inRegion ?r . ?r hasName ?name }}` — the materialized-inference
-    step RDF pipelines use to flatten hierarchies. The derived relation
-    is just the BGP join projected back into (s, p, o) shape, so it can
-    be unioned with the base triples and queried by the same BGP
-    compiler (composability is the point)."""
-    t = triples_view(spark, sf_dir)
-    c = t.filter(
-        (F.col("p") == "inNation") & F.col("s").startswith("customer:")
-    ).select(F.col("s").alias("cust"), F.col("o").alias("nat"))
-    n = t.filter(F.col("p") == "inRegion").select(
-        F.col("s").alias("nat"), F.col("o").alias("reg")
-    )
-    r = t.filter(F.col("p") == "hasName").select(
-        F.col("s").alias("reg"), F.col("o").alias("name")
-    )
-    return (
-        c.join(n, "nat")
-        .join(r, "reg")
-        .select(
-            F.col("cust").alias("s"),
-            F.lit("inRegionName").alias("p"),
-            F.col("name").alias("o"),
-        )
+    the materialized-inference step RDF pipelines use to flatten
+    hierarchies. The derived relation is the BGP join projected back
+    into (s, p, o) shape, so it can be unioned with the base triples
+    and queried by the same compiler (composability is the point)."""
+    return compile_sparql_encoded(
+        spark,
+        sf_dir,
+        "CONSTRUCT { ?c inRegionName ?name } WHERE { ?c inNation ?n . "
+        "?n inRegion ?r . ?r hasName ?name . "
+        'FILTER(STRSTARTS(?c, "customer:")) }',
     )
 
 
@@ -99,30 +87,13 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_bgp_ask",
-    oracle=f"""
-WITH {TRIPLES_SQL}
-SELECT CAST(EXISTS (
-  SELECT 1 FROM triples n JOIN triples r ON n.o = r.s
-  WHERE n.p = 'inRegion' AND r.p = 'hasName' AND r.o = 'ASIA'
-) AS BIGINT) AS answer
-""",
-)
+@register("q_bgp_ask", oracle=ASK_ORACLE)
 def q_bgp_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL ASK: does any nation sit in the region named ASIA? —
     boolean existence of a pattern match. Planned as the pattern join
     under a LIMIT 1 (Spark stops scanning at the first match; at scale
     the limit propagates into the scan), emitted as one 0/1 row."""
-    t = triples_view(spark, sf_dir)
-    n = t.filter(F.col("p") == "inRegion").select(F.col("o").alias("reg"))
-    r = t.filter((F.col("p") == "hasName") & (F.col("o") == "ASIA")).select(
-        F.col("s").alias("reg")
-    )
-    hit = n.join(r, "reg").limit(1)
-    return hit.agg(
-        F.when(F.count(F.lit(1)) > 0, 1).otherwise(0).cast("long").alias("answer")
-    )
+    return compile_sparql_encoded(spark, sf_dir, SPARQL_ASK)
 
 
 @register(
@@ -136,11 +107,8 @@ SELECT s, p, o FROM triples WHERE o = 'nation:7'
 )
 def q_bgp_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL DESCRIBE <nation:7>: every triple where the resource is
-    subject or object — the resource's full neighborhood. Two
-    predicate-pushed scans of the triples relation, unioned; with the
-    predicate-partitioned layout (sources) each side prunes to the
-    partitions that can contain the term."""
-    t = triples_view(spark, sf_dir)
-    return t.filter(F.col("s") == "nation:7").unionAll(
-        t.filter(F.col("o") == "nation:7")
-    )
+    subject or object — the resource's full neighborhood. The
+    compiler's DESCRIBE form: two term-pushed scans of the triples
+    relation, unioned as a set (the neighborhood holds no duplicate
+    triple, so the set equals the oracle's bag union)."""
+    return compile_sparql_encoded(spark, sf_dir, "DESCRIBE <nation:7>")

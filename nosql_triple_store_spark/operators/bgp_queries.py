@@ -1,5 +1,5 @@
 """Registered BGP (triple-pattern) queries — the reference's query model
-exercised through the plans/bgp compiler (SURVEY §3.1 generalized: the
+as SPARQL text over the encoded store (SURVEY §3.1 generalized: the
 reference answers only (subject, ?, ?) lookups; these run full conjunctive
 patterns as self-joins, per the S2RDF design)."""
 
@@ -7,8 +7,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.bgp import TRIPLES_SQL, Var, compile_bgp, triples_view
+from ..plans.bgp import TRIPLES_SQL
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
+from .sparql_queries import SPARQL_STAR, STAR_ORACLE
 
 
 @register(
@@ -22,30 +24,16 @@ def q_bgp_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """('customer:42', ?p, ?o) — the reference's /search by-subject point
     lookup (R1/R10) as a one-pattern BGP; the subject constant pushes to
     the scan exactly like getShardID routed it to one shard."""
-    t = triples_view(spark, sf_dir)
-    return compile_bgp(t, [("customer:42", Var("p"), Var("o"))])
-
-
-STAR_ORACLE = f"""
-WITH {TRIPLES_SQL}
-SELECT a.s AS c, b.o AS n
-FROM triples a JOIN triples b ON a.s = b.s
-WHERE a.p = 'inSegment' AND a.o = 'BUILDING' AND b.p = 'inNation'
-"""
+    return compile_sparql_encoded(
+        spark, sf_dir, "SELECT ?p ?o WHERE { customer:42 ?p ?o }"
+    )
 
 
 @register("q_bgp_star", oracle=STAR_ORACLE)
 def q_bgp_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star pattern: ?c inSegment 'BUILDING' . ?c inNation ?n — two
     patterns joined on the shared subject variable."""
-    t = triples_view(spark, sf_dir)
-    return compile_bgp(
-        t,
-        [
-            (Var("c"), "inSegment", "BUILDING"),
-            (Var("c"), "inNation", Var("n")),
-        ],
-    )
+    return compile_sparql_encoded(spark, sf_dir, SPARQL_STAR)
 
 
 @register(
@@ -64,12 +52,9 @@ def q_bgp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path pattern: ?c inNation ?n . ?n inRegion ?r . ?r hasName 'ASIA'
     — a 3-hop chain join; the most selective pattern (hasName='ASIA',
     1 row) ends up broadcast by AQE, shrinking the chain left-to-right."""
-    t = triples_view(spark, sf_dir)
-    return compile_bgp(
-        t,
-        [
-            (Var("c"), "inNation", Var("n")),
-            (Var("n"), "inRegion", Var("r")),
-            (Var("r"), "hasName", "ASIA"),
-        ],
+    return compile_sparql_encoded(
+        spark,
+        sf_dir,
+        'SELECT ?c ?n ?r WHERE { ?c inNation ?n . ?n inRegion ?r . '
+        '?r hasName "ASIA" }',
     )

@@ -7,7 +7,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..plans.bgp import TRIPLES_SQL, Var, compile_bgp, triples_view
+from ..plans.bgp import TRIPLES_SQL, triples_view
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from ..materialize import materialize
 
@@ -119,11 +120,11 @@ FROM nat LEFT JOIN seg ON nat.s = seg.s
 )
 def q_bgp_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL OPTIONAL: ?s inNation ?n . OPTIONAL { ?s inSegment ?seg } —
-    customers bind ?seg, suppliers leave it NULL (left-join semantics in
-    the compiler's optional arm)."""
-    t = triples_view(spark, sf_dir)
-    return compile_bgp(
-        t,
-        [(Var("s"), "inNation", Var("n"))],
-        optional=[(Var("s"), "inSegment", Var("seg"))],
+    customers bind ?seg, suppliers leave it NULL (a left join after the
+    required patterns)."""
+    return compile_sparql_encoded(
+        spark,
+        sf_dir,
+        "SELECT ?s ?n ?seg WHERE { ?s inNation ?n . "
+        "OPTIONAL { ?s inSegment ?seg } }",
     )

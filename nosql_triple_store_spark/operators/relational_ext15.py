@@ -19,50 +19,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
-from ..plans.bgp import TRIPLES_SQL, natural_join, triples_view
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from ..scratch import build_once
+from .sparql_queries import MINUS_ORACLE, SPARQL_MINUS
 from .triple import E_CTE
 
 
-@register(
-    "q_bgp_minus",
-    oracle=f"""
-WITH {TRIPLES_SQL},
-a AS (SELECT s AS c, o AS seg FROM triples WHERE p = 'inSegment'),
-asia AS (
-  SELECT n.s AS c FROM triples n
-  JOIN triples r ON n.o = r.s AND r.p = 'inRegion'
-  JOIN triples h ON r.o = h.s AND h.p = 'hasName' AND h.o = 'ASIA'
-  WHERE n.p = 'inNation')
-SELECT c, seg FROM a
-WHERE NOT EXISTS (SELECT 1 FROM asia WHERE asia.c = a.c)
-""",
-)
+@register("q_bgp_minus", oracle=MINUS_ORACLE)
 def q_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL `?c inSegment ?seg . MINUS { ?c inNation ?n . ?n inRegion
     ?r . ?r hasName 'ASIA' }` — customer segments minus ASIA-region
     customers. The excluded pattern shares ?c, so MINUS lowers to a
     left-anti join on c (one shuffle; the excluded side collapses to
-    distinct keys first) — the SPARQL compiler's MINUS lowering,
-    ``natural_join(..., "left_anti")``. The no-shared-variable edge case
-    (MINUS is a no-op, NOT EXISTS is not) is unit-tested on that helper
-    directly."""
-    t = triples_view(spark, sf_dir)
-    a = t.filter(F.col("p") == "inSegment").select(
-        F.col("s").alias("c"), F.col("o").alias("seg")
-    )
-    nat = t.filter(F.col("p") == "inNation").select(
-        F.col("s").alias("c"), F.col("o").alias("n")
-    )
-    reg = t.filter(F.col("p") == "inRegion").select(
-        F.col("s").alias("n"), F.col("o").alias("r")
-    )
-    name = t.filter((F.col("p") == "hasName") & (F.col("o") == "ASIA")).select(
-        F.col("s").alias("r")
-    )
-    asia = nat.join(reg, "n").join(name, "r").select("c")
-    return natural_join(a, asia, "left_anti")
+    distinct keys first) — ``natural_join(..., "left_anti")``. The
+    no-shared-variable edge case (MINUS is a no-op, NOT EXISTS is not)
+    is unit-tested on that helper directly."""
+    return compile_sparql_encoded(spark, sf_dir, SPARQL_MINUS)
 
 
 _EVO_SPLIT = 250  # doc_id threshold between schema v1 and v2 writers

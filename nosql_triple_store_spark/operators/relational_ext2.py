@@ -8,7 +8,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..plans.bgp import TRIPLES_SQL, Var, compile_bgp, triples_view
+from ..plans.bgp import TRIPLES_SQL
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 
 
@@ -120,10 +121,11 @@ SELECT s, p FROM triples WHERE o = 'nation:7'
 )
 def q_bgp_varpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(?s, ?p, 'nation:7') — variable predicate, constant object: the
-    reverse-lookup pattern (who points at this node?). Exercises the
-    compiler's var-predicate arm; on a predicate-partitioned layout this
+    reverse-lookup pattern (who points at this node?). Exercises a
+    variable in predicate position; on a predicate-partitioned layout this
     is the one shape that scans all partitions — the documented trade of
     vertical partitioning (add an object-sorted secondary layout if this
     pattern dominates)."""
-    t = triples_view(spark, sf_dir)
-    return compile_bgp(t, [(Var("s"), Var("p"), "nation:7")])
+    return compile_sparql_encoded(
+        spark, sf_dir, "SELECT ?s ?p WHERE { ?s ?p nation:7 }"
+    )

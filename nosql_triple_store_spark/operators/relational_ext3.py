@@ -7,11 +7,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
-from ..plans.bgp import TRIPLE_SOURCES, Var, compile_bgp, triples_view
+from ..plans.bgp import TRIPLE_SOURCES, triples_view
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register, register_layout
 from ..scratch import build_once
 from ..sources.dictionary import build_dictionary
-from .bgp_queries import STAR_ORACLE
+from .sparql_queries import SPARQL_STAR, STAR_ORACLE
 
 
 @register("q_agg_approx_percentile", oracle=None)  # rows-only: sketch
@@ -320,32 +321,9 @@ def _encode_triples(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame
 
 @register("q_bgp_star_encoded", oracle=STAR_ORACLE)
 def q_bgp_star_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q_bgp_star pattern executed over DICTIONARY-ENCODED triples:
-    the materialized encoded store (encoded_store — dictionary + long
-    triples as scratch parquet, built once like a real RDF engine's
-    load ETL), the BGP compiled against the encoded relation (pattern
-    constants looked up in the dictionary), variable bindings decoded
-    back to strings — the full S2RDF execution pipeline, same oracle
-    as the string-space query. The joins in the pattern run on 8-byte
-    longs; only the (small) final result pays string decode."""
-    d, enc = encoded_store(spark, sf_dir)
-    const = {
-        r["term"]: r["term_id"]
-        for r in d.filter(
-            F.col("term").isin("inSegment", "BUILDING", "inNation")
-        ).collect()
-    }
-    bound = compile_bgp(
-        enc,
-        [
-            (Var("c"), const["inSegment"], const["BUILDING"]),
-            (Var("c"), const["inNation"], Var("n")),
-        ],
-    )
-    dec_c = d.select(F.col("term_id").alias("c"), F.col("term").alias("c_str"))
-    dec_n = d.select(F.col("term_id").alias("n"), F.col("term").alias("n_str"))
-    return (
-        bound.join(F.broadcast(dec_c), "c")
-        .join(F.broadcast(dec_n), "n")
-        .select(F.col("c_str").alias("c"), F.col("n_str").alias("n"))
-    )
+    """The q_bgp_star pattern over the DICTIONARY-ENCODED triples (the
+    encoded_store layout above): pattern constants looked up in the
+    dictionary, joins on 8-byte longs, only the (small) final result
+    pays string decode — the S2RDF execution pipeline every SPARQL
+    text query runs."""
+    return compile_sparql_encoded(spark, sf_dir, SPARQL_STAR)

@@ -21,7 +21,8 @@ from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..functions.topk import grouped_topk
 from ..functions.vectors import as_double_array, cosine_col
-from ..plans.bgp import TRIPLES_SQL, triples_view
+from ..plans.bgp import TRIPLES_SQL
+from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 
 _HASH_SQL = (
@@ -47,25 +48,19 @@ def q_bgp_path_inverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward to its nation, then traverse inNation BACKWARD to the
     nation's members). The inverse step is a join with the pattern's
     subject/object roles swapped; no new physical operator exists or
-    is needed — exactly the S2RDF translation scheme the BGP compiler
-    uses for forward steps.
+    is needed — the S2RDF translation scheme the compiler uses for
+    forward steps.
 
     Scale: the anchor pattern (one subject constant) prunes to one
-    row and broadcasts; the inverse step is then a broadcast
-    semi-lookup into the single inNation predicate partition
-    (vertical partitioning, plans/bgp.py:15).
+    row; the inverse step is then a semi-lookup into the single
+    inNation predicate partition (vertical partitioning,
+    plans/bgp.py:15).
     """
-    t = triples_view(spark, sf_dir)
-    anchor = t.filter(
-        (F.col("s") == "supplier:5") & (F.col("p") == "inNation")
-    ).select(F.col("o").alias("nation"))
-    members = t.filter(F.col("p") == "inNation").select(
-        F.col("s").alias("peer"), F.col("o").alias("nation")
-    )
-    return (
-        members.join(F.broadcast(anchor), "nation")
-        .filter(F.col("peer") != "supplier:5")
-        .select("peer")
+    return compile_sparql_encoded(
+        spark,
+        sf_dir,
+        "SELECT ?peer WHERE { ?peer inNation/^inNation supplier:5 . "
+        'FILTER(?peer != "supplier:5") }',
     )
 
 

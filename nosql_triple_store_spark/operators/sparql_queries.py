@@ -1,16 +1,15 @@
-"""SPARQL-text query surface (VERDICT r5 #6): the plans/sparql.py
-parser + compiler exercised as registered, oracle-checked queries —
-the engine becomes a drop-in textual query endpoint for the
-reference's RDF domain (MasterServer.py:292-330 exposes one HTTP
-route per fixed pattern; here the standard query language replaces
-bespoke routes).
+"""SPARQL-text query surface: every registered triple-pattern query is
+SPARQL text compiled by ``plans.sparql.compile_sparql_encoded`` — the one
+execution path for triple patterns (constants encoded once, joins on
+dictionary ids over the encoded store, decode only the final bindings).
+The reference serves one HTTP route per fixed pattern
+(MasterServer.py:292-330); here the standard query language replaces
+bespoke routes.
 
-Both queries execute over the dictionary-encoded triple store, i.e.
-the parser feeds the exact pipeline of q_bgp_star_encoded:
-constants encoded once, joins in long space, decode only final
-bindings. tests/test_sparql.py pins (a) parser unit behavior,
-(b) plan equivalence with the hand-built star query, (c) loud
-rejection outside the documented subset.
+The ``q_bgp_*`` names that answer the same question as a query here
+import its text and oracle from this module, so one string defines both.
+tests/test_sparql.py pins parser behavior, encoded-space execution and
+loud rejection outside the documented subset.
 """
 
 from __future__ import annotations
@@ -20,8 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.bgp import TRIPLES_SQL
 from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
-from .bgp_ext import _CLOSURE_ORACLE
-from .bgp_queries import STAR_ORACLE
+
+STAR_ORACLE = f"""
+WITH {TRIPLES_SQL}
+SELECT a.s AS c, b.o AS n
+FROM triples a JOIN triples b ON a.s = b.s
+WHERE a.p = 'inSegment' AND a.o = 'BUILDING' AND b.p = 'inNation'
+"""
 
 SPARQL_STAR = """
 SELECT ?c ?n WHERE {
@@ -61,11 +65,9 @@ LIMIT 6
 
 @register("q_sparql_select", oracle=STAR_ORACLE)
 def q_sparql_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q_bgp_star pattern arriving as SPARQL TEXT: parse ->
-    dictionary-encode constants -> long-space join -> decode bindings.
-    Same oracle as q_bgp_star / q_bgp_star_encoded; the plan-equality
-    test pins that the textual front-end constructs the identical
-    physical plan (parser adds zero runtime surface)."""
+    """Star pattern as SPARQL text: parse -> dictionary-encode
+    constants -> long-space join -> decode bindings. q_bgp_star and
+    q_bgp_star_encoded run the same text."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_STAR)
 
 
@@ -204,8 +206,7 @@ def q_sparql_path_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL sequence property path `?c inNation/inRegion ?r` parsed
     from text: the path compiles to relational path algebra over the
     encoded store (two pushed-down constant-predicate scans joined on
-    the hop), then the bindings decode — same execution class as the
-    hand-built q_bgp_path."""
+    the hop), then the bindings decode."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_PATH_SEQ)
 
 
@@ -215,16 +216,28 @@ SELECT ?s ?o WHERE {
 }
 """
 
+# DuckDB recursive CTE needs the RECURSIVE keyword up front; reuse the
+# shared triples derivation inside it.
+CLOSURE_ORACLE = f"""
+WITH RECURSIVE {TRIPLES_SQL},
+loc AS (SELECT s, o FROM triples WHERE p IN ('inNation', 'inRegion')),
+closure AS (
+  SELECT s, o FROM loc
+  UNION
+  SELECT c.s, l.o FROM closure c JOIN loc l ON c.o = l.s)
+SELECT s, o FROM closure
+"""
 
-@register("q_sparql_path_closure", oracle=_CLOSURE_ORACLE)
+
+@register("q_sparql_path_closure", oracle=CLOSURE_ORACLE)
 def q_sparql_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL one-or-more path `(inNation|inRegion)+` parsed from
     text: alternation unions the two predicate scans, `+` runs the
     semi-naive closure (frontier-joins-base rounds, left-anti dedup,
     lineage cut per round) in encoded long space, and the final pairs
-    decode once. Same fixpoint + same recursive-CTE oracle as the
-    hand-built q_bgp_path_closure — the textual surface adds parsing,
-    not a different engine."""
+    decode once. The oracle is DuckDB's WITH RECURSIVE — a different
+    fixpoint engine computing the same relation. q_bgp_path_closure
+    runs the same text."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_PATH_CLOSURE)
 
 
@@ -233,7 +246,7 @@ SPARQL_ASK = """
 ASK { ?n inRegion ?r . ?r hasName "ASIA" }
 """
 
-_ASK_ORACLE = f"""
+ASK_ORACLE = f"""
 WITH {TRIPLES_SQL}
 SELECT CAST(EXISTS (
   SELECT 1 FROM triples n JOIN triples r ON n.o = r.s
@@ -242,12 +255,11 @@ SELECT CAST(EXISTS (
 """
 
 
-@register("q_sparql_ask", oracle=_ASK_ORACLE)
+@register("q_sparql_ask", oracle=ASK_ORACLE)
 def q_sparql_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL ASK parsed from text: pattern join under LIMIT 1 (Spark
     stops at the first match; the limit propagates toward the scan),
-    emitted as one 0/1 row — the q_bgp_ask plan reached from query
-    text via the encoded store."""
+    emitted as one 0/1 row. q_bgp_ask runs the same text."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_ASK)
 
 
@@ -304,8 +316,8 @@ SELECT n AS s, n AS o FROM nodes
 @register("q_sparql_path_star", oracle=_PATH_STAR_ORACLE)
 def q_sparql_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL zero-or-more path `(inNation|inRegion)*` parsed from
-    text (VERDICT r6 #3): the `p+` semi-naive closure (shared
-    transitive_closure, the q_bgp_path_closure fixpoint) unioned with the
+    text (VERDICT r6 #3): the `p+` semi-naive closure
+    (transitive_closure) unioned with the
     zero-length (n, n) pairs of every node incident to the path's
     relation, all in encoded long space, decoded once. The oracle runs
     DuckDB's WITH RECURSIVE plus the identity-pairs union — a
@@ -320,7 +332,7 @@ SELECT ?c ?seg WHERE {
 }
 """
 
-_MINUS_ORACLE = f"""
+MINUS_ORACLE = f"""
 WITH {TRIPLES_SQL},
 a AS (SELECT s AS c, o AS seg FROM triples WHERE p = 'inSegment'),
 asia AS (
@@ -333,15 +345,13 @@ WHERE NOT EXISTS (SELECT 1 FROM asia WHERE asia.c = a.c)
 """
 
 
-@register("q_sparql_minus", oracle=_MINUS_ORACLE)
+@register("q_sparql_minus", oracle=MINUS_ORACLE)
 def q_sparql_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q_bgp_minus exclusion arriving as SPARQL TEXT (VERDICT r6
-    #3): customer segments MINUS the ASIA-region chain. The excluded
-    group compiles to its own encoded BGP join and the exclusion
-    lowers to ONE left-anti join on the shared ?c column in long
-    space — the MINUS lowering of plans.bgp.natural_join (shared with
-    q_bgp_minus), reached from the standard grammar. Same oracle as
-    q_bgp_minus."""
+    """SPARQL MINUS (VERDICT r6 #3): customer segments MINUS the
+    ASIA-region chain. The excluded group compiles to its own encoded
+    BGP join and the exclusion lowers to ONE left-anti join on the
+    shared ?c column in long space (plans.bgp.natural_join's MINUS
+    kind). q_bgp_minus runs the same text."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_MINUS)
 
 
@@ -353,7 +363,7 @@ SELECT ?c ?n WHERE {
 }
 """
 
-_NOTEXISTS_ORACLE = f"""
+NOTEXISTS_ORACLE = f"""
 WITH {TRIPLES_SQL}
 SELECT a.s AS c, a.o AS n
 FROM triples a
@@ -365,13 +375,13 @@ WHERE a.p = 'inNation'
 """
 
 
-@register("q_sparql_notexists", oracle=_NOTEXISTS_ORACLE)
+@register("q_sparql_notexists", oracle=NOTEXISTS_ORACLE)
 def q_sparql_notexists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER NOT EXISTS from query text (VERDICT r6 #3): customers
-    with a nation but no BUILDING segment — the q_bgp_notexists
-    left-anti plan, correlated on the shared ?c variable, executed in
-    encoded long space with the REGEX filter post-decode. Same oracle
-    as the hand-built twin."""
+    with a nation but no BUILDING segment — one left-anti join,
+    correlated on the shared ?c variable, in encoded long space with
+    the REGEX filter post-decode. q_bgp_notexists runs the same
+    text."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_NOTEXISTS)
 
 
@@ -429,8 +439,7 @@ def q_sparql_optional_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-extended with its region's name through the inRegion/hasName
     sequence path — nations bind ?rn, regions themselves leave it
     NULL. The path relation left-joins the required bindings on the
-    shared ?n column in long space, the same rule plain OPTIONALs
-    follow inside compile_bgp."""
+    shared ?n column in long space, the rule every OPTIONAL follows."""
     return compile_sparql_encoded(spark, sf_dir, SPARQL_OPTIONAL_PATH)
 
 

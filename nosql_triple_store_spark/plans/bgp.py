@@ -181,27 +181,19 @@ def natural_join(
 
 
 def compile_bgp(
-    triples: DataFrame,
-    patterns: list[tuple[Term, Term, Term]],
-    optional: list[tuple[Term, Term, Term]] = (),
+    triples: DataFrame, patterns: list[tuple[Term, Term, Term]]
 ) -> DataFrame:
     """Compile a conjunctive BGP to a DataFrame of variable bindings.
 
     Each (s, p, o) pattern binds through :func:`bind_terms` (constants
     become pushed-down filters, Vars projected binding columns);
-    patterns are natural-joined on shared Vars. ``optional`` patterns
-    implement SPARQL OPTIONAL: left joins that extend bindings where
-    they match and leave NULLs where they don't. Catalyst
+    patterns are natural-joined on shared Vars. Catalyst
     reorders/broadcasts the joins; with a predicate-partitioned layout
     the constant-p filters prune partitions (see module docstring).
     """
     if not patterns:
         raise ValueError("empty BGP")
-    bound = reduce(natural_join, [_triple(triples, p) for p in patterns])
-    for pat in optional:
-        bound = natural_join(bound, _triple(triples, pat), "left")
-    return bound
-
-
-def _triple(triples: DataFrame, pat: tuple[Term, Term, Term]) -> DataFrame:
-    return bind_terms(triples, zip(("s", "p", "o"), pat))
+    return reduce(
+        natural_join,
+        [bind_terms(triples, zip(("s", "p", "o"), p)) for p in patterns],
+    )

@@ -1,12 +1,12 @@
-"""Thin SPARQL front-end: a textual query surface for the reference's
-RDF domain, compiling to the SAME encoded-store plans the hand-built BGP
-queries use.
+"""SPARQL front-end: the one execution path for triple patterns. Every
+registered triple-pattern query is SPARQL text compiled here to a plan
+over the dictionary-encoded store.
 
 Scope (documented subset, rejected loudly outside it):
 - ``SELECT ?v ... | *``, ``WHERE { ... }``
 - conjunctive triple patterns ``?s p o .`` (constants as bare words,
   ``"literals"``, or ``<iris>``; variables as ``?name``)
-- ``OPTIONAL { ... }`` blocks (left-join semantics, compile_bgp)
+- ``OPTIONAL { ... }`` blocks (left joins after every required pattern)
 - ``FILTER(expr)`` over the expression grammar below: comparisons
   ``=, !=, <, <=, >, >=``, ``&&`` / ``||`` / ``!`` with parentheses,
   ``REGEX(?v, "pat")``, the string predicates
@@ -122,16 +122,18 @@ form ("2.0") when stringified — documented deviation (SPARQL integer
 arithmetic would stay integer), same family as the SUM/AVG NULL-skip
 note above.
 
-Execution strategy mirrors q_bgp_star_encoded (operators/
-relational_ext3.py): pattern constants are looked up in the
-dictionary ONCE (driver-side, k terms), the conjunctive join runs
-entirely in dictionary-encoded long space, and only the final
-bindings pay string decode. Every pattern kind (triple, path endpoint,
-GRAPH quad) binds its terms through ``bgp.bind_terms`` and every group
-joins through ``bgp.natural_join``. Scale: identical to the hand-built
-plans — the parser adds zero runtime surface, it only CONSTRUCTS the
-same DataFrame graph, so everything SCALE.md says about BGP joins
-applies verbatim.
+Execution strategy (S2RDF, PAPERS.md): pattern constants are looked
+up in the dictionary ONCE (driver-side, k terms), the conjunctive join
+runs entirely in dictionary-encoded long space over the
+``bgp_encoded_store`` layout (operators/relational_ext3.py), and only
+the final bindings pay string decode. Every pattern kind (triple, path
+endpoint, GRAPH quad) binds its terms through ``bgp.bind_terms`` and
+every group joins through ``bgp.natural_join``; each conjunctive group
+lowers through one rule (``compile_group``) and every OPTIONAL
+left-joins after all required patterns. The parser adds zero runtime
+surface, it only CONSTRUCTS the DataFrame graph, so everything SCALE.md
+says about BGP joins applies verbatim. DESCRIBE is the one form that
+reads the string-space triples view.
 
 Reference parity: the reference's query surface is one HTTP endpoint
 per fixed pattern shape (MasterServer.py:292-330 routes
@@ -159,7 +161,6 @@ from .bgp import (
     triples_view,
 )
 from .quads import graph_of, quad_layout
-from .quads import graph_of
 from ..materialize import lazy_cut, materialize
 
 _TOKEN = re.compile(
@@ -1281,8 +1282,7 @@ def transitive_closure(base: DataFrame) -> DataFrame:
     destination) relation, in its own column names: frontier ⋈ base per
     round, left-anti dedup against the accumulated closure, a
     ``materialize`` cut and an ``isEmpty`` check per round, cap 12 with
-    a non-convergence error. Shared by `p+`, `p*` and the hand-built
-    q_bgp_path_closure."""
+    a non-convergence error. The fixpoint of `p+` and `p*`."""
     src, dst = base.columns
     closure = base
     frontier = base
@@ -1430,10 +1430,10 @@ def _agg_col(a: Agg):
 def compile_sparql_encoded(
     spark: SparkSession, sf_dir: str, text: str
 ) -> DataFrame:
-    """Parse + compile a SPARQL SELECT against the dictionary-encoded
-    triple store: the exact execution pipeline of q_bgp_star_encoded
-    (constants encoded once driver-side, joins in long space, decode
-    only the final bindings), now reachable from query text."""
+    """Parse + compile a SPARQL query against the dictionary-encoded
+    triple store (constants encoded once driver-side, joins in long
+    space, decode only the final bindings) — the entry point every
+    registered triple-pattern query calls."""
     return _compile_query(spark, sf_dir, parse_sparql(text))
 
 
@@ -1567,30 +1567,15 @@ def _compile_query(
         branch, and each MINUS / NOT EXISTS group."""
         return reduce(natural_join, [pat_step(pat) for pat in g])
 
-    if q.unions:
+    if q.unions:  # the parser rejects patterns beside a top-level UNION
         parts = [compile_group(g) for g in all_groups]
         bound = parts[0].select(*sorted(parts[0].columns))
         for part in parts[1:]:
             bound = bound.unionByName(part.select(*sorted(part.columns)))
-    elif plain:
-        # keep the hand-built lowering for the all-plain conjunction
-        # (tests pin this plan shape equal to q_bgp_star_encoded);
-        # plain OPTIONALs ride the same call
-        bound = compile_bgp(
-            enc,
-            [enc_pat(p) for p in plain],
-            [
-                enc_pat(p)
-                for p in q.optionals
-                if not isinstance(p[1], _PATH_TYPES)
-            ],
-        )
+    elif q.patterns:
+        bound = compile_group(plain + path_pats)
     else:
         bound = None
-    steps = ([bound] if bound is not None else []) + [
-        pat_step(pat) for pat in path_pats
-    ]
-    bound = reduce(natural_join, steps) if steps else None
     if bound is None and (
         q.optionals or q.minus or q.not_exists or q.values or encoded_filters
     ):
@@ -1601,24 +1586,17 @@ def _compile_query(
             "patterns alongside a sub-SELECT or GRAPH group"
         )
     # OPTIONALs left-extend the bindings after every required pattern
-    # is joined: extend where the pattern matches, NULL where not.
-    # Plain OPTIONALs over an all-plain conjunction were consumed by
-    # compile_bgp above (pinned plan shape); path-valued OPTIONALs —
-    # and plain ones whose required group is path-only — take the same
-    # left-join rule here.
-    plain_opts_done = bool(plain) and not q.unions
+    # is joined (SPARQL 1.1 §18.2.2.6: LeftJoin(Join(required), opt)):
+    # extend where the pattern matches, NULL where not.
     for pat in q.optionals:
-        if not isinstance(pat[1], _PATH_TYPES) and plain_opts_done:
-            continue
         bound = natural_join(bound, pat_step(pat), "left")
     # MINUS / FILTER NOT EXISTS: the excluded group compiles to its own
     # encoded BGP join; exclusion is a left-anti join on the SHARED
     # variable columns (dictionary encoding preserves equality, so the
     # anti-join runs in long space — the MINUS lowering of
-    # natural_join, shared with the hand-built q_bgp_minus). With NO
-    # shared variables the two constructs diverge per SPARQL 1.1 §8.3:
-    # MINUS removes nothing; NOT EXISTS removes every row iff the group
-    # matches at all.
+    # natural_join). With NO shared variables the two constructs
+    # diverge per SPARQL 1.1 §8.3: MINUS removes nothing; NOT EXISTS
+    # removes every row iff the group matches at all.
     for g in q.minus:
         bound = natural_join(bound, compile_group(g), "left_anti")
     for g in q.not_exists:

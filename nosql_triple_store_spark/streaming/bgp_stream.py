@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.bgp_queries import STAR_ORACLE
+from ..operators.sparql_queries import STAR_ORACLE
 from ..registry import register
 from ..scratch import build_once, scratch_tmp
 from ..sources.compaction import publish, publish_file, versions

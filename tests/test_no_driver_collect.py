@@ -24,7 +24,6 @@ ALLOWED = {
     # (round 11: replaced two separate .count() actions per peel round)
     "operators/vector_ext4.py": 2,  # k seed rows + k*dim centroid stats
     "operators/register_ext.py": 1,  # 1-row ts cutoff scalar
-    "operators/relational_ext3.py": 1,  # 3 dictionary constants
     "plans/sparql.py": 1,  # k pattern-constant dictionary lookups
     "operators/relational_ext17.py": 1,  # min(src) scalar (BFS source)
     "operators/vector_ext6.py": 1,  # dim*dim scatter-matrix cells
