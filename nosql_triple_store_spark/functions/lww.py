@@ -7,13 +7,20 @@ register; merge keeps the row with the newest timestamp
 strict `>` timestamp compare; MongoDBConnector.py:116-165;
 PostgreSQLDBConnector.py:141-187).
 
+This module is the engine's one newest-per-key rule: every batch or
+streaming fold that keeps the newest row per key calls ``latest_by_key``
+(or ``lww_merge``), and every per-key streaming state that does the same
+runs ``latest_state_fn``. tests/test_lww_guard.py fails on a ``max_by``
+call anywhere else except the audited non-register uses.
+
 Spark-first design: instead of per-key lookups, LWW-latest is a single
 ``groupBy(keys).agg(max_by(payload, order))`` — an associative/commutative
-aggregate, so Spark performs **map-side partial aggregation** before the
-shuffle. At 100 TB this beats the window/row_number formulation (which must
-shuffle *every* row to its key partition and sort) whenever keys repeat;
-ties are broken deterministically by the caller-supplied tiebreak columns
-(the reference leaves ties arbitrary — we must be hash-stable).
+aggregate, so Spark combines map-side before the shuffle: only one row per
+key and input partition crosses the network. The window/row_number
+formulation instead shuffles *every* row to its key partition, which is
+what loses at 100 TB whenever keys repeat. Ties are broken
+deterministically by the caller-supplied tiebreak columns (the reference
+leaves ties arbitrary — we must be hash-stable).
 
 LWW merge of N delta sets = unionByName + the same aggregate: one shuffle,
 order-independent (commutative), idempotent (re-merging a fixpoint is a
@@ -23,8 +30,10 @@ verified in tests/test_lww_properties.py.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,8 +50,10 @@ def latest_by_key(
     the timestamp; append unique tiebreakers for determinism).
     ``payload``: non-key columns to carry through.
 
-    Physical plan: partial hash-agg -> shuffle by keys -> final hash-agg
-    (max_by over a struct comparator); no global sort, no window buffer.
+    Physical plan: partial aggregate -> shuffle by keys -> final aggregate
+    (max_by over a struct comparator). The struct-typed buffer is not a
+    hash-aggregate buffer type, so both phases are SortAggregate, each
+    behind a per-partition (not global) sort on the keys; no window.
     """
     ordering = F.struct(*[F.col(c) for c in order])
     picked = F.max_by(F.struct(*[F.col(c) for c in payload]), ordering).alias("__r")
@@ -68,3 +79,41 @@ def lww_merge(
     for d in deltas:
         merged = merged.unionByName(d)
     return latest_by_key(merged, keys, order, payload)
+
+
+def latest_state_fn(
+    keys: Sequence[str], order: Sequence[str], payload: Sequence[str]
+):
+    """``applyInPandasWithState`` kernel of the same rule: per-key state
+    is the newest row's ``order`` + ``payload`` values (the state schema
+    lists them in that order, all numeric), and each micro-batch emits
+    keys + state. The ``order`` tuple is the deterministic tie-break the
+    reference lacks (its strict `>` timestamp compare keeps an arbitrary
+    replica on equal timestamps, SQLite3DBConnector.py:166).
+
+    The output schema is ``keys`` + the state schema. An update-mode
+    sink then holds one row per key per emitting micro-batch; since the
+    state only grows in ``order``, ``latest_by_key`` over the sink is the
+    final register."""
+    cols = [*order, *payload]
+    n_order = len(order)
+
+    def fold(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state
+    ) -> Iterator[pd.DataFrame]:
+        best = tuple(state.get) if state.exists else None
+        for pdf in pdfs:
+            # numpy lexsort argmax, not pandas sort_values: the per-group
+            # dispatch dominates either way (PLANS.md round 8), so this is
+            # a small constant win, not the lever (that was the
+            # state-partition width, see streaming.queries.STATE_WIDTH)
+            i = int(np.lexsort([pdf[c].to_numpy() for c in reversed(order)])[-1])
+            cand = tuple(pdf[c].to_numpy()[i].item() for c in cols)
+            if best is None or cand[:n_order] > best[:n_order]:
+                best = cand
+        state.update(best)
+        yield pd.DataFrame(
+            {c: [v] for c, v in zip([*keys, *cols], [*key, *best])}
+        )
+
+    return fold

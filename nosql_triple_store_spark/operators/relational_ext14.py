@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..session import pinned_confs
 from .triple import E_CTE
 from ..materialize import materialize
 
@@ -166,21 +167,6 @@ _BLOOM_CONFS = {
 }
 
 
-def _with_confs(spark: SparkSession, confs: dict[str, str]):
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    return old
-
-
-def _restore_confs(spark: SparkSession, old: dict[str, str | None]) -> None:
-    for k, v in old.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
-
 @register("q_join_bloom_runtime", oracle=_BLOOM_ORACLE)
 def q_join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join: revenue of line items belonging to
@@ -196,8 +182,7 @@ def q_join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ext14.py asserts the bloom is actually in the plan.
     Revenue rounds at 1dp (multiplied doubles are boundary-dense at
     2dp — the repo's probed rounding rule)."""
-    old = _with_confs(spark, _BLOOM_CONFS)
-    try:
+    with pinned_confs(spark, _BLOOM_CONFS):
         li = load_table(spark, sf_dir, "lineitem")
         orders = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -214,8 +199,6 @@ def q_join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .transform(materialize)
         )
-    finally:
-        _restore_confs(spark, old)
     return out
 
 

@@ -19,9 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
+from ..functions.lww import latest_by_key
 from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from ..scratch import build_once
+from ..session import pinned_confs
 from .sparql_queries import MINUS_ORACLE, SPARQL_MINUS
 from .triple import E_CTE
 
@@ -125,33 +127,24 @@ def q_source_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(base: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         ev.write.partitionBy("event_type").parquet(base)
-        latest = (
-            ev.filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(
-                F.max_by(
-                    F.struct("event_id", "ts", "value", "props"),
-                    F.struct("ts", "event_id"),
-                ).alias("__r")
-            )
-            .select(
-                F.col("__r.event_id").alias("event_id"),
-                F.col("__r.ts").alias("ts"),
-                "user_id",
-                F.col("__r.value").alias("value"),
-                F.col("__r.props").alias("props"),
-                F.lit("purchase").alias("event_type"),
-            )
+        latest = latest_by_key(
+            ev.filter(F.col("event_type") == "purchase"),
+            keys=["user_id"],
+            order=["ts", "event_id"],
+            payload=["event_id", "ts", "value", "props"],
+        ).select(
+            "event_id",
+            "ts",
+            "user_id",
+            "value",
+            "props",
+            F.lit("purchase").alias("event_type"),
         )
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        old = spark.conf.get(mode_key)
-        spark.conf.set(mode_key, "dynamic")
-        try:
+        dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        with pinned_confs(spark, dynamic):
             latest.write.mode("overwrite").partitionBy("event_type").parquet(
                 base
             )
-        finally:
-            spark.conf.set(mode_key, old)
 
     final = read_parquet(
         spark, build_once("partition_overwrite", sf_dir, write, sources=("events",))

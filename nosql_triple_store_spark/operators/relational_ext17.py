@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..session import pinned_confs
 from .graph_ext3 import _copurchase_edges
 from .relational_ext12 import csv_orders
 from .triple import E_CTE
@@ -114,12 +115,9 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # changed-count pass). The per-round aggregates are tiny, so the
     # loop pins a small shuffle width for its lifetime (a vanilla
     # session's default 200 partitions would cost ~200 empty tasks per
-    # round × ~10 rounds) and restores it after — same discipline as
-    # streaming.queries.drain.
-    shuffle_key = "spark.sql.shuffle.partitions"
-    old_shuffle = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "8")
-    try:
+    # round × ~10 rounds) and restores it after (session.pinned_confs,
+    # as streaming.queries.drain does).
+    with pinned_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
         dist = spark.createDataFrame([(int(source), 0)], "node long, dist long")
         frontier = dist
         frontier_rows = 1
@@ -166,8 +164,6 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"SSSP did not converge in {SSSP_ROUND_CAP} rounds"
             )
-    finally:
-        spark.conf.set(shuffle_key, old_shuffle)
     return dist
 
 

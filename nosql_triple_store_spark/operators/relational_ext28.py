@@ -19,7 +19,7 @@ Four operators a 100 TB training-data/lakehouse deployment runs daily:
 All four are single-pass window/aggregate plans: packing is a per-source
 prefix sum (one shuffle by source, ordered scan within), mixture is two
 partial-aggregable aggregates and a broadcast, as-of is one filtered LWW
-window, TWA is one lead() window + one aggregate. No UDFs anywhere.
+aggregate, TWA is one lead() window + one aggregate. No UDFs anywhere.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.lww import latest_by_key
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..operators.triple import E_CTE
 from ..registry import register
@@ -169,30 +170,26 @@ FROM ranked WHERE rn = 1
 def q_lww_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Register state AS OF a past instant (max event time − 7 days):
     time travel over the changelog. Filter events to ts ≤ cutoff, then
-    one LWW window — identical plan shape to q_lww_latest but
-    historical; this is the read Delta/Iceberg `VERSION AS OF` sugar
-    compiles to when versions are event-time based (the reference keeps
-    its full modification history for exactly this replay,
+    the same ``latest_by_key`` aggregate as q_lww_latest, over history;
+    this is the read Delta/Iceberg `VERSION AS OF` sugar compiles to
+    when versions are event-time based (the reference keeps its full
+    modification history for exactly this replay,
     SQLite3DBConnector.py:134-180).
 
     Scale: the cutoff is a 1-row broadcast (no driver round-trip); the
-    ts predicate prunes row groups via parquet min/max stats before the
-    window shuffle."""
+    cut filter runs below the partial aggregate, so only one row per key
+    and input partition is shuffled."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts", "value"
     )
     cut = ev.agg(
         (F.max("ts") - F.expr("INTERVAL 7 DAY")).alias("cutoff")
     )
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    return (
-        ev.crossJoin(F.broadcast(cut))
-        .filter(F.col("ts") <= F.col("cutoff"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id", "ts", "value")
+    return latest_by_key(
+        ev.crossJoin(F.broadcast(cut)).filter(F.col("ts") <= F.col("cutoff")),
+        keys=["user_id", "event_type"],
+        order=["ts", "event_id"],
+        payload=["event_id", "ts", "value"],
     )
 
 

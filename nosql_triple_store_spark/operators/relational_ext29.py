@@ -146,9 +146,10 @@ def q_window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _VACUUM_KEEP = 2
 _VACUUM_BATCHES = 4
-# memoized dispositions per sf_dir: vacuuming is destructive, so a
+# memoized dispositions per register path: vacuuming is destructive, so a
 # repeat invocation must report the ORIGINAL run (idempotent result),
-# not re-vacuum an already-trimmed register
+# not re-vacuum an already-trimmed register. A rewritten events table
+# builds a new register path, which is vacuumed afresh.
 _VACUUM_RESULTS: dict[str, list[tuple]] = {}
 
 
@@ -196,10 +197,9 @@ def q_maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "version string, disposition string, n_files int, "
         "had_bytes boolean, live_rows int"
     )
-    if sf_dir in _VACUUM_RESULTS:
-        return spark.createDataFrame(_VACUUM_RESULTS[sf_dir], schema)
-
     base = vacuum_register(spark, sf_dir)
+    if base in _VACUUM_RESULTS:
+        return spark.createDataFrame(_VACUUM_RESULTS[base], schema)
 
     vdirs = versions(base, "v")
     keep = set(vdirs[-_VACUUM_KEEP:])
@@ -220,7 +220,7 @@ def q_maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latest version must still read back after the vacuum
     n_live = read_register(spark, base).count()
     result = [(v, d, nf, hb, int(n_live)) for v, d, nf, hb in rows]
-    _VACUUM_RESULTS[sf_dir] = result
+    _VACUUM_RESULTS[base] = result
     return spark.createDataFrame(result, schema)
 
 

@@ -11,7 +11,7 @@ from ..plans.bgp import TRIPLE_SOURCES, triples_view
 from ..plans.sparql import compile_sparql_encoded
 from ..registry import register, register_layout
 from ..scratch import build_once
-from ..sources.dictionary import build_dictionary
+from ..sources.dictionary import build_dictionary, encode_triples
 from .sparql_queries import SPARQL_STAR, STAR_ORACLE
 
 
@@ -271,52 +271,13 @@ def encoded_store(spark: SparkSession, sf_dir: str):
     d = read_parquet(
         spark, build_once("bgp_dict", sf_dir, write_dict, sources=TRIPLE_SOURCES)
     )
-    enc = build_once(
-        "bgp_enc",
-        sf_dir,
-        lambda out: _encode_triples(spark, sf_dir, d).write.parquet(out),
-        sources=TRIPLE_SOURCES,
-    )
+
+    def write_enc(out: str) -> None:
+        enc = encode_triples(triples_view(spark, sf_dir), d)
+        enc.toDF("s", "p", "o").write.parquet(out)
+
+    enc = build_once("bgp_enc", sf_dir, write_enc, sources=TRIPLE_SOURCES)
     return d, read_parquet(spark, enc)
-
-
-def _encode_triples(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
-    """The triples view with s/p/o replaced by their dictionary ids."""
-    t = triples_view(spark, sf_dir)
-    return (
-        t.join(
-            F.broadcast(
-                d.select(
-                    F.col("term").alias("s"),
-                    F.col("term_id").alias("s_id"),
-                )
-            ),
-            "s",
-        )
-        .join(
-            F.broadcast(
-                d.select(
-                    F.col("term").alias("p"),
-                    F.col("term_id").alias("p_id"),
-                )
-            ),
-            "p",
-        )
-        .join(
-            F.broadcast(
-                d.select(
-                    F.col("term").alias("o"),
-                    F.col("term_id").alias("o_id"),
-                )
-            ),
-            "o",
-        )
-        .select(
-            F.col("s_id").alias("s"),
-            F.col("p_id").alias("p"),
-            F.col("o_id").alias("o"),
-        )
-    )
 
 
 @register("q_bgp_star_encoded", oracle=STAR_ORACLE)

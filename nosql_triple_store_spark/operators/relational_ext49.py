@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.lww import latest_by_key
 from ..registry import register
 from .graph_ext7 import _DIGRAPH_SQL, _walk_step_sql, q_graph_random_walk
 from .triple import E_CTE
@@ -213,7 +214,7 @@ def q_maintenance_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare q_lww_tombstone).
 
     Scale: one full outer join on the key — the canonical MERGE plan;
-    both sides are already per-key aggregates. On disk this pairs with
+    both sides are already per-key ``latest_by_key`` aggregates. On disk this pairs with
     q_source_txnlog_snapshot: MERGE writes a new data file + a
     remove/add commit, readers replay the log.
     """
@@ -222,18 +223,17 @@ def q_maintenance_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.round(F.col("value") * 100).cast("long")
 
     def latest(side: DataFrame) -> DataFrame:
-        return side.groupBy("user_id").agg(
-            F.max_by(
-                F.struct(
-                    F.col("event_type").alias("status"),
-                    cents.alias("cents"),
-                ),
-                F.struct("ts", "event_id"),
-            ).alias("__m")
-        ).select(
-            "user_id",
-            F.col("__m.status").alias("status"),
-            F.col("__m.cents").alias("cents"),
+        return latest_by_key(
+            side.select(
+                "user_id",
+                "ts",
+                "event_id",
+                F.col("event_type").alias("status"),
+                cents.alias("cents"),
+            ),
+            keys=["user_id"],
+            order=["ts", "event_id"],
+            payload=["status", "cents"],
         )
 
     target = latest(ev.filter(F.col("ts").cast("date") < split))

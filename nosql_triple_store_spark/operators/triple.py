@@ -132,10 +132,12 @@ SELECT user_id, event_type, event_id, ts, value FROM ranked WHERE rn = 1
 def q_lww_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2/R3 read view: current LWW register state = newest row per key.
 
-    max_by aggregate (partial+final hash agg) rather than window/row_number:
-    one shuffle, map-side combine, no per-partition sort — the formulation
-    that survives 100 TB. Ties broken by event_id DESC (the reference's
-    strict `>` compare leaves ties arbitrary; we need hash-stable output).
+    ``latest_by_key``: a max_by aggregate rather than window/row_number.
+    One shuffle with map-side combine: partial and final SortAggregate,
+    each behind a per-partition sort on the keys (functions/lww.py); the
+    window would shuffle every row. This is the formulation that survives
+    100 TB. Ties broken by event_id DESC (the reference's strict `>`
+    compare leaves ties arbitrary; we need hash-stable output).
     """
     events = load_table(spark, sf_dir, "events")
     return latest_by_key(

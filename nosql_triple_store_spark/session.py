@@ -12,8 +12,10 @@ The same builder settings are intended for a 1000-executor cluster; only
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -98,6 +100,24 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
         except Exception:  # pragma: no cover - static conf on odd builds
             pass
     _ship_package(spark)
+
+
+@contextlib.contextmanager
+def pinned_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then put every key back
+    as it was: its old value, or unset when it had none. Restores also
+    when the block raises."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -30,12 +30,13 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import read_parquet
+from ..functions.lww import latest_by_key
 from ..registry import register
 from ..scratch import build_once, ckpt_tmp, scratch_tmp
-from ..session import ensure_runtime_confs
+from ..session import ensure_runtime_confs, pinned_confs
 from ..sources.compaction import publish, publish_file, versions
 from ..operators.eventtime import _SLIDING_ORACLE as _BATCH_SLIDING_ORACLE
-from ..operators.triple import E_CTE
+from ..operators.triple import _LWW_LATEST_ORACLE, E_CTE
 
 # Explicit schema: file streams require one. The fixture's ts column has
 # shipped in two physical representations across driver generations —
@@ -118,18 +119,14 @@ def drain(writer: DataStreamWriter, width: int | None) -> None:
     give it a fresh checkpoint, trigger availableNow, wait, restore.
     Every streaming query in the engine is started and awaited here."""
     spark = writer._spark  # the writer's session; pyspark has no public getter
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    if width is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
+    pin = {} if width is None else {"spark.sql.shuffle.partitions": str(width)}
+    with pinned_confs(spark, pin):
         (
             writer.option("checkpointLocation", ckpt_tmp("ckpt_"))
             .trigger(availableNow=True)
             .start()
             .awaitTermination()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def drain_to_memory(
@@ -202,37 +199,19 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
 
 
-_STREAM_LWW_ORACLE = f"""
-{E_CTE},
-ranked AS (
-  SELECT user_id, event_type, event_id, ts, value,
-         row_number() OVER (PARTITION BY user_id, event_type
-                            ORDER BY ts DESC, event_id DESC) AS rn
-  FROM e)
-SELECT user_id, event_type, event_id, ts, value FROM ranked WHERE rn = 1
-"""
-
-
-@register("q_stream_lww", oracle=_STREAM_LWW_ORACLE)
+@register("q_stream_lww", oracle=_LWW_LATEST_ORACLE)
 def q_stream_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LWW register as a *continuously maintained* streaming state:
-    max_by aggregation keyed (user_id, event_type) in complete mode —
-    the reference's anti-entropy merge (R3) becomes a standing query.
-    LWW's commutativity/idempotence is what makes arbitrary micro-batch
-    boundaries safe: any arrival order converges to the same register."""
-    ev = _stream_events(spark, sf_dir)
-    ordering = F.struct(F.col("ts"), F.col("event_id"))
-    payload = F.struct(F.col("event_id"), F.col("ts"), F.col("value"))
-    agg = (
-        ev.groupBy("user_id", "event_type")
-        .agg(F.max_by(payload, ordering).alias("__r"))
-        .select(
-            "user_id",
-            "event_type",
-            F.col("__r.event_id").alias("event_id"),
-            F.col("__r.ts").alias("ts"),
-            F.col("__r.value").alias("value"),
-        )
+    the batch ``latest_by_key`` aggregate keyed (user_id, event_type) in
+    complete mode — the reference's anti-entropy merge (R3) becomes a
+    standing query. LWW's commutativity/idempotence is what makes
+    arbitrary micro-batch boundaries safe: any arrival order converges
+    to the same register."""
+    agg = latest_by_key(
+        _stream_events(spark, sf_dir),
+        keys=["user_id", "event_type"],
+        order=["ts", "event_id"],
+        payload=["event_id", "ts", "value"],
     )
     out = drain_to_memory(agg, "complete")
     return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))

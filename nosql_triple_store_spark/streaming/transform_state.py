@@ -13,39 +13,49 @@ q_stream_lww expresses the same semantics as a builtin max_by aggregation
 (always prefer builtins); these operators cover the *custom stateful
 operator* surface — arbitrary per-key state machines (sessionization with
 side conditions, CDC normalization, enrich-with-history) that builtin
-aggregates cannot express. Two implementations:
+aggregates cannot express. Three queries:
 
-- ``q_stream_lww_state``: ``applyInPandasWithState`` (Spark 3.4+ API) —
-  always registered, DuckDB-oracle-checked.
+- ``q_stream_lww_state`` and ``q_stream_tombstone``: ``applyInPandasWithState``
+  (Spark 3.4+ API) running ``functions.lww.latest_state_fn``, the one
+  per-key LWW kernel; the tombstone register carries a ``deleted`` flag as
+  one more state column. Always registered, DuckDB-oracle-checked.
 - ``q_stream_transform_state``: ``transformWithStateInPandas`` (Spark 4
   API, typed ValueState + timers). Its state-server protocol needs the
-  ``google.protobuf`` runtime, which this container lacks, so it is
-  registered ONLY when protobuf imports (the driver never sees a query
-  that cannot run here; on a protobuf-equipped cluster it registers and
-  is oracle-checked identically). The plumbing — grouping, state schema,
-  update flow, output compaction — is shared with the runnable variant.
+  ``google.protobuf`` runtime, so it is registered ONLY when protobuf
+  imports (the driver never sees a query that cannot run; on a
+  protobuf-equipped cluster it registers and is oracle-checked
+  identically). Its processor keeps its own fold because it must stay
+  closure-local (``_make_lww_processor``); the input projection, the
+  state schema and the final compaction are shared.
+
+Every query compacts its update-mode sink with ``functions.lww.latest_by_key``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
+from ..functions.lww import latest_by_key, latest_state_fn
+from ..operators.relational_ext30 import _TOMB_ORACLE
 from ..operators.triple import E_CTE
 from ..registry import register, register_skip
+from ..session import pinned_confs
 from ..widths import cluster_cores
 from .queries import _stream_events, drain_to_memory
 
+_KEYS = ["user_id", "event_type"]
+_ORDER = ["ts_us", "event_id"]
 _STATE_SCHEMA = "ts_us long, event_id long, value double"
 _OUT_SCHEMA = (
     "user_id long, event_type string, event_id long, ts_us long, value double"
 )
+_REGISTER_COLS = ["user_id", "event_type", "event_id", "ts", "value"]
 
 _LWW_STATE_ORACLE = f"""
 {E_CTE},
@@ -70,59 +80,28 @@ def _lww_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _compact_register(sink: DataFrame) -> DataFrame:
+def _compact_register(sink: DataFrame, payload: list[str]) -> DataFrame:
     """Update-mode sinks hold one row per key per emitting micro-batch;
-    the register is monotone in (ts_us, event_id), so the lexicographic
-    max IS the final state."""
-    ordering = F.struct(F.col("ts_us"), F.col("event_id"))
-    payload = F.struct(F.col("event_id"), F.col("ts_us"), F.col("value"))
-    return (
-        sink.groupBy("user_id", "event_type")
-        .agg(F.max_by(payload, ordering).alias("__r"))
-        .select(
-            "user_id",
-            "event_type",
-            F.col("__r.event_id").alias("event_id"),
-            F.timestamp_micros(F.col("__r.ts_us"))
-            .cast("timestamp_ntz")
-            .alias("ts"),
-            F.col("__r.value").alias("value"),
-        )
+    the register is monotone in (ts_us, event_id), so the newest row per
+    key IS the final state. ``ts`` comes back as timestamp_ntz."""
+    latest = latest_by_key(sink, _KEYS, _ORDER, ["event_id", "ts_us", *payload])
+    return latest.withColumn(
+        "ts", F.timestamp_micros(F.col("ts_us")).cast("timestamp_ntz")
     )
 
 
-def _lww_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState kernel: keep the (ts_us, event_id)-
-    lexicographic-max event per key. The tuple order is the deterministic
-    tie-break the reference lacks (its strict `>` timestamp compare keeps
-    an arbitrary replica on equal timestamps,
-    SQLite3DBConnector.py:166)."""
-    user_id, event_type = key
-    best = tuple(state.get) if state.exists else None
-    for pdf in pdfs:
-        # numpy lexsort argmax, not pandas sort_values — avoids pandas
-        # sort machinery per call; profiling (PLANS.md round 8) shows
-        # the per-GROUP applyInPandas dispatch dominates either way,
-        # so this is a small constant win, not the lever (the lever
-        # was state-partition width, see queries.STATE_WIDTH)
-        ts = pdf["ts_us"].to_numpy()
-        eid = pdf["event_id"].to_numpy()
-        i = int(np.lexsort((eid, ts))[-1])
-        cand = (int(ts[i]), int(eid[i]), float(pdf["value"].to_numpy()[i]))
-        if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-            best = cand
-    state.update(best)
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "event_type": [event_type],
-            "event_id": [best[1]],
-            "ts_us": [best[0]],
-            "value": [best[2]],
-        }
+def _apply_lww_state(writes: DataFrame, payload: list[str], state_schema: str):
+    """Drain ``writes`` through the per-key LWW kernel and compact the
+    sink; the state schema is ``_ORDER`` + ``payload``."""
+    out = writes.groupBy(*_KEYS).applyInPandasWithState(
+        latest_state_fn(_KEYS, _ORDER, payload),
+        outputStructType=f"user_id long, event_type string, {state_schema}",
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    sink = drain_to_memory(out, "update", cluster_cores(writes.sparkSession))
+    return _compact_register(sink, payload)
 
 
 @register("q_stream_lww_state", oracle=_LWW_STATE_ORACLE)
@@ -133,18 +112,9 @@ def q_stream_lww_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted output equals the batch window dedup the oracle runs.
     State is O(distinct keys) — the managed, shuffled, fault-tolerant
     version of the reference's process-local dict."""
-    out = _lww_inputs(spark, sf_dir).groupBy(
-        "user_id", "event_type"
-    ).applyInPandasWithState(
-        _lww_state_fn,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _compact_register(
-        drain_to_memory(out, "update", cluster_cores(spark))
-    )
+    return _apply_lww_state(
+        _lww_inputs(spark, sf_dir), ["value"], _STATE_SCHEMA
+    ).select(*_REGISTER_COLS)
 
 
 def _protobuf_available() -> bool:
@@ -214,18 +184,15 @@ def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    provider = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        )
+    }
+    with pinned_confs(spark, provider):
         sink = drain_to_memory(out, "update", cluster_cores(spark))
-    finally:
-        spark.conf.set(provider_key, old)
-    return _compact_register(sink)
+    return _compact_register(sink, ["value"]).select(*_REGISTER_COLS)
 
 
 if _protobuf_available():  # pragma: no cover - container lacks protobuf
@@ -250,74 +217,19 @@ else:
 # --- q_stream_tombstone ---------------------------------------------------
 
 _TOMB_STATE_SCHEMA = "ts_us long, event_id long, value double, deleted long"
-_TOMB_OUT_SCHEMA = (
-    "user_id long, event_type string, event_id long, ts_us long, "
-    "value double, deleted long"
-)
-
-_STREAM_TOMB_ORACLE = f"""
-{E_CTE},
-writes AS (
-  SELECT user_id, event_type, event_id, ts, value, FALSE AS deleted
-  FROM e
-  UNION ALL
-  SELECT user_id, event_type, event_id, ts + INTERVAL 30 MINUTE,
-         CAST(NULL AS DOUBLE), TRUE
-  FROM e WHERE event_id % 7 = 0),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-                               ORDER BY ts DESC, event_id DESC) AS rn
-  FROM writes)
-SELECT user_id, event_type, event_id, ts, value
-FROM ranked WHERE rn = 1 AND NOT deleted
-"""
 
 
-def _tomb_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Stateful LWW where a tombstone is just another timestamped write:
-    the register keeps the lexicographic-max (ts_us, event_id) row
-    INCLUDING deletes — dropping tombstones before the merge would let
-    an older concurrent update resurrect the key (same invariant as the
-    batch twin, property-tested in tests/test_ext30.py)."""
-    user_id, event_type = key
-    best = tuple(state.get) if state.exists else None
-    for pdf in pdfs:
-        # numpy lexsort argmax — see _lww_state_fn for the per-call
-        # pandas-overhead rationale
-        ts = pdf["ts_us"].to_numpy()
-        eid = pdf["event_id"].to_numpy()
-        i = int(np.lexsort((eid, ts))[-1])
-        val = pdf["value"].to_numpy()[i]
-        cand = (
-            int(ts[i]),
-            int(eid[i]),
-            float("nan") if pd.isna(val) else float(val),
-            int(pdf["deleted"].to_numpy()[i]),
-        )
-        if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-            best = cand
-    state.update(best)
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "event_type": [event_type],
-            "event_id": [best[1]],
-            "ts_us": [best[0]],
-            "value": [best[2]],
-            "deleted": [best[3]],
-        }
-    )
-
-
-@register("q_stream_tombstone", oracle=_STREAM_TOMB_ORACLE)
+@register("q_stream_tombstone", oracle=_TOMB_ORACLE)
 def q_stream_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_lww_tombstone: the stateful register merges
     updates AND tombstones (deletes for event_id % 7 == 0, stamped 30
     minutes after the deleted write — same synthesis as the batch twin)
-    through one applyInPandasWithState operator; the read view filters
-    deleted keys only AFTER the final state compaction. State stays
+    through one applyInPandasWithState operator, the same LWW kernel with
+    ``deleted`` as one more state column. The register keeps the newest
+    row INCLUDING deletes — dropping tombstones before the merge would let
+    an older concurrent update resurrect the key (same invariant as the
+    batch twin, property-tested in tests/test_ext30.py) — so the read view
+    filters deleted keys only AFTER the final compaction. State stays
     O(distinct keys) with one extra flag column."""
     ev = _lww_inputs(spark, sf_dir)
     writes = ev.withColumn("deleted", F.lit(0).cast("long")).unionByName(
@@ -330,30 +242,5 @@ def q_stream_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("long").alias("deleted"),
         )
     )
-    out = writes.groupBy("user_id", "event_type").applyInPandasWithState(
-        _tomb_state_fn,
-        outputStructType=_TOMB_OUT_SCHEMA,
-        stateStructType=_TOMB_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = drain_to_memory(out, "update", cluster_cores(spark))
-    ordering = F.struct(F.col("ts_us"), F.col("event_id"))
-    payload = F.struct(
-        F.col("event_id"), F.col("ts_us"), F.col("value"), F.col("deleted")
-    )
-    final = (
-        sink.groupBy("user_id", "event_type")
-        .agg(F.max_by(payload, ordering).alias("__r"))
-        .filter(F.col("__r.deleted") == 0)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("__r.event_id").alias("event_id"),
-            F.timestamp_micros(F.col("__r.ts_us"))
-            .cast("timestamp_ntz")
-            .alias("ts"),
-            F.col("__r.value").alias("value"),
-        )
-    )
-    return final
+    reg = _apply_lww_state(writes, ["value", "deleted"], _TOMB_STATE_SCHEMA)
+    return reg.filter(F.col("deleted") == 0).select(*_REGISTER_COLS)

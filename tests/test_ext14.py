@@ -9,11 +9,10 @@ from nosql_triple_store_spark.operators.relational_ext14 import (
     _BLOOM_CONFS,
     _PQ_K,
     _SESSION_US,
-    _restore_confs,
-    _with_confs,
     q_interval_union,
     q_vector_pq,
 )
+from nosql_triple_store_spark.session import pinned_confs
 
 from .conftest import SF_DIR
 
@@ -22,8 +21,7 @@ def test_bloom_filter_injected(spark):
     """With the demo confs pinned, the optimized plan must contain the
     runtime bloom filter (might_contain probe over a bloom_filter_agg
     subquery) on the lineitem side."""
-    old = _with_confs(spark, _BLOOM_CONFS)
-    try:
+    with pinned_confs(spark, _BLOOM_CONFS):
         li = load_table(spark, SF_DIR, "lineitem")
         orders = load_table(spark, SF_DIR, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -32,8 +30,6 @@ def test_bloom_filter_injected(spark):
             "l_returnflag"
         ).agg(F.count(F.lit(1)).alias("n"))
         plan = j._jdf.queryExecution().optimizedPlan().toString().lower()
-    finally:
-        _restore_confs(spark, old)
     assert "bloom" in plan or "might_contain" in plan, plan[:3000]
 
 

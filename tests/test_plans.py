@@ -5,6 +5,8 @@ iterate until it's the plan you'd want')."""
 
 from __future__ import annotations
 
+import pytest
+
 from nosql_triple_store_spark.registry import all_specs
 
 from .conftest import SF_DIR
@@ -49,8 +51,11 @@ def test_topk_uses_heap_not_global_sort(spark):
     assert "Exchange rangepartitioning" not in p
 
 
-def test_lww_latest_is_partial_aggregate_not_window(spark):
-    p = _plan(spark, "q_lww_latest")
+@pytest.mark.parametrize(
+    "name", ["q_lww_latest", "q_lww_asof", "q_maintenance_merge_upsert"]
+)
+def test_lww_latest_is_partial_aggregate_not_window(spark, name):
+    p = _plan(spark, name)
     assert "Window" not in p  # max_by agg formulation, not row_number
     # map-side combine before the shuffle (partial_max_by), final after
     assert "partial_max_by" in p
@@ -113,11 +118,10 @@ def test_pack_and_twa_reuse_window_partitioning(spark):
 
 def test_lww_asof_broadcast_cutoff_and_group_limit(spark):
     """Time travel must broadcast the 1-row cutoff (no driver
-    round-trip) and push the rank-1 filter below the shuffle
-    (WindowGroupLimit) like every other LWW window."""
+    round-trip); the LWW fold itself is pinned by
+    test_lww_latest_is_partial_aggregate_not_window."""
     p = _plan(spark, "q_lww_asof")
     assert "BroadcastExchange" in p
-    assert "WindowGroupLimit" in p
 
 
 def test_mixture_weights_broadcasts_totals(spark):

@@ -132,3 +132,31 @@ def test_rewritten_source_is_not_served_stale(spark, tmp_path):
     pq.write_table(t.set_column(idx, t.schema.field(idx), changed), path)
     want = oracle()
     assert same(answer(), want), want
+
+
+def test_vacuum_answers_for_the_rewritten_register(spark, tmp_path):
+    """q_maintenance_vacuum memoizes its destructive run per register:
+    after the events table changes, it vacuums the new register rather
+    than replaying the old answer."""
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    spec = all_specs()["q_maintenance_vacuum"]
+    path = sf / "events.parquet"
+
+    def live_rows() -> set:
+        return {r["live_rows"] for r in spec.fn(spark, str(sf)).collect()}
+
+    def n_keys() -> int:
+        con = duckdb.connect()
+        (n,) = con.execute(
+            "SELECT COUNT(*) FROM (SELECT DISTINCT user_id, event_type "
+            f"FROM read_parquet('{path}'))"
+        ).fetchone()
+        con.close()
+        return n
+
+    assert live_rows() == {n_keys()}
+    t = pq.read_table(path)
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t["user_id"], 1), 0)), path)
+    want = n_keys()
+    assert live_rows() == {want}, want

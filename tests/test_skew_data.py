@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nosql_triple_store_spark.registry import all_specs
+from nosql_triple_store_spark.session import pinned_confs
 
 from .conftest import SF_DIR
 
@@ -30,25 +31,11 @@ _SKEW_CONFS = {
 }
 
 
-def _with_confs(spark, confs):
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    return old
-
-
 def test_aqe_splits_the_hot_partition(spark):
-    old = _with_confs(spark, _SKEW_CONFS)
-    try:
+    with pinned_confs(spark, _SKEW_CONFS):
         df = SPECS["q_join_skewed"].fn(spark, SF_DIR)
         rows = df.collect()  # materialize so AQE finalizes the plan
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "SortMergeJoin" in plan, "merge hint must defeat broadcast"
     # the skew-split metric: the adaptive shuffle read marks the hot
     # partition's reads as skewed (n skewed partitions / m splits)

@@ -14,7 +14,6 @@ from .test_build_once_guard import _modules
 ALLOWED_TRIPLES_VIEW = {
     # the encoded-store build: dictionary and encoded triples
     ("operators/relational_ext3.py", "encoded_store"),
-    ("operators/relational_ext3.py", "_encode_triples"),
     # iterative BFS over the undirected location edges
     ("operators/graph_ext.py", "q_graph_bfs"),
     # min_hops of a bounded path has no SPARQL 1.1 form
