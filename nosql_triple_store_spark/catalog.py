@@ -27,6 +27,13 @@ while the input is unchanged:
   so versioned register dirs cannot grow it without bound. There is no
   lock: two threads that miss together each read once, and the last
   store wins.
+- **Schema given**: ``read_parquet(spark, *paths, schema=st)`` resolves a
+  miss through ``spark.read.schema(st).parquet(...)``, a file listing
+  with no footer-inference job. It is for files whose schema the engine
+  knows because it wrote them (the register's ``vN``, ``dN`` and
+  changelog reads, sources/compaction.py). Key, fingerprint and LRU are
+  the same, so the entry it stores serves later calls with or without a
+  schema.
 
 Scale notes (100 TB): loading stays a plain parquet scan so Catalyst keeps
 predicate pushdown / column pruning / partition pruning. The only transform
@@ -46,6 +53,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .scratch import path_fingerprint
 from .session import ensure_runtime_confs
@@ -70,9 +78,13 @@ BROADCAST_TABLES = {"region", "nation"}
 READ_CACHE_SIZE = 256
 
 
-def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: StructType | None = None
+) -> DataFrame:
     """``spark.read.parquet(*paths)``, resolved once per session while the
-    files under ``paths`` are unchanged (see the module docstring)."""
+    files under ``paths`` are unchanged (see the module docstring). A
+    ``schema`` replaces footer inference on a miss; pass only the schema
+    the files were written with."""
     ensure_runtime_confs(spark)
     key = tuple(os.path.abspath(p) for p in paths)
     fp = tuple(path_fingerprint(p) for p in key)
@@ -87,7 +99,8 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
         with contextlib.suppress(KeyError):
             cache.move_to_end(key)
         return hit[1]
-    df = spark.read.parquet(*paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(*paths)
     cache.pop(key, None)
     cache[key] = (fp, df)
     with contextlib.suppress(KeyError):

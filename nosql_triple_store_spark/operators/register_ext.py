@@ -47,8 +47,8 @@ def q_register_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic mid-history point both engines compute identically
     (exact integer µs); the oracle is the LWW window over events
     filtered at the same cut. The only driver-side value is the scalar
-    T. At scale the fold prunes delta files by their ts_us min/max
-    footers before shuffling anything."""
+    T. The cut is pushed into the delta scans; what it can prune is in
+    ``read_register_asof``."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",

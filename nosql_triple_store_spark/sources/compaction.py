@@ -19,12 +19,20 @@ the streaming sinks, the standing indexes):
 A register is ``d000001, v000001, d000002, v000002, …``: ``dN`` is the
 raw delta (the changelog time travel reads), ``vN`` the LWW state after
 it. ``compact`` publishes ``d{n+1}`` and then ``v{n+1}``; the version
-is the commit point. A ``d{n+1}`` without ``v{n+1}`` is an orphan of a
-failed compaction: ``read_register_asof`` ignores it and the next
-``compact`` (or ``init_register``) replaces it, so re-running a failed
-compaction converges. At 100 TB, partition the version dirs by key
-range so a compaction shuffles only touched ranges (delta keys prune
-via dynamic partition pruning).
+is the commit point. ``vN`` is folded from ``dN`` as read back from
+disk, so the delta is evaluated once (a micro-batch or an in-memory
+list is not recomputed) and ``vN`` is exactly LWW(``vN-1`` ∪ the
+changelog entry time travel folds). Both reads resolve from the schema
+just written (``catalog.read_parquet(..., schema=)``), and ``vN`` enters
+the read cache as it is published, so the next ``compact`` and
+``read_register`` find it resolved. A ``d{n+1}`` without ``v{n+1}`` is
+an orphan of a failed compaction: ``read_register_asof`` ignores it and
+the next ``compact`` (or ``init_register``) replaces it, so re-running a
+failed compaction converges. A writer that finds either name taken by
+another raises ``FileExistsError`` instead of reporting a version it did
+not write. At 100 TB, partition the version dirs by key range so a
+compaction shuffles only touched ranges (delta keys prune via dynamic
+partition pruning).
 """
 
 from __future__ import annotations
@@ -33,6 +41,7 @@ import glob
 import os
 import re
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,16 +111,27 @@ def read_register(spark: SparkSession, base_dir: str) -> DataFrame:
 
 
 def _commit(
-    base_dir: str, n: int, delta: DataFrame, state: DataFrame
+    spark: SparkSession,
+    base_dir: str,
+    n: int,
+    delta: DataFrame,
+    fold: Callable[[DataFrame], DataFrame],
 ) -> str:
-    """Publish ``d{n}`` then ``v{n}``, first dropping an orphan ``d{n}``
-    that a failed attempt left without its version."""
+    """Publish ``d{n}``, then ``v{n}`` = ``fold(d{n} read back)``, first
+    dropping an orphan ``d{n}`` that a failed attempt left without its
+    version. Raises FileExistsError when another writer holds either
+    name, so the caller can retry with the next number."""
     delta_dir = os.path.join(base_dir, f"d{n:06d}")
     out = os.path.join(base_dir, f"v{n:06d}")
-    if not os.path.exists(out):
-        shutil.rmtree(delta_dir, ignore_errors=True)
-    publish(delta, delta_dir)
-    publish(state, out)
+    if os.path.exists(out):
+        raise FileExistsError(f"register version {out} already exists")
+    shutil.rmtree(delta_dir, ignore_errors=True)
+    if not publish(delta, delta_dir):
+        raise FileExistsError(f"register delta {delta_dir} already exists")
+    state = fold(read_parquet(spark, delta_dir, schema=delta.schema))
+    if not publish(state, out):
+        raise FileExistsError(f"register version {out} already exists")
+    read_parquet(spark, out, schema=state.schema)
     return out
 
 
@@ -123,7 +143,13 @@ def init_register(
     if latest_version_path(base_dir) is not None:
         raise FileExistsError(f"register already exists under {base_dir}")
     payload = [c for c in df.columns if c not in keys]
-    return _commit(base_dir, 1, df, lww_merge(df, [], keys, order, payload))
+    return _commit(
+        df.sparkSession,
+        base_dir,
+        1,
+        df,
+        lambda d: lww_merge(d, [], keys, order, payload),
+    )
 
 
 def read_register_asof(
@@ -142,18 +168,28 @@ def read_register_asof(
     up to the latest version; an orphan delta is not committed)
     filtered to ``asof_col <= T`` through the same LWW aggregate as
     compaction — commutative/idempotent, hence exact regardless of how
-    updates were batched into versions. At 100 TB the delta dirs are
-    key-range partitioned like the versions and the filter prunes whole
-    delta files via their min/max footers (the plain-Spark analog of
+    updates were batched into versions (the plain-Spark analog of
     Delta/Iceberg `VERSION AS OF`/`TIMESTAMP AS OF` reads, SURVEY §1.5;
     reference analog: report.pdf §2.0.1 state-based objects —
-    reconstructing any historical state from retained updates)."""
+    reconstructing any historical state from retained updates).
+
+    The delta dirs are written as the batches arrived: unpartitioned and
+    unsorted. The ``asof_col`` cut is pushed into the parquet scan, but a
+    delta's row groups each span most of its time range, so their min/max
+    statistics rarely skip one, and a key-bound read scans every delta.
+    A key-range layout (deltas partitioned by key range, sorted by
+    ``asof_col`` within a range) would let a key-bound read open only its
+    range and an early cut skip row groups. The delta tuple resolves with
+    the schema of ``d000001`` (the file footer inference picks too), so
+    once that dir is cached a new changelog tuple costs a file listing
+    and no job."""
     latest = latest_version_path(base_dir)
     top = _number(latest) if latest else 0
     deltas = [d for d in versions(base_dir, "d") if _number(d) <= top]
     if not deltas:
         raise FileNotFoundError(f"no retained deltas under {base_dir}")
-    log = read_parquet(spark, *deltas)
+    schema = read_parquet(spark, deltas[0]).schema
+    log = read_parquet(spark, *deltas, schema=schema)
     col = asof_col or order[0]
     payload = [c for c in log.columns if c not in keys]
     return latest_by_key(
@@ -176,6 +212,10 @@ def compact(
         return init_register(delta, base_dir, keys, order)
     current = read_parquet(spark, current_path)
     payload = [c for c in current.columns if c not in keys]
-    delta = delta.select(*current.columns)
-    merged = lww_merge(current, [delta], keys, order, payload)
-    return _commit(base_dir, _number(current_path) + 1, delta, merged)
+    return _commit(
+        spark,
+        base_dir,
+        _number(current_path) + 1,
+        delta.select(*current.columns),
+        lambda d: lww_merge(current, [d], keys, order, payload),
+    )

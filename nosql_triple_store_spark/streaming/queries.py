@@ -407,19 +407,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("hr", F.col("hr").cast("timestamp_ntz"))
 
 
-@register(
-    "q_stream_compact",
-    oracle=f"""
-{E_CTE},
-ranked AS (
-  SELECT user_id, event_type, event_id, ts, value,
-         row_number() OVER (PARTITION BY user_id, event_type
-                            ORDER BY ts DESC, event_id DESC) AS rn
-  FROM e)
-SELECT user_id, event_type, event_id, ts, value
-FROM ranked WHERE rn = 1
-""",
-)
+@register("q_stream_compact", oracle=_LWW_LATEST_ORACLE)
 def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming write path END-TO-END: foreachBatch drives the
     versioned on-disk register (sources/compaction.py) — each

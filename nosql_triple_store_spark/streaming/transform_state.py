@@ -43,7 +43,7 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..functions.lww import latest_by_key, latest_state_fn
 from ..operators.relational_ext30 import _TOMB_ORACLE
-from ..operators.triple import E_CTE
+from ..operators.triple import _LWW_LATEST_ORACLE
 from ..registry import register, register_skip
 from ..session import pinned_confs
 from ..widths import cluster_cores
@@ -56,16 +56,6 @@ _OUT_SCHEMA = (
     "user_id long, event_type string, event_id long, ts_us long, value double"
 )
 _REGISTER_COLS = ["user_id", "event_type", "event_id", "ts", "value"]
-
-_LWW_STATE_ORACLE = f"""
-{E_CTE},
-r AS (
-  SELECT user_id, event_type, event_id, ts, value,
-         row_number() OVER (PARTITION BY user_id, event_type
-                            ORDER BY ts DESC, event_id DESC) AS rn
-  FROM e)
-SELECT user_id, event_type, event_id, ts, value FROM r WHERE rn = 1
-"""
 
 
 def _lww_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,7 +94,7 @@ def _apply_lww_state(writes: DataFrame, payload: list[str], state_schema: str):
     return _compact_register(sink, payload)
 
 
-@register("q_stream_lww_state", oracle=_LWW_STATE_ORACLE)
+@register("q_stream_lww_state", oracle=_LWW_LATEST_ORACLE)
 def q_stream_lww_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LWW register as a custom stateful operator (module docstring):
     per-(user_id, event_type) register state updated newest-wins by each
@@ -196,7 +186,7 @@ def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 if _protobuf_available():  # pragma: no cover - container lacks protobuf
-    register("q_stream_transform_state", oracle=_LWW_STATE_ORACLE)(
+    register("q_stream_transform_state", oracle=_LWW_LATEST_ORACLE)(
         q_stream_transform_state
     )
 else:

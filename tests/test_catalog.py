@@ -1,13 +1,15 @@
 """The parquet read cache (catalog.read_parquet): one resolve per session
 and input state, fresh rows after a rewrite, no sharing across sessions,
-a bounded LRU — and a guard that repeated point reads and SPARQL requests
-resolve nothing again."""
+a bounded LRU — and guards that repeated point reads and SPARQL requests
+resolve nothing again, and that what the register just wrote is never
+schema-inferred again."""
 
 from __future__ import annotations
 
 import shutil
 import sys
 import threading
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -34,6 +36,25 @@ def parquet_reads(monkeypatch):
 
     monkeypatch.setattr(DataFrameReader, "parquet", counted)
     return calls
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(build) -> (result, n)``: the Spark jobs ``build()`` ran,
+    counted through a job group as perfbench's tracer does."""
+    sc = spark.sparkContext
+
+    def run(build):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture
@@ -85,6 +106,44 @@ def test_read_register_sees_compacted_version(spark, tmp_path, parquet_reads):
     compaction.compact(spark, base, delta, keys, order)
     after = compaction.read_register(spark, base)
     assert sorted(map(tuple, after.collect())) == [(1, 20, "x"), (2, 10, "b")]
+
+
+def test_read_register_after_compact_runs_no_job(spark, tmp_path, jobs_of):
+    """``compact`` enters the version it published with the schema it
+    wrote, so resolving it for the next read launches no footer job."""
+    base = str(tmp_path / "reg")
+    schema = "k int, ts int, v string"
+    snap = spark.createDataFrame([(1, 10, "a"), (2, 10, "b")], schema)
+    compaction.init_register(snap, base, ["k"], ["ts"])
+    delta = spark.createDataFrame([(1, 20, "x"), (3, 5, "c")], schema)
+    compaction.compact(spark, base, delta, ["k"], ["ts"])
+    reg, n_jobs = jobs_of(lambda: compaction.read_register(spark, base))
+    assert n_jobs == 0
+    assert sorted(map(tuple, reg.collect())) == [
+        (1, 20, "x"), (2, 10, "b"), (3, 5, "c")
+    ]
+
+
+def test_asof_read_of_a_new_changelog_runs_no_job(spark, tmp_path, jobs_of):
+    """Once ``d000001`` is resolved, the delta tuple of a later time-travel
+    read (one delta longer after a compaction) resolves from its schema."""
+    base = str(tmp_path / "reg")
+    schema = "k int, ts int, v string"
+    keys, order = ["k"], ["ts"]
+    snap = spark.createDataFrame([(1, 10, "a"), (2, 10, "b")], schema)
+    compaction.init_register(snap, base, keys, order)
+    compaction.compact(
+        spark, base, spark.createDataFrame([(1, 20, "x")], schema), keys, order
+    )
+    compaction.read_register_asof(spark, base, keys, order, 15)
+    compaction.compact(
+        spark, base, spark.createDataFrame([(2, 30, "y")], schema), keys, order
+    )
+    asof, n_jobs = jobs_of(
+        lambda: compaction.read_register_asof(spark, base, keys, order, 25)
+    )
+    assert n_jobs == 0
+    assert sorted(map(tuple, asof.collect())) == [(1, 20, "x"), (2, 10, "b")]
 
 
 def test_lru_never_exceeds_its_size(spark, tmp_path, monkeypatch, parquet_reads):

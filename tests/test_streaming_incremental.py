@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from nosql_triple_store_spark.catalog import load_table
 from nosql_triple_store_spark.functions.lww import latest_by_key
+from nosql_triple_store_spark.sources import compaction
 from nosql_triple_store_spark.sources.compaction import (
     compact,
     init_register,
@@ -149,6 +150,54 @@ def test_compact_recovers_from_failed_write(spark, tmp_path):
     asof = read_register_asof(spark, base, KEYS, ORDER, hi)
     assert _rows(asof.select(*COLS)) == _rows(want)
     assert not glob.glob(f"{base}/_stage_*")
+
+
+def test_compact_evaluates_the_delta_once(spark, tmp_path):
+    """``vN`` is folded from ``dN`` as read back, so a delta whose source
+    is recomputed on every evaluation (an RDD, a micro-batch) runs once."""
+    base = os.path.join(str(tmp_path), "register")
+    schema = "k long, ts long, v string"
+    init_register(spark.createDataFrame([(0, 1, "a")], schema), base, ["k"], ["ts"])
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(row):
+        evaluated.add(1)
+        return row
+
+    rows = [(k, 10 + k, f"v{k}") for k in range(20)]
+    delta = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2).map(tick), schema
+    )
+    compact(spark, base, delta, ["k"], ["ts"])
+    assert evaluated.value == len(rows)
+    got = sorted(map(tuple, read_register(spark, base).collect()))
+    assert got == rows
+
+
+def test_compact_raises_when_another_writer_took_the_version(
+    spark, tmp_path, monkeypatch
+):
+    """A writer that loses ``vN`` to a concurrent one between its two
+    publishes raises instead of reporting the other writer's version as
+    its own fold."""
+    base = os.path.join(str(tmp_path), "register")
+    schema = "k long, ts long, v string"
+    init_register(spark.createDataFrame([(1, 1, "a")], schema), base, ["k"], ["ts"])
+    other = spark.createDataFrame([(1, 5, "other")], schema)
+    orig = compaction.publish
+
+    def racing(df, target):
+        ok = orig(df, target)
+        if os.path.basename(target) == "d000002":
+            orig(other, os.path.join(base, "v000002"))
+        return ok
+
+    monkeypatch.setattr(compaction, "publish", racing)
+    mine = spark.createDataFrame([(1, 9, "mine")], schema)
+    with pytest.raises(FileExistsError):
+        compact(spark, base, mine, ["k"], ["ts"])
+    got = read_register(spark, base).collect()
+    assert [tuple(r) for r in got] == [(1, 5, "other")]
 
 
 def test_asof_read_reconstructs_past_state(spark, tmp_path):
