@@ -1,35 +1,36 @@
-"""Env-selectable materialization policy for reused intermediates.
+"""Lineage cuts under one env-selected durability policy, and the one
+driver of iterative fixpoints.
 
-Iterative fixpoints (pagerank/cc/scc/bfs/lpa/sssp/kcore, star
-contraction) and multi-consumer intermediates (basket/itemsets, ngram,
-LSH signatures, attribution) truncate lineage and materialize once via
-``localCheckpoint`` — blocks live in UNREPLICATED executor memory/disk.
-That is the right local-mode default (cheapest cut), but at the 100 TB
-target a single lost executor kills a 50-round fixpoint, and
-MEMORY_AND_DISK blocks of an exploded corpus evict unpredictably
-(VERDICT r11 #3). Every call site therefore routes through
-:func:`materialize` (``df.transform(materialize)``) and the policy is
-deployment-selected via ``SPARK_GRAFT_CKPT_POLICY``:
+Multi-consumer intermediates and loop invariants cut lineage through
+:func:`materialize` (eager) or :func:`lazy_cut` (materialized by the
+first action that reads it). ``SPARK_GRAFT_CKPT_POLICY`` picks the cut:
 
-- ``local`` (default): ``localCheckpoint()`` — eager, executor-local,
-  no replication. Fastest; right for local/bench runs and clusters
-  where recompute-on-loss is acceptable.
-- ``reliable``: ``checkpoint()`` to the fault-tolerant checkpoint dir
-  (``SPARK_GRAFT_CKPT_DIR``, or a per-process scratch dir locally; on a
-  cluster point it at the warehouse/DFS prefix). Survives executor
-  loss — the guide §5 choice for long fixpoints at scale.
-- ``disk``: ``persist(DISK_ONLY)`` + eager materialization — spillable,
-  explicitly unpersistable, keeps lineage (recomputable on block loss)
-  at the cost of bigger plans.
+- ``local`` (default): ``localCheckpoint()`` — unreplicated executor
+  blocks. Fastest; right for local/bench runs and clusters where
+  recompute-on-loss is acceptable.
+- ``reliable``: ``checkpoint()`` to ``SPARK_GRAFT_CKPT_DIR`` (or a
+  per-process scratch dir locally; on a cluster, the warehouse/DFS
+  prefix). Survives executor loss, which would otherwise kill a
+  50-round fixpoint at the 100 TB target.
+- ``disk``: ``persist(DISK_ONLY)`` — spillable, explicitly
+  unpersistable, keeps lineage (recomputable on block loss).
 
-All three are EAGER (the loop/bench timing contract: the step is paid
-inside the step), and all three produce results byte-identical to
-``localCheckpoint`` — the policy moves durability, never semantics.
+The policy moves durability, never results.
+
+Fixpoint contract: every loop that iterates to exact convergence goes
+through :func:`fixpoint` (``tests/test_fixpoint_guard.py``). Each round
+lazily cuts the step's result, and ``done`` is the round's one action.
+It must read every partition of the cut (:func:`count_rows`, a full
+aggregate); ``limit(1)``, ``isEmpty`` or ``first()`` compute only some
+partitions and leave the rest to be recomputed later. A loop still
+changing after ``cap`` rounds raises instead of returning a truncated
+answer.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -88,3 +89,54 @@ def lazy_cut(df: DataFrame) -> DataFrame:
     if policy == "disk":
         return df.persist(StorageLevel.DISK_ONLY)
     return df.localCheckpoint(eager=False)
+
+
+def count_rows(df: DataFrame) -> int:
+    """``df.count()`` in one Spark job: counts the physical plan's rows
+    as an eager ``localCheckpoint`` does, where ``count()`` adds a
+    global aggregate whose shuffle is a second job under AQE."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    done: Callable[[DataFrame], bool],
+    *,
+    cap: int,
+    what: str,
+) -> DataFrame:
+    """Iterate ``state = lazy_cut(step(state))`` until ``done(state)``
+    and return that state; raise after ``cap`` rounds."""
+    for _ in range(cap):
+        state = lazy_cut(step(state))
+        if done(state):
+            return state
+    raise RuntimeError(f"{what} did not converge in {cap} rounds")
+
+
+def semi_naive(
+    first: DataFrame,
+    expand: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    *,
+    cap: int,
+    what: str,
+) -> DataFrame:
+    """``first`` and every later layer, a layer being ``expand(previous
+    layer)`` minus the rows whose ``keys`` are known, until one is
+    empty: a lazy union of the cut layers, so nothing is re-cut."""
+    known = first
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return expand(frontier).join(known.select(*keys), keys, "left_anti")
+
+    def done(layer: DataFrame) -> bool:
+        nonlocal known
+        if count_rows(layer) == 0:
+            return True
+        known = known.unionByName(layer)
+        return False
+
+    fixpoint(first, step, done, cap=cap, what=what)
+    return known

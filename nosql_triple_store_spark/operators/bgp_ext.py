@@ -31,7 +31,7 @@ def q_bgp_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure by semi-naive iteration (plans.sparql.transitive_closure:
     each round frontier ⋈ base, dedup against the accumulated closure by
     left-anti, stop when no new pairs). Round count = longest simple
-    path (2 in the fixture hierarchy; capped at 12 with a
+    path (2 in the fixture hierarchy; capped at CLOSURE_ROUND_CAP with a
     non-convergence error). The oracle is DuckDB's WITH RECURSIVE over
     the same triples — a different fixpoint engine computing the same
     relation."""

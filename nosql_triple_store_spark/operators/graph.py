@@ -12,9 +12,9 @@ a cyclic graph for triangle counting.
 GraphFrames is not assumed present (SURVEY §7.4): connected components is
 a hand-rolled iterative min-label propagation in pure DataFrame joins —
 the same shape GraphX's Pregel iterations lower to. Scale notes: each
-iteration is one join+aggregate shuffle keyed by node; lineage is
-truncated per iteration (localCheckpoint) so plans don't grow; iteration
-count is O(graph diameter), 10-cap with convergence early-exit.
+iteration is one join+aggregate shuffle keyed by node; lineage is cut
+per iteration by ``materialize.fixpoint`` so plans don't grow; iteration
+count is O(graph diameter), capped at CC_ROUND_CAP.
 """
 
 from __future__ import annotations
@@ -24,7 +24,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..materialize import materialize
+from ..materialize import count_rows, fixpoint, materialize
+
+CC_ROUND_CAP = 10
 
 _EDGES_SQL = """
 edges AS (
@@ -108,15 +110,13 @@ SELECT CAST(r_regionkey AS BIGINT), CAST(r_regionkey AS BIGINT) FROM region
 """,
 )
 def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components: iterative min-label propagation over
-    undirected edges until fixpoint (≤10 rounds, early exit on zero label
-    changes). Component id = min node id in the component — which the
-    oracle derives non-iteratively from the known hierarchy (every node's
-    component is its region's id, since region ids are globally minimal).
-
-    The engine-side algorithm is fully general (any edge set); the
-    fixture's shape just makes its ground truth SQL-expressible.
-    """
+    """Connected components: min-label propagation over undirected
+    edges to a fixpoint (:func:`min_label_fixpoint`). Component id = min
+    node id in the component — which the oracle derives non-iteratively
+    from the known hierarchy (every node's component is its region's id,
+    since region ids are globally minimal). The algorithm is fully
+    general; a graph whose diameter exceeds CC_ROUND_CAP needs
+    q_graph_cc_stars instead."""
     region = load_table(spark, sf_dir, "region")
     e_dir = _edges(spark, sf_dir)
     e = e_dir.unionByName(
@@ -132,44 +132,55 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = nodes.select(
         "node_id", F.col("node_id").alias("component")
     ).transform(materialize)  # round 1 otherwise recomputes the distinct twice
-    changed = -1
-    for _ in range(10):
-        neigh = (
-            e.join(labels, e.dst == labels.node_id)
-            .select(F.col("src").alias("node_id"), "component")
+    return min_label_fixpoint(
+        labels, e, cap=CC_ROUND_CAP, what="connected components"
+    )
+
+
+def min_merge(cur: DataFrame, cand: DataFrame) -> DataFrame:
+    """``cur(key, v, ...)`` (one row per key) ∪ ``cand(key, v)`` folded
+    to the min ``v`` per key, carrying the previous ``v`` as ``old``
+    (null for a new key), so the change test needs no join back to
+    ``cur``. Per-round DataFrame count matters here: each one is a
+    driver-side analysis."""
+    key, v = cur.columns[:2]
+    return (
+        cur.select(key, v, F.col(v).alias("old"))
+        .unionByName(cand, allowMissingColumns=True)
+        .groupBy(key)
+        .agg(F.min(v).alias(v), F.max("old").alias("old"))
+    )
+
+
+def improved(merged: DataFrame) -> DataFrame:
+    """The :func:`min_merge` rows whose value is new or lower."""
+    v = merged.columns[1]
+    return merged.filter(F.col("old").isNull() | (F.col(v) < F.col("old")))
+
+
+def min_label_fixpoint(
+    labels: DataFrame, edges: DataFrame, *, cap: int, what: str, hop: int = 0
+) -> DataFrame:
+    """Relax ``labels(node, label)`` along ``edges(src, dst)`` (column
+    names distinct from the labels') until no label improves: each round
+    every ``dst`` takes the min of its label and ``label(src) + hop``
+    over its in-edges (a node without a label gains one). ``hop=0`` is
+    min-label propagation (CC, SCC coloring), ``hop=1`` is BFS levels.
+    ``edges`` is joined every round: cut it."""
+    node, lab = labels.columns
+    src, dst = edges.columns
+    reach = F.col(lab) + hop if hop else F.col(lab)
+
+    def step(cur: DataFrame) -> DataFrame:
+        cand = edges.join(cur, F.col(src) == F.col(node)).select(
+            F.col(dst).alias(node), reach.alias(lab)
         )
-        # Carry the previous label through the aggregate (labels has
-        # exactly one row per node, so max(oldc) recovers it; neighbor
-        # rows contribute null) — the changed-count then reads the
-        # checkpointed result instead of paying a join per round.
-        stepped = (
-            labels.select(
-                "node_id", "component", F.col("component").alias("oldc")
-            )
-            .unionByName(
-                neigh.withColumn("oldc", F.lit(None).cast("long"))
-            )
-            .groupBy("node_id")
-            .agg(
-                F.min("component").alias("component"),
-                F.max("oldc").alias("oldc"),
-            )
-            .transform(materialize)  # truncate lineage: plans stay O(1) per round
-        )
-        changed = stepped.filter(
-            F.col("component") != F.col("oldc")
-        ).count()
-        labels = stepped.select("node_id", "component")
-        if changed == 0:
-            break
-    if changed != 0:
-        # silent non-convergence would return wrong components
-        raise RuntimeError(
-            "connected components did not converge within 10 rounds "
-            "(graph diameter too large — raise the cap or switch to the "
-            "small-star/large-star variant)"
-        )
-    return labels
+        return min_merge(cur, cand)
+
+    out = fixpoint(
+        labels, step, lambda m: count_rows(improved(m)) == 0, cap=cap, what=what
+    )
+    return out.select(node, lab)
 
 
 _TRIANGLE_ORACLE = """

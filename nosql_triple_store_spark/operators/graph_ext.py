@@ -11,6 +11,9 @@ from ..plans.bgp import TRIPLES_SQL, triples_view
 from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from ..materialize import materialize
+from .graph import min_label_fixpoint
+
+BFS_ROUND_CAP = 16
 
 
 @register(
@@ -28,8 +31,7 @@ WHERE t1.p = 'inRegion' AND t1.o = 'region:2'
 )
 def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS levels from region:2 over the undirected inNation/inRegion
-    edge graph: iterative frontier expansion (union + min-dist aggregate
-    per round, lineage truncated) — the generic algorithm; the oracle
+    edge graph (:func:`bfs_levels`) — the generic algorithm; the oracle
     derives the same levels non-iteratively from the known 2-level
     topology. One join+agg shuffle per level, O(eccentricity) rounds."""
     t = triples_view(spark, sf_dir)
@@ -39,19 +41,20 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e_dir.unionByName(
         e_dir.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).transform(materialize)  # loop invariant: joined every level (guide §2.4)
-    dist = spark.createDataFrame([("region:2", 0)], "node string, dist int")
-    for _ in range(3):
-        frontier = (
-            e.join(dist, e.src == dist.node)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(frontier)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .transform(materialize)
-        )
-    return dist
+    return bfs_levels(e, "region:2")
+
+
+def bfs_levels(edges: DataFrame, source) -> DataFrame:
+    """(node, dist): the hop distance from ``source`` along
+    ``edges(src, dst)`` of every node it reaches, iterated until no
+    distance improves (at most BFS_ROUND_CAP rounds, then it raises)."""
+    node_type = edges.schema[0].dataType.simpleString()
+    start = edges.sparkSession.createDataFrame(
+        [(source, 0)], f"node {node_type}, dist int"
+    )
+    return min_label_fixpoint(
+        start, edges, cap=BFS_ROUND_CAP, what="BFS", hop=1
+    )
 
 
 @register(

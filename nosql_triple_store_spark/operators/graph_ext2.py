@@ -11,9 +11,9 @@ general.
 
 Per round: two groupBy-min shuffles keyed by node (large-star on the
 symmetric edge view, small-star on the high->low orientation), both
-partial-aggregable; lineage truncated per round with localCheckpoint so
+partial-aggregable; lineage cut per round by ``materialize.fixpoint`` so
 plans stay O(1). Convergence = the oriented edge set reaches a fixpoint
-(count + per-edge hash-sum compare — two cheap scalar aggs, no collect of
+(count + per-edge xor-hash compare — one scalar aggregate, no collect of
 edges). A final consistency guard re-joins the ORIGINAL edges and raises
 if any edge straddles two labels."""
 
@@ -25,7 +25,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from .graph import _edges
-from ..materialize import lazy_cut
+from ..materialize import fixpoint, lazy_cut
+
+STAR_ROUND_CAP = 12
 
 
 def _oriented(e: DataFrame) -> DataFrame:
@@ -82,38 +84,32 @@ def _edge_digest(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def star_fixpoint(edges: DataFrame, what: str, max_rounds: int = 12) -> DataFrame:
+def star_fixpoint(edges: DataFrame, what: str) -> DataFrame:
     """Run alternating large-star/small-star contraction on ``edges`` to
     its edge fixpoint and return the fixpoint edge set (every edge is
     then node -> its component min). Shared by the four CC consumers
     (q_graph_cc_stars, q_dedup_clusters, q_dedup_embed_clusters,
     dedup_pipeline._cluster_labels).
 
-    Round 12 driver-action economics: the round's lineage cut is a LAZY
-    checkpoint materialized BY the digest aggregate — one Spark action
-    per round (materialize blocks + count + xor-digest in a single job)
-    instead of the former eager-checkpoint job followed by a digest job.
-    The empty-edge early exit rides the digest's count (n == 0), not a
-    separate isEmpty action. Convergence semantics identical: stop when
-    the (count, xor) digest repeats."""
+    Converged when the (count, xor) digest of the edge set repeats; the
+    digest is each round's one action. At most STAR_ROUND_CAP rounds."""
     e = _oriented(edges).transform(lazy_cut)
     prev = _edge_digest(e)  # one job: checkpoint blocks + digest
-    converged = prev[0] == 0  # n == 0 <=> no edges
-    for _ in range(max_rounds):
-        if converged:
-            break
-        e = _oriented(_small_star(_large_star(e))).transform(lazy_cut)
-        cur = _edge_digest(e)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"{what}: star contraction did not reach an edge fixpoint "
-            f"in {max_rounds} rounds"
-        )
-    return e
+    if prev[0] == 0:  # no edges
+        return e
+
+    def repeats(e: DataFrame) -> bool:
+        nonlocal prev
+        last, prev = prev, _edge_digest(e)
+        return prev == last
+
+    return fixpoint(
+        e,
+        lambda e: _oriented(_small_star(_large_star(e))),
+        repeats,
+        cap=STAR_ROUND_CAP,
+        what=f"{what}: star contraction",
+    )
 
 
 @register(

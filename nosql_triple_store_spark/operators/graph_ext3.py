@@ -11,9 +11,10 @@ from ..catalog import load_table, read_parquet
 from ..registry import register, register_layout
 from ..scratch import build_once
 from ..widths import wedge_width
-from ..materialize import materialize
+from ..materialize import count_rows, fixpoint, lazy_cut, materialize
 
 K_CORE = 4
+KCORE_ROUND_CAP = 50
 
 @register_layout("copurchase_edges", r"q_graph")
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,35 +102,36 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e0.unionByName(
         e0.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
     )
-    edges = sym
-    for _ in range(50):
-        # one materialization of the degree table per round: it feeds
-        # the two semi-joins and BOTH convergence counts (fused into a
-        # single scalar aggregate — was two separate count actions)
-        deg = (
-            edges.groupBy("pa")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .transform(materialize)
-        )
-        keep = deg.filter(F.col("deg") >= K_CORE).select("pa")
-        row = deg.agg(
-            F.count(F.lit(1)).alias("n_all"),
-            F.sum((F.col("deg") >= K_CORE).cast("long")).alias("n_keep"),
-        ).collect()[0]
-        if row["n_keep"] == row["n_all"]:
-            break
-        keep_b = keep.select(F.col("pa").alias("pb"))
-        edges = (
-            edges.join(keep, "pa", "left_semi")
-            .join(keep_b, "pb", "left_semi")
-            .transform(materialize)
-        )
-    else:
-        raise RuntimeError("k-core peel did not converge in 50 rounds")
-    deg_final = edges.groupBy("pa").agg(F.count(F.lit(1)).alias("core_deg"))
-    return deg_final.select(
-        F.col("pa").alias("part_id"), "core_deg"
+    return core_degrees(sym).select(
+        F.col("pa").alias("part_id"), F.col("deg").alias("core_deg")
     )
+
+
+def core_degrees(sym: DataFrame) -> DataFrame:
+    """(pa, deg): each K_CORE-core node of the symmetric edge set
+    ``sym(pa, pb)`` with its degree inside the core."""
+
+    def degrees(edges: DataFrame) -> DataFrame:
+        return edges.groupBy("pa").agg(F.count(F.lit(1)).alias("deg"))
+
+    def peel(deg: DataFrame) -> DataFrame:
+        """Degrees of the edges between the nodes that survive ``deg``:
+        a peeled node takes its edges with it, so the edge set of round
+        r is ``sym`` restricted to round r's survivors."""
+        keep = deg.filter(F.col("deg") >= K_CORE).select("pa")
+        keep_b = keep.select(F.col("pa").alias("pb"))
+        return degrees(
+            sym.join(keep, "pa", "left_semi").join(keep_b, "pb", "left_semi")
+        )
+
+    def is_core(deg: DataFrame) -> bool:
+        return count_rows(deg.filter(F.col("deg") < K_CORE)) == 0
+
+    # the whole graph is often a core already: test it before peeling
+    core = degrees(sym).transform(lazy_cut)
+    if is_core(core):
+        return core
+    return fixpoint(core, peel, is_core, cap=KCORE_ROUND_CAP, what="k-core peel")
 
 
 @register(

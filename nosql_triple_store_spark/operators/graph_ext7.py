@@ -15,12 +15,15 @@ Pregel-without-Pregel SCC implementation.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..materialize import materialize
+from ..materialize import count_rows, fixpoint, lazy_cut, materialize
+from .graph import min_label_fixpoint
 
 # transition digraph, distinct non-loop directed edges (a, b): strings
 _DIGRAPH_SQL = """
@@ -137,8 +140,8 @@ def q_graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCC_OUTER = 20
-_SCC_INNER = 15
+SCC_OUTER_CAP = 20
+SCC_INNER_CAP = 15
 
 
 @register(
@@ -172,93 +175,63 @@ def q_graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint; every node with F(u) == B(u) == m is in SCC(m) (m reaches
     u and u reaches m, and m is provably the SCC's minimum member);
     assign those, delete them, repeat on the remainder. Deleting whole
-    SCCs never splits another SCC, so each outer round is sound; both
-    label fixpoints raise on non-convergence rather than returning
-    wrong components (graph.py:150 convention). SCC id = min member
-    label, which the oracle derives independently via a recursive
-    transitive closure + mutual-reachability join.
+    SCCs never splits another SCC, so each outer round is sound. SCC
+    id = min member label, which the oracle derives independently via a
+    recursive transitive closure + mutual-reachability join.
 
-    Scale: each inner round is one join + hash-min aggregation with
-    localCheckpoint lineage truncation — the PageRank/CC loop shape.
-    Outer rounds are bounded by the SCC condensation's depth in
-    practice (real session graphs: 1-3 giant SCCs plus stragglers);
-    the cap raises rather than silently under-merging.
+    Scale: each coloring round is one join + hash-min aggregation, the
+    q_graph_cc loop (graph.min_label_fixpoint). Outer rounds are bounded
+    by the SCC condensation's depth in practice (real session graphs:
+    1-3 giant SCCs plus stragglers). Both loops go through
+    materialize.fixpoint, so a cap raises rather than silently
+    under-merging.
     """
     edges0 = _digraph(spark, sf_dir).transform(materialize)
     nodes = (
         edges0.select(F.col("a").alias("node"))
         .union(edges0.select("b"))
         .distinct()
+        .transform(materialize)
     )
+    sccs: list[DataFrame] = []
 
-    def _min_label_fixpoint(nodes_df: DataFrame, e: DataFrame) -> DataFrame:
-        """labels(node, lab): min label reachable along e's direction."""
-        labels = nodes_df.select("node", F.col("node").alias("lab"))
-        changed = -1
-        for _ in range(_SCC_INNER):
-            neigh = e.join(
-                labels, e.b == labels.node
-            ).select(F.col("a").alias("node"), "lab")
-            # carry the previous label through the aggregate (one
-            # labels row per node, so max(oldl) recovers it) — the
-            # changed-count reads the checkpointed result instead of
-            # paying a join per round (same fusion as q_graph_cc)
-            stepped = (
-                labels.select("node", "lab", F.col("lab").alias("oldl"))
-                .unionByName(
-                    neigh.withColumn(
-                        "oldl", F.lit(None).cast("string")
-                    )
-                )
-                .groupBy("node")
-                .agg(
-                    F.min("lab").alias("lab"),
-                    F.max("oldl").alias("oldl"),
-                )
-                .transform(materialize)
-            )
-            changed = stepped.filter(
-                F.col("lab") != F.col("oldl")
-            ).count()
-            labels = stepped.select("node", "lab")
-            if changed == 0:
-                break
-        if changed != 0:
-            raise RuntimeError(
-                "SCC label propagation did not converge within "
-                f"{_SCC_INNER} rounds"
-            )
-        return labels
-
-    assigned: DataFrame | None = None
-    remaining, edges = nodes.transform(materialize), edges0
-    for _ in range(_SCC_OUTER):
-        fwd = _min_label_fixpoint(remaining, edges)
-        bwd = _min_label_fixpoint(
-            remaining,
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b")),
+    def peel(remaining: DataFrame) -> DataFrame:
+        """Color the remaining subgraph both ways, record the SCCs it
+        settles, and return the nodes still unassigned."""
+        edges = (
+            edges0.join(remaining.withColumnRenamed("node", "a"), "a")
+            .join(remaining.withColumnRenamed("node", "b"), "b")
+            .select("a", "b")
+            .transform(lazy_cut)  # read by every coloring round
         )
-        done = (
+        labels = remaining.select("node", F.col("node").alias("lab"))
+        fwd = min_label_fixpoint(
+            labels, edges, cap=SCC_INNER_CAP, what="SCC label propagation"
+        )
+        bwd = min_label_fixpoint(
+            labels,
+            edges.select("b", "a"),
+            cap=SCC_INNER_CAP,
+            what="SCC label propagation",
+        )
+        scc = (
             fwd.alias("f")
             .join(bwd.alias("g"), "node")
             .filter(F.col("f.lab") == F.col("g.lab"))
             .select("node", F.col("f.lab").alias("scc_id"))
-            .transform(materialize)
+            .transform(lazy_cut)  # read by the anti-join and the result
         )
-        assigned = done if assigned is None else assigned.unionByName(done)
-        remaining = remaining.join(done, "node", "left_anti").transform(materialize)
-        if remaining.limit(1).count() == 0:
-            break
-        edges = (
-            edges.join(remaining.withColumnRenamed("node", "a"), "a")
-            .join(remaining.withColumnRenamed("node", "b"), "b")
-            .select("a", "b")
-            .transform(materialize)
-        )
-    else:
-        raise RuntimeError(
-            f"SCC coloring did not finish within {_SCC_OUTER} outer rounds"
-        )
+        sccs.append(scc)
+        return remaining.join(scc, "node", "left_anti")
+
+    fixpoint(
+        nodes,
+        peel,
+        lambda remaining: count_rows(remaining) == 0,
+        cap=SCC_OUTER_CAP,
+        what="SCC coloring",
+    )
+    assigned = reduce(DataFrame.unionByName, sccs)
     return assigned.groupBy("scc_id").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.max("node").alias("max_node"),

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..materialize import materialize
+from ..materialize import materialize, semi_naive
 from .graph_ext7 import _DIGRAPH_SQL, _digraph
 
 _ECC_MAX_ROUNDS = 12
@@ -32,52 +32,33 @@ def _all_pairs_dists(ed: DataFrame) -> DataFrame:
     sums the sigmas of all its layer-(r-1) predecessors (any shorter
     predecessor would have discovered the pair earlier, so the
     anti-join guarantees only true geodesic prefixes contribute).
-    First discovery = shortest distance (BFS layer order); raises if
-    {_ECC_MAX_ROUNDS} rounds still yield new pairs (silent truncation
-    would under-report distances). Shared by the eccentricity,
-    closeness, and betweenness censuses."""
-    known = ed.select(
+    First discovery = shortest distance (BFS layer order); raises if a
+    pair is still first discovered after {_ECC_MAX_ROUNDS} hops (silent
+    truncation would under-report distances). Shared by the
+    eccentricity, closeness, and betweenness censuses."""
+    first = ed.select(
         F.col("a").alias("s"),
         F.col("b").alias("d"),
         F.lit(1).alias("l"),
         F.lit(1).cast("long").alias("sigma"),
     ).transform(materialize)
-    frontier = known
-    exhausted = False
-    for r in range(2, _ECC_MAX_ROUNDS + 1):
-        nxt = (
+
+    def expand(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(ed, frontier.d == ed.a)
-            .select("s", F.col("b").alias("d"), "sigma")
-            .groupBy("s", "d")
+            .groupBy("s", F.col("b").alias("d"), (F.col("l") + 1).alias("l"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(known.select("s", "d"), ["s", "d"], "left_anti")
-            .withColumn("l", F.lit(r))
-            .select("s", "d", "l", "sigma")
-            .transform(materialize)
         )
-        if nxt.limit(1).count() == 0:
-            exhausted = True
-            break
-        # lazy union of per-round checkpoints: each leg is already
-        # materialized, so re-checkpointing the whole accumulated
-        # relation every round (O(rounds x pairs) rewrite) buys nothing
-        # — the anti-join and final consumers scan the same blocks
-        known = known.unionByName(nxt)
-        frontier = nxt
-    if not exhausted:
-        # the cap is a correctness guard, not a budget: one more probe
-        probe = (
-            frontier.join(ed, frontier.d == ed.a)
-            .select("s", F.col("b").alias("d"))
-            .distinct()
-            .join(known.select("s", "d"), ["s", "d"], "left_anti")
-        )
-        if probe.limit(1).count() != 0:
-            raise RuntimeError(
-                f"multi-source BFS exceeded {_ECC_MAX_ROUNDS} rounds; "
-                "raise the cap (graph has longer shortest paths)"
-            )
-    return known
+
+    # layer 1 is `first`, so the cap's rounds cover hops 2 .. cap + 1;
+    # a non-empty hop cap + 1 raises
+    return semi_naive(
+        first,
+        expand,
+        ["s", "d"],
+        cap=_ECC_MAX_ROUNDS,
+        what="multi-source BFS",
+    )
 
 
 @register(

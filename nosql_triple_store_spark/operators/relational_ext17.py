@@ -21,14 +21,15 @@ from ..session import pinned_confs
 from .graph_ext3 import _copurchase_edges
 from .relational_ext12 import csv_orders
 from .triple import E_CTE
-from ..materialize import materialize
+from ..materialize import count_rows, fixpoint, materialize
+from .graph import improved, min_merge
 
 SSSP_ROUND_CAP = 15
 
-# Broadcast the frontier only while it is provably small (VERDICT r9
-# #1): on a high-diameter or expander graph the frontier grows to
-# O(|V|) rows and a forced broadcast hint becomes a driver-memory
-# hazard at 1000-executor scale. 1M (node, dist) rows ≈ 16 MB raw —
+# Broadcast the frontier only while it is provably small: on a
+# high-diameter or expander graph the frontier grows to O(|V|) rows and
+# a forced broadcast hint becomes a driver-memory hazard at
+# 1000-executor scale. 1M (node, dist) rows ≈ 16 MB raw —
 # comfortably inside executor broadcast budgets; above it the
 # relaxation join falls back to a shuffle hash join keyed on the
 # adjacency layout. The frontier size is known for free each round
@@ -62,7 +63,7 @@ def _relax_candidates(
             (F.col("dist") + F.col("e.w")).alias("cand"),
         )
         .groupBy("node")
-        .agg(F.min("cand").alias("cand"))
+        .agg(F.min("cand").alias("dist"))
     )
 
 
@@ -77,7 +78,7 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest part id in the edge set, undirected edges with
     deterministic weights in [1,5]. Each round is one join + one min
     aggregate, both keyed by node (shuffle volume = frontier edges);
-    lineage truncated per round via localCheckpoint; converges in
+    lineage cut per round by materialize.fixpoint; converges in
     O(weighted diameter) rounds — capped at {cap} with a hard error
     (same contract as the CC loops). At 100 TB-scale graphs the same
     loop runs with the edge relation bucketed by src so every round
@@ -94,8 +95,8 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             _edge_weight(F.col("pa"), F.col("pb")).alias("w"),
         )
     )
-    # Pregel adjacency-list layout (round 9, the graph-family sweep's
-    # one >data-proportional flag): grouping the 2|E| edge rows into
+    # Pregel adjacency-list layout (the graph-family sweep's one
+    # >data-proportional flag): grouping the 2|E| edge rows into
     # (src, nbrs[]) ONCE means every relaxation round hash-probes |V|
     # adjacency rows and explodes only the FRONTIER's neighbor lists —
     # instead of re-scanning all edge rows per round (measured at
@@ -111,60 +112,31 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Semi-naive frontier relaxation: only nodes whose distance improved
     # last round propagate this round (the Datalog delta trick the BGP
     # closure uses) — per-round shuffle volume is frontier edges, not
-    # the whole graph, and an empty frontier IS convergence (no extra
-    # changed-count pass). The per-round aggregates are tiny, so the
-    # loop pins a small shuffle width for its lifetime (a vanilla
-    # session's default 200 partitions would cost ~200 empty tasks per
-    # round × ~10 rounds) and restores it after (session.pinned_confs,
-    # as streaming.queries.drain does).
+    # the whole graph, and an empty frontier IS convergence. Its count is
+    # the round's one action and next round's frontier-size estimate.
+    # The per-round aggregates are tiny, so the loop pins a small
+    # shuffle width for its lifetime (a vanilla session's default 200
+    # partitions would cost ~200 empty tasks per round × ~10 rounds) and
+    # restores it after (session.pinned_confs).
+    frontier_rows = 1
+
+    def relax(dist: DataFrame) -> DataFrame:
+        frontier = improved(dist).select("node", "dist")
+        return min_merge(dist, _relax_candidates(frontier, frontier_rows, adj))
+
+    def settled(dist: DataFrame) -> bool:
+        nonlocal frontier_rows
+        frontier_rows = count_rows(improved(dist))
+        return frontier_rows == 0
+
     with pinned_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
-        dist = spark.createDataFrame([(int(source), 0)], "node long, dist long")
-        frontier = dist
-        frontier_rows = 1
-        converged = False
-        for _ in range(SSSP_ROUND_CAP):
-            cand = _relax_candidates(frontier, frontier_rows, adj)
-            # ONE union+min merge per round carries the previous
-            # distance alongside (dist has one row per node, so
-            # max(old) recovers it; candidates contribute null): the
-            # improved set AND the merged distances both read off the
-            # same checkpointed step — replacing the old
-            # join-filter-checkpoint + union-min-checkpoint pair (3
-            # actions, 2 shuffles per round) with 1 checkpoint + 1
-            # count and a single shuffle. Same values by min-merge
-            # algebra: improved iff old is null or cand < old.
-            stepped = (
-                dist.select(
-                    "node",
-                    F.col("dist").alias("d"),
-                    F.col("dist").alias("old"),
-                )
-                .unionByName(
-                    cand.select(
-                        "node",
-                        F.col("cand").alias("d"),
-                        F.lit(None).cast("long").alias("old"),
-                    )
-                )
-                .groupBy("node")
-                .agg(F.min("d").alias("dist"), F.max("old").alias("old"))
-                .transform(materialize)
-            )
-            frontier = stepped.filter(
-                F.col("old").isNull() | (F.col("dist") < F.col("old"))
-            ).select("node", "dist")
-            # count (on the checkpointed step, so ~free) doubles as the
-            # convergence check AND next round's frontier-size estimate
-            frontier_rows = frontier.count()
-            dist = stepped.select("node", "dist")
-            if frontier_rows == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"SSSP did not converge in {SSSP_ROUND_CAP} rounds"
-            )
-    return dist
+        start = spark.createDataFrame(
+            [(int(source), 0, None)], "node long, dist long, old long"
+        )
+        dist = fixpoint(
+            start, relax, settled, cap=SSSP_ROUND_CAP, what="SSSP"
+        )
+    return dist.select("node", "dist")
 
 
 q_graph_sssp.__doc__ = q_graph_sssp.__doc__.format(cap=SSSP_ROUND_CAP)

@@ -161,7 +161,11 @@ from .bgp import (
     triples_view,
 )
 from .quads import graph_of, quad_layout
-from ..materialize import lazy_cut, materialize
+from ..materialize import lazy_cut, materialize, semi_naive
+
+# rounds of `p+`/`p*` closure before it raises: a relation whose shortest
+# paths are at most this many hops converges
+CLOSURE_ROUND_CAP = 12
 
 _TOKEN = re.compile(
     r"""
@@ -1227,7 +1231,7 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
     denotes a binary relation (src, dst). Pred is a pushed-down
     constant-predicate scan; Inv swaps; Alt unions; Seq equi-joins on
     the hop; Plus is semi-naive transitive closure (frontier ⋈ base
-    per round, left-anti dedup, lineage cut per round, cap 12)."""
+    per round, left-anti dedup, see :func:`transitive_closure`)."""
     if isinstance(path, PathPred):
         return enc.filter(
             F.col("p") == F.lit(int(cmap[path.name]))
@@ -1279,28 +1283,23 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
 
 def transitive_closure(base: DataFrame) -> DataFrame:
     """Semi-naive transitive closure of a two-column (source,
-    destination) relation, in its own column names: frontier ⋈ base per
-    round, left-anti dedup against the accumulated closure, a
-    ``materialize`` cut and an ``isEmpty`` check per round, cap 12 with
-    a non-convergence error. The fixpoint of `p+` and `p*`."""
+    destination) relation, in its own column names: each round joins the
+    newest pairs with ``base`` and keeps the pairs not yet known, one
+    count per round, at most CLOSURE_ROUND_CAP rounds. The fixpoint of
+    `p+` and `p*`."""
     src, dst = base.columns
-    closure = base
-    frontier = base
-    for _ in range(12):
-        step = (
+
+    def expand(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.alias("f")
             .join(base.alias("b"), F.col(f"f.{dst}") == F.col(f"b.{src}"))
             .select(F.col(f"f.{src}").alias(src), F.col(f"b.{dst}").alias(dst))
             .distinct()
         )
-        new = step.join(closure, [src, dst], "left_anti").transform(
-            materialize
-        )
-        if new.isEmpty():
-            return closure
-        closure = closure.unionByName(new).transform(materialize)
-        frontier = new
-    raise RuntimeError("path closure did not converge in 12 rounds")
+
+    return semi_naive(
+        base, expand, [src, dst], cap=CLOSURE_ROUND_CAP, what="path closure"
+    )
 
 
 def _expr_col(e):

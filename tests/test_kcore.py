@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from nosql_triple_store_spark.operators.graph_ext3 import (
     K_CORE,
     _copurchase_edges,
+    core_degrees,
     q_graph_kcore,
 )
 
@@ -44,3 +45,17 @@ def test_kcore_deterministic(spark):
     a = {tuple(r) for r in q_graph_kcore(spark, SF_DIR).collect()}
     b = {tuple(r) for r in q_graph_kcore(spark, SF_DIR).collect()}
     assert a == b
+
+
+def test_core_degrees_peels_in_rounds(spark):
+    # a 5-clique (degree 4) plus node 11 (degree 3), which peels in
+    # round 1 and so drops node 10 from degree 4 to 3 for round 2; the
+    # clique remains
+    clique = [(a, b) for a in range(5) for b in range(5) if a < b]
+    tail = [(10, 0), (10, 1), (10, 2), (11, 10), (11, 0), (11, 1)]
+    pairs = clique + tail
+    sym = spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "pa long, pb long")
+    assert K_CORE == 4
+    assert sorted(tuple(r) for r in core_degrees(sym).collect()) == [
+        (i, 4) for i in range(5)
+    ]

@@ -20,8 +20,6 @@ PKG = os.path.join(
 ALLOWED = {
     "streaming/dedup_stream.py": 1,  # max(doc_id) scalar
     "operators/graph_ext2.py": 1,  # (count, xor-digest) 1-row agg
-    "operators/graph_ext3.py": 1,  # k-core (n_all, n_keep) 1-row agg
-    # (round 11: replaced two separate .count() actions per peel round)
     "operators/vector_ext4.py": 2,  # k seed rows + k*dim centroid stats
     "operators/register_ext.py": 1,  # 1-row ts cutoff scalar
     "plans/sparql.py": 1,  # k pattern-constant dictionary lookups
