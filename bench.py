@@ -4,6 +4,8 @@ JSON line for the driver's BENCH record.
 
 Warm-up, layout builds and the timed noop-sink run live in
 ``scripts/harness.py``, shared with ``scripts/profile_queries.py``.
+Each computation runs once: an alias name (``registry.aliases()``) is
+listed in the side file beside its target, not timed again.
 """
 
 from __future__ import annotations
@@ -21,14 +23,14 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else None
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from nosql_triple_store_spark.registry import all_specs
+    from nosql_triple_store_spark.registry import computations
     from nosql_triple_store_spark.session import get_spark
-    from scripts.harness import build_layouts, timed_run, warm_session
+    from scripts.harness import build_layouts, conditions, timed_run, warm_session
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    specs = all_specs()
+    specs = computations()
     # SPARK_GRAFT_BENCH_ONLY: regex over query names for family-subset
     # sweeps (a full run at sf3 is not affordable); layouts no selected
     # query consumes are skipped too.
@@ -138,6 +140,7 @@ def main() -> None:
         with open(full_path, "w") as f:
             json.dump(
                 {
+                    **conditions(spark),
                     "metric": "total_query_wall_clock",
                     "value": total,
                     "unit": "sec",

@@ -219,6 +219,53 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CONTAIN_ORACLE = _NEAR_ORACLE.replace(
+    """SELECT doc_a, doc_b,
+       ROUND(common * 1.0 / (sa.n_sh + sb.n_sh - common), 4) AS jaccard
+FROM common
+JOIN sizes sa ON sa.doc_id = doc_a
+JOIN sizes sb ON sb.doc_id = doc_b
+ORDER BY common * 1.0 / (sa.n_sh + sb.n_sh - common) DESC, doc_a, doc_b
+LIMIT 50""",
+    """SELECT doc_a, doc_b,
+       ROUND(common * 1.0 / LEAST(sa.n_sh, sb.n_sh), 4) AS containment
+FROM common
+JOIN sizes sa ON sa.doc_id = doc_a
+JOIN sizes sb ON sb.doc_id = doc_b
+WHERE sa.n_sh >= 10 AND sb.n_sh >= 10
+ORDER BY common * 1.0 / LEAST(sa.n_sh, sb.n_sh) DESC, doc_a, doc_b
+LIMIT 50""",
+)
+
+
+@register("q_text_containment", oracle=_CONTAIN_ORACLE)
+def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shingle CONTAINMENT (|A∩B| / min(|A|,|B|)) — the asymmetric
+    near-dup measure: a short document quoted inside a long one scores
+    ~1.0 here but low Jaccard (the union washes it out). Pairs come
+    from the adaptive prefix-filter ladder (dedup_prefix.py,
+    smaller-side prefix vs full index — the exact containment-join
+    scheme), not the quadratic `_shingle_pairs` layout; min-size floor
+    of 10 shingles keeps trivially-tiny docs from saturating the top-k.
+    Ratio of exact ints — bit-identical ordering cross-engine."""
+    from .dedup_prefix import containment_threshold_pairs, top_pairs_ladder
+
+    pairs = top_pairs_ladder(
+        lambda p, q: containment_threshold_pairs(spark, sf_dir, p, q, 10), 50
+    )
+    cont = F.col("common") * 1.0 / F.least("na", "nb")
+    return (
+        pairs.filter((F.col("na") >= 10) & (F.col("nb") >= 10))
+        .select(
+            "doc_a", "doc_b",
+            cont.alias("_c"), F.round(cont, 4).alias("containment"),
+        )
+        .orderBy(F.desc("_c"), "doc_a", "doc_b")
+        .limit(50)
+        .select("doc_a", "doc_b", "containment")
+    )
+
+
 # flat simhash band cap: with a constant cap the banded join's work is
 # bounded by sum(c^2) <= cap * sum(c) = cap * n_bands * n — LINEAR in
 # corpus size no matter how skewed the band values get. 2048 clears

@@ -1,5 +1,5 @@
 """Graph extensions: BFS shortest-path levels over the triples graph,
-TF-IDF term ranking, OPTIONAL-pattern BGP."""
+TF-IDF term ranking."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..plans.bgp import TRIPLES_SQL, triples_view
-from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from ..materialize import materialize
 from .graph import min_label_fixpoint
@@ -108,26 +107,4 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
         .select("doc_id", "token", "tf", "tfidf", "rnk")
-    )
-
-
-@register(
-    "q_bgp_optional",
-    oracle=f"""
-WITH {TRIPLES_SQL},
-nat AS (SELECT s, o AS n FROM triples WHERE p = 'inNation'),
-seg AS (SELECT s, o AS seg FROM triples WHERE p = 'inSegment')
-SELECT nat.s, nat.n, seg.seg
-FROM nat LEFT JOIN seg ON nat.s = seg.s
-""",
-)
-def q_bgp_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL OPTIONAL: ?s inNation ?n . OPTIONAL { ?s inSegment ?seg } —
-    customers bind ?seg, suppliers leave it NULL (a left join after the
-    required patterns)."""
-    return compile_sparql_encoded(
-        spark,
-        sf_dir,
-        "SELECT ?s ?n ?seg WHERE { ?s inNation ?n . "
-        "OPTIONAL { ?s inSegment ?seg } }",
     )

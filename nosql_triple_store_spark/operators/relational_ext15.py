@@ -1,11 +1,8 @@
-"""Fifteenth extension batch: SPARQL MINUS, parquet schema evolution,
-dynamic partition overwrite, image tiling, tolerance-bounded as-of join.
+"""Fifteenth extension batch: parquet schema evolution, dynamic
+partition overwrite, image tiling, tolerance-bounded as-of join.
 
-Lineage: MINUS completes the SPARQL 1.1 filter surface next to FILTER
-NOT EXISTS (bgp_ext.py) — the two differ exactly when the patterns share
-no variables; plans.bgp.natural_join's MINUS kind encodes that rule. Schema
-evolution and dynamic partition overwrite are storage-lifecycle
-operators a long-lived 100 TB table needs (columns get added over
+Lineage: schema evolution and dynamic partition overwrite are
+storage-lifecycle operators a long-lived 100 TB table needs (columns get added over
 years; backfills must replace ONE partition without touching the rest —
 the reference's analog is nothing: its schema is fixed 4 columns forever,
 SURVEY §1.3)."""
@@ -20,24 +17,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..functions.lww import latest_by_key
-from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 from ..scratch import build_once
 from ..session import pinned_confs
-from .sparql_queries import MINUS_ORACLE, SPARQL_MINUS
 from .triple import E_CTE
-
-
-@register("q_bgp_minus", oracle=MINUS_ORACLE)
-def q_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL `?c inSegment ?seg . MINUS { ?c inNation ?n . ?n inRegion
-    ?r . ?r hasName 'ASIA' }` — customer segments minus ASIA-region
-    customers. The excluded pattern shares ?c, so MINUS lowers to a
-    left-anti join on c (one shuffle; the excluded side collapses to
-    distinct keys first) — ``natural_join(..., "left_anti")``. The
-    no-shared-variable edge case (MINUS is a no-op, NOT EXISTS is not)
-    is unit-tested on that helper directly."""
-    return compile_sparql_encoded(spark, sf_dir, SPARQL_MINUS)
 
 
 _EVO_SPLIT = 250  # doc_id threshold between schema v1 and v2 writers

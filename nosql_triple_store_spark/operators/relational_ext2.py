@@ -1,6 +1,6 @@
 """Second batch of extended operators: ntile/first/last analytic
-functions, histogram binning, regex group extraction, variable-predicate
-BGP — rounding out window/scalar/BGP coverage."""
+functions, histogram binning, regex group extraction — rounding out
+window/scalar coverage."""
 
 from __future__ import annotations
 
@@ -8,8 +8,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..plans.bgp import TRIPLES_SQL
-from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 
 
@@ -109,23 +107,4 @@ def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("type_head", "name_tail_sample")
         .agg(F.count(F.lit(1)).alias("n_parts"))
-    )
-
-
-@register(
-    "q_bgp_varpred",
-    oracle=f"""
-WITH {TRIPLES_SQL}
-SELECT s, p FROM triples WHERE o = 'nation:7'
-""",
-)
-def q_bgp_varpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(?s, ?p, 'nation:7') — variable predicate, constant object: the
-    reverse-lookup pattern (who points at this node?). Exercises a
-    variable in predicate position; on a predicate-partitioned layout this
-    is the one shape that scans all partitions — the documented trade of
-    vertical partitioning (add an object-sorted secondary layout if this
-    pattern dominates)."""
-    return compile_sparql_encoded(
-        spark, sf_dir, "SELECT ?s ?p WHERE { ?s ?p nation:7 }"
     )

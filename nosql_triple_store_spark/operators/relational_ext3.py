@@ -1,18 +1,13 @@
 """Third extension batch: statistical aggregates, rank-distribution
-windows, string edit distance, dictionary-encoded BGP execution."""
+windows, string edit distance."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, read_parquet
-from ..plans.bgp import TRIPLE_SOURCES, triples_view
-from ..plans.sparql import compile_sparql_encoded
-from ..registry import register, register_layout
-from ..scratch import build_once
-from ..sources.dictionary import build_dictionary, encode_triples
-from .sparql_queries import SPARQL_STAR, STAR_ORACLE
+from ..catalog import load_table
+from ..registry import register
 
 
 @register("q_agg_approx_percentile", oracle=None)  # rows-only: sketch
@@ -248,43 +243,3 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy(
         F.coalesce(F.col("ak").cast("string"), F.lit("NULL")).alias("k_g")
     ).agg(F.count(F.lit(1)).alias("n_pairs"))
-
-
-@register_layout("bgp_encoded_store", r"q_bgp|q_sparql|q_stream_bgp")
-def encoded_store(spark: SparkSession, sf_dir: str):
-    """The dictionary-encoded triple store as scratch parquet, built
-    ONCE per process and source state — the on-disk layout every serious
-    RDF engine keeps (S2RDF/RDF-3X store encoded triples + the
-    dictionary; the encode pass and the xxhash64 collision check are
-    load-time ETL, not per-query work). Returns (dictionary_df,
-    encoded_triples_df), both columnar scans after first use; bench.py
-    builds this in its layout phase like the co-purchase/shingle tables.
-
-    The store is keyed by the fingerprints of the tables the triples
-    derive from (``TRIPLE_SOURCES``): a rewritten source builds a fresh
-    store in a new scratch path, so SPARQL never answers from stale
-    triples and a DataFrame still reading the old store keeps its files."""
-
-    def write_dict(out: str) -> None:
-        build_dictionary(triples_view(spark, sf_dir), ids="hash").write.parquet(out)
-
-    d = read_parquet(
-        spark, build_once("bgp_dict", sf_dir, write_dict, sources=TRIPLE_SOURCES)
-    )
-
-    def write_enc(out: str) -> None:
-        enc = encode_triples(triples_view(spark, sf_dir), d)
-        enc.toDF("s", "p", "o").write.parquet(out)
-
-    enc = build_once("bgp_enc", sf_dir, write_enc, sources=TRIPLE_SOURCES)
-    return d, read_parquet(spark, enc)
-
-
-@register("q_bgp_star_encoded", oracle=STAR_ORACLE)
-def q_bgp_star_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q_bgp_star pattern over the DICTIONARY-ENCODED triples (the
-    encoded_store layout above): pattern constants looked up in the
-    dictionary, joins on 8-byte longs, only the (small) final result
-    pays string decode — the S2RDF execution pipeline every SPARQL
-    text query runs."""
-    return compile_sparql_encoded(spark, sf_dir, SPARQL_STAR)

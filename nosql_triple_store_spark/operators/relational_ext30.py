@@ -1,5 +1,4 @@
-"""Thirtieth extension batch: LWW deletes (tombstones) and BGP
-aggregation.
+"""Thirtieth extension batch: LWW deletes (tombstones).
 
 - q_lww_tombstone: the delete path of the LWW register. The reference
   exposes update-only writes (SQLite3DBConnector.py:48-119); a real
@@ -10,10 +9,6 @@ aggregation.
   tombstone must be able to beat a concurrent older update). Purging
   tombstones older than a grace period is what q_maintenance_vacuum's
   retention model then reclaims.
-- q_bgp_aggregate: SPARQL GROUP BY over a basic graph pattern — the
-  aggregation form the bgp_* family (point/star/path/optional/minus)
-  didn't cover: match a 2-triple pattern, then aggregate over a
-  grouping variable. Same events-as-triples encoding as bgp_queries.py.
 """
 
 from __future__ import annotations
@@ -84,35 +79,4 @@ def q_lww_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return latest.filter(~F.col("deleted")).select(
         "user_id", "event_type", "event_id", "ts", "value"
-    )
-
-
-# --- q_bgp_aggregate ------------------------------------------------------
-
-# Events as triples (same encoding as bgp_queries.py): subject =
-# event entity, predicates user/type/value. Pattern:
-#   ?e :user ?u . ?e :type ?t .  GROUP BY ?t → COUNT(DISTINCT ?u)
-_BGP_AGG_ORACLE = f"""
-{E_CTE}
-SELECT event_type AS t,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_subjects,
-       CAST(COUNT(*) AS BIGINT) AS n_matches
-FROM e GROUP BY event_type
-"""
-
-
-@register("q_bgp_aggregate", oracle=_BGP_AGG_ORACLE)
-def q_bgp_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL aggregation over a star BGP:
-    `SELECT ?t (COUNT(DISTINCT ?u) AS n) WHERE { ?e :user ?u ; :type ?t }
-    GROUP BY ?t`. Compiled the way the BGP compiler (plans/bgp.py)
-    treats every star: the shared-subject triples live in ONE wide
-    relation, so the pattern match is a projection (no self-join) and
-    the aggregate runs directly on it — S2RDF's property-table insight.
-    The distinct-count is an exact two-level aggregate (partial distinct
-    per partition, then merge), not expand-based."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(F.col("event_type").alias("t")).agg(
-        F.count_distinct("user_id").alias("n_subjects"),
-        F.count(F.lit(1)).alias("n_matches"),
     )

@@ -1,15 +1,12 @@
-"""Thirty-eighth extension batch: inverse property paths, materialized
-mixture sampling, batch KNN retrieval, and per-source boilerplate
-detection.
+"""Thirty-eighth extension batch: materialized mixture sampling, batch
+KNN retrieval, and per-source boilerplate detection.
 
-Lineage: one more SPARQL 1.1 property-path feature over the triples
-view (inverse step `^p`, reference report §SPARQL surface), plus three
-training-data-pipeline stages: actually APPLYING the q_mixture_weights
-policy with a reproducible hash sampler and auditing the achieved mix,
-the batch variant of the exact-KNN retrieval q_vector_knn does for a
-single probe, and RefinedWeb-style boilerplate discovery (tokens that
-appear in nearly every document of a source are template chrome, not
-content).
+Lineage: three training-data-pipeline stages: actually APPLYING the
+q_mixture_weights policy with a reproducible hash sampler and auditing
+the achieved mix, the batch variant of the exact-KNN retrieval
+q_vector_knn does for a single probe, and RefinedWeb-style boilerplate
+discovery (tokens that appear in nearly every document of a source are
+template chrome, not content).
 """
 
 from __future__ import annotations
@@ -21,47 +18,12 @@ from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..functions.topk import grouped_topk
 from ..functions.vectors import as_double_array, cosine_col
-from ..plans.bgp import TRIPLES_SQL
-from ..plans.sparql import compile_sparql_encoded
 from ..registry import register
 
 _HASH_SQL = (
     "CAST(((({key}) % 2147483648) * 2654435761 + 12345) % 4294967296"
     " AS BIGINT)"
 )
-
-
-@register(
-    "q_bgp_path_inverse",
-    oracle=f"""
-WITH {TRIPLES_SQL}
-SELECT fwd.s AS peer
-FROM triples inv
-JOIN triples fwd ON fwd.p = 'inNation' AND fwd.o = inv.o
-WHERE inv.s = 'supplier:5' AND inv.p = 'inNation'
-  AND fwd.s <> 'supplier:5'
-""",
-)
-def q_bgp_path_inverse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL 1.1 inverse property path: `?peer inNation/^inNation
-    supplier:5` — every entity co-located with supplier:5 (walk
-    forward to its nation, then traverse inNation BACKWARD to the
-    nation's members). The inverse step is a join with the pattern's
-    subject/object roles swapped; no new physical operator exists or
-    is needed — the S2RDF translation scheme the compiler uses for
-    forward steps.
-
-    Scale: the anchor pattern (one subject constant) prunes to one
-    row; the inverse step is then a semi-lookup into the single
-    inNation predicate partition (vertical partitioning,
-    plans/bgp.py:15).
-    """
-    return compile_sparql_encoded(
-        spark,
-        sf_dir,
-        "SELECT ?peer WHERE { ?peer inNation/^inNation supplier:5 . "
-        'FILTER(?peer != "supplier:5") }',
-    )
 
 
 @register(

@@ -1,12 +1,9 @@
-"""Fifty-first extension batch: SPARQL bounded path quantifiers and
-per-group quantile sketches.
+"""Fifty-first extension batch: per-group quantile sketches.
 
-Lineage: `p{{1,3}}` bounded-repetition property paths are the SPARQL
-1.1 quantifier between a single hop and the unbounded closure
-(q_bgp_path / q_bgp_path_closure); per-group quantiles generalize the
-mergeable bottom-k sketch (relational_ext35) with the salted
-grouped-topk tournament (functions/topk.py) — the per-stratum latency
-dashboard every ingest pipeline wants without a per-group sort.
+Lineage: per-group quantiles generalize the mergeable bottom-k sketch
+(relational_ext35) with the salted grouped-topk tournament
+(functions/topk.py) — the per-stratum latency dashboard every ingest
+pipeline wants without a per-group sort.
 """
 
 from __future__ import annotations
@@ -16,69 +13,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.topk import grouped_topk
-from ..plans.bgp import TRIPLES_SQL, triples_view
 from ..registry import register
 
 _HASH_SQL = (
     "CAST(((({key}) % 2147483648) * 2654435761 + 12345) % 4294967296"
     " AS BIGINT)"
 )
-
-
-@register(
-    "q_bgp_path_quantified",
-    oracle=f"""
-WITH {TRIPLES_SQL},
-loc AS (SELECT s, o FROM triples WHERE p IN ('inNation', 'inRegion')),
-h1 AS (SELECT s, o, 1 AS hops FROM loc),
-h2 AS (
-  SELECT a.s, b.o, 2 AS hops FROM loc a JOIN loc b ON a.o = b.s),
-h3 AS (
-  SELECT a.s, c.o, 3 AS hops
-  FROM loc a JOIN loc b ON a.o = b.s JOIN loc c ON b.o = c.s),
-uni AS (
-  SELECT s, o, hops FROM h1 UNION ALL
-  SELECT s, o, hops FROM h2 UNION ALL
-  SELECT s, o, hops FROM h3)
-SELECT s, o, CAST(MIN(hops) AS BIGINT) AS min_hops
-FROM uni GROUP BY s, o
-""",
-)
-def q_bgp_path_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL 1.1 bounded path quantifier: `?s (inNation|inRegion){{1,3}}
-    ?o` — every entity reachable over one to three location hops, with
-    the shortest hop count. Between the single pattern (q_bgp_path)
-    and the unbounded Kleene closure (q_bgp_path_closure), the bounded
-    quantifier compiles to a UNION of 1..3 static join chains — no
-    fixpoint loop, so Catalyst sees one finite plan it can reorder and
-    push filters through.
-
-    Scale: each chain is an equi-join on the shared endpoint; the
-    location predicate prunes to two vertical partitions
-    (plans/bgp.py's predicate layout). MIN(hops) folds the union with
-    one hash aggregation.
-    """
-    t = triples_view(spark, sf_dir)
-    loc = t.filter(F.col("p").isin("inNation", "inRegion")).select(
-        "s", "o"
-    )
-    a = loc
-    b = loc.select(F.col("s").alias("s2"), F.col("o").alias("o2"))
-    c = loc.select(F.col("s").alias("s3"), F.col("o").alias("o3"))
-    h1 = a.select("s", "o", F.lit(1).alias("hops"))
-    h2 = (
-        a.join(b, a.o == b.s2)
-        .select("s", F.col("o2").alias("o"), F.lit(2).alias("hops"))
-    )
-    h3 = (
-        a.join(b, a.o == b.s2)
-        .join(c, F.col("o2") == F.col("s3"))
-        .select("s", F.col("o3").alias("o"), F.lit(3).alias("hops"))
-    )
-    uni = h1.unionByName(h2).unionByName(h3)
-    return uni.groupBy("s", "o").agg(
-        F.min("hops").cast("long").alias("min_hops")
-    )
 
 
 _GQ_K = 200

@@ -264,13 +264,13 @@ SELECT s, p, o FROM triples WHERE s = 'nation:7'
 UNION
 SELECT s, p, o FROM triples WHERE o = 'nation:7'
 """,
+    aliases=("q_bgp_describe",),
 )
 def q_sparql_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Textual `DESCRIBE <nation:7>` — the q_bgp_describe neighborhood
-    (every triple where the resource is subject or object) now
-    reachable from query text, with graph set semantics (UNION, not
-    UNION ALL: a description is a graph). Constant iris push into both
-    scans."""
+    """Textual `DESCRIBE <nation:7>`: the resource's neighborhood, every
+    triple where it is subject or object, with graph set semantics
+    (UNION, not UNION ALL: a description is a graph). Constant iris
+    push into both scans of the string-space triples."""
     return compile_sparql_encoded(spark, sf_dir, "DESCRIBE <nation:7>")
 
 

@@ -125,7 +125,7 @@ note above.
 Execution strategy (S2RDF, PAPERS.md): pattern constants are looked
 up in the dictionary ONCE (driver-side, k terms), the conjunctive join
 runs entirely in dictionary-encoded long space over the
-``bgp_encoded_store`` layout (operators/relational_ext3.py), and only
+``bgp_encoded_store`` layout (operators/bgp_queries.py), and only
 the final bindings pay string decode. Every pattern kind (triple, path
 endpoint, GRAPH quad) binds its terms through ``bgp.bind_terms`` and
 every group joins through ``bgp.natural_join``; each conjunctive group
@@ -484,7 +484,7 @@ class _Parser:
         if (self.peek() or "").upper() == "DESCRIBE":
             # DESCRIBE <iri> [<iri> ...]  |  DESCRIBE ?v WHERE { ... }
             # — graph output: every triple where a described resource
-            # is subject or object (the q_bgp_describe neighborhood
+            # is subject or object (q_sparql_describe's neighborhood
             # semantics), set-deduped (a graph has no duplicates)
             self.next()
             q = SparqlQuery(select=[], distinct=False, patterns=[])
@@ -1443,7 +1443,7 @@ def _compile_query(
     sub-query probes its own constants and decodes its own bindings —
     the join with the outer group happens on decoded terms, which is
     equality-safe because the dictionary is a bijection)."""
-    from ..operators.relational_ext3 import encoded_store
+    from ..operators.bgp_queries import encoded_store
 
     if q.describe_iris or q.describe_var is not None:
         # DESCRIBE: the resources' full neighborhood (subject OR object

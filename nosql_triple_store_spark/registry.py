@@ -4,6 +4,11 @@ Each operator/query from SURVEY.md §2.C registers here with an optional
 DuckDB oracle SQL string. ``queries()`` / ``oracle_sql()`` feed the driver
 contract in ``__spark_entry__.py``. Queries without an oracle (``None``)
 get the driver's weaker rows-only check (non-SQL-expressible ops).
+
+An alias is a second registered name for one computation: its spec
+carries the target's own ``fn`` and ``oracle`` objects, so the driver
+contract still lists it, while harnesses run the target once and report
+the alias beside it.
 """
 
 from __future__ import annotations
@@ -11,7 +16,7 @@ from __future__ import annotations
 import importlib
 import pkgutil
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,6 +35,7 @@ class QuerySpec:
     # artifacts tag these so scaling curves can be read with and
     # without them.
     ground_truth_twin: bool = False
+    alias_of: str | None = None  # the target's name, for an alias
 
 
 @dataclass(frozen=True)
@@ -52,18 +58,24 @@ def register(
     name: str,
     oracle: str | None = None,
     ground_truth_twin: bool = False,
+    aliases: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a (spark, sf_dir) -> DataFrame query."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame query, plus
+    each name in ``aliases`` as an alias of it."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _REGISTRY:
-            raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(
+        for n in (name, *aliases):
+            if n in _REGISTRY:
+                raise ValueError(f"duplicate query name: {n}")
+        spec = QuerySpec(
             name=name,
             fn=fn,
             oracle=oracle,
             ground_truth_twin=ground_truth_twin,
         )
+        _REGISTRY[name] = spec
+        for a in aliases:
+            _REGISTRY[a] = replace(spec, name=a, alias_of=name)
         return fn
 
     return deco
@@ -123,6 +135,16 @@ def _load_operators() -> None:
 def all_specs() -> dict[str, QuerySpec]:
     _load_operators()
     return dict(_REGISTRY)
+
+
+def computations() -> dict[str, QuerySpec]:
+    """The specs that are not aliases: each computation once."""
+    return {n: s for n, s in all_specs().items() if s.alias_of is None}
+
+
+def aliases() -> dict[str, str]:
+    """alias name -> target name."""
+    return {n: s.alias_of for n, s in all_specs().items() if s.alias_of}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -5,9 +5,13 @@ sf0.01. Usage:
 
     python scripts/driver_check.py [--json OUT.json] [sf_dir] [query ...]
 
-Exit code 0 iff everything matches. With --json, per-query results
-(mode, rows, match/determinism, seconds) are written as the
-full-surface correctness artifact (e.g. CORRECTNESS_FULL_r03.json).
+Exit code 0 iff everything matches. Each computation runs once: an
+alias name (same function object and oracle as its target,
+``registry.aliases()``) is not executed again and carries its target's
+verdict. With --json, per-query results (mode, rows, match/determinism,
+seconds; ``{"mode": "alias", "of": target}`` for an alias) and the run's
+conditions (git HEAD, cores, aliases) are written as the full-surface
+correctness artifact (e.g. CORRECTNESS_FULL_r13.json).
 """
 
 from __future__ import annotations
@@ -93,12 +97,20 @@ def main() -> int:
     qs, osql = mod.queries(), mod.oracle_sql()
     assert set(osql) <= set(qs)
 
+    from nosql_triple_store_spark.registry import aliases, skipped_queries
+    from scripts.harness import conditions
+
+    alias_of = aliases()
+    for a, t in alias_of.items():
+        assert qs[a] is qs[t] and osql.get(a) == osql.get(t), a
+    run_names = {alias_of.get(n, n) for n in only}
+
     con = duckdb_views(sf_dir)
 
     failed = []
     results: dict[str, dict] = {}
     for name in sorted(qs):
-        if only and name not in only:
+        if name in alias_of or (only and name not in run_names):
             continue
         t0 = time.time()
         df = qs[name](spark, sf_dir)
@@ -146,10 +158,17 @@ def main() -> int:
             print(f"  first diffs: {bad}")
             failed.append(name)
 
+    for name, target in sorted(alias_of.items()):
+        if only and name not in only:
+            continue
+        verdict = {k: v for k, v in results[target].items() if k != "sec"}
+        results[name] = {**verdict, "mode": "alias", "of": target}
+        print(f"{name:28s} alias of {target}", flush=True)
+        if target in failed:
+            failed.append(name)
+
     # queries probed-out of this runtime (missing optional deps) appear
     # as explicit skipped entries, never silence
-    from nosql_triple_store_spark.registry import skipped_queries
-
     for name, reason in sorted(skipped_queries().items()):
         if only and name not in only:
             continue
@@ -159,14 +178,20 @@ def main() -> int:
     if json_out:
         import json
 
-        oracle_r = [r for r in results.values() if r["mode"] == "oracle"]
-        ro_r = [r for r in results.values() if r["mode"] == "rows_only"]
+        # an alias entry carries its target's match/deterministic key
+        oracle_r = [r for r in results.values() if "match" in r]
+        ro_r = [r for r in results.values() if "deterministic" in r]
         skip_r = [r for r in results.values() if r["mode"] == "skipped"]
         with open(json_out, "w") as f:
             json.dump(
                 {
+                    **conditions(spark),
                     "sf_dir": sf_dir,
                     "n_queries": len(results),
+                    "n_executed": sum(
+                        1 for r in results.values()
+                        if r["mode"] in ("oracle", "rows_only")
+                    ),
                     "n_oracle": len(oracle_r),
                     "n_oracle_pass": sum(
                         1 for r in oracle_r if r.get("match")

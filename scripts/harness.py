@@ -6,6 +6,7 @@
   that a selected query consumes, timed outside the queries.
 - ``timed_run``: one noop-sink run of a query with first-touch layout
   builds moved out of its figure and only its own cached blocks freed.
+- ``conditions``: what an artifact records about the run it measured.
 
 Execution is forced with a noop-format write, so the full pipeline runs
 on executors with no driver-side collect skewing the numbers.
@@ -14,7 +15,9 @@ on executors with no driver-side collect skewing the numbers.
 from __future__ import annotations
 
 import gc
+import os
 import re
+import subprocess
 import time
 from collections.abc import Callable, Iterable
 from typing import NamedTuple
@@ -22,7 +25,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from nosql_triple_store_spark.catalog import TABLES, load_table
-from nosql_triple_store_spark.registry import all_layouts
+from nosql_triple_store_spark.registry import aliases, all_layouts
 from nosql_triple_store_spark.scratch import drain_build_seconds, scratch_tmp
 
 
@@ -30,6 +33,28 @@ class Run(NamedTuple):
     elapsed: float  # seconds, layout builds excluded
     built: dict[str, float]  # layout kind -> first-touch build seconds
     cleanup_failures: int  # persisted-RDD snapshot/unpersist errors
+
+
+def conditions(spark: SparkSession) -> dict:
+    """The git HEAD of this checkout (suffixed ``-dirty`` when tracked
+    files differ from it; None outside a git checkout), the session's
+    default parallelism, and every alias name with the name of the
+    computation it shares."""
+    try:
+        head = subprocess.run(
+            ["git", "describe", "--always", "--dirty", "--abbrev=40"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        head = None
+    return {
+        "git_head": head,
+        "cores": spark.sparkContext.defaultParallelism,
+        "aliases": aliases(),
+    }
 
 
 def warm_session(spark: SparkSession, sf_dir: str) -> None:

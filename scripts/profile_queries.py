@@ -7,7 +7,8 @@ Usage:
 For each named query: builds the DataFrame, writes `.explain("formatted")`
 to <plans-dir>/<name>_<suffix>.txt (when --plans-dir is given), then times
 N noop-sink runs (default 4; first run reported separately as cold).
-Prints one line per query: name, cold, warm runs, warm median.
+Prints one line per query: name, cold, warm runs, warm median. An alias
+name (``registry.aliases()``) profiles its target, once.
 
 Warm-up and timed runs come from ``scripts/harness.py``, as in bench.py:
 noop sink, layout builds drained out of the timed region, only blocks a
@@ -43,10 +44,17 @@ def main() -> None:
     warm_session(spark, sf_dir)
 
     cleanup_failures = 0
+    names = []
     for name in args.names:
         if name not in specs:
             print(f"{name}: NOT REGISTERED")
             continue
+        target = specs[name].alias_of or name
+        if target != name:
+            print(f"{name}: alias of {target}")
+        if target not in names:
+            names.append(target)
+    for name in names:
         fn = specs[name].fn
         if args.plans_dir:
             try:

@@ -41,6 +41,16 @@ def pytest_test_count() -> int:
     return int(m.group(1))
 
 
+def _names_line(specs: dict) -> str:
+    """'N names, M computations, K aliases': an alias is a second name
+    for a computation, run once by every harness."""
+    n_alias = sum(1 for v in specs.values() if v.alias_of)
+    return (
+        f"{len(specs)} names, {len(specs) - n_alias} computations, "
+        f"{n_alias} aliases"
+    )
+
+
 def readme_block(n_tests: int) -> str:
     from nosql_triple_store_spark.registry import all_specs, skipped_queries
 
@@ -51,13 +61,14 @@ def readme_block(n_tests: int) -> str:
     n_rows_only = len(specs) - n_oracle
     return (
         f"{R_BEGIN}\n"
-        f"- {n_total} registered checks; {n_oracle} verified against "
-        f"DuckDB oracles through\n"
-        f"  the vanilla-session driver contract; {n_rows_only} rows-only "
-        f"with\n"
-        f"  cross-validation/invariant/differential tests; {len(skips)} "
-        f"runtime-probed\n"
-        f"  skip(s) recorded explicitly. {n_tests} pytest tests green.\n"
+        f"- {n_total} registered checks: {_names_line(specs)} and "
+        f"{len(skips)}\n"
+        f"  runtime-probed skip(s) recorded explicitly. {n_oracle} names "
+        f"verified against\n"
+        f"  DuckDB oracles through the vanilla-session driver contract; "
+        f"{n_rows_only}\n"
+        f"  rows-only with cross-validation/invariant/differential tests.\n"
+        f"  {n_tests} pytest tests green.\n"
         f"{R_END}"
     )
 
@@ -76,7 +87,8 @@ def counts_block() -> str:
     )
     return (
         f"{BEGIN}\n"
-        f"**{n_total} registered queries**: {n_oracle} oracle-checked "
+        f"**{n_total} registered queries** ({_names_line(specs)}): "
+        f"{n_oracle} oracle-checked "
         f"against DuckDB (row count + schema + order-insensitive values "
         f"at sf0.01 via `scripts/driver_check.py`), {n_rows_only} "
         f"rows-only (approximate / engine-specific hashing or iterative "

@@ -12,10 +12,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nosql_triple_store_spark.operators.bgp_ext2 import q_text_containment
 from nosql_triple_store_spark.operators.dedup import (
     _shingle_pairs,
     q_dedup_near,
+    q_text_containment,
 )
 from nosql_triple_store_spark.operators.dedup_prefix import (
     _LADDER,

@@ -214,16 +214,15 @@ def test_classifier_score_is_single_shuffle_jvm_only(spark):
 
 
 def test_bgp_encoded_reads_materialized_store(spark):
-    """q_bgp_star_encoded must read the scratch-parquet encoded store
-    (load-time ETL), not rebuild the dictionary per call: the plan
-    scans long-typed parquet and contains NO string-space triples
-    union or xxhash64 dictionary aggregation (PLANS.md r5 audit)."""
-    from nosql_triple_store_spark.operators.relational_ext3 import (
-        encoded_store,
-    )
+    """The SPARQL star (q_sparql_select) must read the scratch-parquet
+    encoded store (load-time ETL), not rebuild the dictionary per call:
+    the plan scans long-typed parquet and contains NO string-space
+    triples union or xxhash64 dictionary aggregation (PLANS.md r5
+    audit)."""
+    from nosql_triple_store_spark.operators.bgp_queries import encoded_store
 
     encoded_store(spark, SF_DIR)  # ensure built (bench layout phase)
-    p = _plan(spark, "q_bgp_star_encoded")
+    p = _plan(spark, "q_sparql_select")
     assert "xxhash64" not in p  # no in-plan dictionary build
     # encoded triples come off a columnar scan, joins run on longs
     assert "Scan parquet" in p

@@ -128,23 +128,22 @@ def test_order_by_unprojected_variable_raises(spark):
 
 # ------------------------------------------------- encoded execution
 
-# every registered triple-pattern query except the two whose plans name
-# no encoded scan: q_bgp_path_closure (its checkpointed closure) and
-# q_bgp_describe (DESCRIBE reads the string-space triples)
+# the star, ASK, MINUS and NOT EXISTS queries and every SPARQL-text
+# q_bgp_* computation (an alias runs its target, listed once); the
+# closure's plan names only its checkpointed layers, and DESCRIBE reads
+# the string-space triples
 _ENCODED_QUERIES = [
     "q_sparql_select",
     "q_bgp_point",
-    "q_bgp_star",
     "q_bgp_path",
-    "q_bgp_notexists",
+    "q_sparql_notexists",
     "q_bgp_values",
     "q_bgp_construct",
-    "q_bgp_ask",
+    "q_sparql_ask",
     "q_bgp_optional",
     "q_bgp_varpred",
-    "q_bgp_minus",
+    "q_sparql_minus",
     "q_bgp_path_inverse",
-    "q_bgp_star_encoded",
 ]
 
 
@@ -617,12 +616,7 @@ def test_minus_no_shared_vars_is_noop(spark):
 def test_minus_notexists_lower_to_left_anti(spark):
     """MINUS / FILTER NOT EXISTS lower to one left-anti join in
     encoded space, no extra exchanges beyond the member joins."""
-    for name in (
-        "q_sparql_minus",
-        "q_sparql_notexists",
-        "q_bgp_minus",
-        "q_bgp_notexists",
-    ):
+    for name in ("q_sparql_minus", "q_sparql_notexists"):
         plan = (
             SPECS[name].fn(spark, SF_DIR)
             ._jdf.queryExecution()

@@ -291,7 +291,7 @@ def test_bgp_delta_join_emits_across_batches_exactly_once(spark):
 
     specs = all_specs()
     got = specs["q_stream_bgp_delta_join"].fn(spark, SF_DIR)
-    batch = specs["q_bgp_star"].fn(spark, SF_DIR)
+    batch = specs["q_sparql_select"].fn(spark, SF_DIR)
     assert got.exceptAll(batch).count() == 0
     assert batch.exceptAll(got).count() == 0
     base = bs._LAST_BASE[SF_DIR]

@@ -13,11 +13,11 @@ from .test_build_once_guard import _modules
 # the string-space triples
 ALLOWED_TRIPLES_VIEW = {
     # the encoded-store build: dictionary and encoded triples
-    ("operators/relational_ext3.py", "encoded_store"),
+    ("operators/bgp_queries.py", "encoded_store"),
     # iterative BFS over the undirected location edges
     ("operators/graph_ext.py", "q_graph_bfs"),
     # min_hops of a bounded path has no SPARQL 1.1 form
-    ("operators/relational_ext51.py", "q_bgp_path_quantified"),
+    ("operators/bgp_queries.py", "q_bgp_path_quantified"),
 }
 
 
