@@ -20,23 +20,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register, register_layout
-from ..scratch import scratch_tmp
+from ..scratch import memo, scratch_tmp
 
 _N_BUCKETS = 8
-_TABLES: dict[str, tuple[str, str]] = {}  # sf_dir -> (orders_tbl, lineitem_tbl)
 
 
-@register_layout("bucketed_orders_lineitem", r"q_join|q_tpch")
-def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize orders+lineitem bucketed by orderkey as external
-    tables (path under tmp; in-memory catalog). Cached per sf_dir —
-    layout creation is a one-time ETL cost amortized over every
-    subsequent co-located join, which is the whole point."""
-    if sf_dir in _TABLES:
-        a, b = _TABLES[sf_dir]
-        # session may have restarted and lost the in-memory catalog
-        if spark.catalog.tableExists(a) and spark.catalog.tableExists(b):
-            return _TABLES[sf_dir]
+def _write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     tag = uuid.uuid4().hex[:8]
     root = scratch_tmp("spark_graft_buckets_")
     names = (f"orders_b_{tag}", f"lineitem_b_{tag}")
@@ -51,8 +40,22 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .mode("overwrite")
             .saveAsTable(name)
         )
-    _TABLES[sf_dir] = names
     return names
+
+
+@register_layout("bucketed_orders_lineitem", r"q_join|q_tpch")
+def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Materialize orders+lineitem bucketed by orderkey as external
+    tables (path under tmp), once per source state and SparkContext
+    (the in-memory catalog lives exactly as long as the context): a
+    one-time ETL cost amortized over every co-located join."""
+    return memo(
+        "bucketed_orders_lineitem",
+        sf_dir,
+        lambda: _write_bucketed(spark, sf_dir),
+        sources=("orders", "lineitem"),
+        key=spark.sparkContext.applicationId,
+    )
 
 
 @register(

@@ -35,9 +35,9 @@ from pyspark.sql.types import LongType
 from ..catalog import load_table, read_parquet
 from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
 from ..registry import register, register_layout
-from ..scratch import build_once
+from ..scratch import build_once, memo
 from ..widths import cluster_cores, fanout_width
-from ..materialize import lazy_cut, materialize
+from ..materialize import lazy_cut
 
 
 @register(
@@ -407,7 +407,6 @@ _SIMHASH_CAP_BLOWUP = 4
 # keep their historical fixed-cap results bit-identically, and the
 # relative budget takes over exactly where volume actually hurts
 _SIMHASH_CAP_FLOOR_ROWS = 8_000_000
-_SIMHASH_ARITY: dict[str, tuple[int, int]] = {}  # sf_dir -> (arity, Σc²)
 # measured decision records (scripts/saturation_probe.py-style
 # artifact evidence): one per probed (corpus, arity)
 SIMHASH_ARITY_LOG: list[dict] = []
@@ -450,58 +449,58 @@ def _chunk_col(combos: list[tuple[int, ...]]) -> list:
     ]
 
 
-def _simhash_arity(
-    spark: SparkSession, sf_dir: str, groups: DataFrame, arity: int
-) -> int:
+def _probe_simhash_arity(
+    sf_dir: str, groups: DataFrame, arity: int
+) -> tuple[int, int]:
     """Occupancy-probed band arity (round 11): starting from the
     uniform-occupancy estimate, measure the actual candidate volume
     Σ_buckets c² over the DISTINCT-signature band buckets and step the
     arity up while it exceeds _SIMHASH_MAX_BLOWUP × chunk rows. One
     linear aggregate + one 1-row collect per probed arity (≤3 probes
-    ever), cached per corpus and attributed to the layout bucket."""
-    if sf_dir not in _SIMHASH_ARITY:
-        from ..scratch import timed_build
-
-        with timed_build("simhash_arity_probe"):
-            while True:
-                combos = _simhash_combos(arity)
-                est, rows = (
-                    groups.select(*_chunk_col(combos))
-                    .groupBy("c.chunk_idx", "c.chunk_val")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .agg(
-                        F.coalesce(
-                            F.sum(F.col("n") * F.col("n")), F.lit(0)
-                        ).alias("e"),
-                        F.coalesce(F.sum("n"), F.lit(0)).alias("r"),
-                    )
-                    .collect()[0]
-                )
-                blowup = est / max(rows, 1)
-                SIMHASH_ARITY_LOG.append(
-                    {
-                        "sf_dir": sf_dir,
-                        "arity": arity,
-                        "est_candidate_rows": int(est),
-                        "chunk_rows": int(rows),
-                        "blowup": round(blowup, 2),
-                        "accepted": blowup <= _SIMHASH_ARITY_BLOWUP
-                        or arity >= 3,
-                    }
-                )
-                if blowup <= _SIMHASH_ARITY_BLOWUP or arity >= 3:
-                    break
-                arity += 1
-            # cache the accepted arity's measured volume too: the
-            # df-cap decision below reuses it to skip its histogram
-            # subplan when the cap provably cannot engage
-            _SIMHASH_ARITY[sf_dir] = (arity, int(est))
-    return _SIMHASH_ARITY[sf_dir][0]
+    ever). Returns (accepted arity, its measured Σc²): the df-cap
+    decision reuses the volume to skip its histogram subplan when the
+    cap provably cannot engage."""
+    while True:
+        combos = _simhash_combos(arity)
+        est, rows = (
+            groups.select(*_chunk_col(combos))
+            .groupBy("c.chunk_idx", "c.chunk_val")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.coalesce(
+                    F.sum(F.col("n") * F.col("n")), F.lit(0)
+                ).alias("e"),
+                F.coalesce(F.sum("n"), F.lit(0)).alias("r"),
+            )
+            .collect()[0]
+        )
+        blowup = est / max(rows, 1)
+        accepted = blowup <= _SIMHASH_ARITY_BLOWUP or arity >= 3
+        SIMHASH_ARITY_LOG.append(
+            {
+                "sf_dir": sf_dir,
+                "arity": arity,
+                "est_candidate_rows": int(est),
+                "chunk_rows": int(rows),
+                "blowup": round(blowup, 2),
+                "accepted": accepted,
+            }
+        )
+        if accepted:
+            return arity, int(est)
+        arity += 1
 
 
-def _simhash_probed_volume(sf_dir: str) -> int:
-    """Measured Σc² at the accepted arity (from the cached probe)."""
-    return _SIMHASH_ARITY[sf_dir][1]
+def _simhash_arity(
+    sf_dir: str, groups: DataFrame, arity: int
+) -> tuple[int, int]:
+    """:func:`_probe_simhash_arity`, once per corpus."""
+    return memo(
+        "simhash_arity_probe",
+        sf_dir,
+        lambda: _probe_simhash_arity(sf_dir, groups, arity),
+        sources=("documents",),
+    )
 
 
 @register("q_dedup_simhash", oracle=None)  # rows-only: custom signature
@@ -609,7 +608,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern as dedup_prefix's saturation probe. The covering bound
     # only tightens with arity (≤7 at 1, ≤5 at 2 and 3), so stepping
     # up never loses a top-50-band pair the coarser arity guaranteed.
-    arity = _simhash_arity(spark, sf_dir, groups, arity)
+    arity, volume = _simhash_arity(sf_dir, groups, arity)
     combos = _simhash_combos(arity)
     chunks = groups.select("sh", *_chunk_col(combos)).select(
         "sh", "c.chunk_idx", "c.chunk_val"
@@ -635,7 +634,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identically (the fixed 2048 cap still applies on top).
     # Hamming-0 recall stays unconditional (within-group pairs never
     # enter the band join).
-    if _simhash_probed_volume(sf_dir) <= _SIMHASH_CAP_FLOOR_ROWS:
+    if volume <= _SIMHASH_CAP_FLOOR_ROWS:
         # The arity probe already measured TOTAL Σc² under the cap's
         # absolute floor, so the adaptive budget keeps every bucket
         # (cum at the max size ≤ floor) and the adaptive cap provably

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
-from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
+from ..functions.textfns import TOKS_SQL, shingles_sql
 from ..registry import register, register_layout
 from ..scratch import build_once
 from ..widths import cluster_cores

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.textfns import TOKS_SQL, shingles_col, shingles_sql, tokens_col
+from ..functions.textfns import TOKS_SQL, shingles_sql
 from ..registry import register
 from .dedup import _shingle_stream
 from .dedup_pipeline import THRESHOLD, _minhash_candidates, band_index

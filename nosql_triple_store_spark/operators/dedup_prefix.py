@@ -83,7 +83,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import read_parquet
 from ..registry import register, register_layout
-from ..scratch import build_once
+from ..scratch import build_once, memo
 from ..widths import cluster_cores
 from ..materialize import materialize
 
@@ -233,30 +233,31 @@ def _skey_col(shingle: str = "shingle") -> F.Column:
 # duplicates: below this duplicate mass the rep-level indirection
 # (repsh copy read + expansion joins) costs more than the ×K² join
 # saving. The decision is a LINEAR probe (one per-doc hash-sum
-# aggregate — no window, no string shuffle), cached per sf_dir;
+# aggregate — no window, no string shuffle), cached per corpus;
 # hash-xor collisions can only overestimate the duplicate mass, i.e.
 # flip toward building the exact layout, never toward wrong results —
 # both paths are exact, this is purely a physical-plan choice.
 _COLLAPSE_MAX_REP_FRACTION = 0.7
-_COLLAPSE_DECISION: dict[str, bool] = {}
+
+
+def _probe_collapse(spark: SparkSession, sf_dir: str) -> bool:
+    rs = ranked_shingles(spark, sf_dir)
+    sig = rs.groupBy("doc_id").agg(
+        F.expr("bit_xor(xxhash64(shingle))").alias("h"),
+        F.first("n_sh").alias("n"),
+    )
+    n_docs = sig.count()
+    n_groups = sig.select("h", "n").distinct().count()
+    return n_groups <= _COLLAPSE_MAX_REP_FRACTION * n_docs
 
 
 def _collapse_pays(spark: SparkSession, sf_dir: str) -> bool:
-    if sf_dir not in _COLLAPSE_DECISION:
-        from ..scratch import timed_build
-
-        with timed_build("collapse_probe"):
-            rs = ranked_shingles(spark, sf_dir)
-            sig = rs.groupBy("doc_id").agg(
-                F.expr("bit_xor(xxhash64(shingle))").alias("h"),
-                F.first("n_sh").alias("n"),
-            )
-            n_docs = sig.count()
-            n_groups = sig.select("h", "n").distinct().count()
-            _COLLAPSE_DECISION[sf_dir] = (
-                n_groups <= _COLLAPSE_MAX_REP_FRACTION * n_docs
-            )
-    return _COLLAPSE_DECISION[sf_dir]
+    return memo(
+        "collapse_probe",
+        sf_dir,
+        lambda: _probe_collapse(spark, sf_dir),
+        sources=("documents",),
+    )
 
 
 def _set_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -363,69 +364,65 @@ def _expand_group_pairs(rep_pairs: DataFrame, groups: DataFrame) -> DataFrame:
 # ratios 0.08-1.9 (open vocab), word-shuffled derived sf1/sf3 ratios
 # 3.5-71 and growing ∝ n — 3 splits the regimes with margin both ways.
 SAT_MAX_BLOWUP = 3
-_SAT_DECISION: dict[tuple[str, str, int, int], bool] = {}
 # measured decision artifact: one record per (corpus, kind, rung)
 # probe — scripts/saturation_probe.py dumps it per sf dir
 SATURATION_LOG: list[dict] = []
 
 
-def _exact_is_proportional(
-    spark: SparkSession,
-    sf_dir: str,
-    rs: DataFrame,
-    p: int,
-    q: int,
-    kind: str,
+def _probe_saturation(
+    sf_dir: str, rs: DataFrame, p: int, q: int, kind: str
 ) -> bool:
     """The saturation probe: estimate the exact rung's materialized
     candidate-join rows — Σ_s prefix_df(s)·df(s) for containment
     (probe prefix × index), Σ_s pdf(s)² under the equal-size
     pair-tightened prefix (2p, p+q) for Jaccard — in ONE linear
-    aggregate over the ranked layout, cached per (corpus, kind, rung).
-    Both collects are single scalars (plan constants, not data)."""
+    aggregate over the ranked layout. Both collects are single scalars
+    (plan constants, not data)."""
+    n_rows = rs.count()
+    if kind == "containment":
+        dfs = rs.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        est = (
+            _prefix(rs, p, q, _K_EXT)
+            .join(dfs, "shingle")
+            .agg(F.sum("df"))
+            .collect()[0][0]
+            or 0
+        )
+    else:
+        pdf = (
+            _prefix(rs, 2 * p, p + q, _K_EXT)
+            .groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        est = pdf.agg(F.sum(F.col("c") * F.col("c"))).collect()[0][0] or 0
+    ok = est <= SAT_MAX_BLOWUP * n_rows
+    SATURATION_LOG.append(
+        {
+            "sf_dir": sf_dir,
+            "kind": kind,
+            "rung": f"{p}/{q}",
+            "est_candidate_rows": int(est),
+            "corpus_shingle_rows": int(n_rows),
+            "blowup": round(est / max(n_rows, 1), 2),
+            "exact_selected": ok,
+        }
+    )
+    return ok
+
+
+def _exact_is_proportional(
+    spark: SparkSession, sf_dir: str, rs: DataFrame, p: int, q: int, kind: str
+) -> bool:
+    """:func:`_probe_saturation`, once per (corpus, kind, rung)."""
     if p == 0:
         return True  # final ladder rung: definitionally the full join
-    key = (sf_dir, kind, p, q)
-    if key not in _SAT_DECISION:
-        from ..scratch import timed_build
-
-        with timed_build("saturation_probe"):
-            n_rows = rs.count()
-            if kind == "containment":
-                dfs = rs.groupBy("shingle").agg(
-                    F.count(F.lit(1)).alias("df")
-                )
-                est = (
-                    _prefix(rs, p, q, _K_EXT)
-                    .join(dfs, "shingle")
-                    .agg(F.sum("df"))
-                    .collect()[0][0]
-                    or 0
-                )
-            else:
-                pdf = (
-                    _prefix(rs, 2 * p, p + q, _K_EXT)
-                    .groupBy("shingle")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                )
-                est = (
-                    pdf.agg(F.sum(F.col("c") * F.col("c"))).collect()[0][0]
-                    or 0
-                )
-            ok = est <= SAT_MAX_BLOWUP * n_rows
-            _SAT_DECISION[key] = ok
-            SATURATION_LOG.append(
-                {
-                    "sf_dir": sf_dir,
-                    "kind": kind,
-                    "rung": f"{p}/{q}",
-                    "est_candidate_rows": int(est),
-                    "corpus_shingle_rows": int(n_rows),
-                    "blowup": round(est / max(n_rows, 1), 2),
-                    "exact_selected": ok,
-                }
-            )
-    return _SAT_DECISION[key]
+    return memo(
+        "saturation_probe",
+        sf_dir,
+        lambda: _probe_saturation(sf_dir, rs, p, q, kind),
+        sources=("documents",),
+        key=(kind, p, q),
+    )
 
 
 def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.triple import E_CTE
 from ..registry import register, register_layout
-from ..scratch import build_once
+from ..scratch import build_once, memo
 
 # --- q_agg_moments --------------------------------------------------------
 
@@ -146,11 +146,6 @@ def q_window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _VACUUM_KEEP = 2
 _VACUUM_BATCHES = 4
-# memoized dispositions per register path: vacuuming is destructive, so a
-# repeat invocation must report the ORIGINAL run (idempotent result),
-# not re-vacuum an already-trimmed register. A rewritten events table
-# builds a new register path, which is vacuumed afresh.
-_VACUUM_RESULTS: dict[str, list[tuple]] = {}
 
 
 @register_layout("vacuum_register", r"q_maintenance_vacuum")
@@ -191,15 +186,26 @@ def q_maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata/manifest operation (here: local fs walk), never a data
     shuffle. The read-back correctness invariant (latest version
     survives untouched) is pinned in tests/test_ext29.py."""
-    from ..sources.compaction import read_register, versions
-
     schema = (
         "version string, disposition string, n_files int, "
         "had_bytes boolean, live_rows int"
     )
     base = vacuum_register(spark, sf_dir)
-    if base in _VACUUM_RESULTS:
-        return spark.createDataFrame(_VACUUM_RESULTS[base], schema)
+    result = memo(
+        "vacuum_run",
+        sf_dir,
+        lambda: _vacuum(spark, base),
+        sources=("events",),
+    )
+    return spark.createDataFrame(result, schema)
+
+
+def _vacuum(spark: SparkSession, base: str) -> list[tuple]:
+    """Drop all but the newest versions of the register at ``base``.
+    Destructive, so it runs once per register: a repeat invocation
+    reports the ORIGINAL run, and a rewritten events table builds a new
+    register, which is vacuumed afresh."""
+    from ..sources.compaction import read_register, versions
 
     vdirs = versions(base, "v")
     keep = set(vdirs[-_VACUUM_KEEP:])
@@ -219,9 +225,7 @@ def q_maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(vdir, ignore_errors=True)
     # latest version must still read back after the vacuum
     n_live = read_register(spark, base).count()
-    result = [(v, d, nf, hb, int(n_live)) for v, d, nf, hb in rows]
-    _VACUUM_RESULTS[base] = result
-    return spark.createDataFrame(result, schema)
+    return [(v, d, nf, hb, int(n_live)) for v, d, nf, hb in rows]
 
 
 q_maintenance_vacuum.__doc__ = q_maintenance_vacuum.__doc__.format(

@@ -28,18 +28,15 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register, register_skip
+from ..scratch import memo, scratch_dir
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
-
-_JDBC_DBS: dict[str, tuple[str, int, int]] = {}
-_JDBC_LOCK = threading.Lock()
 
 
 def derby_jdbc_available() -> bool:
@@ -62,43 +59,34 @@ FROM orders GROUP BY o_orderstatus, o_orderpriority
 
 
 def _derby_db(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
-    """Write orders into an embedded Derby database once per
-    (process, sf_dir); returns (jdbc_url, min_key, max_key). The
-    bounds collect is ONE 2-scalar aggregate row (a plan constant for
-    the partitioned read, not data), and the derby.log stream is
-    pointed into the scratch dir so the engine never writes to the
-    caller's cwd."""
-    with _JDBC_LOCK:
-        if sf_dir not in _JDBC_DBS:
-            from ..scratch import scratch_dir, timed_build
-
-            with timed_build("jdbc_derby_db"):
-                base = scratch_dir("jdbcdb", sf_dir)
-                os.makedirs(base, exist_ok=True)
-                spark._jvm.java.lang.System.setProperty(
-                    "derby.stream.error.file", f"{base}/derby.log"
-                )
-                url = f"jdbc:derby:{base}/db;create=true"
-                src = load_table(spark, sf_dir, "orders").select(
-                    "o_orderkey",
-                    "o_custkey",
-                    "o_orderstatus",
-                    "o_totalprice",
-                    "o_orderpriority",
-                )
-                lo, hi = src.agg(
-                    F.min("o_orderkey"), F.max("o_orderkey")
-                ).collect()[0]
-                (
-                    src.write.format("jdbc")
-                    .option("url", url)
-                    .option("dbtable", "orders_rt")
-                    .option("driver", _DERBY_DRIVER)
-                    .mode("overwrite")
-                    .save()
-                )
-                _JDBC_DBS[sf_dir] = (url, int(lo), int(hi))
-    return _JDBC_DBS[sf_dir]
+    """Write orders into an embedded Derby database; returns
+    (jdbc_url, min_key, max_key). The bounds collect is ONE 2-scalar
+    aggregate row (a plan constant for the partitioned read, not data),
+    and the derby.log stream is pointed into the scratch dir so the
+    engine never writes to the caller's cwd."""
+    base = scratch_dir("jdbcdb", sf_dir)
+    os.makedirs(base, exist_ok=True)
+    spark._jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", f"{base}/derby.log"
+    )
+    url = f"jdbc:derby:{base}/db;create=true"
+    src = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "o_orderpriority",
+    )
+    lo, hi = src.agg(F.min("o_orderkey"), F.max("o_orderkey")).collect()[0]
+    (
+        src.write.format("jdbc")
+        .option("url", url)
+        .option("dbtable", "orders_rt")
+        .option("driver", _DERBY_DRIVER)
+        .mode("overwrite")
+        .save()
+    )
+    return url, int(lo), int(hi)
 
 
 def q_source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,7 +100,12 @@ def q_source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless for the register's scalar types."""
     from ..sources.readers import read_jdbc_table
 
-    url, lo, hi = _derby_db(spark, sf_dir)
+    url, lo, hi = memo(
+        "jdbc_derby_db",
+        sf_dir,
+        lambda: _derby_db(spark, sf_dir),
+        sources=("orders",),
+    )
     orders = read_jdbc_table(
         spark,
         url,

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.textfns import TOKS_SQL, tokens_col
 from ..registry import register
+from ..scratch import memo
 from ..materialize import materialize
 
 _PMI_MIN_COUNT = 5
@@ -107,18 +108,19 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGES = 8
 
-_BPE_CACHE: dict[str, list[tuple[int, str, str, str, int]]] = {}
-
 
 def bpe_fit_cached(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, str, int]]:
-    """Train once per (process, sf_dir); q_text_bpe_merges and
+    """Train once per (process, corpus); q_text_bpe_merges and
     q_text_bpe_encode share the merge table like production tokenizers
     (train once, apply everywhere)."""
-    if sf_dir not in _BPE_CACHE:
-        _BPE_CACHE[sf_dir] = bpe_fit(spark, sf_dir)
-    return _BPE_CACHE[sf_dir]
+    return memo(
+        "bpe_merge_table",
+        sf_dir,
+        lambda: bpe_fit(spark, sf_dir),
+        sources=("documents",),
+    )
 
 
 def bpe_fit(

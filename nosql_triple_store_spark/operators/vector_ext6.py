@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..scratch import memo
 
 
 def _scatter_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -51,44 +52,40 @@ def _scatter_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-# fitted sufficient statistic, cached per (application, sf_dir) the way
-# the quality gate freezes its NB model: both PCA consumers (pca/whiten)
-# share one scatter pass, and re-measuring a query re-reads the fit
-# instead of re-fitting — the deployed-model shape. Keyed by
-# applicationId so a fresh context refits (driver-side numpy only, no
-# block-manager references to go stale).
-_SCATTER: dict[tuple[str, str], tuple[float, "np.ndarray", "np.ndarray"]] = {}
+def _fit_scatter_stats(
+    spark: SparkSession, sf_dir: str
+) -> tuple[float, "np.ndarray", "np.ndarray"]:
+    """One distributed pass → (n, Σx, Σxx^T) as driver-side numpy."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        F.col("embedding").cast("array<double>").alias("x")
+    )
+    cells = (
+        emb.mapInPandas(_scatter_cells, schema="idx long, v double")
+        .groupBy("idx")
+        .agg(F.sum("v").alias("v"))
+        .collect()
+    )
+    flat = np.zeros(len(cells))
+    for r in cells:
+        flat[r.idx] = r.v
+    # solve d from d² + d + 1 = n_cells
+    d = round((-1 + (4 * len(flat) - 3) ** 0.5) / 2)
+    return flat[0], flat[1 : d + 1], flat[d + 1 :].reshape(d, d)
 
 
 def _scatter_stats(
     spark: SparkSession, sf_dir: str
 ) -> tuple[float, "np.ndarray", "np.ndarray"]:
-    """One distributed pass → (n, Σx, Σxx^T) as driver-side numpy."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCATTER:
-        from ..scratch import timed_build
-
-        with timed_build("pca_scatter_stats"):
-            emb = load_table(spark, sf_dir, "embeddings").select(
-                F.col("embedding").cast("array<double>").alias("x")
-            )
-            cells = (
-                emb.mapInPandas(_scatter_cells, schema="idx long, v double")
-                .groupBy("idx")
-                .agg(F.sum("v").alias("v"))
-                .collect()
-            )
-            flat = np.zeros(len(cells))
-            for r in cells:
-                flat[r.idx] = r.v
-            # solve d from d² + d + 1 = n_cells
-            d = round((-1 + (4 * len(flat) - 3) ** 0.5) / 2)
-            _SCATTER[key] = (
-                flat[0],
-                flat[1 : d + 1],
-                flat[d + 1 :].reshape(d, d),
-            )
-    return _SCATTER[key]
+    """The fitted statistic, once per application (a fresh context
+    refits): both PCA consumers (pca/whiten) share one scatter pass —
+    the deployed-model shape."""
+    return memo(
+        "pca_scatter_stats",
+        sf_dir,
+        lambda: _fit_scatter_stats(spark, sf_dir),
+        sources=("embeddings",),
+        key=spark.sparkContext.applicationId,
+    )
 
 
 def pca_scatter_fit(

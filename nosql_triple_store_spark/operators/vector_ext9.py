@@ -35,15 +35,13 @@ Lloyd nor the codebook fit ever reruns on unchanged data.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..functions.vectors import as_double_array, cosine_col
 from ..registry import register, register_layout
-from ..scratch import build_once
+from ..scratch import build_once, memo
 from .vector_ext4 import _assign, kmeans_fit
 
 _NCELLS = 10  # learned coarse cells (k-means k)
@@ -55,20 +53,15 @@ _SUBDIM = 8  # 64-dim embeddings / 8 subspaces
 _SHORTLIST = 100  # ADC candidates kept for exact re-rank
 _TOPK = 10
 
-# Model cache, two tiers (in-process dict behind a lock, cross-process
+# Model cache, two tiers (``scratch.memo`` in process, a cross-process
 # JSON artifact keyed by the embeddings fingerprint). Lloyd and the
 # codebook fit are deterministic (fixed seeds), so concurrent processes
 # racing on the file write identical bytes and os.replace makes the
 # race benign; a data refresh changes the fingerprint and forces a
 # refit. This is the 100 TB shape: the model (k×dim centroids + M×K
 # codebook) lives NEXT TO the data and is loaded by jobs, not refit
-# per session.
-# The in-process model, the code table (``build_once`` key) and the
-# probe/LUT plan are all keyed by the MODEL PATH, which embeds the
-# source fingerprint (_model_path): an in-process data refresh misses
-# every cache coherently, so they never serve mixed generations.
-_MODELS: dict[str, dict] = {}
-_MODELS_LOCK = threading.Lock()
+# per session. The model, code table and probe/LUT plan all key on the
+# embeddings fingerprint, so they never serve mixed generations.
 
 
 def _model_path(sf_dir: str) -> str:
@@ -111,8 +104,7 @@ def _fit_codebook(
     return book
 
 
-@register_layout("ivf_coarse_codebook", r"q_vector")
-def _ivfpq_model(spark: SparkSession, sf_dir: str) -> dict:
+def _load_or_fit_model(spark: SparkSession, sf_dir: str) -> dict:
     """{"centroids": ncells×dim, "codebook": M×K×subdim} — loaded from
     the cross-process artifact when the fingerprint matches, else fit
     (Lloyd + codebook collect) and persisted via atomic rename."""
@@ -120,47 +112,45 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str) -> dict:
     import os
 
     path = _model_path(sf_dir)
-    with _MODELS_LOCK:
-        if path in _MODELS:
-            return _MODELS[path]
-        model: dict | None = None
-        try:
-            with open(path, encoding="utf-8") as fh:
-                model = json.load(fh)
-            cents = model.get("centroids", [])
-            book = model.get("codebook", [])
-            if (
-                len(cents) != _NCELLS
-                or any(len(c) != _M * _SUBDIM for c in cents)
-                or len(book) != _M
-                or any(len(ks) != _K for ks in book)
-            ):
-                model = None  # foreign/corrupt artifact: refit
-        except (OSError, ValueError):
-            model = None
-        if model is None:
-            cents, _ = kmeans_fit(
-                spark, sf_dir, k=_NCELLS, iterations=_KM_ITERS
-            )
-            model = {
-                "centroids": cents,
-                "codebook": _fit_codebook(spark, sf_dir, cents),
-            }
-            tmp = f"{path}.tmp{os.getpid()}"
-            try:
-                with open(tmp, "w", encoding="utf-8") as fh:
-                    json.dump(model, fh)
-                os.replace(tmp, path)
-            except OSError:
-                pass  # cache write failure must not fail the query
-        _MODELS[path] = model
-        return model
+    try:
+        with open(path, encoding="utf-8") as fh:
+            model = json.load(fh)
+        cents = model.get("centroids", [])
+        book = model.get("codebook", [])
+        if (
+            len(cents) == _NCELLS
+            and all(len(c) == _M * _SUBDIM for c in cents)
+            and len(book) == _M
+            and all(len(ks) == _K for ks in book)
+        ):
+            return model
+        # foreign/corrupt artifact: refit
+    except (OSError, ValueError):
+        pass
+    cents, _ = kmeans_fit(spark, sf_dir, k=_NCELLS, iterations=_KM_ITERS)
+    model = {
+        "centroids": cents,
+        "codebook": _fit_codebook(spark, sf_dir, cents),
+    }
+    tmp = f"{path}.tmp{os.getpid()}"
+    try:
+        with open(tmp, "w", encoding="utf-8") as fh:
+            json.dump(model, fh)
+        os.replace(tmp, path)
+    except OSError:
+        pass  # cache write failure must not fail the query
+    return model
 
 
-def _coarse_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """Back-compat accessor for the learned coarse cells (tests +
-    bench layout phase)."""
-    return _ivfpq_model(spark, sf_dir)["centroids"]
+@register_layout("ivf_coarse_codebook", r"q_vector")
+def _ivfpq_model(spark: SparkSession, sf_dir: str) -> dict:
+    """:func:`_load_or_fit_model`, once per process and fingerprint."""
+    return memo(
+        "ivf_coarse_codebook",
+        sf_dir,
+        lambda: _load_or_fit_model(spark, sf_dir),
+        sources=("embeddings",),
+    )
 
 
 def _residual_subvectors(df: DataFrame) -> DataFrame:
@@ -283,17 +273,8 @@ def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return read_parquet(
         spark,
-        build_once(
-            "pq_code_table",
-            sf_dir,
-            write,
-            sources=("embeddings",),
-            key=_model_path(sf_dir),
-        ),
+        build_once("pq_code_table", sf_dir, write, sources=("embeddings",)),
     )
-
-
-_PROBE_PLANS: dict[str, tuple] = {}
 
 
 def _probe_plan(
@@ -306,16 +287,7 @@ def _probe_plan(
     cells' LUT slots are zero-filled (their rows are pruned before the
     lookup ever runs). Pure-python IEEE doubles — O(ncells·dim +
     nprobe·M·K) work, the per-query analog of FAISS computing the
-    distance table on the searcher. Cached per MODEL PATH (fingerprint
-    — invalidates together with the model and code table)
-    under the models lock: the probe is a fixed deterministic
-    parameter, so refetching it per run would bill a Spark job launch
-    to what is plan-construction work."""
-    cache_key = _model_path(sf_dir)
-    with _MODELS_LOCK:
-        cached = _PROBE_PLANS.get(cache_key)
-    if cached is not None:
-        return cached
+    distance table on the searcher."""
     model = _ivfpq_model(spark, sf_dir)
     cents = model["centroids"]
     book = model["codebook"]
@@ -343,8 +315,6 @@ def _probe_plan(
                 lut[cid][m][k] = sum(
                     (a - b) * (a - b) for a, b in zip(sub, cw)
                 )
-    with _MODELS_LOCK:
-        _PROBE_PLANS[cache_key] = (probe, probed, lut)
     return probe, probed, lut
 
 
@@ -366,7 +336,16 @@ def q_vector_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-shortlist rows, and the probe/LUT work is O(ncells·dim +
     nprobe·M·K) at the coordinator. The one-row probe fetch is the
     query parameter, not a data collect."""
-    probe, probed, lut = _probe_plan(spark, sf_dir)
+    # once per fingerprint (it invalidates together with the model and
+    # code table): the probe is a fixed deterministic parameter, so
+    # refetching it per run would bill a Spark job launch to what is
+    # plan-construction work
+    probe, probed, lut = memo(
+        "ivfpq_probe_plan",
+        sf_dir,
+        lambda: _probe_plan(spark, sf_dir),
+        sources=("embeddings",),
+    )
     # the full lut rides as ONE parsed literal expression (see
     # _darray_expr); unprobed cells are zero slots whose rows never
     # survive the partition-pruned scan

@@ -1,26 +1,28 @@
-"""Scratch directories for derived relations, and the one build-once
-policy every derived scratch artifact follows.
+"""Scratch directories for derived relations, and the one memo policy
+every compute-once-per-corpus value follows.
 
-A derived layout (co-purchase edges, the encoded triple store, the
-CSV/ORC/XML fixtures, compaction layouts) is written once and reread by
-every consumer. :func:`build_once` owns the four decisions involved:
+A derived value (a probe decision, a fitted model) or layout (the
+encoded triple store, the CSV/ORC/XML fixtures, compaction layouts) is
+computed once and reused by every consumer. :func:`memo` owns the four
+decisions involved; :func:`build_once` is its path-valued case.
 
 - **Key**: ``(kind, abspath(sf_dir), key, source fingerprints)``, the
   fingerprints being :func:`source_fingerprint` of each table in
-  ``sources``. Rewriting a listed table builds afresh instead of serving
-  stale rows. A layout derived from another layout lists the underlying
-  fixture tables.
-- **Path**: ``scratch_dir(kind, sf_dir)/<digest of key>``: unique per
-  absolute source dir (a shared basename such as ``/a/sf0.01`` and
-  ``/b/sf0.01`` never collides), per process (concurrent drivers never
-  overwrite each other) and per key (a rebuild never overwrites files a
-  live DataFrame is reading). Removed at process exit.
+  ``sources``. Rewriting a listed table computes afresh instead of
+  serving a stale answer. A value derived from another lists the
+  underlying fixture tables.
+- **Path** (:func:`build_once` only): ``scratch_dir(kind, sf_dir)/<digest
+  of key>``: unique per absolute source dir (a shared basename such as
+  ``/a/sf0.01`` and ``/b/sf0.01`` never collides), per process
+  (concurrent drivers never overwrite each other) and per key (a
+  rebuild never overwrites files a live DataFrame is reading). Removed
+  at process exit.
 - **Lock**: a hit is one dict lookup and takes no lock. A miss takes a
-  per-key lock, checks again, then builds. A build only asks for the
-  layouts it is derived from, so nested builds lock in dependency order
-  and cannot deadlock.
-- **Timing**: ``write(path)`` runs inside :func:`timed_build(kind)
-  <timed_build>`, which records self time, so an outer build that
+  per-key lock, checks again, then computes. A compute only asks for
+  the values it is derived from, so nested computes lock in dependency
+  order and cannot deadlock. Nothing is cached if the compute raises.
+- **Timing**: the compute runs inside :func:`timed_build(kind)
+  <timed_build>`, which records self time, so an outer compute that
   triggers an inner one is not billed twice.
 
 At 100 TB the analog is a per-job staging prefix under the warehouse
@@ -139,8 +141,40 @@ def source_fingerprint(sf_dir: str, table: str) -> str:
     return hashlib.sha1(repr(fp).encode("utf-8")).hexdigest()[:16]
 
 
-_BUILT: dict[tuple, str] = {}
+_MEMO: dict[tuple, object] = {}
 _KEY_LOCKS: dict[tuple, threading.Lock] = {}
+
+
+def _memo_key(kind: str, sf_dir: str, sources: tuple, key: object) -> tuple:
+    fps = tuple(source_fingerprint(sf_dir, t) for t in sources)
+    return (kind, os.path.abspath(os.path.normpath(sf_dir)), key, fps)
+
+
+def _lookup(k: tuple, kind: str, compute: Callable[[], object]):
+    try:
+        return _MEMO[k]
+    except KeyError:
+        pass
+    # dict.setdefault is atomic, so racing misses share one lock per key
+    with _KEY_LOCKS.setdefault(k, threading.Lock()):
+        if k not in _MEMO:
+            with timed_build(kind):
+                value = compute()
+            _MEMO[k] = value
+    return _MEMO[k]
+
+
+def memo(
+    kind: str,
+    sf_dir: str,
+    compute: Callable[[], object],
+    *,
+    sources: tuple[str, ...],
+    key: object = (),
+):
+    """Return ``compute()``, run once per (kind, source dir, key,
+    fingerprints of the ``sources`` tables) (module docstring)."""
+    return _lookup(_memo_key(kind, sf_dir, sources, key), kind, compute)
 
 
 def build_once(
@@ -154,26 +188,17 @@ def build_once(
     """Run ``write(path)`` once per (kind, source dir, key, fingerprints
     of the ``sources`` tables) and return ``path`` (module docstring).
     Callers read the directory back themselves."""
-    k = (
-        kind,
-        os.path.abspath(os.path.normpath(sf_dir)),
-        key,
-        tuple(source_fingerprint(sf_dir, t) for t in sources),
-    )
-    path = _BUILT.get(k)
-    if path is not None:
+    k = _memo_key(kind, sf_dir, sources, key)
+
+    def build() -> str:
+        digest = hashlib.sha1(repr(k).encode("utf-8")).hexdigest()[:16]
+        path = os.path.join(scratch_dir(kind, sf_dir), digest)
+        # a failed earlier attempt may have left a partial dir
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
         return path
-    # dict.setdefault is atomic, so racing misses share one lock per key
-    with _KEY_LOCKS.setdefault(k, threading.Lock()):
-        if k not in _BUILT:
-            digest = hashlib.sha1(repr(k).encode("utf-8")).hexdigest()[:16]
-            path = os.path.join(scratch_dir(kind, sf_dir), digest)
-            # a failed earlier attempt may have left a partial dir
-            shutil.rmtree(path, ignore_errors=True)
-            with timed_build(kind):
-                write(path)
-            _BUILT[k] = path
-    return _BUILT[k]
+
+    return _lookup(k, kind, build)
 
 
 # A cold session bills a lazily-triggered scratch build to whichever

@@ -32,7 +32,6 @@ rather than skipped on jar-less runtimes.
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import struct

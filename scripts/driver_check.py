@@ -11,7 +11,7 @@ alias name (same function object and oracle as its target,
 verdict. With --json, per-query results (mode, rows, match/determinism,
 seconds; ``{"mode": "alias", "of": target}`` for an alias) and the run's
 conditions (git HEAD, cores, aliases) are written as the full-surface
-correctness artifact (e.g. CORRECTNESS_FULL_r13.json).
+correctness artifact (e.g. CORRECTNESS_FULL_r14.json).
 """
 
 from __future__ import annotations

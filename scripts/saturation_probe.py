@@ -61,7 +61,7 @@ def main() -> None:
         rs = dp.ranked_shingles(spark, sf_dir)
         for kind, pqs in rungs.items():
             for p, q in pqs:
-                dp._exact_is_proportional(spark, sf_dir, rs, p, q, kind)
+                dp._probe_saturation(sf_dir, rs, p, q, kind)
         # the simhash occupancy probe (round 11): same measured-decision
         # evidence for the banding arity step-up on head-biased corpora
         from nosql_triple_store_spark.catalog import load_table
@@ -80,7 +80,7 @@ def main() -> None:
             ),
             F.count(F.lit(1)).alias("m"),
         )
-        dd._simhash_arity(spark, sf_dir, groups, arity)
+        dd._probe_simhash_arity(sf_dir, groups, arity)
     print(
         json.dumps(
             {

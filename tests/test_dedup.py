@@ -197,8 +197,7 @@ def test_simhash_arity_probe_steps_up_on_head_bias(spark):
         )
         .select("sh", F.array(F.lit(1)).alias("members"), F.lit(1).alias("m"))
     )
-    dd._SIMHASH_ARITY.pop("probe_biased", None)
-    assert dd._simhash_arity(spark, "probe_biased", biased, 2) == 3
+    assert dd._probe_simhash_arity("probe_biased", biased, 2)[0] == 3
 
     # uniform: xxhash64-spread signatures — blowup ~1, arity kept
     uniform = (
@@ -206,8 +205,7 @@ def test_simhash_arity_probe_steps_up_on_head_bias(spark):
         .select(F.xxhash64("id").alias("sh"))
         .select("sh", F.array(F.lit(1)).alias("members"), F.lit(1).alias("m"))
     )
-    dd._SIMHASH_ARITY.pop("probe_uniform", None)
-    assert dd._simhash_arity(spark, "probe_uniform", uniform, 2) == 2
+    assert dd._probe_simhash_arity("probe_uniform", uniform, 2)[0] == 2
     # decisions are recorded as measured-evidence log entries
     assert any(
         r["sf_dir"] == "probe_biased" and not r["accepted"]
@@ -227,11 +225,12 @@ def test_simhash_cap_skip_branch_is_bit_identical(spark, monkeypatch):
         map(tuple, SPECS["q_dedup_simhash"].fn(spark, SF_DIR).collect())
     )
     # force the adaptive branch: report a probed volume above the
-    # floor (the cached (arity, est) entry keeps its real arity)
+    # floor (the probed arity stays the real one)
+    probed = dd._simhash_arity
     monkeypatch.setattr(
         dd,
-        "_simhash_probed_volume",
-        lambda sf_dir: dd._SIMHASH_CAP_FLOOR_ROWS + 1,
+        "_simhash_arity",
+        lambda *a: (probed(*a)[0], dd._SIMHASH_CAP_FLOOR_ROWS + 1),
     )
     adaptive = sorted(
         map(tuple, SPECS["q_dedup_simhash"].fn(spark, SF_DIR).collect())

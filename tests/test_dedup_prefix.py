@@ -113,30 +113,23 @@ def test_containment_top50_matches_exact_twin(spark):
     assert got == want
 
 
-def test_collapse_paths_identical(spark):
+def test_collapse_paths_identical(spark, monkeypatch):
     """The adaptive exact-group collapse is a PHYSICAL choice: forcing
     either decision must produce the identical rung pair set (round-10
     guard for the corpus-shape probe)."""
     from nosql_triple_store_spark.operators import dedup_prefix as dp
 
     cols = ["doc_a", "doc_b", "common", "na", "nb"]
-    saved = dict(dp._COLLAPSE_DECISION)
-    try:
-        dp._COLLAPSE_DECISION[SF_DIR] = True
-        via_collapse = _rows(
-            containment_threshold_pairs(spark, SF_DIR, 9, 10, 10), cols
-        )
-        jac_collapse = _rows(
-            jaccard_threshold_pairs(spark, SF_DIR, 4, 5), cols
-        )
-        dp._COLLAPSE_DECISION[SF_DIR] = False
-        via_direct = _rows(
-            containment_threshold_pairs(spark, SF_DIR, 9, 10, 10), cols
-        )
-        jac_direct = _rows(jaccard_threshold_pairs(spark, SF_DIR, 4, 5), cols)
-    finally:
-        dp._COLLAPSE_DECISION.clear()
-        dp._COLLAPSE_DECISION.update(saved)
+    monkeypatch.setattr(dp, "_collapse_pays", lambda spark, sf_dir: True)
+    via_collapse = _rows(
+        containment_threshold_pairs(spark, SF_DIR, 9, 10, 10), cols
+    )
+    jac_collapse = _rows(jaccard_threshold_pairs(spark, SF_DIR, 4, 5), cols)
+    monkeypatch.setattr(dp, "_collapse_pays", lambda spark, sf_dir: False)
+    via_direct = _rows(
+        containment_threshold_pairs(spark, SF_DIR, 9, 10, 10), cols
+    )
+    jac_direct = _rows(jaccard_threshold_pairs(spark, SF_DIR, 4, 5), cols)
     assert via_collapse == via_direct
     assert jac_collapse == jac_direct
 
@@ -171,7 +164,7 @@ def test_skey_encoding_is_injective(spark):
     assert bare[1] == bare[2]
 
 
-def test_saturated_routes_match_exact_twin(spark):
+def test_saturated_routes_match_exact_twin(spark, monkeypatch):
     """Round 11 (VERDICT r10 #1): forcing the saturation decision to
     "route" must reproduce the exact pair set bit-for-bit on the
     fixture — the recall pin for the banded-LSH-fed rungs (Jaccard
@@ -180,31 +173,27 @@ def test_saturated_routes_match_exact_twin(spark):
     from nosql_triple_store_spark.operators import dedup_prefix as dp
 
     cols = ["doc_a", "doc_b", "common", "na", "nb"]
-    saved_sat = dict(dp._SAT_DECISION)
-    saved_col = dict(dp._COLLAPSE_DECISION)
-    try:
-        dp._COLLAPSE_DECISION[SF_DIR] = False
-        for p, q in ((49, 50), (9, 10), (4, 5), (1, 2)):
-            dp._SAT_DECISION[(SF_DIR, "jaccard", p, q)] = False
-            routed = _rows(jaccard_threshold_pairs(spark, SF_DIR, p, q), cols)
-            dp._SAT_DECISION[(SF_DIR, "jaccard", p, q)] = True
-            exact = _rows(jaccard_threshold_pairs(spark, SF_DIR, p, q), cols)
-            assert routed == exact, f"jaccard rung {p}/{q}"
-        for p, q in ((49, 50), (9, 10), (4, 5)):
-            dp._SAT_DECISION[(SF_DIR, "containment", p, q)] = False
-            routed = _rows(
-                containment_threshold_pairs(spark, SF_DIR, p, q, 10), cols
-            )
-            dp._SAT_DECISION[(SF_DIR, "containment", p, q)] = True
-            exact = _rows(
-                containment_threshold_pairs(spark, SF_DIR, p, q, 10), cols
-            )
-            assert routed == exact, f"containment rung {p}/{q}"
-    finally:
-        dp._SAT_DECISION.clear()
-        dp._SAT_DECISION.update(saved_sat)
-        dp._COLLAPSE_DECISION.clear()
-        dp._COLLAPSE_DECISION.update(saved_col)
+    monkeypatch.setattr(dp, "_collapse_pays", lambda spark, sf_dir: False)
+
+    def decide(exact: bool) -> None:
+        monkeypatch.setattr(dp, "_exact_is_proportional", lambda *a: exact)
+
+    for p, q in ((49, 50), (9, 10), (4, 5), (1, 2)):
+        decide(False)
+        routed = _rows(jaccard_threshold_pairs(spark, SF_DIR, p, q), cols)
+        decide(True)
+        exact = _rows(jaccard_threshold_pairs(spark, SF_DIR, p, q), cols)
+        assert routed == exact, f"jaccard rung {p}/{q}"
+    for p, q in ((49, 50), (9, 10), (4, 5)):
+        decide(False)
+        routed = _rows(
+            containment_threshold_pairs(spark, SF_DIR, p, q, 10), cols
+        )
+        decide(True)
+        exact = _rows(
+            containment_threshold_pairs(spark, SF_DIR, p, q, 10), cols
+        )
+        assert routed == exact, f"containment rung {p}/{q}"
 
 
 def test_saturation_probe_selects_exact_on_open_vocab(spark):
@@ -219,8 +208,7 @@ def test_saturation_probe_selects_exact_on_open_vocab(spark):
 
     rs = ranked_shingles(spark, SF_DIR)
     for kind, p, q in (("jaccard", 4, 5), ("containment", 49, 50)):
-        dp._SAT_DECISION.pop((SF_DIR, kind, p, q), None)
-        assert _exact_is_proportional(spark, SF_DIR, rs, p, q, kind)
+        assert dp._probe_saturation(SF_DIR, rs, p, q, kind)
     recs = [r for r in dp.SATURATION_LOG if r["sf_dir"] == SF_DIR]
     assert recs and all(
         r["exact_selected"] and r["blowup"] <= dp.SAT_MAX_BLOWUP

@@ -1,7 +1,7 @@
-"""Contract of ``scratch.build_once``: one build per key under
-contention, a new path after a listed source changes, self-time
-billing for nested builds, and (with Spark) no stale answer after a
-source rewrite."""
+"""Contract of ``scratch.memo`` and ``scratch.build_once``: one build
+per key under contention, a new path after a listed source changes,
+self-time billing for nested builds, nothing cached on failure, and
+(with Spark) no stale answer after a source rewrite."""
 
 from __future__ import annotations
 
@@ -18,10 +18,12 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
+from nosql_triple_store_spark.operators.text_ext import bpe_fit, bpe_fit_cached
 from nosql_triple_store_spark.registry import all_specs
-from nosql_triple_store_spark.scratch import build_once, drain_build_seconds
+from nosql_triple_store_spark.scratch import build_once, drain_build_seconds, memo
 
 from .conftest import SF_DIR
+from .util import compare_to_duckdb
 
 
 def test_concurrent_misses_build_once(tmp_path):
@@ -92,6 +94,22 @@ def test_nested_build_billed_as_self_time(tmp_path):
     assert built["t_inner"] >= 0.2 > built["t_outer"]
 
 
+def test_failed_compute_is_not_cached(tmp_path):
+    calls = []
+
+    def compute() -> int:
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("first attempt fails")
+        return 42
+
+    with pytest.raises(RuntimeError):
+        memo("t_fails", str(tmp_path), compute, sources=())
+    assert memo("t_fails", str(tmp_path), compute, sources=()) == 42
+    assert memo("t_fails", str(tmp_path), compute, sources=()) == 42
+    assert len(calls) == 2
+
+
 def test_rewritten_source_is_not_served_stale(spark, tmp_path):
     sf = tmp_path / "sf"
     shutil.copytree(SF_DIR, sf)
@@ -160,3 +178,33 @@ def test_vacuum_answers_for_the_rewritten_register(spark, tmp_path):
     pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t["user_id"], 1), 0)), path)
     want = n_keys()
     assert live_rows() == {want}, want
+
+
+@pytest.mark.parametrize("name", ["q_join_bucketed", "q_source_jdbc"])
+def test_rewritten_orders_are_not_served_stale(spark, tmp_path, name):
+    """A query whose derived state (bucketed tables, the JDBC copy) is
+    memoized answers for the rewritten orders table, not the old one."""
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    spec = all_specs()[name]
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+        )
+    compare_to_duckdb(spec.fn(spark, str(sf)), con, spec.oracle)
+    path = sf / "orders.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t["o_orderkey"], 1), 0)), path)
+    compare_to_duckdb(spec.fn(spark, str(sf)), con, spec.oracle)
+    con.close()
+
+
+def test_bpe_merge_table_follows_rewritten_documents(spark, tmp_path):
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    assert bpe_fit_cached(spark, str(sf)) == bpe_fit(spark, str(sf))
+    path = sf / "documents.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.slice(0, t.num_rows // 3), path)
+    assert bpe_fit_cached(spark, str(sf)) == bpe_fit(spark, str(sf))

@@ -58,7 +58,7 @@ def test_model_persists_across_processes(spark, monkeypatch):
     assert os.path.exists(path)
     with open(path, encoding="utf-8") as fh:
         assert json.load(fh) == model
-    # a fresh process (emulated: clear the in-process tier) must load
+    # a fresh process (emulated: bypass the in-process tier) must load
     # the artifact, never refit — both fit paths poisoned to prove it
     for fit in ("kmeans_fit", "_fit_codebook"):
         monkeypatch.setattr(
@@ -68,8 +68,7 @@ def test_model_persists_across_processes(spark, monkeypatch):
                 AssertionError("refit despite persisted model")
             ),
         )
-    v9._MODELS.clear()
-    assert v9._ivfpq_model(spark, SF_DIR) == model
+    assert v9._load_or_fit_model(spark, SF_DIR) == model
 
 
 def test_query_scans_persisted_codes_never_reencodes(spark, monkeypatch):
